@@ -34,10 +34,13 @@ from ..schemas import METADATA_JSON, RAW_SCHEMAS
 
 TIMESTAMP_FMT = "yyyy-MM-dd'T'HH:mm:ssXXX"
 ENTITIES = ("zones", "hvac", "meters", "weather")
+# circuit breaker: more than this share of unreadable runs aborts the
+# extract (reference src/etl/extract/__init__.py:130-135)
+MAX_FAILURE_RATIO = 0.5
 
 
 class ExtractionError(RuntimeError):
-    """Raised when more than ``max_failure_ratio`` of runs are unreadable."""
+    """Raised when more than ``MAX_FAILURE_RATIO`` of runs are unreadable."""
 
 
 def _read_entity(
@@ -83,12 +86,7 @@ def parse_run_id(run_id: str) -> tuple[str, str]:
     return building_id, scenario_id
 
 
-def check_run_coverage(
-    meters: DataFrame,
-    run_ids: list[str],
-    *,
-    max_failure_ratio: float = 0.5,
-) -> None:
+def check_run_coverage(meters: DataFrame, run_ids: list[str]) -> None:
     """Circuit breaker (reference aborts when >50% of archives fail,
     src/etl/extract/__init__.py:130-135): a run "failed" if it produced
     zero well-formed meter rows.  Callable against raw CSV or (cheaper)
@@ -117,7 +115,7 @@ def check_run_coverage(
         "left_anti",
     )
     n_failed = failed_df.count()
-    if n_failed > max_failure_ratio * len(expected):
+    if n_failed > MAX_FAILURE_RATIO * len(expected):
         sample = [
             (r["building_id"], r["scenario_id"])
             for r in failed_df.orderBy("building_id", "scenario_id")
@@ -126,7 +124,7 @@ def check_run_coverage(
         ]
         raise ExtractionError(
             f"{n_failed}/{len(expected)} runs unreadable "
-            f"(>{max_failure_ratio:.0%}): {sample}"
+            f"(>{MAX_FAILURE_RATIO:.0%}): {sample}"
         )
 
 
@@ -134,7 +132,6 @@ def extract_runs(
     spark: SparkSession,
     runs_dir: str | Path,
     *,
-    max_failure_ratio: float = 0.5,
     check_runs: bool = True,
 ) -> dict[str, DataFrame]:
     """Read all exploded run bundles under ``runs_dir``.
@@ -189,9 +186,7 @@ def extract_runs(
     # passes check_runs=False and re-runs it against the landed parquet
     # instead (same gate, one less full CSV scan job).
     if check_runs:
-        check_run_coverage(
-            out["meters"], run_ids, max_failure_ratio=max_failure_ratio
-        )
+        check_run_coverage(out["meters"], run_ids)
     return out
 
 
@@ -215,8 +210,6 @@ def extract_runs_from_zips(
     zips_dir: str | Path,
     *,
     staging_dir: str | Path | None = None,
-    max_failure_ratio: float = 0.5,
-    max_workers: int | None = None,
     check_runs: bool = True,
 ) -> dict[str, DataFrame]:
     """Reference packaging (ZIP per run): unzip to a staging dir, then run
@@ -238,7 +231,7 @@ def extract_runs_from_zips(
     staging = Path(staging_dir) if staging_dir else Path(tempfile.mkdtemp(prefix="runs_"))
     staging.mkdir(parents=True, exist_ok=True)
 
-    workers = max_workers or min(16, os.cpu_count() or 4)
+    workers = min(16, os.cpu_count() or 4)
     jobs = [(str(zp), str(staging)) for zp in zip_paths]
     chunk = max(len(jobs) // (workers * 4), 1)
     try:
@@ -250,16 +243,11 @@ def extract_runs_from_zips(
             results = list(tpool.map(_unzip_one, jobs))
     errors = [r for r in results if r is not None]
 
-    if len(errors) > max_failure_ratio * len(zip_paths):
+    if len(errors) > MAX_FAILURE_RATIO * len(zip_paths):
         raise ExtractionError(
             f"{len(errors)}/{len(zip_paths)} archives failed: {errors[:5]}"
         )
-    return extract_runs(
-        spark,
-        staging,
-        max_failure_ratio=max_failure_ratio,
-        check_runs=check_runs,
-    )
+    return extract_runs(spark, staging, check_runs=check_runs)
 
 
 def extract_run_by_id(

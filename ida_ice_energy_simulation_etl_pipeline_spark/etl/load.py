@@ -234,28 +234,6 @@ def create_views(spark: SparkSession, *, database: str = "energy") -> None:
         spark.sql(f"CREATE OR REPLACE VIEW {view} AS {body}")
 
 
-def load_parquet_to_warehouse(
-    spark: SparkSession,
-    parquet_dir: str | Path,
-    *,
-    database: str = "energy",
-) -> list[str]:
-    """Re-register previously written parquet as catalog tables (reference
-    load_parquet_to_duckdb, load:188-220, including the identifier guard)."""
-    _check_identifier(database)
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
-    loaded = []
-    for p in sorted(Path(parquet_dir).iterdir()):
-        if not p.is_dir():
-            continue
-        _check_identifier(p.name)
-        spark.read.parquet(str(p)).write.mode("overwrite").saveAsTable(
-            f"{database}.{p.name}"
-        )
-        loaded.append(p.name)
-    return loaded
-
-
 def query(spark: SparkSession, sql: str) -> DataFrame:
     """Ad-hoc SQL entry point (reference query_duckdb, load:167-185)."""
     return spark.sql(sql)

@@ -11,7 +11,9 @@ from __future__ import annotations
 import argparse
 import json
 import shutil
+import tempfile
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import nullcontext
 from pathlib import Path
 
 from pyspark.sql import SparkSession
@@ -52,53 +54,63 @@ def run_pipeline(
 ) -> dict:
     """Full batch run; returns the validation report + artifact paths."""
     output_dir = Path(output_dir)
-    extractor = extract_runs_from_zips if zipped else extract_runs
-    # check_runs=False: the >50%-unreadable circuit breaker re-runs below
-    # against the LANDED fact_meters — same gate, but the distinct runs on
-    # pruned parquet instead of costing a dedicated full-CSV scan job.
-    entities = extractor(spark, input_dir, check_runs=False)
-    expected_run_ids = list_runs(input_dir)
+    # A zipped run unzips into a directory this run owns.  Every action
+    # after landing reads the landed parquet, so the unzipped bundles are
+    # removed as soon as the star has landed — and also when extract,
+    # transform or landing fail.
+    unzip = tempfile.TemporaryDirectory(prefix="runs_") if zipped else nullcontext()
+    with unzip as unzip_dir:
+        # check_runs=False: the >50%-unreadable circuit breaker re-runs below
+        # against the LANDED fact_meters — same gate, but the distinct runs on
+        # pruned parquet instead of costing a dedicated full-CSV scan job.
+        if zipped:
+            entities = extract_runs_from_zips(
+                spark, input_dir, staging_dir=unzip_dir, check_runs=False
+            )
+        else:
+            entities = extract_runs(spark, input_dir, check_runs=False)
+        expected_run_ids = list_runs(input_dir)
 
-    star = transform_all(entities, time_key_strategy=time_key_strategy)
+        star = transform_all(entities, time_key_strategy=time_key_strategy)
 
-    # Land → validate → publish.  The conformed star is computed EXACTLY
-    # once — written straight to a staging directory — and every
-    # downstream action (validation aggregates, views, export) reads the
-    # landed parquet, which is columnar, pruned, and ~10× faster to
-    # re-scan than re-running the CSV conform lineage per action.  The
-    # validation gate then decides whether staging is PUBLISHED (atomic
-    # directory rename) — same observable contract as the reference's
-    # validate-before-load (run_pipeline.py:95-125): nothing appears at
-    # the published path unless the gate passes.  This is also the shape
-    # that survives 100 TB, where caching the star in executor memory is
-    # not an option.
-    staging = output_dir / "parquet._staging"
-    # Dims sit in every fact's lineage (broadcast joins), so without
-    # pinning, each fact write re-derives the distinct/window dim builds
-    # from raw CSV.  Cache + materialize them up front (concurrently —
-    # they are independent small jobs); they are dim-scale by construction
-    # so executor memory is never a concern, 100 TB facts included.
-    dims = [t for t in star if t.startswith("dim_")]
-    for t in dims:
-        star[t] = star[t].cache()
-    with ThreadPoolExecutor(max_workers=len(dims) or 1) as pool:
-        list(pool.map(lambda t: star[t].count(), dims))
-    # Time-range queries dominate the analytic surface (monthly rollups,
-    # gap scans, as-of lookups), so fact files are range-clustered on
-    # time_key when requested: disjoint per-file min/max intervals let
-    # pushed-down time predicates skip whole files (see load_to_parquet).
-    sort_within = (
-        {t: ["time_key"] for t in ("fact_meters", "fact_hvac", "fact_zone_conditions")}
-        if cluster_facts
-        else None
-    )
-    try:
-        load_to_parquet(
-            star, staging, partition_facts=partition_facts, sort_within=sort_within
-        )
-    finally:
+        # Land → validate → publish.  The conformed star is computed EXACTLY
+        # once — written straight to a staging directory — and every
+        # downstream action (validation aggregates, views, export) reads the
+        # landed parquet, which is columnar, pruned, and ~10× faster to
+        # re-scan than re-running the CSV conform lineage per action.  The
+        # validation gate then decides whether staging is PUBLISHED (atomic
+        # directory rename) — same observable contract as the reference's
+        # validate-before-load (run_pipeline.py:95-125): nothing appears at
+        # the published path unless the gate passes.  This is also the shape
+        # that survives 100 TB, where caching the star in executor memory is
+        # not an option.
+        staging = output_dir / "parquet._staging"
+        # Dims sit in every fact's lineage (broadcast joins), so without
+        # pinning, each fact write re-derives the distinct/window dim builds
+        # from raw CSV.  Cache + materialize them up front (concurrently —
+        # they are independent small jobs); they are dim-scale by construction
+        # so executor memory is never a concern, 100 TB facts included.
+        dims = [t for t in star if t.startswith("dim_")]
         for t in dims:
-            star[t].unpersist()
+            star[t] = star[t].cache()
+        with ThreadPoolExecutor(max_workers=len(dims) or 1) as pool:
+            list(pool.map(lambda t: star[t].count(), dims))
+        # Time-range queries dominate the analytic surface (monthly rollups,
+        # gap scans, as-of lookups), so fact files are range-clustered on
+        # time_key when requested: disjoint per-file min/max intervals let
+        # pushed-down time predicates skip whole files (see load_to_parquet).
+        sort_within = (
+            {t: ["time_key"] for t in ("fact_meters", "fact_hvac", "fact_zone_conditions")}
+            if cluster_facts
+            else None
+        )
+        try:
+            load_to_parquet(
+                star, staging, partition_facts=partition_facts, sort_within=sort_within
+            )
+        finally:
+            for t in dims:
+                star[t].unpersist()
     landed = {t: spark.read.parquet(str(staging / t)) for t in star}
 
     check_run_coverage(landed["fact_meters"], expected_run_ids)

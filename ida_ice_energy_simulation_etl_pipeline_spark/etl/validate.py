@@ -11,8 +11,8 @@ Report shape mirrors the reference (validate/__init__.py:242-296):
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterable
 from concurrent.futures import ThreadPoolExecutor
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -20,22 +20,6 @@ from pyspark.sql.window import Window
 
 from ..schemas import NULLABLE_WHITELIST, STAR_SCHEMAS
 
-
-def _concurrently(thunks: Iterable[Callable[[], list[str]]]) -> list[str]:
-    """Run independent Spark actions on driver threads and merge their
-    error lists (order-preserving).
-
-    The suite is a pile of SMALL aggregate jobs; executed serially each
-    pays full job-submission latency, which dominates wall time on landed
-    parquet.  Spark's scheduler runs concurrent jobs from separate driver
-    threads side by side, so the suite costs ~the slowest single check
-    instead of the sum.
-    """
-    thunks = list(thunks)
-    if not thunks:
-        return []
-    with ThreadPoolExecutor(max_workers=min(8, len(thunks))) as pool:
-        return [e for errs in pool.map(lambda f: f(), thunks) for e in errs]
 
 # Value-range rules (reference validate/__init__.py:77-137; FIXTURES.md §1).
 # table -> [(column, lo, hi)] — None bound = unchecked side.
@@ -81,170 +65,104 @@ def check_schema(star: dict[str, DataFrame]) -> dict:
     return {"valid": not errors, "errors": errors}
 
 
+Errors = dict[str, list[str]]  # report check name -> error lines
+
+
 def _integrity_errors(
-    star: dict[str, DataFrame],
-    rules_by_table: dict[str, list[tuple[str, float | None, float | None]]]
-    | None,
-    *,
-    nulls: bool,
-    ranges: bool,
-) -> tuple[list[str], list[str]]:
+    table: str,
+    df: DataFrame,
+    rules: list[tuple[str, float | None, float | None]],
+) -> Errors:
     """Null counts and range violations in ONE conditional-aggregate scan
-    per table (the reference runs one pandas filter per rule,
-    validate:49-137 — a full scan each).  Returns (null_errors,
-    range_errors) so both report families come from the same pass."""
-    rules_by_table = rules_by_table or RANGE_RULES
-
-    def per_table(table: str, df: DataFrame) -> Callable[[], tuple[list[str], list[str]]] | None:
-        # (kind, column, lo, hi) per aggregate, aliased positionally so
-        # rule columns can never collide with data columns.
-        specs: list[tuple[str, str, float | None, float | None]] = []
-        aggs = []
-        if nulls:
-            allowed = NULLABLE_WHITELIST.get(table, set())
-            for c in df.columns:
-                if c in allowed:
-                    continue
-                specs.append(("null", c, None, None))
-                aggs.append(
-                    F.sum(F.when(F.col(c).isNull(), 1).otherwise(0))
-                    .cast("long")
-                    .alias(f"a{len(aggs)}")
-                )
-        if ranges:
-            for col, lo, hi in rules_by_table.get(table, []):
-                cond = F.lit(False)
-                if lo is not None:
-                    cond = cond | (F.col(col) < lo)
-                if hi is not None:
-                    cond = cond | (F.col(col) > hi)
-                specs.append(("range", col, lo, hi))
-                aggs.append(
-                    F.sum(F.when(cond, 1).otherwise(0))
-                    .cast("long")
-                    .alias(f"a{len(aggs)}")
-                )
-        if not aggs:
-            return None
-
-        def run() -> tuple[list[str], list[str]]:
-            row = df.agg(*aggs).collect()[0]
-            null_errs, range_errs = [], []
-            for i, (kind, col, lo, hi) in enumerate(specs):
-                n = row[f"a{i}"]
-                if not n:
-                    continue
-                if kind == "null":
-                    null_errs.append(f"{table}.{col}: {n} null values")
-                else:
-                    range_errs.append(
-                        f"{table}.{col}: {n} rows outside [{lo}, {hi}]"
-                    )
-            return null_errs, range_errs
-
-        return run
-
-    thunks = [
-        thunk
-        for t in STAR_SCHEMAS
-        if t in star and (thunk := per_table(t, star[t])) is not None
-    ]
-    if not thunks:
-        return [], []
-    with ThreadPoolExecutor(max_workers=min(8, len(thunks))) as pool:
-        results = list(pool.map(lambda f: f(), thunks))
-    return (
-        [e for ne, _ in results for e in ne],
-        [e for _, re_ in results for e in re_],
-    )
-
-
-def check_nulls(star: dict[str, DataFrame]) -> dict:
-    """Every column non-null except the whitelist (cop_proxy) — one
-    aggregate pass per table (reference validate:49-55, whitelist :32-34)."""
-    errors, _ = _integrity_errors(star, None, nulls=True, ranges=False)
-    return {"valid": not errors, "errors": errors}
-
-
-def check_ranges(
-    star: dict[str, DataFrame],
-    rules_by_table: dict[str, list[tuple[str, float | None, float | None]]]
-    | None = None,
-) -> dict:
-    """All range/sign rules for a table in one conditional-aggregate scan
-    (reference runs one filter per rule, validate:77-137).  ``rules_by_table``
-    overrides the defaults (config surface, reference config.yaml:40-55)."""
-    _, errors = _integrity_errors(star, rules_by_table, nulls=False, ranges=True)
-    return {"valid": not errors, "errors": errors}
-
-
-def check_temporal(star: dict[str, DataFrame]) -> dict:
-    """Coverage: every fact covers every time_key (anti-join, reference
-    validate:171-180); continuity: hourly with no gaps (lag window,
-    reference validate:159-168)."""
-    dim_time = star["dim_time"]
-    keys = dim_time.select("time_key")
-
-    def gap_check() -> list[str]:
-        gaps = (
-            dim_time.select("timestamp")
-            .withColumn(
-                "gap_s",
-                F.unix_timestamp("timestamp")
-                - F.unix_timestamp(
-                    F.lag("timestamp").over(Window.orderBy("timestamp"))
-                ),
+    of one table (the reference runs one pandas filter per rule,
+    validate:49-137 — a full scan each); both report families come from
+    the same pass.  Every column outside the whitelist (cop_proxy) must
+    be non-null (reference validate:49-55, whitelist :32-34)."""
+    # (kind, column, lo, hi) per aggregate, aliased positionally so rule
+    # columns can never collide with data columns.
+    specs: list[tuple[str, str, float | None, float | None]] = []
+    conds = []
+    allowed = NULLABLE_WHITELIST.get(table, set())
+    for c in df.columns:
+        if c not in allowed:
+            specs.append(("nulls", c, None, None))
+            conds.append(F.col(c).isNull())
+    for col, lo, hi in rules:
+        cond = F.lit(False)
+        if lo is not None:
+            cond = cond | (F.col(col) < lo)
+        if hi is not None:
+            cond = cond | (F.col(col) > hi)
+        specs.append(("ranges", col, lo, hi))
+        conds.append(cond)
+    errors: Errors = {"nulls": [], "ranges": []}
+    if not conds:
+        return errors
+    row = df.agg(
+        *(
+            F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(f"a{i}")
+            for i, cond in enumerate(conds)
+        )
+    ).collect()[0]
+    for i, (kind, col, lo, hi) in enumerate(specs):
+        if n := row[f"a{i}"]:
+            errors[kind].append(
+                f"{table}.{col}: {n} null values"
+                if kind == "nulls"
+                else f"{table}.{col}: {n} rows outside [{lo}, {hi}]"
             )
-            .filter(F.col("gap_s") != 3600)
-            .count()
+    return errors
+
+
+def _gap_errors(dim_time: DataFrame) -> Errors:
+    """Continuity: hourly with no gaps (lag window, reference
+    validate:159-168)."""
+    gaps = (
+        dim_time.select("timestamp")
+        .withColumn(
+            "gap_s",
+            F.unix_timestamp("timestamp")
+            - F.unix_timestamp(F.lag("timestamp").over(Window.orderBy("timestamp"))),
         )
-        return (
-            [f"dim_time: {gaps} non-hourly gaps in timestamp sequence"]
-            if gaps
-            else []
-        )
-
-    def coverage(table: str, df: DataFrame) -> Callable[[], list[str]]:
-        def run() -> list[str]:
-            missing = keys.join(
-                df.select("time_key").distinct(), "time_key", "left_anti"
-            ).count()
-            return [f"{table}: {missing} time periods uncovered"] if missing else []
-
-        return run
-
-    errors = _concurrently(
-        [gap_check]
-        + [coverage(t, star[t]) for t in FACT_TABLES if t in star]
+        .filter(F.col("gap_s") != 3600)
+        .count()
     )
-    return {"valid": not errors, "errors": errors}
+    msg = f"dim_time: {gaps} non-hourly gaps in timestamp sequence"
+    return {"temporal": [msg] if gaps else []}
 
 
-def check_plausibility(star: dict[str, DataFrame]) -> dict:
+def _coverage_errors(table: str, df: DataFrame, keys: DataFrame) -> Errors:
+    """Coverage: the fact covers every time_key (anti-join, reference
+    validate:171-180)."""
+    missing = keys.join(
+        df.select("time_key").distinct(), "time_key", "left_anti"
+    ).count()
+    msg = f"{table}: {missing} time periods uncovered"
+    return {"temporal": [msg] if missing else []}
+
+
+def _plausibility_errors(fact_meters: DataFrame) -> Errors:
     """Per-(building, scenario) energy sums must be physically plausible
     (reference validate:204-227): electric > 0, heating+cooling > 0,
     electric >= 0.2 × (heating+cooling)."""
-    sums = (
-        star["fact_meters"]
-        .groupBy("building_id", "scenario_id")
-        .agg(
-            F.sum("electric_kwh").alias("electric"),
-            F.sum("heating_kwh").alias("heating"),
-            F.sum("cooling_kwh").alias("cooling"),
-        )
+    sums = fact_meters.groupBy("building_id", "scenario_id").agg(
+        F.sum("electric_kwh").alias("electric"),
+        F.sum("heating_kwh").alias("heating"),
+        F.sum("cooling_kwh").alias("cooling"),
     )
     bad = sums.filter(
         (F.col("electric") <= 0)
         | ((F.col("heating") + F.col("cooling")) <= 0)
         | (F.col("electric") < 0.2 * (F.col("heating") + F.col("cooling")))
     ).collect()
-    errors = [
-        f"({r['building_id']}, {r['scenario_id']}): implausible energy totals "
-        f"electric={r['electric']:.1f} heating={r['heating']:.1f} "
-        f"cooling={r['cooling']:.1f}"
-        for r in bad
-    ]
-    return {"valid": not errors, "errors": errors}
+    return {
+        "plausibility": [
+            f"({r['building_id']}, {r['scenario_id']}): implausible energy totals "
+            f"electric={r['electric']:.1f} heating={r['heating']:.1f} "
+            f"cooling={r['cooling']:.1f}"
+            for r in bad
+        ]
+    }
 
 
 def validate_all(
@@ -253,25 +171,41 @@ def validate_all(
     range_rules: dict[str, list[tuple[str, float | None, float | None]]]
     | None = None,
 ) -> dict:
-    """Run all four check families (reference validate_all,
+    """Run all five check families (reference validate_all,
     validate:232-296).  This is the pipeline gate: load only proceeds when
-    ``is_valid`` (or the caller explicitly overrides)."""
-    # The action-running families are independent — overlap them (each
-    # already parallelizes its own per-table actions).  Nulls + ranges
-    # share one fused scan per table (_integrity_errors).
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        integrity_f = pool.submit(
-            _integrity_errors, star, range_rules, nulls=True, ranges=True
-        )
-        temporal_f = pool.submit(check_temporal, star)
-        plaus_f = pool.submit(check_plausibility, star)
-        schema = check_schema(star)
-        null_errs, range_errs = integrity_f.result()
-        checks = {
-            "schema": schema,
-            "nulls": {"valid": not null_errs, "errors": null_errs},
-            "ranges": {"valid": not range_errs, "errors": range_errs},
-            "temporal": temporal_f.result(),
-            "plausibility": plaus_f.result(),
-        }
+    ``is_valid`` (or the caller explicitly overrides).  ``range_rules``
+    overrides the defaults (config surface, reference config.yaml:40-55).
+
+    The suite is a pile of SMALL independent aggregate jobs — one fused
+    null+range scan per table, the dim_time gap check, one coverage
+    anti-join per fact table and the plausibility sums.  Executed serially
+    each pays full job-submission latency, which dominates wall time on
+    landed parquet; Spark's scheduler runs concurrent jobs from separate
+    driver threads side by side, so all of them go to ONE driver pool and
+    the suite costs ~the slowest single check instead of the sum."""
+    rules = range_rules or RANGE_RULES
+    keys = star["dim_time"].select("time_key")
+    actions = (
+        [
+            partial(_integrity_errors, t, star[t], rules.get(t, []))
+            for t in STAR_SCHEMAS
+            if t in star
+        ]
+        + [partial(_gap_errors, star["dim_time"])]
+        + [
+            partial(_coverage_errors, t, star[t], keys)
+            for t in FACT_TABLES
+            if t in star
+        ]
+        + [partial(_plausibility_errors, star["fact_meters"])]
+    )
+    errors: Errors = {"nulls": [], "ranges": [], "temporal": [], "plausibility": []}
+    with ThreadPoolExecutor(max_workers=len(actions)) as pool:
+        for found in pool.map(lambda run: run(), actions):
+            for name, errs in found.items():
+                errors[name].extend(errs)
+    checks = {
+        "schema": check_schema(star),
+        **{name: {"valid": not e, "errors": e} for name, e in errors.items()},
+    }
     return {"is_valid": all(c["valid"] for c in checks.values()), "checks": checks}

@@ -25,8 +25,6 @@ rows-only check, even though the Spark side is an iterative algorithm.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,15 +64,10 @@ def _deploy_regime(edge_ckpt: DataFrame) -> bool:
     a driver-side storage-info read of the edge checkpoint (no job) —
     see plans.core.outgrows_broadcast for the sizing argument.
 
-    ``SPARK_GRAFT_GRAPH_SYM_CAPTURE`` ∈ {auto, plain, partitioned}
-    forces a regime for A/B measurement and tests; results are identical
-    in either regime (the regime only chooses which exchanges the round
-    plans pay), pinned by tests/test_plan_shapes.py."""
-    mode = os.environ.get("SPARK_GRAFT_GRAPH_SYM_CAPTURE", "auto")
-    if mode == "plain":
-        return False
-    if mode == "partitioned":
-        return True
+    The observed checkpoint size is the only selector.  Results are
+    identical in either regime (the regime only chooses which exchanges
+    the round plans pay), pinned by tests/test_plan_shapes.py, which
+    forces each regime by replacing this function."""
     return outgrows_broadcast(edge_ckpt)
 
 
@@ -1266,7 +1259,6 @@ def _peel_to_fixpoint(
     apply_step,
     rounds: int,
     seed_metric: "DataFrame | None" = None,
-    incremental_step=None,
 ) -> tuple[DataFrame, "DataFrame | None", int, bool]:
     """Shared synchronous-peel driver for the k-core and k-truss
     kernels, split into the k-INDEPENDENT per-round metric
@@ -1287,17 +1279,6 @@ def _peel_to_fixpoint(
     (the confirming fixpoint round is an identity and not counted) and
     ``reached_fixpoint`` reports whether the count-equality exit fired
     — both feed the r16 chain guard in ``_near_dup_summaries``.
-
-    ``incremental_step(old_edges, old_metric, new_edges) -> frame``
-    (r16, guide §1.2 — r15 verdict item 3): when given, a productive
-    round derives the next metric from the old metric plus the
-    dropped-edge delta instead of recomputing it from the surviving
-    edge set — for the k-truss that replaces a full degree-oriented
-    triangle enumeration per round with a decrement pass bounded by
-    the dropped edges' neighborhoods.  The derived metric materializes
-    EAGERLY (it reads the old round's blocks, which are released the
-    same iteration); equivalence to the recomputed metric is pinned by
-    tests/test_plan_shapes.py.
     """
     # lazy + fused count throughout (r15): the per-round fixpoint count
     # computes every partition of the new round AND of its (lazily
@@ -1332,29 +1313,19 @@ def _peel_to_fixpoint(
             fix = True
             break
         used += 1
-        if incremental_step is not None:
-            # eager: the decrement pass reads the OLD round's blocks,
-            # which are released just below — the derived metric must
-            # own its blocks before they go
-            metric_next = incremental_step(edges, metric, nxt).localCheckpoint(
-                eager=True
-            )
-        else:
-            metric_next = None
         # nxt is eagerly materialized into its own blocks, so the
         # superseded round's blocks — and its metric's — can be
         # released NOW instead of waiting on the ContextCleaner
         # (long-lived-session hygiene)
         free_local_checkpoint(edges)
         free_local_checkpoint(metric)
-        metric = metric_next
+        metric = None
         edges, n_edges = nxt, n_nxt
     # a last allowed round that emptied the graph still reached the
     # fixpoint (the peel of the empty set is the empty set)
     fix = fix or n_edges == 0
-    # metric is None when the rounds rail exhausted mid-peel without an
-    # incremental step (it would describe a superseded edge set) —
-    # callers then start cold
+    # metric is None when the rounds rail exhausted mid-peel (it would
+    # describe a superseded edge set) — callers then start cold
     return edges, metric, used, fix
 
 
@@ -1477,76 +1448,6 @@ def kcore_edges(
     if out[1] is not None:  # unwanted metric: release its blocks now
         free_local_checkpoint(out[1])
     return out[0]
-
-
-def _incremental_supports(
-    old_edges: DataFrame, old_sup: DataFrame, new_edges: DataFrame
-) -> DataFrame:
-    """Triangle supports of ``new_edges`` derived from the OLD round's
-    supports plus the dropped-edge delta (r16, guide §1.2 — classic
-    truss-maintenance; r15 verdict item 3).
-
-    new ⊆ old, so a triangle of the old graph survives iff none of its
-    three edges was dropped, hence for every surviving edge e:
-    sup_new(e) = sup_old(e) − #{old triangles containing e that touch a
-    dropped edge}.  The decrement enumerates exactly those triangles —
-    for each dropped canonical edge (a, b), the common old-graph
-    neighbors w of a and b — deduplicated on the canonical corner
-    triple so a triangle with 2–3 dropped edges decrements each of its
-    SURVIVING edges once, not twice.  Work is bounded by the dropped
-    edges' neighborhoods (Σ deg(a) over dropped (a,b) wedge rows plus
-    one probe join), not by a full re-enumeration of the surviving
-    graph — the win grows with peel depth and graph size.  Every
-    surviving edge has an old support row (it survived the ≥ k−2
-    filter), so the inner join below loses nothing; sup_new ≥ 0 by
-    construction (the decrement counts a subset of the triangles
-    sup_old counts).  A surviving edge whose support falls to zero
-    keeps its row — the ≥ k−2 threshold (k ≥ 3) filters it identically
-    to the recomputed metric's absent row.
-    """
-    dropped = old_edges.join(new_edges, ["doc_a", "doc_b"], "left_anti")
-    sym_old = old_edges.unionAll(
-        old_edges.select(
-            F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b")
-        )
-    )
-    # wedge per dropped edge: w runs over N_old(a) …
-    cand = dropped.join(
-        sym_old.select(F.col("doc_a"), F.col("doc_b").alias("w")), "doc_a"
-    ).filter(F.col("w") != F.col("doc_b"))
-    # … closed by the (b, w) probe against the canonical old edge set
-    closed = cand.join(
-        old_edges.select(
-            F.col("doc_a").alias("_pa"), F.col("doc_b").alias("_pb")
-        ),
-        (F.least("doc_b", "w") == F.col("_pa"))
-        & (F.greatest("doc_b", "w") == F.col("_pb")),
-        "left_semi",
-    )
-    tri = closed.select(
-        F.least("doc_a", F.least("doc_b", "w")).alias("x"),
-        F.greatest(
-            F.least("doc_a", "doc_b"),
-            F.least(F.greatest("doc_a", "doc_b"), "w"),
-        ).alias("y"),
-        F.greatest("doc_a", F.greatest("doc_b", "w")).alias("z"),
-    ).distinct()
-    dec = (
-        tri.select(F.col("x").alias("doc_a"), F.col("y").alias("doc_b"))
-        .unionAll(tri.select(F.col("x").alias("doc_a"), F.col("z").alias("doc_b")))
-        .unionAll(tri.select(F.col("y").alias("doc_a"), F.col("z").alias("doc_b")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("_dec"))
-    )
-    return (
-        old_sup.join(new_edges, ["doc_a", "doc_b"], "left_semi")
-        .join(dec, ["doc_a", "doc_b"], "left")
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("sup") - F.coalesce("_dec", F.lit(0))).alias("sup"),
-        )
-    )
 
 
 def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1721,29 +1622,10 @@ def ktruss_edges(
         kept = sup.filter(F.col("sup") >= k - 2).select("doc_a", "doc_b")
         return edges.join(kept, ["doc_a", "doc_b"], "left_semi")
 
-    # Incremental truss maintenance (_incremental_supports) is OFF by
-    # default — BUILT, MEASURED, REJECTED (r16): bitwise-equal at every
-    # coordinate, but never faster — sf0.1 fixture 4.76 s → 4.59 s
-    # (wash, jobs 60 → 68), 1.95M-edge sparse-drop synthetic 20.3 →
-    # 21.6 s, 2.07M-edge triangle-dense (K12 farms) 51.3 → 55.5 s
-    # (scripts/truss_deploy_ab.py).  The decrement pass's own
-    # |E|-grain anti-join + closure probe + eager sup materialization
-    # cost what the skipped degree-oriented re-enumeration (fan-out
-    # already bounded by oriented out-degree) would have.  The lever
-    # stays for re-evaluation on deeper-peel fixtures.
-    _inc = (
-        _incremental_supports
-        if os.environ.get("SPARK_GRAFT_TRUSS_INCREMENTAL", "0") == "1"
-        else None
-    )
-    out = _peel_to_fixpoint(
-        pairs,
-        supports,
-        apply,
-        rounds,
-        seed_metric,
-        incremental_step=_inc,
-    )
+    # supports are recomputed every round: deriving them from the old
+    # round's supports plus the dropped edges was measured no faster at
+    # three graph sizes, with more jobs (plans/r16/TRUSS_AB.json)
+    out = _peel_to_fixpoint(pairs, supports, apply, rounds, seed_metric)
     if with_metric:
         return out
     if out[1] is not None:  # unwanted metric: release its blocks now

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import logging
 import threading
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -111,8 +112,6 @@ def free_local_checkpoint(df: DataFrame) -> None:
         # this function exists to fix.  tests/test_plans_core.py asserts
         # the reach-through actually frees a localCheckpoint's blocks on
         # the pinned Spark version, so drift fails a test, not just logs.
-        import logging
-
         logging.getLogger(__name__).debug(
             "free_local_checkpoint reach-through failed (%s: %s); "
             "falling back to ContextCleaner",
@@ -129,14 +128,21 @@ def checkpointed_bytes(df: DataFrame) -> int:
     ``localCheckpoint(eager=True)``, read from the driver's block-manager
     storage info — NO job, no action.  Returns -1 when the size cannot be
     determined (non-checkpoint frame, API drift), so callers can fall
-    back to a conservative default."""
+    back to a conservative default.  A failed reach-through logs a
+    warning: it pins every CC/LPA kernel to the fixture-scale regime, and
+    tests/test_plans_core.py holds the probe to a positive size on the
+    pinned Spark version."""
     try:
         rdd_id = df._jdf.queryExecution().analyzed().rdd().id()
         for info in df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo():
             if info.id() == rdd_id:
                 return int(info.memSize()) + int(info.diskSize())
-    except Exception:
-        pass
+    except Exception as exc:
+        logging.getLogger(__name__).warning(
+            "checkpointed_bytes reach-through failed (%s: %s); size unknown",
+            type(exc).__name__,
+            exc,
+        )
     return -1
 
 

@@ -6,7 +6,7 @@ stream: tumbling-window rollups with watermarked late-data handling, and
 streaming dedup keyed on event identity.
 """
 
-from .alerts import threshold_alert_stream, threshold_alert_stream_legacy
+from .alerts import threshold_alert_stream
 from .hourly import dedup_stream, hourly_rollup_stream, read_event_stream
 from .funnel import funnel_stream
 from .joins import enriched_rollup_stream, interval_join_stream
@@ -25,7 +25,6 @@ __all__ = [
     "sessionize_stream",
     "funnel_stream",
     "threshold_alert_stream",
-    "threshold_alert_stream_legacy",
     "enriched_rollup_stream",
     "interval_join_stream",
     "stream_to_parquet",

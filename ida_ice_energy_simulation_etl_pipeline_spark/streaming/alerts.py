@@ -1,4 +1,4 @@
-"""Threshold-transition alerting — ``transformWithStateInPandas``.
+"""Threshold-transition alerting over explicit keyed streaming state.
 
 The monitoring twin of the batch ``rolling_anomaly`` query: per key,
 classify each event against a threshold and emit a row ONLY when the
@@ -7,25 +7,15 @@ always-emit design would re-announce a stuck-high sensor every event;
 transition-only output is what pagers want, and it needs exactly one
 remembered level per key — explicit keyed state.
 
-Two implementations, one semantics (same vectorized kernel):
+Implemented on ``applyInPandasWithState``: state is ONE (level string)
+tuple per key, with no timeout, so a key's state lives as long as the
+query.
 
-* :func:`threshold_alert_stream` — Spark 4's arbitrary-state API
-  (``StatefulProcessor`` / ``transformWithStateInPandas``), the
-  successor of ``applyInPandasWithState``: state is declared as named,
-  schema'd, individually TTL-able slots on the processor handle instead
-  of one opaque per-key tuple.  Requires the RocksDB state store
-  provider AND the ``protobuf`` Python package (the new API's
-  state-server protocol) — absent in this container, so its test is
-  import-gated exactly like the PIL decode path.
-* :func:`threshold_alert_stream_legacy` — the same operator on
-  ``applyInPandasWithState`` (no extra runtime deps); this is the
-  path the container's tests actually execute.
-
-Scale shape: one exchange on the key (the grouping transformWithState
-always needs), state = ONE fixed-width row per key — bounded by key
-cardinality, independent of event volume; an optional TTL evicts keys
-silent longer than the horizon.  The per-batch kernel is vectorized
-numpy over the key's Arrow batch, never per-row Python in the hot loop.
+Scale shape: one exchange on the key (the grouping the stateful
+operator always needs), state = ONE fixed-width row per key — bounded
+by key cardinality, independent of event volume.  The per-batch kernel
+is vectorized numpy over the key's Arrow batch, never per-row Python in
+the hot loop.
 
 Ordering: events are processed in (ts, event_id) order WITHIN each
 micro-batch; cross-batch order is the file/source arrival order, the
@@ -39,7 +29,6 @@ from collections.abc import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
 ALERT_THRESHOLD = 90.0
 
@@ -50,13 +39,12 @@ ALERT_OUTPUT = (
 
 
 def _transition_frame(chunks, prev: str, threshold: float, key):
-    """Vectorized transition kernel shared by both state APIs: concat
-    the key's Arrow chunks, ONE global (ts, event_id) sort, classify,
-    return (transitions-DataFrame-or-None, new last level).  The concat
-    happens BEFORE the sort — chunk-local sorting would classify an
-    out-of-order later chunk against the wrong running level
-    (sessions.py idiom).  Per-key per-batch memory, the same bound the
-    sessionizer accepts."""
+    """Vectorized transition kernel: concat the key's Arrow chunks, ONE
+    global (ts, event_id) sort, classify, return
+    (transitions-DataFrame-or-None, new last level).  The concat happens
+    BEFORE the sort — chunk-local sorting would classify an out-of-order
+    later chunk against the wrong running level (sessions.py idiom).
+    Per-key per-batch memory, the same bound the sessionizer accepts."""
     import numpy as np
 
     chunks = list(chunks)
@@ -83,57 +71,13 @@ def _transition_frame(chunks, prev: str, threshold: float, key):
     return out, str(levels[-1])
 
 
-class ThresholdAlertProcessor(StatefulProcessor):
-    """Emit (level, prev_level) transition rows per key; remember the
-    last level in a one-column ValueState slot."""
-
-    def __init__(self, threshold: float = ALERT_THRESHOLD,
-                 state_ttl_ms: int | None = None):
-        self._threshold = threshold
-        self._ttl = state_ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._last = handle.getValueState(
-            "last_level", "level string", ttlDurationMs=self._ttl
-        )
-
-    def handleInputRows(
-        self, key, rows, timer_values
-    ) -> Iterator[pd.DataFrame]:
-        prev = self._last.get()[0] if self._last.exists() else "OK"
-        out, prev = _transition_frame(rows, prev, self._threshold, key[0])
-        if out is not None:
-            yield out
-        self._last.update((prev,))
-
-    def close(self) -> None:
-        pass
-
-
 def threshold_alert_stream(
-    events: DataFrame,
-    *,
-    threshold: float = ALERT_THRESHOLD,
-    state_ttl_ms: int | None = None,
+    events: DataFrame, *, threshold: float = ALERT_THRESHOLD
 ) -> DataFrame:
     """Transition-only alert stream over (user_id, ts, event_id, value).
 
     Works on a streaming OR batch ``events`` frame — the batch run is the
     parity harness for the streaming semantics."""
-    return events.groupBy("user_id").transformWithStateInPandas(
-        ThresholdAlertProcessor(threshold, state_ttl_ms),
-        ALERT_OUTPUT,
-        "Append",
-        "None",
-    )
-
-
-def threshold_alert_stream_legacy(
-    events: DataFrame, *, threshold: float = ALERT_THRESHOLD
-) -> DataFrame:
-    """Identical semantics on ``applyInPandasWithState`` (the API the
-    container can execute) — one (level string) tuple of state per key,
-    no timeout (the TTL knob is the new API's addition)."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from pyspark.sql.types import StringType, StructField, StructType
 

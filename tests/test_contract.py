@@ -8,10 +8,12 @@ record, so both are pinned here.
 
 from __future__ import annotations
 
+import ast
 import json
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 import __spark_entry__ as entry_mod
 
@@ -181,3 +183,64 @@ def test_bench_full_headline_fits_capture_window():
         "sf": 0.1,
     }
     assert len(_json.dumps(h)) < 1900
+
+
+def _env_reads(tree) -> set[str]:
+    """Environment variable names read anywhere in ``tree``: the key of
+    every ``os.environ[...]`` / ``os.environ.get(...)`` /
+    ``... in os.environ`` / ``os.getenv(...)``.  Any other use of the
+    environment (a computed key, the mapping passed along whole) is
+    reported by its source text so it cannot slip past the guard."""
+
+    def is_env(node) -> bool:
+        if isinstance(node, ast.Attribute):
+            return node.attr in ("environ", "getenv")
+        return getattr(node, "id", None) in ("environ", "getenv")
+
+    parents = {
+        child: node
+        for node in ast.walk(tree)
+        for child in ast.iter_child_nodes(node)
+    }
+    reads = set()
+    for node in ast.walk(tree):
+        if not is_env(node):
+            continue
+        parent = parents.get(node)
+        key = None
+        if isinstance(parent, ast.Subscript) and parent.value is node:
+            key = parent.slice
+        elif isinstance(parent, ast.Compare) and node in parent.comparators:
+            key = parent.left
+        elif isinstance(parent, ast.Call) and parent.func is node:
+            key = parent.args[0] if parent.args else None
+        elif isinstance(parent, ast.Attribute) and parent.attr in (
+            "get",
+            "setdefault",
+            "pop",
+        ):
+            call = parents.get(parent)
+            if isinstance(call, ast.Call) and call.args:
+                key = call.args[0]
+        if isinstance(key, ast.Constant) and isinstance(key.value, str):
+            reads.add(key.value)
+        else:
+            reads.add(ast.unparse(parent or node))
+    return reads
+
+
+def test_package_reads_no_env_knobs():
+    """A measured-and-rejected path is deleted, not kept behind an
+    environment flag: the only variable the package reads is the core
+    count for local sessions."""
+    pkg = Path(REPO) / "ida_ice_energy_simulation_etl_pipeline_spark"
+    reads = {
+        f"{path.relative_to(REPO)}: {name}"
+        for path in sorted(pkg.rglob("*.py"))
+        for name in _env_reads(ast.parse(path.read_text(), str(path)))
+        if name != "SPARK_GRAFT_CPUS"
+    }
+    assert not reads, sorted(reads)
+    # the guard itself must see the reads it allows
+    session = (pkg / "session.py").read_text()
+    assert _env_reads(ast.parse(session)) == {"SPARK_GRAFT_CPUS"}

@@ -353,6 +353,29 @@ def test_pipeline_end_to_end(spark, runs_dir, tmp_path):
     assert spark.read.parquet(result["parquet"]["fact_hvac"]).count() > 0
 
 
+def test_pipeline_zipped_leaves_no_unzip_dir(spark, tmp_path, monkeypatch):
+    """A zipped run unzips into a temporary runs_* directory it owns and
+    removes it — after a successful run and after a failed extract."""
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    zips = tmp_path / "zips"
+    generate_dataset(
+        zips, buildings=("BLDG_09",), scenarios=("BASE",), hours=24,
+        n_zones=2, n_ahus=1, as_zip=True,
+    )
+    result = run_pipeline(spark, zips, tmp_path / "out", zipped=True)
+    assert result["validation"]["is_valid"]
+    assert not list(tmp.glob("runs_*"))
+
+    (zips / "run_BLDG_09_BASE.zip").write_bytes(b"not a zip")
+    with pytest.raises(ExtractionError):
+        run_pipeline(spark, zips, tmp_path / "out2", zipped=True)
+    assert not list(tmp.glob("runs_*"))
+
+
 def test_pipeline_gate_blocks(spark, tmp_path):
     # a dataset whose meters are implausible (electric ~ 0) must be gated
     import pandas as pd

@@ -1145,47 +1145,19 @@ def test_ktruss_distinguishes_cores_from_trusses(spark):
     assert ktruss_edges(g, 3).count() == 9  # every edge closes ≥1 triangle
 
 
-def test_incremental_supports_equals_recomputed(spark):
-    """r16 truss-maintenance pin: the decrement-derived support frame
-    must equal the full re-enumeration on the surviving edge set —
-    including the two-dropped-edges-per-triangle case, where the
-    canonical-corner dedup keeps each lost triangle from decrementing
-    a surviving edge twice.  Graph: two triangles sharing edge (1,2);
-    at k=4 every edge but (1,2) drops (support 1 < 2), and BOTH lost
-    triangles touch (1,2), so sup_new(1,2) must be exactly 0 — the
-    recomputed metric has no row for it, and the ≥ k−2 filter treats
-    the 0-row and the absent row identically (both peel)."""
-    from pyspark.sql import functions as F
-
+def test_ktruss_edges_shared_edge_and_pendant_triangle(spark):
+    """Two triangles sharing edge (1,2): at k=4 every edge but (1,2)
+    drops (support 1 < 2), which leaves (1,2) with support 0, so the
+    4-truss is empty.  K4 plus a pendant triangle: the pendant drops
+    and the K4 survives whole."""
     from ida_ice_energy_simulation_etl_pipeline_spark.operators.graph import (
-        _incremental_supports,
-        _oriented_triangles,
         ktruss_edges,
     )
 
-    old = spark.createDataFrame(
+    g = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (1, 4), (2, 4)], ["doc_a", "doc_b"]
-    ).localCheckpoint(eager=True)
-    tri = _oriented_triangles(old)
-    old_sup = (
-        tri.select(F.col("x").alias("doc_a"), F.col("y").alias("doc_b"))
-        .unionAll(tri.select(F.col("x").alias("doc_a"), F.col("z").alias("doc_b")))
-        .unionAll(tri.select(F.col("y").alias("doc_a"), F.col("z").alias("doc_b")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("sup"))
-        .localCheckpoint(eager=True)
     )
-    new = spark.createDataFrame([(1, 2)], ["doc_a", "doc_b"]).localCheckpoint(
-        eager=True
-    )
-    inc = _incremental_supports(old, old_sup, new)
-    assert sorted(map(tuple, inc.collect())) == [(1, 2, 0)]
-    # end-to-end: the kernel (which now uses the incremental step on
-    # every productive round) still produces the right 4-truss
-    assert ktruss_edges(old, 4).count() == 0
-    # and a case where the decrement leaves a surviving truss: K4 plus
-    # a pendant triangle — the pendant drops, the K4's supports are
-    # untouched (no K4 triangle contains a dropped edge)
+    assert ktruss_edges(g, 4).count() == 0
     k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
     g = spark.createDataFrame(
         k4 + [(3, 10), (3, 11), (10, 11)], ["doc_a", "doc_b"]
@@ -1223,7 +1195,8 @@ def test_cc_lpa_sym_capture_regimes_identical(spark, monkeypatch):
     local_checkpoint_partitioned, label side pinned SHUFFLE_HASH) must
     produce bitwise-identical components and labels to the fixture-scale
     plain regime — the regime only chooses which exchanges the round
-    plans pay."""
+    plans pay.  Each regime is forced by replacing the selector."""
+    from ida_ice_energy_simulation_etl_pipeline_spark.operators import graph
     from ida_ice_energy_simulation_etl_pipeline_spark.operators.graph import (
         connected_components,
         lpa_labels,
@@ -1244,12 +1217,11 @@ def test_cc_lpa_sym_capture_regimes_identical(spark, monkeypatch):
     e = pairs.selectExpr("doc_a AS src", "doc_b AS dst")
 
     results = {}
-    for mode in ("plain", "partitioned"):
-        monkeypatch.setenv("SPARK_GRAFT_GRAPH_SYM_CAPTURE", mode)
+    for mode, deploy in (("plain", False), ("partitioned", True)):
+        monkeypatch.setattr(graph, "_deploy_regime", lambda _ckpt: deploy)
         cc = sorted(map(tuple, connected_components(verts, e).collect()))
         lpa = sorted(map(tuple, lpa_labels(pairs).collect()))
         results[mode] = (cc, lpa)
-    monkeypatch.delenv("SPARK_GRAFT_GRAPH_SYM_CAPTURE")
     assert results["plain"] == results["partitioned"]
     # sanity: the fixture really exercises both kernels (bridged
     # triangles are ONE component; LPA keeps the bridge apart)

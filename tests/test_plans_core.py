@@ -16,8 +16,10 @@ from __future__ import annotations
 import time
 
 from ida_ice_energy_simulation_etl_pipeline_spark.plans.core import (
+    checkpointed_bytes,
     free_local_checkpoint,
     local_checkpoint_partitioned,
+    outgrows_broadcast,
 )
 
 
@@ -160,3 +162,23 @@ def test_free_local_checkpoint_is_noop_on_plain_frames(spark):
     free_local_checkpoint(spark.range(50).selectExpr("id * 2 AS x"))
     assert kept_ids <= _cached_rdd_ids(spark)
     free_local_checkpoint(keep)  # cleanup
+
+
+def test_regime_probe_reads_checkpoint_size(spark):
+    """API-drift canary for the CC/LPA regime selector: the storage-info
+    reach-through must see an eager localCheckpoint's bytes, and the
+    regime must flip with the broadcast threshold.  A probe that fell
+    back to -1 would silently pin every kernel to the plain regime."""
+    df = spark.range(1000).localCheckpoint(eager=True)
+    try:
+        assert checkpointed_bytes(df) > 0
+        assert not outgrows_broadcast(df)
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "1b")
+        try:
+            assert outgrows_broadcast(df)
+        finally:
+            spark.conf.set(key, old)
+    finally:
+        free_local_checkpoint(df)

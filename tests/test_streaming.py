@@ -871,7 +871,7 @@ def test_threshold_alert_transitions_span_micro_batches(spark, tmp_path):
     micro-batch boundaries — a still-high reading in batch 2 stays
     silent, recovery emits exactly one ALERT→OK row."""
     from ida_ice_energy_simulation_etl_pipeline_spark.streaming.alerts import (
-        threshold_alert_stream_legacy,
+        threshold_alert_stream,
     )
 
     ingest = tmp_path / "alerts_in"
@@ -881,7 +881,7 @@ def test_threshold_alert_transitions_span_micro_batches(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(ingest))
     )
-    run_to_memory(threshold_alert_stream_legacy(events), "alerts_t")
+    run_to_memory(threshold_alert_stream(events), "alerts_t")
     rows = {
         (r["user_id"], r["level"], r["prev_level"]): r["value"]
         for r in spark.sql("SELECT * FROM alerts_t").collect()
@@ -900,7 +900,7 @@ def test_alert_transitions_batch_twin_matches_stream(spark, tmp_path):
     )
     from ida_ice_energy_simulation_etl_pipeline_spark.streaming.alerts import (
         ALERT_THRESHOLD,
-        threshold_alert_stream_legacy,
+        threshold_alert_stream,
     )
 
     ingest = tmp_path / "alerts_in_twin"
@@ -910,7 +910,7 @@ def test_alert_transitions_batch_twin_matches_stream(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .json(str(ingest))
     )
-    run_to_memory(threshold_alert_stream_legacy(events), "alerts_twin_t")
+    run_to_memory(threshold_alert_stream(events), "alerts_twin_t")
     streamed = sorted(
         (r["user_id"], r["ts"], r["value"], r["level"], r["prev_level"])
         for r in spark.sql("SELECT * FROM alerts_twin_t").collect()
@@ -923,48 +923,13 @@ def test_alert_transitions_batch_twin_matches_stream(spark, tmp_path):
     assert streamed == batched and len(batched) == 3
 
 
-def test_threshold_alert_new_state_api_matches_legacy(spark, tmp_path):
-    """transformWithStateInPandas twin: same kernel, same output.  The
-    new API's Python state-server protocol needs the protobuf package
-    (not shipped in this container) — import-gated like the PIL path."""
-    pytest.importorskip("google.protobuf")
-    from ida_ice_energy_simulation_etl_pipeline_spark.streaming.alerts import (
-        threshold_alert_stream,
-    )
-
-    ingest = tmp_path / "alerts_in_tws"
-    _write_alert_batches(ingest)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        events = (
-            spark.readStream.schema(ALERT_EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(str(ingest))
-        )
-        run_to_memory(threshold_alert_stream(events), "alerts_tws_t")
-        rows = {
-            (r["user_id"], r["level"], r["prev_level"]): r["value"]
-            for r in spark.sql("SELECT * FROM alerts_tws_t").collect()
-        }
-        assert rows == EXPECTED_ALERT_TRANSITIONS
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_threshold_alert_sorts_across_arrow_chunks(spark, tmp_path):
     """A key's micro-batch spanning multiple Arrow chunks must be sorted
     GLOBALLY by (ts, event_id) before classification — chunk-local sort
     would classify an out-of-order later chunk against the wrong running
     level and emit spurious transitions."""
     from ida_ice_energy_simulation_etl_pipeline_spark.streaming.alerts import (
-        threshold_alert_stream_legacy,
+        threshold_alert_stream,
     )
 
     ingest = tmp_path / "alerts_chunks"
@@ -983,7 +948,7 @@ def test_threshold_alert_sorts_across_arrow_chunks(spark, tmp_path):
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
     try:
         events = spark.readStream.schema(ALERT_EVENT_SCHEMA).json(str(ingest))
-        run_to_memory(threshold_alert_stream_legacy(events), "alerts_chunked_t")
+        run_to_memory(threshold_alert_stream(events), "alerts_chunked_t")
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     got = sorted(
