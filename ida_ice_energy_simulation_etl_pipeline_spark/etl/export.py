@@ -17,7 +17,7 @@ from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 from pathlib import Path
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 LIGHTING_SHARE = 0.35
@@ -25,6 +25,14 @@ EQUIPMENT_SHARE = 0.45
 COMFORT_BAND_C = 1.0
 
 REQUIRED_FIELDS = ("pipeline", "generated_at", "scenario", "annual", "kpis")
+
+
+def _sorted_by(rows: list[Row], key: str) -> list[Row]:
+    """``rows`` ordered as ``orderBy(key)`` orders them, nulls first, so
+    driver-side float sums add up in the same order.  The rows are few
+    (a dim, or one per month), and sorting them here spares the sort's
+    Spark jobs."""
+    return sorted(rows, key=lambda r: (r[key] is not None, r[key]))
 
 
 def build_summary(
@@ -36,16 +44,18 @@ def build_summary(
     """Canonical summary document (shape: FIXTURES.md §3, reference
     src/export_json.py:49-62) — every number computed from the data.
 
-    FOUR Spark actions total, and the three fact-side aggregates overlap as
-    concurrent jobs (same pool pattern as ``validate_all``): the scenario-id
-    gate collects dim_scenario once (its rows also serve the description
-    lookup), dim_building is collected once (floor-area summed driver-side —
-    it is a dim), annual figures derive from the monthly breakdown instead
-    of a second meters pass, and peak/comfort run concurrently with it.
-    Wall time is max(fact scans), not their sum.
+    FIVE collects total, and the three fact-side aggregates overlap as
+    concurrent jobs with the dim_building collect (same pool pattern as
+    ``validate_all``): the scenario-id gate collects dim_scenario once (its
+    rows also serve the description lookup), dim_building is collected once
+    (floor-area summed driver-side — it is a dim), annual figures derive
+    from the monthly breakdown instead of a second meters pass, and
+    peak/comfort run concurrently with it.  The collected rows are sorted
+    on the driver (``_sorted_by``), not by ``orderBy``.  Wall time is
+    max(fact scans), not their sum.
     """
     dim_building = star["dim_building"]
-    scen_rows = star["dim_scenario"].orderBy("scenario_id").collect()
+    scen_rows = _sorted_by(star["dim_scenario"].collect(), "scenario_id")
     scenarios = [r["scenario_id"] for r in scen_rows]
     if scenario_id is None:
         scenario_id = scenarios[0]
@@ -74,7 +84,6 @@ def build_summary(
                 F.sum("cooling_kwh").alias("cooling"),
                 F.sum("electric_kwh").alias("electric"),
             )
-            .orderBy("month")
             .collect()
         )
 
@@ -112,8 +121,8 @@ def build_summary(
         monthly_f = pool.submit(_monthly_rows)
         peak_f = pool.submit(_peak_kw)
         comfort_f = pool.submit(_comfort_row)
-        buildings = dim_building.orderBy("building_id").collect()
-        monthly_rows = monthly_f.result()
+        buildings = _sorted_by(dim_building.collect(), "building_id")
+        monthly_rows = _sorted_by(monthly_f.result(), "month")
         peak_kw = peak_f.result()
         comfort_row = comfort_f.result()
 

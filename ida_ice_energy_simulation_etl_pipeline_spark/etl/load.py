@@ -132,38 +132,37 @@ def _check_identifier(name: str) -> None:
         raise ValueError(f"invalid table identifier: {name!r}")
 
 
+def range_clustered(df: DataFrame, cols: list[str]) -> DataFrame:
+    """``df`` ``repartitionByRange`` + ``sortWithinPartitions`` on
+    ``cols`` — the data-skipping layout for a following write.  Parquet
+    records min/max stats per file and per row group; range-clustering
+    makes every output file's key interval NARROW and pairwise disjoint,
+    so a reader's pushed-down range predicate prunes whole files (and row
+    groups inside the survivors) instead of scanning them.  At 100 TB this
+    is the second pruning dimension after partitionBy (partition pruning
+    cuts directories; clustered files cut within the survivors), bought
+    with ONE range shuffle at write time and amortized over every
+    subsequent time-range query."""
+    return df.repartitionByRange(*cols).sortWithinPartitions(*cols)
+
+
 def load_to_parquet(
     star: dict[str, DataFrame],
     out_dir: str | Path,
     *,
     partition_facts: bool = False,
-    sort_within: dict[str, list[str]] | None = None,
     file_format: str = "parquet",
 ) -> dict[str, str]:
     """Write every star table as parquet (reference load:15-33) — or ORC
     via ``file_format="orc"``: same layout levers (partitioning,
-    range-clustering, file/stripe-level min-max skipping), both columnar
-    formats are first-class Spark sources.  Returns {table: path}.
-
-    ``sort_within`` maps table → clustering columns: the table is
-    ``repartitionByRange`` + ``sortWithinPartitions`` on them before
-    writing — the data-skipping layout.  Parquet records min/max stats
-    per file and per row group; range-clustering makes every output
-    file's key interval NARROW and pairwise disjoint, so a reader's
-    pushed-down range predicate prunes whole files (and row groups
-    inside the survivors) instead of scanning them.  At 100 TB this is
-    the second pruning dimension after partitionBy (partition pruning
-    cuts directories; clustered files cut within the survivors), bought
-    with ONE range shuffle at write time and amortized over every
-    subsequent time-range query."""
+    range-clustering through ``range_clustered``, file/stripe-level
+    min-max skipping), both columnar formats are first-class Spark
+    sources.  Returns {table: path}."""
     out_dir = Path(out_dir)
     paths = {}
 
     def write(table: str, df: DataFrame) -> None:
         path = str(out_dir / table)
-        if sort_within and table in sort_within:
-            cols = sort_within[table]
-            df = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
         writer = df.write.mode("overwrite")
         if partition_facts and table in PARTITION_COLUMNS:
             writer = writer.partitionBy(*PARTITION_COLUMNS[table])
@@ -332,7 +331,7 @@ def compact_parquet(
     per-split overhead, so periodic compaction is standard table
     maintenance (what OPTIMIZE does in table formats).  ``sort_by``
     additionally range-clusters during the rewrite (the
-    ``load_to_parquet(sort_within=...)`` data-skipping layout), so one
+    ``range_clustered`` data-skipping layout), so one
     maintenance pass buys both fewer files AND narrow per-file min/max
     stats.  A Hive-partitioned layout (``col=value`` directories — what
     ``merge_upsert_parquet`` and the streaming upsert sink write) is
@@ -424,7 +423,7 @@ def zorder_cluster(
 ) -> DataFrame:
     """Z-order (Morton-curve) clustering for MULTI-column data skipping.
 
-    ``repartitionByRange(sort_col)`` (``load_to_parquet(sort_within=)``)
+    ``repartitionByRange(sort_col)`` (``range_clustered``)
     narrows per-file min/max stats on ONE column; queries filtering the
     second column still scan everything.  Z-ordering interleaves the bit
     patterns of each column's normalized bucket, so files cover a small

@@ -1,5 +1,6 @@
-"""Pipeline orchestration: extract → transform → validate (gate) → load →
-export (reference run_pipeline.py:25-157).
+"""Pipeline orchestration: extract → transform → land (staging parquet, the
+null/range checks observed on the write) → validate (gate) → publish
+(rename) → views → export (reference run_pipeline.py:25-157).
 
 The interactive continue-despite-validation prompt (run_pipeline.py:106-120)
 has no place in a cluster job — only the explicit ``force`` flag overrides
@@ -12,11 +13,10 @@ import argparse
 import json
 import shutil
 import tempfile
-from concurrent.futures import ThreadPoolExecutor
 from contextlib import nullcontext
 from pathlib import Path
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 from ..session import get_spark
 from .export import export_summary
@@ -26,9 +26,14 @@ from .extract import (
     extract_runs_from_zips,
     list_runs,
 )
-from .load import load_to_parquet, load_to_warehouse, register_temp_views
+from .load import (
+    load_to_parquet,
+    load_to_warehouse,
+    range_clustered,
+    register_temp_views,
+)
 from .transform import transform_all
-from .validate import validate_all
+from .validate import integrity_checks, validate_all
 
 
 class ValidationGateError(RuntimeError):
@@ -85,36 +90,61 @@ def run_pipeline(
         # that survives 100 TB, where caching the star in executor memory is
         # not an option.
         staging = output_dir / "parquet._staging"
+        # The null and range checks ride on the land write: each table's
+        # aggregates are observed while its rows stream to parquet, so they
+        # cost no job of their own (validate_all scans only what it is not
+        # handed).
+        checks = integrity_checks(star, range_rules)
+        observed = {t: Observation() for t in checks}
         # Dims sit in every fact's lineage (broadcast joins), so without
         # pinning, each fact write re-derives the distinct/window dim builds
-        # from raw CSV.  Cache + materialize them up front (concurrently —
-        # they are independent small jobs); they are dim-scale by construction
-        # so executor memory is never a concern, 100 TB facts included.
+        # from raw CSV.  Cache them and write them FIRST: their own writes
+        # fill the caches, and the fact writes that follow read them.  (Fact
+        # writes started alongside would build an unfilled dim again.)  They
+        # are dim-scale by construction, so executor memory is never a
+        # concern, 100 TB facts included.
         dims = [t for t in star if t.startswith("dim_")]
         for t in dims:
             star[t] = star[t].cache()
-        with ThreadPoolExecutor(max_workers=len(dims) or 1) as pool:
-            list(pool.map(lambda t: star[t].count(), dims))
         # Time-range queries dominate the analytic surface (monthly rollups,
         # gap scans, as-of lookups), so fact files are range-clustered on
         # time_key when requested: disjoint per-file min/max intervals let
-        # pushed-down time predicates skip whole files (see load_to_parquet).
-        sort_within = (
-            {t: ["time_key"] for t in ("fact_meters", "fact_hvac", "fact_zone_conditions")}
-            if cluster_facts
-            else None
+        # pushed-down time predicates skip whole files (see range_clustered).
+        clustered = (
+            ("fact_meters", "fact_hvac", "fact_zone_conditions") if cluster_facts else ()
         )
+        written = {}
+        for t, df in star.items():
+            if t in clustered:
+                df = range_clustered(df, ["time_key"])
+            # Observed ABOVE the range shuffle, in the write's own stage: the
+            # shuffle samples its input in a job of its own, and an
+            # observation below it would count the sampled rows again.
+            if t in observed:
+                df = df.observe(observed[t], *checks[t].aggs)
+            written[t] = df
         try:
-            load_to_parquet(
-                star, staging, partition_facts=partition_facts, sort_within=sort_within
-            )
+            for wave in (dims, [t for t in star if t not in dims]):
+                load_to_parquet(
+                    {t: written[t] for t in wave},
+                    staging,
+                    partition_facts=partition_facts,
+                )
         finally:
             for t in dims:
                 star[t].unpersist()
-    landed = {t: spark.read.parquet(str(staging / t)) for t in star}
+    # Observation.get blocks until its write has finished; the writes have.
+    integrity = {t: c.errors(observed[t].get) for t, c in checks.items()}
+    # Re-reads carry the schema of the DataFrame that was written, which
+    # spares one schema-inference job per read and, unlike the declared
+    # STAR_SCHEMAS, keeps a column the star lacks visible to check_schema.
+    schemas = {t: df.schema for t, df in star.items()}
+    landed = {
+        t: spark.read.schema(schemas[t]).parquet(str(staging / t)) for t in star
+    }
 
     check_run_coverage(landed["fact_meters"], expected_run_ids)
-    report = validate_all(landed, range_rules=range_rules)
+    report = validate_all(landed, range_rules=range_rules, integrity=integrity)
     if not report["is_valid"] and not force:
         raise ValidationGateError(report)  # staging left behind for triage
 
@@ -123,7 +153,7 @@ def run_pipeline(
         shutil.rmtree(final)
     staging.rename(final)
     paths = {t: str(final / t) for t in star}
-    published = {t: spark.read.parquet(p) for t, p in paths.items()}
+    published = {t: spark.read.schema(schemas[t]).parquet(p) for t, p in paths.items()}
 
     if to_warehouse:
         load_to_warehouse(spark, published)

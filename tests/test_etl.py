@@ -23,6 +23,7 @@ from ida_ice_energy_simulation_etl_pipeline_spark.etl.extract import (
 from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import (
     load_to_parquet,
     query,
+    range_clustered,
     register_temp_views,
 )
 from ida_ice_energy_simulation_etl_pipeline_spark.etl.pipeline import (
@@ -195,6 +196,29 @@ def test_validate_mutations(spark, star):
     assert not rep4["checks"]["plausibility"]["valid"]
 
 
+def test_validate_malformed_star_fails_report(star):
+    """A star missing a table or a column is a failed report, not a crash
+    (KeyError, UNRESOLVED_COLUMN): check_schema names what is missing, and
+    the checks that need it are skipped."""
+    no_meters = {t: df for t, df in star.items() if t != "fact_meters"}
+    no_time = {t: df for t, df in star.items() if t != "dim_time"}
+    no_co2 = dict(star)
+    no_co2["fact_zone_conditions"] = star["fact_zone_conditions"].drop("co2_ppm")
+    for bad, schema_error in (
+        (no_meters, "missing table: fact_meters"),
+        (no_time, "missing table: dim_time"),
+        (no_co2, "fact_zone_conditions: missing columns ['co2_ppm']"),
+    ):
+        rep = validate_all(bad)
+        assert not rep["is_valid"]
+        assert rep["checks"]["schema"]["errors"] == [schema_error]
+    # the null/range scan still runs on the columns that are there
+    assert rep["checks"]["nulls"]["valid"]
+    assert rep["checks"]["ranges"]["errors"] == [
+        "fact_zone_conditions.co2_ppm: column missing, range not checked"
+    ]
+
+
 def test_views_and_query(spark, star):
     register_temp_views(spark, star)
     zw = query(spark, "SELECT * FROM vw_zone_with_weather")
@@ -245,7 +269,7 @@ def test_parquet_roundtrip(spark, star, tmp_path):
 
 
 def test_sorted_write_produces_disjoint_file_ranges(spark, tmp_path):
-    """sort_within range-clusters the table on the key: every output
+    """range_clustered lays the table out on the key: every output
     file's [min, max] key interval must be pairwise disjoint (that is
     what lets a pushed-down range predicate prune whole files), where an
     unclustered write leaves overlapping file ranges."""
@@ -288,9 +312,7 @@ def test_sorted_write_produces_disjoint_file_ranges(spark, tmp_path):
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
         load_to_parquet(
-            {"ev_sorted": scattered},
-            tmp_path,
-            sort_within={"ev_sorted": ["event_id"]},
+            {"ev_sorted": range_clustered(scattered, ["event_id"])}, tmp_path
         )
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old)
@@ -392,6 +414,89 @@ def test_pipeline_gate_blocks(spark, tmp_path):
     write_run_dir(run, tmp_path)
     with pytest.raises(ValidationGateError):
         run_pipeline(spark, tmp_path, tmp_path / "out")
+
+
+def _mutated_runs(out_dir):
+    """Two run bundles with one out-of-range air_temp_C, one null
+    electric_kwh and one negative cooling_kw."""
+    from ida_ice_energy_simulation_etl_pipeline_spark.fixtures import (
+        generate_run,
+        write_run_dir,
+    )
+
+    for b in ("BLDG_01", "BLDG_02"):
+        run = generate_run(b, "BASE", hours=24, n_zones=2, n_ahus=1)
+        if b == "BLDG_02":
+            run["zones"].loc[3, "air_temp_C"] = 99.0
+            run["meters"].loc[5, "electric_kwh"] = None
+            run["hvac"].loc[7, "cooling_kw"] = -4.0
+        write_run_dir(run, out_dir)
+    return out_dir
+
+
+@pytest.mark.parametrize("cluster_facts", [False, True])
+def test_pipeline_observed_integrity_matches_standalone(spark, tmp_path, cluster_facts):
+    """run_pipeline observes the null/range aggregates on the land write;
+    standalone validate_all computes them with df.agg.  On the same star,
+    both paths must give the same report — also when the facts are
+    range-clustered, whose shuffle samples its input in a job of its own."""
+    runs = _mutated_runs(tmp_path / "runs")
+    out = tmp_path / "out"
+    result = run_pipeline(spark, runs, out, force=True, cluster_facts=cluster_facts)
+    written = json.loads((out / "validation_report.json").read_text())
+    assert written == result["validation"]
+    errors = written["checks"]
+    assert errors["ranges"]["errors"] == [
+        "fact_zone_conditions.air_temp_C: 1 rows outside [10.0, 35.0]",
+        "fact_hvac.cooling_kw: 1 rows outside [0.0, None]",
+    ]
+    assert errors["nulls"]["errors"] == ["fact_meters.electric_kwh: 1 null values"]
+    landed = {t: spark.read.parquet(p) for t, p in result["parquet"].items()}
+    assert validate_all(landed) == written
+
+
+def test_pipeline_partitioned_reads_keep_inferred_schema(spark, runs_dir, tmp_path):
+    """The published tables are read back with the schema of the DataFrame
+    that was written.  Under partition_facts that must still be the schema
+    inference gives: same names, order and types, partition column last."""
+    result = run_pipeline(spark, runs_dir, tmp_path / "out", partition_facts=True)
+
+    def shape(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    for table, path in result["parquet"].items():
+        inferred = spark.read.parquet(path).schema
+        assert shape(spark.table(table).schema) == shape(inferred), table
+    assert spark.table("fact_meters").columns[-1] == "building_id"
+
+
+def _next_job_id(tracker, first: int) -> int:
+    """Id one past the last Spark job registered, probing ``getJobInfo``
+    upward from ``first`` (a retained job).  The status store is fed
+    asynchronously, so the probe runs twice."""
+    import time
+
+    nxt = first
+    for _ in range(2):
+        time.sleep(0.2)
+        while tracker.getJobInfo(nxt) is not None:
+            nxt += 1
+    return nxt
+
+
+def test_pipeline_job_count_guard(spark, runs_dir, tmp_path):
+    """A warm run_pipeline with the CLI defaults stays within 60 Spark
+    jobs: the integrity checks ride on the land write, coverage is one
+    query and the re-reads infer no schema.  Another per-table action
+    fails here, not only in the benchmark."""
+    tracker = spark.sparkContext.statusTracker()
+    run_pipeline(spark, runs_dir, tmp_path / "out")
+    # run_pipeline's jobs carry no job group, so the newest of them is
+    # among the ungrouped ids the tracker still retains.
+    start = _next_job_id(tracker, max(tracker.getJobIdsForGroup(None)))
+    run_pipeline(spark, runs_dir, tmp_path / "out")
+    jobs = _next_job_id(tracker, start) - start
+    assert jobs <= 60, f"{jobs} Spark jobs in one warm pass"
 
 
 def test_merge_upsert_parquet_touches_only_batch_partitions(spark, tmp_path):
