@@ -90,8 +90,11 @@ class CorpusConfig:
     # short doc swallowed by a long one whose symmetric Jaccard is tiny,
     # still cluster).  Both generators are bounded (band buckets / fp df
     # cap) and feed the SAME connected-components → min-doc_id survivor
-    # path; near_dup_agreement (operators/dedup.py) is the acceptance
-    # harness comparing the two pair sets on a given corpus.
+    # path (operators/graph.py::connected_components, correct at any
+    # cluster diameter: its min-label rounds hand off to large-star/
+    # small-star when they stop converging); near_dup_agreement
+    # (operators/dedup.py) is the acceptance harness comparing the two
+    # pair sets on a given corpus.
     # KNOWN BLIND SPOT of "winnow" (documented + pinned by
     # test_corpus_winnow_criterion_df_cap_blind_spot): its df cap drops
     # every fingerprint shared by > WINNOW_PAIR_DF_CAP docs BEFORE the
@@ -155,9 +158,6 @@ class CorpusConfig:
     # (0.0 = the paper's keep-if-target-like threshold); docs with < 2
     # tokens have no features and pass through (length gates own them)
     min_dsir_weight: float | None = None
-    # "label_prop" (diameter rounds — near-dup clusters are small/dense) or
-    # "star" (large-star/small-star, O(log n) rounds at any diameter)
-    cc_algorithm: str = "label_prop"
     scrub: bool = True
     # RAG output mode: explode docs into overlapping token-window chunks
     # of this size (stride 3/4) AFTER scrub, BEFORE embed — chunk-level
@@ -303,18 +303,13 @@ def _exact_deduped(docs: DataFrame) -> DataFrame:
     )
 
 
-def _near_deduped(
-    docs: DataFrame,
-    cc_algorithm: str = "label_prop",
-    method: str = "lsh",
-) -> DataFrame:
+def _near_deduped(docs: DataFrame, method: str = "lsh") -> DataFrame:
     """Near-dup candidates → connected components → canonical
     (min doc_id) survivor per cluster.  ``method`` picks the candidate
     generator — "lsh" (band-bucket join from operators/dedup.py) or
     "winnow" (fingerprint-grain join from operators/text.py); both are
     bounded self-joins, never doc×doc."""
     from ..operators.dedup import lsh_candidate_pairs
-    from ..operators.graph import connected_components_star
     from ..operators.text import winnow_candidate_pairs
 
     if method == "lsh":
@@ -335,12 +330,7 @@ def _near_deduped(
     # doc-grain survivor list would have forced a full-corpus shuffle.
     # Result-identical: kept = docs minus non-canonical members in both
     # formulations (pinned by the e2e oracles + pipeline suites).
-    if cc_algorithm == "star":
-        comp, _ = connected_components_star(None, edges)
-    elif cc_algorithm == "label_prop":
-        comp = connected_components(None, edges)
-    else:
-        raise ValueError(f"unknown cc_algorithm {cc_algorithm!r}")
+    comp = connected_components(None, edges)
     dropped = comp.filter(F.col("vertex_id") != F.col("component")).select(
         F.col("vertex_id").alias("doc_id")
     )
@@ -474,7 +464,7 @@ def run_corpus_pipeline(
         # deployment lands this intermediate to storage instead (the
         # etl/pipeline.py staging pattern) so executors can evict.
         kept = kept.localCheckpoint(eager=True)
-        kept = _near_deduped(kept, cfg.cc_algorithm, cfg.near_dedup_method)
+        kept = _near_deduped(kept, cfg.near_dedup_method)
     if cfg.boilerplate_scrub:
         # per-source boilerplate removal (operators/dedup.py::
         # boilerplate_scrub_frame) — deliberately BEFORE the global
@@ -1173,13 +1163,6 @@ def main(argv: list[str] | None = None) -> int:
         "misses)",
     )
     ap.add_argument(
-        "--cc-algorithm",
-        choices=("label_prop", "star"),
-        default="label_prop",
-        help="near-dedup clustering: diameter-round label propagation or "
-        "O(log n)-round large-star/small-star",
-    )
-    ap.add_argument(
         "--passage-dedup",
         action="store_true",
         help="drop repeated fixed-size token passages corpus-wide (C4-style)",
@@ -1322,7 +1305,6 @@ def main(argv: list[str] | None = None) -> int:
         decontaminate_eval_source=args.decontaminate_eval_source,
         near_dedup=not args.no_near_dedup,
         near_dedup_method=args.near_dedup_method,
-        cc_algorithm=args.cc_algorithm,
         boilerplate_scrub=args.boilerplate_scrub,
         passage_dedup=args.passage_dedup,
         span_scrub=args.span_scrub,

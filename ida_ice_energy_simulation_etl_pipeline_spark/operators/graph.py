@@ -6,21 +6,31 @@ the minimum doc_id in the component is the canonical representative to
 keep.  The reference stops at per-run first-seen dedup
 (src/etl/transform/__init__.py:29-40); this is the corpus-scale version.
 
-Algorithm: iterative min-label propagation (the HashToMin / GraphFrames
-shape).  Every vertex starts labeled with itself; each round every vertex
+Algorithm: one kernel, :func:`connected_components`, in two phases.
+Phase 1 is iterative min-label propagation (the HashToMin / GraphFrames
+shape): every vertex starts labeled with itself; each round every vertex
 takes the min of its own label and its neighbors' labels; stop when a
-round changes nothing.  Rounds needed = graph diameter ≤ O(log n) for
-near-dup clusters (which are small and dense).  Each round is ONE
-broadcast-free equi-join on vertex id + ONE groupBy min — both shuffle on
-the same key, so AQE reuses partitioning; no collect of edges, no
-driver-side graph.  The loop itself is driver-side control flow with a
-per-round count action — the standard Spark shape for fixpoint
-iteration (convergence must be observed, so an action per round is
-irreducible).
+round changes nothing.  Rounds needed = graph diameter: 2 at sf0.01 and
+4 at sf0.1, as near-dup clusters are small and dense.  Each round is ONE
+equi-join on vertex id + ONE groupBy min plus the per-round count action
+that observes convergence; no collect of edges, no driver-side graph.
+
+Phase 2 exists because nothing bounds the diameter: a path of n vertices
+needs n - 1 min-label rounds, and a fixed rail would return wrong labels.
+If phase 1 has not converged after ``HANDOFF_ROUNDS``, its materialized
+symmetric edge set goes to alternating large-star / small-star
+contraction (:func:`_star_components`, Kiveris et al.): O(log n) rounds
+at any diameter, and :class:`ComponentsNotConverged` rather than labels
+if it reaches its own rail.  Observed convergence chooses the phase, not
+a caller option; near-dup traffic never reaches phase 2, which costs
+more there (``dedup_clusters_star``: 33 Spark jobs against
+``dedup_clusters``' 17 at sf0.01 on 4 cores).
 
 The DuckDB oracle computes the same components with a recursive CTE
 (transitive closure + min over reachable set) — exact hash-match, not a
 rows-only check, even though the Spark side is an iterative algorithm.
+``dedup_clusters_star`` runs phase 2 alone on the near-dup graph so the
+fallback stays hash-verified on real data.
 """
 
 from __future__ import annotations
@@ -36,16 +46,21 @@ from ..plans.core import (
     load_table,
     local_checkpoint_partitioned,
     outgrows_broadcast,
+    shuffle_partitions,
 )
 
-MAX_CC_ITERATIONS = 50  # safety rail; near-dup clusters converge in < 10
+# min-label rounds before connected_components hands off to the star
+# phase; near-dup clusters converge in ≤ 4 (sf0.1), plus the round that
+# observes it
+HANDOFF_ROUNDS = 10
+# the star phase's rail: it needs O(log n) rounds, so reaching this is a
+# defect and raises instead of returning labels
+MAX_STAR_ROUNDS = 50
 
 
-def _shuffle_parts(spark: SparkSession) -> int:
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return 200
+class ComponentsNotConverged(RuntimeError):
+    """The large-star/small-star phase reached MAX_STAR_ROUNDS without a
+    stable edge set; its labels would be wrong, so none are returned."""
 
 
 def _deploy_regime(edge_ckpt: DataFrame) -> bool:
@@ -72,16 +87,18 @@ def _deploy_regime(edge_ckpt: DataFrame) -> bool:
 
 
 def connected_components(
-    vertices: "DataFrame | None",
-    edges: DataFrame,
-    *,
-    max_iterations: int = MAX_CC_ITERATIONS,
+    vertices: "DataFrame | None", edges: DataFrame
 ) -> DataFrame:
     """(vertex_id) + (src, dst) -> (vertex_id, component) with component =
     min vertex_id reachable.  Isolated vertices keep their own id.
 
     ``vertices`` must have column ``vertex_id``; ``edges`` columns
     ``src``/``dst`` (undirected: each pair listed once is enough).
+
+    Correct at any diameter: if the min-label rounds have not converged
+    after ``HANDOFF_ROUNDS``, the materialized symmetric edge set goes to
+    :func:`_star_components` (O(log n) rounds).  Near-dup clusters never
+    get that far; a 64-node path (diameter 63) does.
 
     ``vertices=None`` (r16, guide §8 "decide with small rows") labels
     only the EDGE-ENDPOINT vertices, derived from the kernel's own edge
@@ -124,7 +141,7 @@ def connected_components(
     )
     if deploy:
         sym = local_checkpoint_partitioned(
-            sym0.repartition(_shuffle_parts(edges0.sparkSession), "dst")
+            sym0.repartition(shuffle_partitions(edges0.sparkSession), "dst")
         )
     else:
         sym = sym0.localCheckpoint(eager=True)
@@ -134,11 +151,13 @@ def connected_components(
         # carries both directions, so src alone covers every endpoint;
         # sym outlives the loop, unlike edges0 which is freed below) —
         # not from the caller's (possibly expensive) edge lineage
-        vertices = sym.select(F.col("src").alias("vertex_id")).distinct()
+        labels = sym.select(F.col("src").alias("vertex_id")).distinct()
+    else:
+        labels = vertices
     free_local_checkpoint(edges0)
-    labels = vertices.select("vertex_id", F.col("vertex_id").alias("component"))
+    labels = labels.select("vertex_id", F.col("vertex_id").alias("component"))
     prev_ck = None
-    for _ in range(max_iterations):
+    for _ in range(HANDOFF_ROUNDS):
         # SELF-VOTE round shape (r16, the LPA r15 trick applied to CC):
         # each vertex's own (vertex_id, component) row rides the vote
         # union tagged _self, so ONE min-aggregate computes the new
@@ -208,33 +227,38 @@ def connected_components(
         prev_ck = updated
         labels = updated.drop("_changed")
         if changed == 0:
-            break
-    # the returned labels are a projection of the LAST checkpointed round
-    # (whose blocks stay alive); the edge universe is no longer referenced
+            # the returned labels are a projection of the LAST
+            # checkpointed round (whose blocks stay alive); the edge
+            # universe is no longer referenced
+            free_local_checkpoint(sym)
+            return labels
+    # Not converged (the diameter outruns the rounds): hand the
+    # materialized sym to the star phase with the CALLER's vertices — the
+    # endpoint frame above reads sym's blocks, which are freed below.
+    free_local_checkpoint(prev_ck)
+    labels, _ = _star_components(vertices, sym)
     free_local_checkpoint(sym)
     return labels
 
 
-def connected_components_star(
-    vertices: "DataFrame | None",
-    edges: DataFrame,
-    *,
-    max_rounds: int = MAX_CC_ITERATIONS,
+def _star_components(
+    vertices: "DataFrame | None", edges: DataFrame
 ) -> tuple[DataFrame, int]:
     """Alternating large-star / small-star connected components (Kiveris
-    et al., "Connected Components in MapReduce and Beyond") — the
-    extreme-diameter fallback SCALE.md prescribes for min-label
-    propagation.  Converges in O(log n) ROUNDS REGARDLESS OF DIAMETER:
+    et al., "Connected Components in MapReduce and Beyond") — the phase
+    :func:`connected_components` hands off to when min-label rounds stop
+    converging.  Converges in O(log n) ROUNDS REGARDLESS OF DIAMETER:
     each large-star hangs every larger neighbor off the neighborhood
     minimum (halving tree height), each small-star flattens the smaller
     neighbors onto it, and the fixpoint is a star forest whose center is
-    the component minimum — the same contract as connected_components,
-    which needs one round per unit of graph diameter and therefore loses
-    badly on path/chain graphs (see test_cc_star_beats_label_prop_rounds).
+    the component minimum — the same contract as connected_components.
 
     Same input contract as :func:`connected_components`; returns
     ``(labels, rounds)`` so callers can observe convergence behavior.
-    Per round: two keyed shuffles (neighborhood min + emit), a
+    Raises :class:`ComponentsNotConverged` if the edge set is still
+    changing after ``MAX_STAR_ROUNDS`` rounds.  The input edge set is
+    checkpointed eagerly first, so the returned labels do not reference
+    ``edges``.  Per round: two keyed shuffles (neighborhood min + emit), a
     localCheckpoint to truncate lineage, and one (count, double
     xor-digest) aggregate action for the stability check (ANSI-safe:
     bit_xor of per-edge xxhash64 cannot overflow, unlike a sum; two
@@ -272,9 +296,7 @@ def connected_components_star(
         return (row["n"], row["h"], row["h2"])
 
     prev = _stats(e)
-    rounds = 0
-    for _ in range(max_rounds):
-        rounds += 1
+    for rounds in range(1, MAX_STAR_ROUNDS + 1):
         # large-star: for each u, m = min(N(u) ∪ {u}); hang every LARGER
         # neighbor v > u off m.
         sym = e.union(
@@ -325,6 +347,12 @@ def connected_components_star(
         if cur == prev:
             break
         prev = cur
+    else:
+        free_local_checkpoint(e)
+        raise ComponentsNotConverged(
+            f"large-star/small-star edge set still changing after "
+            f"{MAX_STAR_ROUNDS} rounds"
+        )
 
     if vertices is None:
         # endpoint vertices from the FINAL star forest (r16, guide §8):
@@ -350,17 +378,33 @@ def connected_components_star(
     return labels, rounds
 
 
-def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate clusters from MinHash-LSH candidate pairs: per-source
-    cluster census + canonical (min doc_id) members."""
+def _near_dup_pairs(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """(documents, MinHash-LSH candidate pairs) — the prologue of every
+    query over the near-dup graph."""
     from .dedup import lsh_candidate_pairs
 
     docs = ensure_parallelism(spark, load_table(spark, sf_dir, "documents"))
-    pairs = lsh_candidate_pairs(docs)
-    comp = connected_components(
+    return docs, lsh_candidate_pairs(docs)
+
+
+def _near_dup_components(
+    spark: SparkSession, sf_dir: str, kernel=connected_components
+) -> tuple[DataFrame, DataFrame]:
+    """(documents, doc-grain ``kernel(vertices, edges)`` labels) over the
+    near-dup graph."""
+    docs, pairs = _near_dup_pairs(spark, sf_dir)
+    comp = kernel(
         docs.select(F.col("doc_id").alias("vertex_id")),
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
     )
+    return docs, comp
+
+
+def _cluster_census(comp: DataFrame) -> DataFrame:
+    """Cluster-size histogram of a (vertex_id, component) label frame,
+    with the min and max component id per size."""
     return (
         comp.groupBy("component")
         .agg(F.count(F.lit(1)).alias("cluster_size"))
@@ -373,20 +417,19 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Duplicate clusters from MinHash-LSH candidate pairs: per-source
+    cluster census + canonical (min doc_id) members."""
+    return _cluster_census(_near_dup_components(spark, sf_dir)[1])
+
+
 def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The deduplicated corpus a training pipeline actually emits: keep one
     canonical doc (min doc_id) per near-dup cluster, drop the rest.
     Rolled up per source (kept/dropped census) so the result stays small;
     the kept set itself is the ``doc_id == component`` filter, a map-side
     predicate over the component labels."""
-    from .dedup import lsh_candidate_pairs
-
-    docs = ensure_parallelism(spark, load_table(spark, sf_dir, "documents"))
-    pairs = lsh_candidate_pairs(docs)
-    comp = connected_components(
-        docs.select(F.col("doc_id").alias("vertex_id")),
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-    )
+    docs, comp = _near_dup_components(spark, sf_dir)
     kept = F.when(F.col("doc_id") == F.col("component"), 1).otherwise(0)
     return (
         docs.join(comp, docs.doc_id == comp.vertex_id)
@@ -466,27 +509,15 @@ GROUP BY cluster_size
 
 
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """dedup_clusters computed by the large-star/small-star CC variant —
-    same recursive-CTE oracle as the label-propagation query, so the
-    O(log n)-round algorithm gets full value-hash verification too."""
-    from .dedup import lsh_candidate_pairs
-
-    docs = ensure_parallelism(spark, load_table(spark, sf_dir, "documents"))
-    pairs = lsh_candidate_pairs(docs)
-    comp, _ = connected_components_star(
-        docs.select(F.col("doc_id").alias("vertex_id")),
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+    """dedup_clusters computed by the large-star/small-star phase alone
+    (:func:`_star_components`) — same recursive-CTE oracle as
+    dedup_clusters, so the phase connected_components hands off to gets
+    value-hash verification on real near-dup data, which never triggers
+    the handoff itself."""
+    _, comp = _near_dup_components(
+        spark, sf_dir, lambda v, e: _star_components(v, e)[0]
     )
-    return (
-        comp.groupBy("component")
-        .agg(F.count(F.lit(1)).alias("cluster_size"))
-        .groupBy("cluster_size")
-        .agg(
-            F.count(F.lit(1)).alias("n_clusters"),
-            F.min("component").alias("min_component"),
-            F.max("component").alias("max_component"),
-        )
-    )
+    return _cluster_census(comp)
 
 
 # --------------------------------------------------------------------------
@@ -501,14 +532,8 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and identical texts tie-break on doc_id identically in both engines.
 def dedup_survivors_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import quality_logit
-    from .dedup import lsh_candidate_pairs
 
-    docs = ensure_parallelism(spark, load_table(spark, sf_dir, "documents"))
-    pairs = lsh_candidate_pairs(docs)
-    comp = connected_components(
-        docs.select(F.col("doc_id").alias("vertex_id")),
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
-    )
+    docs, comp = _near_dup_components(spark, sf_dir)
     scored = docs.select(
         "doc_id", "source", quality_logit(F.col("text")).alias("z")
     ).join(comp, F.col("doc_id") == F.col("vertex_id"))
@@ -623,10 +648,6 @@ def pagerank_frame(
     # transpose.  Partition count comes from the session's
     # shuffle.partitions (scale-adaptive: the bench derives it from
     # input size, a cluster sets it to cluster scale).
-    try:
-        _parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        _parts = 200
     # the edge derivation materializes ONCE (r15b) — the symmetrizing
     # union would otherwise execute it once per branch (the committed
     # r15 sym plan shows the co-order self-join duplicated: 4 parquet
@@ -636,7 +657,7 @@ def pagerank_frame(
         edges0.union(
             edges0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-        .repartition(_parts, "src")
+        .repartition(shuffle_partitions(edges.sparkSession), "src")
     )
     if dedup:
         # no new exchange: hash(src) already clusters every (src, dst)
@@ -744,14 +765,10 @@ def pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join's distribution (one exchange, reused by both join sides),
     # and the pair-stream dedup moves into pagerank_frame AFTER its
     # src-keyed repartition (dedup=True) — two exchanges end to end.
-    try:
-        _parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        _parts = 200
     li = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .repartition(_parts, "ok")
+        .repartition(shuffle_partitions(spark), "ok")
         .dropDuplicates(["ok", "pk"])
     )
     a, b = li.alias("a"), li.alias("b")
@@ -1057,10 +1074,7 @@ FROM moments
 # small side post-banding and AQE picks the sane shuffle join instead
 # of a forced driver-side OOM (r12 ADVICE fix) — then dim-grain sums.
 def dup_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import lsh_candidate_pairs
-
-    docs = ensure_parallelism(spark, load_table(spark, sf_dir, "documents"))
-    pairs = lsh_candidate_pairs(docs)
+    docs, pairs = _near_dup_pairs(spark, sf_dir)
     src = docs.select("doc_id", "source")
     sa = src.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a"))
     sb = src.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("src_b"))
@@ -1408,10 +1422,7 @@ def _near_dup_summaries(
     """One summary row per k over the near-dup candidate graph, through
     ``peel(pairs, k) -> edges`` (chained + guarded; see
     _chained_peel_summaries)."""
-    from .dedup import lsh_candidate_pairs
-
-    docs = ensure_parallelism(spark, load_table(spark, sf_dir, "documents"))
-    pairs = lsh_candidate_pairs(docs).localCheckpoint(eager=True)
+    pairs = _near_dup_pairs(spark, sf_dir)[1].localCheckpoint(eager=True)
     return _chained_peel_summaries(pairs, ks, peel, prefix, rail)
 
 
@@ -1707,10 +1718,7 @@ SPECS.append(
 # rows out, two keyed integer aggregates in (vertex-grain degree count,
 # then degree-grain rollup), nothing else.  All-integer output.
 def degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import lsh_candidate_pairs
-
-    docs = ensure_parallelism(spark, load_table(spark, sf_dir, "documents"))
-    pairs = lsh_candidate_pairs(docs)
+    _, pairs = _near_dup_pairs(spark, sf_dir)
     ends = pairs.select(F.col("doc_a").alias("v")).unionAll(
         pairs.select(F.col("doc_b").alias("v"))
     )
@@ -1809,7 +1817,7 @@ def lpa_labels(pairs: DataFrame, *, rounds: int = LPA_ROUNDS) -> DataFrame:
     )
     if deploy:
         sym = local_checkpoint_partitioned(
-            sym.repartition(_shuffle_parts(edges.sparkSession), "dst")
+            sym.repartition(shuffle_partitions(edges.sparkSession), "dst")
         )
     labels0 = (
         sym.select(F.col("src").alias("v")).distinct().select("v", F.col("v").alias("label"))
@@ -1874,10 +1882,7 @@ def lpa_labels(pairs: DataFrame, *, rounds: int = LPA_ROUNDS) -> DataFrame:
 def dup_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per LPA community over the near-dup candidate graph:
     (community = anchor doc id, n_members)."""
-    from .dedup import lsh_candidate_pairs
-
-    docs = ensure_parallelism(spark, load_table(spark, sf_dir, "documents"))
-    labels = lpa_labels(lsh_candidate_pairs(docs))
+    labels = lpa_labels(_near_dup_pairs(spark, sf_dir)[1])
     return labels.groupBy(F.col("label").alias("community")).agg(
         F.count(F.lit(1)).cast("long").alias("n_members")
     )
@@ -1972,10 +1977,7 @@ SPECS.append(
 # checkpoint-hygiene release discipline); the join and rollup shuffle
 # on the doc-id/component keys only.
 def community_bridges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import lsh_candidate_pairs
-
-    docs = ensure_parallelism(spark, load_table(spark, sf_dir, "documents"))
-    pairs = lsh_candidate_pairs(docs).localCheckpoint(eager=True)
+    pairs = _near_dup_pairs(spark, sf_dir)[1].localCheckpoint(eager=True)
     verts = (
         pairs.select(F.col("doc_a").alias("vertex_id"))
         .unionAll(pairs.select(F.col("doc_b").alias("vertex_id")))
@@ -2254,10 +2256,7 @@ def community_refine_frame(pairs: DataFrame) -> DataFrame:
 
 
 def community_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .dedup import lsh_candidate_pairs
-
-    docs = ensure_parallelism(spark, load_table(spark, sf_dir, "documents"))
-    return community_refine_frame(lsh_candidate_pairs(docs))
+    return community_refine_frame(_near_dup_pairs(spark, sf_dir)[1])
 
 
 def _community_refine_sql() -> str:

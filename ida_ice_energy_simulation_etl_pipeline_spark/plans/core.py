@@ -234,6 +234,15 @@ def local_checkpoint_partitioned(df: DataFrame, *, eager: bool = True) -> DataFr
             spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
+def shuffle_partitions(spark: SparkSession) -> int:
+    """The session's ``spark.sql.shuffle.partitions``, or Spark's default
+    of 200 when it is unset or not an integer."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return 200
+
+
 def ensure_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Spread CPU-heavy per-row work across all cores.
 
@@ -260,11 +269,7 @@ def ensure_parallelism(spark: SparkSession, df: DataFrame) -> DataFrame:
     """
     import os
 
-    try:
-        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        shuffle_parts = 200
-    target = min(spark.sparkContext.defaultParallelism, shuffle_parts)
+    target = min(spark.sparkContext.defaultParallelism, shuffle_partitions(spark))
     n = getattr(df, "_sg_scan_partitions", None)
     if n is None:
         n = df.rdd.getNumPartitions()
@@ -325,11 +330,7 @@ def hash_parallelism(spark: SparkSession, df: DataFrame, *keys: str) -> DataFram
     count, and at real scale the same guarantee comes for free from a
     bucketed (``bucketBy(keys)``) table layout, making this a no-op there.
     """
-    try:
-        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        shuffle_parts = 200
-    target = min(spark.sparkContext.defaultParallelism, shuffle_parts)
+    target = min(spark.sparkContext.defaultParallelism, shuffle_partitions(spark))
     return df.repartition(target, *[F.col(k) for k in keys])
 
 

@@ -425,21 +425,6 @@ def test_corpus_shuffle_output_deterministic_decorrelated(spark, tmp_path):
     assert sum(g == 1 for g in adjacent_gaps) < len(ids) * 0.05
 
 
-def test_corpus_cc_algorithms_agree(spark, corpus_input, tmp_path):
-    """Both CC variants produce the identical survivor set."""
-    outs = []
-    for alg in ("label_prop", "star"):
-        m = run_corpus_pipeline(
-            spark,
-            corpus_input,
-            tmp_path / f"cc_{alg}",
-            CorpusConfig(scrub=False, cc_algorithm=alg),
-        )
-        landed = spark.read.parquet(m["output"])
-        outs.append(sorted(r["doc_id"] for r in landed.select("doc_id").collect()))
-    assert outs[0] == outs[1]
-
-
 def test_corpus_gate_handles_zero_row_input(spark, tmp_path):
     """A ZERO-ROW input must fail the gate cleanly (nonempty=False), not
     crash on NULL stage sums, and must leave no staging directory."""

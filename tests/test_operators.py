@@ -962,7 +962,8 @@ def test_mix_copies_weights_and_determinism(spark):
 
 
 # --------------------------------------------------------------------------
-# Large-star/small-star connected components — the O(log n)-round variant
+# Large-star/small-star connected components — the O(log n)-round phase
+# connected_components hands off to
 def _uf_ground_truth(n, edge_list):
     parent = list(range(n))
 
@@ -986,8 +987,8 @@ def _uf_ground_truth(n, edge_list):
 
 def test_cc_star_matches_label_prop_and_ground_truth(spark):
     from ida_ice_energy_simulation_etl_pipeline_spark.operators.graph import (
+        _star_components,
         connected_components,
-        connected_components_star,
     )
 
     #  path 1-2-3-4, triangle 5-6-7, isolated 0, plus dup/self edges
@@ -996,7 +997,7 @@ def test_cc_star_matches_label_prop_and_ground_truth(spark):
     vertices = spark.createDataFrame([(i,) for i in range(n)], "vertex_id long")
     edges = spark.createDataFrame(edge_list, "src long, dst long")
     truth = _uf_ground_truth(n, edge_list)
-    star_labels, rounds = connected_components_star(vertices, edges)
+    star_labels, rounds = _star_components(vertices, edges)
     got_star = {r.vertex_id: r.component for r in star_labels.collect()}
     got_prop = {
         r.vertex_id: r.component
@@ -1008,10 +1009,10 @@ def test_cc_star_matches_label_prop_and_ground_truth(spark):
 
 def test_cc_star_beats_label_prop_rounds_on_a_chain(spark):
     """A 64-node path has diameter 63: min-label propagation needs ~63
-    rounds (it would blow the 50-round safety rail), while the
-    star algorithm collapses it in O(log n) rounds."""
+    rounds (far past the handoff), while the star phase collapses it in
+    O(log n) rounds."""
     from ida_ice_energy_simulation_etl_pipeline_spark.operators.graph import (
-        connected_components_star,
+        _star_components,
     )
 
     n = 64
@@ -1019,7 +1020,7 @@ def test_cc_star_beats_label_prop_rounds_on_a_chain(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "src long, dst long"
     )
-    labels, rounds = connected_components_star(vertices, edges)
+    labels, rounds = _star_components(vertices, edges)
     got = {r.vertex_id: r.component for r in labels.collect()}
     assert got == {i: 0 for i in range(n)}
     assert rounds <= 12, f"expected O(log n) rounds, took {rounds}"
@@ -1029,7 +1030,7 @@ def test_cc_star_random_graph_matches_ground_truth(spark):
     import random
 
     from ida_ice_energy_simulation_etl_pipeline_spark.operators.graph import (
-        connected_components_star,
+        _star_components,
     )
 
     rng = random.Random(7)
@@ -1040,9 +1041,64 @@ def test_cc_star_random_graph_matches_ground_truth(spark):
     vertices = spark.createDataFrame([(i,) for i in range(n)], "vertex_id long")
     edges = spark.createDataFrame(edge_list, "src long, dst long")
     truth = _uf_ground_truth(n, edge_list)
-    labels, _ = connected_components_star(vertices, edges)
+    labels, _ = _star_components(vertices, edges)
     got = {r.vertex_id: r.component for r in labels.collect()}
     assert got == truth
+
+
+@pytest.mark.parametrize("n", [64, 200])
+@pytest.mark.parametrize("explicit_vertices", [True, False])
+def test_connected_components_long_path_hands_off(spark, n, explicit_vertices):
+    """A path's diameter outruns the min-label rounds; the kernel must
+    hand off to the star phase and label every vertex 0, not return the
+    half-propagated labels of its last min-label round."""
+    from ida_ice_energy_simulation_etl_pipeline_spark.operators.graph import (
+        connected_components,
+    )
+
+    vertices = (
+        spark.createDataFrame([(i,) for i in range(n)], "vertex_id long")
+        if explicit_vertices
+        else None
+    )
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
+    )
+    got = {
+        r.vertex_id: r.component
+        for r in connected_components(vertices, edges).collect()
+    }
+    assert got == {i: 0 for i in range(n)}
+
+
+def test_star_phase_raises_at_its_rail(spark, monkeypatch):
+    """The star phase fails loudly instead of returning the labels of an
+    unconverged edge set."""
+    from ida_ice_energy_simulation_etl_pipeline_spark.operators import graph
+
+    monkeypatch.setattr(graph, "MAX_STAR_ROUNDS", 1)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(31)], "src long, dst long"
+    )
+    with pytest.raises(graph.ComponentsNotConverged):
+        graph._star_components(None, edges)
+
+
+def test_dedup_clusters_never_hands_off(spark, sf_dir, monkeypatch):
+    """Near-dup clusters converge within the min-label rounds: if the
+    handoff ever fires on this traffic it adds star rounds' jobs, so
+    reaching the star phase here is a failure (sf0.01 documents)."""
+    import os
+
+    from ida_ice_energy_simulation_etl_pipeline_spark.operators import graph
+
+    def _no_handoff(*_args, **_kwargs):
+        raise AssertionError("connected_components handed off to the star phase")
+
+    monkeypatch.setattr(graph, "_star_components", _no_handoff)
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    rows = graph.dedup_clusters(spark, sf01).collect()
+    assert sum(r.n_clusters for r in rows if r.cluster_size > 1) > 0
 
 
 def test_kmeans_refine_recovers_planted_clusters(spark):
