@@ -24,6 +24,7 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from collections.abc import Iterable
 from concurrent.futures import ProcessPoolExecutor, ThreadPoolExecutor
 from pathlib import Path
 
@@ -86,45 +87,22 @@ def parse_run_id(run_id: str) -> tuple[str, str]:
     return building_id, scenario_id
 
 
-def check_run_coverage(meters: DataFrame, run_ids: list[str]) -> None:
+def check_run_coverage(
+    meter_runs: Iterable[tuple[str | None, str | None]], run_ids: list[str]
+) -> None:
     """Circuit breaker (reference aborts when >50% of archives fail,
     src/etl/extract/__init__.py:130-135): a run "failed" if it produced
-    zero well-formed meter rows.  Callable against raw CSV or (cheaper)
-    against the landed fact table.
-
-    Fully distributed: the manifest (already a driver-side listing) is
-    parallelized and anti-joined against the distinct runs observed in the
-    data, so only the failure COUNT crosses to the driver — never a
-    per-run row set, which at millions of runs would be a driver-side
-    memory bomb.  The 5-run failure sample is fetched via limit() only on
-    the error path."""
-    expected = set()
-    for r in run_ids:
-        expected.add(parse_run_id(r))
-    if not expected:
-        # Nothing expected → nothing can have failed.  (Also: an empty
-        # manifest would make schema inference on createDataFrame raise.)
-        return
-    spark = meters.sparkSession
-    expected_df = spark.createDataFrame(
-        sorted(expected), "building_id string, scenario_id string"
-    )
-    failed_df = expected_df.join(
-        meters.select("building_id", "scenario_id").distinct(),
-        ["building_id", "scenario_id"],
-        "left_anti",
-    )
-    n_failed = failed_df.count()
-    if n_failed > MAX_FAILURE_RATIO * len(expected):
-        sample = [
-            (r["building_id"], r["scenario_id"])
-            for r in failed_df.orderBy("building_id", "scenario_id")
-            .limit(5)
-            .collect()
-        ]
+    zero meter rows.  ``meter_runs`` are the distinct
+    ``(building_id, scenario_id)`` pairs of the meter rows: run-manifest
+    scale, the size of ``run_ids`` itself.  ``run_pipeline`` hands in the
+    pairs its dim key set already collected; standalone ``extract_runs``
+    collects them with one query."""
+    expected = {parse_run_id(r) for r in run_ids}
+    failed = sorted(expected - set(meter_runs))
+    if len(failed) > MAX_FAILURE_RATIO * len(expected):
         raise ExtractionError(
-            f"{n_failed}/{len(expected)} runs unreadable "
-            f"(>{MAX_FAILURE_RATIO:.0%}): {sample}"
+            f"{len(failed)}/{len(expected)} runs unreadable "
+            f"(>{MAX_FAILURE_RATIO:.0%}): {failed[:5]}"
         )
 
 
@@ -183,10 +161,11 @@ def extract_runs(
         )
 
     # Standalone use runs the breaker eagerly on raw CSV; the pipeline
-    # passes check_runs=False and re-runs it against the landed parquet
-    # instead (same gate, one less full CSV scan job).
+    # passes check_runs=False and decides it from the runs its dim key set
+    # collects (same gate, no query of its own).
     if check_runs:
-        check_run_coverage(out["meters"], run_ids)
+        runs = out["meters"].select("building_id", "scenario_id").distinct()
+        check_run_coverage([tuple(r) for r in runs.collect()], run_ids)
     return out
 
 

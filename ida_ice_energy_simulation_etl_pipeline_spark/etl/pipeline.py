@@ -65,18 +65,20 @@ def run_pipeline(
     # transform or landing fail.
     unzip = tempfile.TemporaryDirectory(prefix="runs_") if zipped else nullcontext()
     with unzip as unzip_dir:
-        # check_runs=False: the >50%-unreadable circuit breaker re-runs below
-        # against the LANDED fact_meters — same gate, but the distinct runs on
-        # pruned parquet instead of costing a dedicated full-CSV scan job.
+        # check_runs=False: the >50%-unreadable circuit breaker is decided
+        # below from the runs the dim key set saw with meter rows — same
+        # gate, but no query of its own.
         if zipped:
             entities = extract_runs_from_zips(
                 spark, input_dir, staging_dir=unzip_dir, check_runs=False
             )
         else:
             entities = extract_runs(spark, input_dir, check_runs=False)
-        expected_run_ids = list_runs(input_dir)
 
+        # One key-set query decides the five dims on the driver; the facts
+        # stay lazy.  The breaker trips before anything is written.
         star = transform_all(entities, time_key_strategy=time_key_strategy)
+        check_run_coverage(star.meter_runs, list_runs(input_dir))
 
         # Land → validate → publish.  The conformed star is computed EXACTLY
         # once — written straight to a staging directory — and every
@@ -96,16 +98,6 @@ def run_pipeline(
         # handed).
         checks = integrity_checks(star, range_rules)
         observed = {t: Observation() for t in checks}
-        # Dims sit in every fact's lineage (broadcast joins), so without
-        # pinning, each fact write re-derives the distinct/window dim builds
-        # from raw CSV.  Cache them and write them FIRST: their own writes
-        # fill the caches, and the fact writes that follow read them.  (Fact
-        # writes started alongside would build an unfilled dim again.)  They
-        # are dim-scale by construction, so executor memory is never a
-        # concern, 100 TB facts included.
-        dims = [t for t in star if t.startswith("dim_")]
-        for t in dims:
-            star[t] = star[t].cache()
         # Time-range queries dominate the analytic surface (monthly rollups,
         # gap scans, as-of lookups), so fact files are range-clustered on
         # time_key when requested: disjoint per-file min/max intervals let
@@ -123,16 +115,9 @@ def run_pipeline(
             if t in observed:
                 df = df.observe(observed[t], *checks[t].aggs)
             written[t] = df
-        try:
-            for wave in (dims, [t for t in star if t not in dims]):
-                load_to_parquet(
-                    {t: written[t] for t in wave},
-                    staging,
-                    partition_facts=partition_facts,
-                )
-        finally:
-            for t in dims:
-                star[t].unpersist()
+        # The dims are local relations, so the fact writes broadcast them
+        # without rebuilding anything: all nine writes go out together.
+        load_to_parquet(written, staging, partition_facts=partition_facts)
     # Observation.get blocks until its write has finished; the writes have.
     integrity = {t: c.errors(observed[t].get) for t, c in checks.items()}
     # Re-reads carry the schema of the DataFrame that was written, which
@@ -143,7 +128,6 @@ def run_pipeline(
         t: spark.read.schema(schemas[t]).parquet(str(staging / t)) for t in star
     }
 
-    check_run_coverage(landed["fact_meters"], expected_run_ids)
     report = validate_all(landed, range_rules=range_rules, integrity=integrity)
     if not report["is_valid"] and not force:
         raise ValidationGateError(report)  # staging left behind for triage

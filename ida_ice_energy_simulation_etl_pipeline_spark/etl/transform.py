@@ -1,15 +1,24 @@
 """Dimensional transform: entity DataFrames → 5-dim / 4-fact star schema.
 
 Re-expresses the reference's per-run pandas loops
-(src/etl/transform/__init__.py:412-445) as declarative set operations:
+(src/etl/transform/__init__.py:412-445) as set operations:
 
-* dims are dropDuplicates over ALL runs at once (D1–D3) — no seen-set
-  loops;
-* dense surrogate keys (D4, reference :106-173) are ``row_number`` windows,
-  fine at dim cardinality.  For 100 TB fact feeds the ``derived`` strategy
-  computes ``time_key`` arithmetically from the timestamp (hours since
-  epoch) — order-preserving, join-stable, and shuffle-free (documented
-  divergence from "enumerate 1..n");
+* the five dims are decided on the driver from ONE key-set query: each raw
+  source is scanned once and every dim-scale key set (metadata rows,
+  distinct zone and AHU keys, timestamps, the runs with meter rows) is
+  collected in a single action.  Dims are bounded by the run count and the
+  simulation span, the scale of the run manifest the driver already lists,
+  and every fact join broadcasts them anyway — so no dim costs a shuffle,
+  a single-partition window or a cache.  They come back as Arrow-built
+  local relations (a ``LocalTableScan``): fact joins broadcast them
+  without re-reading any raw source, and each is written as one file;
+* first-seen picks (D1, reference :29-40, 61-70) follow the reference's
+  seen-set walk over ``sorted(glob('run_*.zip'))`` (extract:116);
+* dense surrogate keys (D4, reference :106-173) number the sorted distinct
+  keys 1..n, nulls first (Spark's ascending order).  For 100 TB fact feeds
+  the ``derived`` strategy computes ``time_key`` arithmetically from the
+  timestamp (hours since epoch) — order-preserving, join-stable, and
+  shuffle-free (documented divergence from "enumerate 1..n");
 * facts join dims with broadcast (J1–J3) and keep LEFT semantics: an
   unmatched key yields NULL, which the validator then counts — the
   reference's referential-integrity behavior (SURVEY §4 caveat 3);
@@ -22,113 +31,171 @@ Re-expresses the reference's per-run pandas loops
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from collections import defaultdict
+from functools import reduce
 
-from ..functions import dow_monday0, is_weekend
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..schemas import STAR_SCHEMAS
 
 COP_POWER_THRESHOLD_KW = 1.0
 
 
-def _run_zip_name() -> Column:
-    """The reference walks runs in ``sorted(glob('run_*.zip'))`` order
-    (extract:116) — first-seen choices must use the FULL filename as the
-    order key, '.zip' included: bare ids misorder prefix pairs ('B1' vs
-    'B10': '0' < '_'), and without the extension a reconstructed name
-    that is a strict prefix of another ('-' < '.') misorders too."""
-    return F.concat(
-        F.lit("run_"),
-        F.col("building_id"),
-        F.lit("_"),
-        F.col("scenario_id"),
-        F.lit(".zip"),
+class Star(dict):
+    """The nine star tables by name.  ``meter_runs`` holds the
+    ``(building_id, scenario_id)`` pairs that have meter rows, collected
+    with the dim keys: the run-coverage breaker's input."""
+
+    def __init__(self, tables: dict[str, DataFrame], meter_runs: frozenset[tuple]):
+        super().__init__(tables)
+        self.meter_runs = meter_runs
+
+
+def _key(kind: str, *strings: Column, n: Column | None = None) -> Column:
+    """A key-set row of the one shape every source shares:
+    ``(kind, a..e strings, n long)``."""
+    padded = [*strings, *[F.lit(None)] * (5 - len(strings))]
+    return F.struct(
+        F.lit(kind).alias("kind"),
+        *[v.cast("string").alias(f) for v, f in zip(padded, "abcde")],
+        (F.lit(None) if n is None else n).cast("long").alias("n"),
     )
 
 
-def build_dim_building(metadata: DataFrame) -> DataFrame:
-    """One row per building, first-seen in sorted run order (same
-    determinism rule as build_dim_scenario below: dropDuplicates'
-    survivor is partition-order-dependent; the reference's seen-set walk
-    keeps the first zip's metadata)."""
-    first = F.min_by(
-        F.struct("building_name", "location", "floor_area_m2"), _run_zip_name()
-    ).alias("f")
-    return (
-        metadata.groupBy("building_id")
-        .agg(first)
-        .select("building_id", "f.building_name", "f.location", "f.floor_area_m2")
-        .orderBy("building_id")
-    )
+def _collect_keys(entities: dict[str, DataFrame]) -> dict[str, list[tuple]]:
+    """Every dim-scale key set in ONE action.  Each raw source is scanned
+    once (zones yields its zone keys and its timestamps from the same
+    scan), and one distinct reduces the rows to key scale before they
+    reach the driver.  Timestamps travel as epoch microseconds: a Python
+    datetime in a DST-observing driver zone would fold the fall-back
+    hour onto its neighbour."""
+    b, s = F.col("building_id"), F.col("scenario_id")
+    parts = [
+        entities["metadata"].select(
+            _key("meta", b, s, *map(F.col, ("building_name", "location", "description")),
+                 n=F.col("floor_area_m2"))
+        ),
+        entities["zones"].select(
+            F.explode(F.array(
+                _key("zone", b, F.col("zone_id"), F.col("zone_name")),
+                _key("time", n=F.unix_micros("timestamp")),
+            ))
+        ),
+        entities["hvac"].select(_key("ahu", b, F.col("ahu_id"))),
+        entities["meters"].select(_key("run", b, s)),
+    ]
+    rows = reduce(DataFrame.union, [p.toDF("k") for p in parts]).select("k.*")
+    keys: dict[str, list[tuple]] = defaultdict(list)
+    for kind, *values in rows.distinct().collect():
+        keys[kind].append(tuple(values))
+    return keys
 
 
-def build_dim_scenario(metadata: DataFrame) -> DataFrame:
-    """One row per scenario, keeping the description of the FIRST run in
-    sorted run order — the reference's seen-set walk over
-    ``sorted(glob('run_*.zip'))`` (transform:45-73, extract:116) made
-    that choice implicitly; a bare dropDuplicates would leave the
-    survivor partition-order-dependent, which cross-implementation
-    parity (and determinism under repartitioning) forbids.  The order
-    key reconstructs the zip FILENAME, not the bare building_id: for ids
-    where one is a prefix of the other ('B1' vs 'B10'), 'run_B10_…'
-    sorts before 'run_B1_…' and min(building_id) would disagree."""
-    return (
-        metadata.groupBy("scenario_id")
-        .agg(F.min_by("description", _run_zip_name()).alias("description"))
-        .orderBy("scenario_id")
-    )
+def _nulls_first(row: tuple) -> tuple:
+    """Sort key of Spark's ascending order: nulls first."""
+    return tuple((v is not None, v) for v in row)
 
 
-def build_dim_zone(zones: DataFrame) -> DataFrame:
-    w = Window.orderBy("building_id", "zone_id")
-    return (
-        zones.select("building_id", "zone_id", "zone_name")
-        .dropDuplicates(["building_id", "zone_id", "zone_name"])
-        .withColumn("zone_key", F.row_number().over(w).cast("long"))
-        .select("zone_key", "building_id", "zone_id", "zone_name")
-    )
+def _run_order(row: tuple) -> tuple:
+    """Sort key of a metadata row in the reference's run order: its zip
+    FILENAME, '.zip' included (extract:116).  Bare ids misorder prefix
+    pairs ('run_B10_…' sorts before 'run_B1_…': '0' < '_'), and without
+    the extension a name that is a strict prefix of another misorders too
+    ('-' < '.').  Rows with a null id sort last; the row itself breaks
+    ties between runs that share a name."""
+    unnamed = row[0] is None or row[1] is None
+    return unnamed, "" if unnamed else f"run_{row[0]}_{row[1]}.zip", _nulls_first(row)
 
 
-def build_dim_ahu(hvac: DataFrame) -> DataFrame:
-    w = Window.orderBy("building_id", "ahu_id")
-    return (
-        hvac.select("building_id", "ahu_id")
-        .dropDuplicates(["building_id", "ahu_id"])
-        .withColumn("ahu_key", F.row_number().over(w).cast("long"))
-        .select("ahu_key", "building_id", "ahu_id")
-    )
+def _first_seen(meta: list[tuple], group: int, fields: tuple[int, ...]) -> list[tuple]:
+    """One row per distinct ``meta[group]``, sorted nulls first, with the
+    ``fields`` of its FIRST run — the reference's seen-set walk over
+    ``sorted(glob('run_*.zip'))`` (transform:45-73).  A row with a null id
+    has no zip name and is never picked (Spark's ``min_by`` skips null
+    orderings), so a group seen only in such rows gets nulls."""
+    first: dict[object, tuple | None] = {}
+    for row in sorted(meta, key=_run_order):
+        named = row[0] is not None and row[1] is not None
+        first.setdefault(row[group], row if named else None)
+    return [
+        (g, *(first[g][i] if first[g] else None for i in fields))
+        for g in sorted(first, key=lambda g: _nulls_first((g,)))
+    ]
 
 
-def build_dim_time(zones: DataFrame, key_strategy: str = "dense") -> DataFrame:
+def _numbered(rows: set[tuple]) -> list[tuple]:
+    """Dense surrogate keys 1..n over the rows sorted nulls first."""
+    return [(i, *r) for i, r in enumerate(sorted(rows, key=_nulls_first), 1)]
+
+
+def _local(spark: SparkSession, table: str, columns: list, *required: str) -> DataFrame:
+    """``columns`` (sequences or Arrow arrays; none for an empty dim) as an
+    Arrow-built local relation with the star schema's names and types;
+    only the ``required`` columns are non-nullable, as they were when
+    Spark built the dims.  (Built from Python tuples it would be
+    RDD-backed, which slows every fact write that broadcasts it.)"""
+    schema = StructType([
+        StructField(f.name, f.dataType, f.name not in required)
+        for f in STAR_SCHEMAS[table].fields
+    ])
+    columns = columns or [[] for _ in schema.names]
+    df = spark.createDataFrame(pa.table(dict(zip(schema.names, columns))), schema)
+    # A local relation spans up to one partition per core: one is one file.
+    return df.coalesce(1)
+
+
+def _dim_time(
+    spark: SparkSession, micros: list[int | None], key_strategy: str
+) -> DataFrame:
     """Time dimension over the distinct timestamp universe (reference uses
-    zones' timestamps: src/etl/transform/__init__.py:161-170).
+    zones' timestamps: src/etl/transform/__init__.py:161-170), its fields
+    in the session time zone, as ``year()``, ``hour()``, … give them.
 
-    key_strategy='dense'   — row_number over sorted timestamps (reference
-                             parity; one small global sort).
-    key_strategy='derived' — floor(epoch/3600): arithmetic, shuffle-free,
-                             stable under incremental loads (the 100 TB
-                             choice; keys are join-stable but not 1..n).
+    key_strategy='dense'   — 1..n over the sorted timestamps (reference
+                             parity).
+    key_strategy='derived' — ``(unix_timestamp / 3600).cast("long")``:
+                             arithmetic, stable under incremental loads
+                             (the 100 TB choice; keys are join-stable but
+                             not 1..n).  Both divisions truncate toward
+                             zero, as Spark's do.
     """
-    ts = zones.select("timestamp").distinct()
+    us = pa.array(sorted(micros, key=lambda u: (u is not None, u)), pa.int64())
     if key_strategy == "derived":
-        keyed = ts.withColumn(
-            "time_key", (F.unix_timestamp("timestamp") / 3600).cast("long")
-        )
+        hours = pc.divide(pc.cast(pc.divide(us, 1_000_000), pa.float64()), 3600.0)
+        time_key, required = pc.cast(hours, pa.int64(), safe=False), ()
     else:
-        keyed = ts.withColumn(
-            "time_key",
-            F.row_number().over(Window.orderBy("timestamp")).cast("long"),
-        )
-    return keyed.select(
-        "time_key",
-        "timestamp",
-        F.year("timestamp").cast("long").alias("year"),
-        F.month("timestamp").cast("long").alias("month"),
-        F.dayofmonth("timestamp").cast("long").alias("day"),
-        F.hour("timestamp").cast("long").alias("hour"),
-        dow_monday0(F.col("timestamp")).cast("long").alias("dow"),
-        is_weekend(F.col("timestamp")).alias("is_weekend"),
-    )
+        time_key, required = pa.array(range(1, len(us) + 1), pa.int64()), ("time_key",)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    ts = us.cast(pa.timestamp("us", tz=tz))
+    dow = pc.day_of_week(ts)  # Monday=0, the pandas convention (transform:182)
+    columns = [time_key, ts, pc.year(ts), pc.month(ts), pc.day(ts), pc.hour(ts), dow,
+               pc.greater_equal(dow, 5)]
+    return _local(spark, "dim_time", columns, *required)
+
+
+def _dims(
+    spark: SparkSession, keys: dict[str, list[tuple]], time_key_strategy: str
+) -> dict[str, DataFrame]:
+    """The five dims, decided from the collected key sets."""
+
+    def local(table: str, rows: list[tuple], *required: str) -> DataFrame:
+        return _local(spark, table, [*zip(*rows)], *required)
+
+    # metadata rows: (building_id, scenario_id, name, location, description, area)
+    meta = keys["meta"]
+    return {
+        "dim_building": local("dim_building", _first_seen(meta, 0, (2, 3, 5))),
+        "dim_scenario": local("dim_scenario", _first_seen(meta, 1, (4,))),
+        "dim_zone": local(
+            "dim_zone", _numbered({k[:3] for k in keys["zone"]}), "zone_key"
+        ),
+        "dim_ahu": local("dim_ahu", _numbered({k[:2] for k in keys["ahu"]}), "ahu_key"),
+        "dim_time": _dim_time(spark, [k[5] for k in keys["time"]], time_key_strategy),
+    }
 
 
 def _time_keyed(fact: DataFrame, dim_time: DataFrame) -> DataFrame:
@@ -201,25 +268,19 @@ def build_fact_weather(
 
 def transform_all(
     entities: dict[str, DataFrame], *, time_key_strategy: str = "dense"
-) -> dict[str, DataFrame]:
-    """Full star schema (reference transform_all, transform:412-445)."""
-    dim_building = build_dim_building(entities["metadata"])
-    dim_scenario = build_dim_scenario(entities["metadata"])
-    dim_zone = build_dim_zone(entities["zones"])
-    dim_ahu = build_dim_ahu(entities["hvac"])
-    dim_time = build_dim_time(entities["zones"], key_strategy=time_key_strategy)
-    return {
-        "dim_building": dim_building,
-        "dim_scenario": dim_scenario,
-        "dim_zone": dim_zone,
-        "dim_ahu": dim_ahu,
-        "dim_time": dim_time,
+) -> Star:
+    """Full star schema (reference transform_all, transform:412-445).
+    Runs the key-set query (one action); the facts stay lazy."""
+    keys = _collect_keys(entities)
+    dims = _dims(entities["zones"].sparkSession, keys, time_key_strategy)
+    facts = {
         "fact_zone_conditions": build_fact_zone_conditions(
-            entities["zones"], dim_time, dim_zone
+            entities["zones"], dims["dim_time"], dims["dim_zone"]
         ),
-        "fact_hvac": build_fact_hvac(entities["hvac"], dim_time, dim_ahu),
-        "fact_meters": build_fact_meters(entities["meters"], dim_time),
+        "fact_hvac": build_fact_hvac(entities["hvac"], dims["dim_time"], dims["dim_ahu"]),
+        "fact_meters": build_fact_meters(entities["meters"], dims["dim_time"]),
         "fact_weather": build_fact_weather(
-            entities["weather"], dim_time, dim_building
+            entities["weather"], dims["dim_time"], dims["dim_building"]
         ),
     }
+    return Star({**dims, **facts}, meter_runs=frozenset(k[:2] for k in keys["run"]))

@@ -30,10 +30,7 @@ from ida_ice_energy_simulation_etl_pipeline_spark.etl.pipeline import (
     ValidationGateError,
     run_pipeline,
 )
-from ida_ice_energy_simulation_etl_pipeline_spark.etl.transform import (
-    build_dim_time,
-    transform_all,
-)
+from ida_ice_energy_simulation_etl_pipeline_spark.etl.transform import transform_all
 from ida_ice_energy_simulation_etl_pipeline_spark.etl.validate import validate_all
 from ida_ice_energy_simulation_etl_pipeline_spark.fixtures import generate_dataset
 
@@ -94,20 +91,20 @@ def test_extract_missing_dir(spark, tmp_path):
         extract_runs(spark, tmp_path / "nope")
 
 
-def test_run_coverage_breaker(entities):
-    meters = entities["meters"]
+def test_run_coverage_breaker(star):
+    # the runs with meter rows come with the dim key set
+    assert star.meter_runs == {(b, s) for b in BUILDINGS for s in SCENARIOS}
     # all expected runs present → no trip
-    check_run_coverage(meters, ["run_BLDG_01_BASE"])
+    check_run_coverage(star.meter_runs, ["run_BLDG_01_BASE"])
     # majority missing → trips with a bounded failure sample
     phantom = [f"run_PHANTOM_{i:02d}_BASE" for i in range(9)]
-    with pytest.raises(ExtractionError, match="runs unreadable"):
-        check_run_coverage(meters, ["run_BLDG_01_BASE", *phantom])
+    with pytest.raises(ExtractionError, match=r"9/10 runs unreadable .*'PHANTOM_04'"):
+        check_run_coverage(star.meter_runs, ["run_BLDG_01_BASE", *phantom])
 
 
-def test_run_coverage_empty_manifest(entities):
-    # Empty expected set: nothing can have failed — must return cleanly,
-    # not crash on createDataFrame schema inference (r3 advice item).
-    check_run_coverage(entities["meters"], [])
+def test_run_coverage_empty_manifest(star):
+    # Empty expected set: nothing can have failed — must return cleanly.
+    check_run_coverage(star.meter_runs, [])
 
 
 def test_extract_run_by_id(spark, runs_dir):
@@ -137,7 +134,7 @@ def test_dim_time_fields(star):
 
 
 def test_dim_time_derived_strategy(entities):
-    dt = build_dim_time(entities["zones"], key_strategy="derived")
+    dt = transform_all(entities, time_key_strategy="derived")["dim_time"]
     rows = dt.orderBy("timestamp").collect()
     # derived keys are consecutive hours since epoch: join-stable arithmetic
     assert rows[1]["time_key"] - rows[0]["time_key"] == 1
@@ -485,10 +482,11 @@ def _next_job_id(tracker, first: int) -> int:
 
 
 def test_pipeline_job_count_guard(spark, runs_dir, tmp_path):
-    """A warm run_pipeline with the CLI defaults stays within 60 Spark
-    jobs: the integrity checks ride on the land write, coverage is one
-    query and the re-reads infer no schema.  Another per-table action
-    fails here, not only in the benchmark."""
+    """A warm run_pipeline with the CLI defaults stays within 40 Spark
+    jobs: the dims come from one key-set query, the integrity checks ride
+    on the land write, run coverage needs no query of its own and the
+    re-reads infer no schema.  Another per-table action fails here, not
+    only in the benchmark."""
     tracker = spark.sparkContext.statusTracker()
     run_pipeline(spark, runs_dir, tmp_path / "out")
     # run_pipeline's jobs carry no job group, so the newest of them is
@@ -496,7 +494,26 @@ def test_pipeline_job_count_guard(spark, runs_dir, tmp_path):
     start = _next_job_id(tracker, max(tracker.getJobIdsForGroup(None)))
     run_pipeline(spark, runs_dir, tmp_path / "out")
     jobs = _next_job_id(tracker, start) - start
-    assert jobs <= 60, f"{jobs} Spark jobs in one warm pass"
+    assert jobs <= 40, f"{jobs} Spark jobs in one warm pass"
+
+
+def test_pipeline_coverage_breaker_publishes_nothing(spark, tmp_path):
+    """Three of four runs have a header-only meters.csv: the circuit
+    breaker trips before anything is written, so neither a published nor
+    a staged star is left behind."""
+    runs = tmp_path / "runs"
+    generate_dataset(
+        runs, buildings=("BLDG_01", "BLDG_02"), scenarios=SCENARIOS, hours=6,
+        n_zones=1, n_ahus=1,
+    )
+    for run in ("run_BLDG_01_RETROFIT", "run_BLDG_02_BASE", "run_BLDG_02_RETROFIT"):
+        meters = runs / run / "meters.csv"
+        meters.write_text(meters.read_text().splitlines()[0] + "\n")
+    out = tmp_path / "out"
+    with pytest.raises(ExtractionError, match="3/4 runs unreadable"):
+        run_pipeline(spark, runs, out)
+    assert not (out / "parquet").exists()
+    assert not (out / "parquet._staging").exists()
 
 
 def test_merge_upsert_parquet_touches_only_batch_partitions(spark, tmp_path):
@@ -989,22 +1006,15 @@ def test_validate_verdicts_match_reference_implementation(spark, star, ref_star)
         assert our_rep["checks"][our_k]["valid"] is True, our_k
 
 
-def test_dim_scenario_first_seen_matches_zip_sort_on_prefix_ids(spark):
+def test_dim_scenario_first_seen_matches_zip_sort_on_prefix_ids(spark, tmp_path):
     """'run_B10_BASE.zip' sorts before 'run_B1_BASE.zip' ('0' < '_'), so
-    the reference's seen-set walk keeps B10's description; the min_by
+    the reference's seen-set walk keeps B10's description; the first-seen
     order key must reconstruct the filename, not compare bare ids."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.etl.transform import (
-        build_dim_scenario,
+    generate_dataset(
+        tmp_path, buildings=("B1", "B10"), scenarios=("BASE",), hours=2,
+        n_zones=1, n_ahus=1,
     )
-
-    meta = spark.createDataFrame(
-        [
-            ("B1", "BASE", "BASE scenario for B1"),
-            ("B10", "BASE", "BASE scenario for B10"),
-        ],
-        ["building_id", "scenario_id", "description"],
-    )
-    got = build_dim_scenario(meta).collect()
+    got = transform_all(extract_runs(spark, tmp_path))["dim_scenario"].collect()
     assert len(got) == 1
     assert got[0]["description"] == "BASE scenario for B10"
 

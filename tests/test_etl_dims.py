@@ -1,0 +1,259 @@
+"""The five dims against an independent bar: DuckDB SQL over the raw run
+bundles, written from SURVEY D1–D4 and the transform docstrings (first
+seen in zip-name order, dense keys nulls first), hash-compared with the
+dims ``run_pipeline`` publishes.  Plus what the driver-side dim build
+must not depend on: shuffle partitioning, AQE, and the driver's own time
+zone."""
+
+from __future__ import annotations
+
+import json
+import time
+from contextlib import contextmanager
+from datetime import datetime, timezone
+from pathlib import Path
+
+import duckdb
+import pytest
+from pyspark.sql import functions as F
+
+from ida_ice_energy_simulation_etl_pipeline_spark.etl.extract import extract_runs
+from ida_ice_energy_simulation_etl_pipeline_spark.etl.pipeline import run_pipeline
+from ida_ice_energy_simulation_etl_pipeline_spark.etl.transform import transform_all
+from ida_ice_energy_simulation_etl_pipeline_spark.fixtures import (
+    generate_run,
+    write_run_dir,
+)
+from ida_ice_energy_simulation_etl_pipeline_spark.schemas import STAR_SCHEMAS
+
+HOURS = 6
+
+# The raw bundles as DuckDB relations (declared types, as the Spark
+# readers declare them).
+_RAW = {
+    "meta": """read_json('{runs}/run_*/metadata.json', columns={{
+        building_id: 'VARCHAR', scenario_id: 'VARCHAR',
+        building_name: 'VARCHAR', location: 'VARCHAR',
+        floor_area_m2: 'BIGINT', description: 'VARCHAR'}})""",
+    "zones": "read_csv('{runs}/run_*/zones.csv', header=true, "
+             "types={{'timestamp': 'TIMESTAMPTZ'}})",
+    "hvac": "read_csv('{runs}/run_*/hvac.csv', header=true)",
+}
+
+_ZIP_NAME = "'run_' || building_id || '_' || scenario_id || '.zip'"
+
+# D1: first seen in sorted zip-name order (arg_min over a struct keeps a
+# null attribute of the first run, and skips a null order key, as
+# Spark's min_by does).  D2/D3: distinct keys.  D4: dense keys 1..n over
+# the sorted keys, nulls first.
+ORACLE_SQL = {
+    "dim_building": f"""
+        SELECT building_id, f.building_name, f.location, f.floor_area_m2
+        FROM (SELECT building_id,
+                     arg_min({{'building_name': building_name, 'location': location,
+                               'floor_area_m2': floor_area_m2}}, {_ZIP_NAME}) AS f
+              FROM meta GROUP BY building_id)""",
+    "dim_scenario": f"""
+        SELECT scenario_id, f.description
+        FROM (SELECT scenario_id, arg_min({{'description': description}}, {_ZIP_NAME}) AS f
+              FROM meta GROUP BY scenario_id)""",
+    "dim_zone": """
+        SELECT row_number() OVER (ORDER BY building_id NULLS FIRST,
+                                  zone_id NULLS FIRST, zone_name NULLS FIRST) AS zone_key,
+               building_id, zone_id, zone_name
+        FROM (SELECT DISTINCT building_id, zone_id, zone_name FROM zones)""",
+    "dim_ahu": """
+        SELECT row_number() OVER (ORDER BY building_id NULLS FIRST,
+                                  ahu_id NULLS FIRST) AS ahu_key,
+               building_id, ahu_id
+        FROM (SELECT DISTINCT building_id, ahu_id FROM hvac)""",
+    "dim_time": """
+        SELECT row_number() OVER (ORDER BY timestamp NULLS FIRST) AS time_key,
+               timestamp, year(timestamp) AS year, month(timestamp) AS month,
+               day(timestamp) AS day, hour(timestamp) AS hour,
+               isodow(timestamp) - 1 AS dow, isodow(timestamp) >= 6 AS is_weekend
+        FROM (SELECT DISTINCT timestamp FROM zones)""",
+}
+
+
+def _projection(table: str) -> str:
+    """The dim's columns with engine-neutral types: timestamps as epoch
+    microseconds, integers as BIGINT."""
+    cols = []
+    for f in STAR_SCHEMAS[table].fields:
+        if f.name == "timestamp":
+            cols.append("epoch_us(timestamp) AS timestamp_us")
+        elif f.dataType.simpleString() == "bigint":
+            cols.append(f"{f.name}::BIGINT AS {f.name}")
+        else:
+            cols.append(f.name)
+    return ", ".join(cols)
+
+
+def _digest(con, relation: str, table: str) -> tuple:
+    rows = con.execute(f"SELECT {_projection(table)} FROM {relation}").fetchall()
+    (h,) = con.execute(
+        f"SELECT sum(hash(q))::HUGEINT FROM (SELECT {_projection(table)} FROM {relation}) q"
+    ).fetchone()
+    return len(rows), h, sorted(rows, key=repr)
+
+
+def _write_runs(out: Path, buildings, scenarios, mutate=None) -> Path:
+    for b in buildings:
+        for s in scenarios:
+            run = generate_run(b, s, hours=HOURS, n_zones=2, n_ahus=1)
+            if mutate:
+                mutate(run)
+            write_run_dir(run, out)
+    return out
+
+
+def _null_first_building_name(run):
+    # run_BLDG_01_BASE.zip is BLDG_01's first run: its null name wins
+    if run["run_id"] == "run_BLDG_01_BASE":
+        run["metadata"]["building_name"] = None
+
+
+def _two_name_zone(run):
+    if run["run_id"] == "run_BLDG_01_RETROFIT":
+        z = run["zones"]
+        z.loc[z["zone_id"] == "Z1", "zone_name"] = "Zone 1 (east wing)"
+
+
+CASES = {
+    "clean": (("BLDG_01", "BLDG_02"), ("BASE", "RETROFIT"), None),
+    "null_building_name": (("BLDG_01", "BLDG_02"), ("BASE", "RETROFIT"),
+                           _null_first_building_name),
+    "two_name_zone": (("BLDG_01", "BLDG_02"), ("BASE", "RETROFIT"), _two_name_zone),
+    "prefix_ids": (("B1", "B10"), ("BASE",), None),
+}
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_published_dims_match_duckdb_oracle(spark, tmp_path, case):
+    buildings, scenarios, mutate = CASES[case]
+    runs = _write_runs(tmp_path / "runs", buildings, scenarios, mutate)
+    out = tmp_path / "out"
+    run_pipeline(spark, runs, out, force=True)
+    con = duckdb.connect()
+    con.execute("SET TimeZone = 'UTC'")
+    for name, rel in _RAW.items():
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM {rel.format(runs=runs)}")
+    for table, sql in ORACLE_SQL.items():
+        published = f"read_parquet('{out}/parquet/{table}/*.parquet')"
+        got = _digest(con, published, table)
+        want = _digest(con, f"({sql})", table)
+        assert got[:2] == want[:2], f"{case} {table}:\n{got[2]}\n!=\n{want[2]}"
+    # the anomalies each case plants are visible in the oracle's answer
+    if case == "null_building_name":
+        assert con.execute(
+            f"SELECT building_name FROM ({ORACLE_SQL['dim_building']}) "
+            "WHERE building_id = 'BLDG_01'"
+        ).fetchone() == (None,)
+    if case == "two_name_zone":
+        assert con.execute(
+            f"SELECT zone_key, zone_name FROM ({ORACLE_SQL['dim_zone']}) "
+            "WHERE building_id = 'BLDG_01' AND zone_id = 'Z1' ORDER BY zone_key"
+        ).fetchall() == [(1, "Zone 1"), (2, "Zone 1 (east wing)")]
+    if case == "prefix_ids":
+        assert con.execute(
+            f"SELECT description FROM ({ORACLE_SQL['dim_scenario']})"
+        ).fetchall() == [("BASE scenario for B10",)]
+
+
+@contextmanager
+def _conf(spark, **conf):
+    old = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
+def test_dim_zone_keys_do_not_depend_on_partitioning(spark, tmp_path):
+    """A zone whose rows carry two names gets two dim rows; their keys
+    follow (building_id, zone_id, zone_name), so the star built under 1
+    and under 37 shuffle partitions numbers them alike."""
+    runs = _write_runs(tmp_path, ("BLDG_01", "BLDG_02"), ("BASE", "RETROFIT"),
+                       _two_name_zone)
+    keys = []
+    for n in ("1", "37"):
+        with _conf(spark, **{"spark.sql.shuffle.partitions": n}):
+            star = transform_all(extract_runs(spark, runs))
+            keys.append(sorted(star["dim_zone"].collect()))
+    assert keys[0] == keys[1]
+    assert [tuple(r) for r in keys[0][:2]] == [
+        (1, "BLDG_01", "Z1", "Zone 1"),
+        (2, "BLDG_01", "Z1", "Zone 1 (east wing)"),
+    ]
+
+
+def test_dim_time_is_utc_hourly_across_driver_dst_fall_back(spark, tmp_path, monkeypatch):
+    """New York falls back at 2024-11-03 06:00 UTC, so two UTC hours share
+    the local wall time 01:00.  With the driver process in that zone, the
+    dims must still give one row per UTC hour, with the keys and fields
+    they have with the driver in UTC."""
+    start = datetime(2024, 11, 3, 2, tzinfo=timezone.utc)
+    write_run_dir(
+        generate_run("BLDG_01", "BASE", start=start, hours=8, n_zones=1, n_ahus=1),
+        tmp_path,
+    )
+    cols = ("time_key", F.unix_micros("timestamp"), "year", "month", "day", "hour",
+            "dow", "is_weekend")
+
+    def dim_time():
+        star = transform_all(extract_runs(spark, tmp_path))
+        return sorted(tuple(r) for r in star["dim_time"].select(*cols).collect())
+
+    utc = dim_time()
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        fold = [time.localtime(start.timestamp() + h * 3600) for h in (3, 4)]
+        assert [t.tm_hour for t in fold] == [1, 1]  # 05:00 and 06:00 UTC
+        new_york = dim_time()
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    first_us = int(start.timestamp()) * 1_000_000
+    assert [r[1] for r in utc] == [first_us + h * 3_600_000_000 for h in range(8)]
+    assert [r[0] for r in utc] == list(range(1, 9))
+    assert [r[5] for r in utc] == list(range(2, 10))  # UTC hours
+    assert new_york == utc
+
+
+def _star_digest(parquet_dir: Path) -> dict:
+    con = duckdb.connect()
+    return {
+        t: con.execute(
+            f"SELECT count(*), sum(hash(t))::HUGEINT::VARCHAR "
+            f"FROM read_parquet('{parquet_dir}/{t}/**/*.parquet') t"
+        ).fetchone()
+        for t in STAR_SCHEMAS
+    }
+
+
+def test_published_star_invariant_to_partitioning_and_aqe(spark, tmp_path):
+    """The published star and validation_report.json are the same under 1
+    and 37 shuffle partitions and with AQE off as under the defaults."""
+    runs = _write_runs(tmp_path / "runs", ("BLDG_01", "BLDG_02"), ("BASE", "RETROFIT"))
+    outputs = []
+    for i, conf in enumerate((
+        {},
+        {"spark.sql.shuffle.partitions": "1"},
+        {"spark.sql.shuffle.partitions": "37"},
+        {"spark.sql.adaptive.enabled": "false"},
+    )):
+        out = tmp_path / f"out{i}"
+        with _conf(spark, **conf):
+            run_pipeline(spark, runs, out)
+        report = json.loads((out / "validation_report.json").read_text())
+        outputs.append((conf, _star_digest(out / "parquet"), report))
+    base = outputs[0]
+    assert base[2]["is_valid"]
+    for conf, digest, report in outputs[1:]:
+        assert digest == base[1], conf
+        assert report == base[2], conf
