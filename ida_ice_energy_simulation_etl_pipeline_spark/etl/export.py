@@ -65,7 +65,7 @@ def build_summary(
 
     meters = star["fact_meters"].filter(F.col("scenario_id") == scenario_id)
     # LEFT join: fact_meters is time-keyed by a LEFT join upstream
-    # (transform._time_keyed), so a row can carry a null time_key.  The
+    # (transform._time_key), so a row can carry a null time_key.  The
     # reference's annual figures are whole-table sums (export_json.py
     # get_sum), so such rows must still count toward ANNUAL totals — they
     # land in a null-month bucket here, which the monthly breakdown skips

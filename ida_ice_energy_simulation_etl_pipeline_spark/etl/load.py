@@ -2,9 +2,11 @@
 
 Reference sinks re-expressed (src/etl/load/__init__.py):
 
-* S8 — ``load_to_parquet`` (:15-33): partitioned columnar writes.  Facts
-  can partition by building_id so keyed lookups prune partitions (off by
-  default — tiny fixtures would fragment).
+* S8 — ``load_to_parquet`` (:15-33): one parquet directory per table.
+  Facts are Spark writes and can partition by building_id so keyed
+  lookups prune partitions (off by default — tiny fixtures would
+  fragment); the driver-built dims are Arrow tables, each written as one
+  file by pyarrow without a Spark job.
 * S9/S10 — ``load_to_warehouse`` (:36-64, :188-220): saveAsTable into the
   session catalog, then the three analytical views.
 * S11 — ``query`` (:167-185): ``spark.sql`` with the same identifier
@@ -17,10 +19,13 @@ Reference sinks re-expressed (src/etl/load/__init__.py):
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Sequence
+import shutil
+from collections.abc import Callable, Mapping, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -147,37 +152,37 @@ def range_clustered(df: DataFrame, cols: list[str]) -> DataFrame:
 
 
 def load_to_parquet(
-    star: dict[str, DataFrame],
+    star: Mapping[str, DataFrame | pa.Table],
     out_dir: str | Path,
     *,
     partition_facts: bool = False,
-    file_format: str = "parquet",
 ) -> dict[str, str]:
-    """Write every star table as parquet (reference load:15-33) — or ORC
-    via ``file_format="orc"``: same layout levers (partitioning,
-    range-clustering through ``range_clustered``, file/stripe-level
-    min-max skipping), both columnar formats are first-class Spark
-    sources.  Returns {table: path}."""
+    """Write every star table as parquet (reference load:15-33), one
+    directory per table.  A DataFrame is a Spark write (facts may
+    partition by building_id); an Arrow table — a driver-built dim — is
+    ONE ``part-00000.parquet`` written with pyarrow, no Spark job.  Either
+    replaces what the directory held.  Returns {table: path}."""
     out_dir = Path(out_dir)
     paths = {}
 
-    def write(table: str, df: DataFrame) -> None:
-        path = str(out_dir / table)
-        writer = df.write.mode("overwrite")
-        if partition_facts and table in PARTITION_COLUMNS:
-            writer = writer.partitionBy(*PARTITION_COLUMNS[table])
-        writer.format(file_format).save(path)
-        paths[table] = path
+    def write(table: str, data: DataFrame | pa.Table) -> None:
+        path = out_dir / table
+        if isinstance(data, pa.Table):
+            shutil.rmtree(path, ignore_errors=True)
+            path.mkdir(parents=True)
+            # Spark rejects TIMESTAMP(NANOS); it reads micros as TimestampType.
+            pq.write_table(data, path / "part-00000.parquet", coerce_timestamps="us")
+        else:
+            writer = data.write.mode("overwrite")
+            if partition_facts and table in PARTITION_COLUMNS:
+                writer = writer.partitionBy(*PARTITION_COLUMNS[table])
+            writer.parquet(str(path))
+        paths[table] = str(path)
 
-    if file_format not in ("parquet", "orc"):
-        raise ValueError(
-            f"file_format must be 'parquet' or 'orc', got {file_format!r}"
-        )
     for table in star:
         _check_identifier(table)
-    # The 9 table writes are independent jobs; driver threads let Spark
-    # schedule them side by side instead of paying 9 serial job latencies
-    # (the dims are sub-second jobs that otherwise queue behind facts).
+    # The Spark writes are independent jobs; driver threads let Spark
+    # schedule them side by side instead of paying serial job latencies.
     with ThreadPoolExecutor(max_workers=min(4, len(star) or 1)) as pool:
         list(pool.map(lambda kv: write(*kv), star.items()))
     return paths
@@ -351,8 +356,6 @@ def compact_parquet(
     guess would silently discard the pre-crash table.  Returns
     {"files_before", "files_after", "bytes"}.
     """
-    import shutil
-
     path = Path(path)
     staging = path.with_name(path.name + "._compacting")
     retired = path.with_name(path.name + "._retired")
@@ -489,8 +492,6 @@ def vacuum_partitions(
     half-vacuumed table.  A missing table is a no-op.  Returns the
     dropped partition values.
     """
-    import shutil
-
     path = Path(path)
     if not path.exists():
         return []

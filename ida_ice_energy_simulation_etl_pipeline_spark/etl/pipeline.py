@@ -82,8 +82,8 @@ def run_pipeline(
 
         # Land → validate → publish.  The conformed star is computed EXACTLY
         # once — written straight to a staging directory — and every
-        # downstream action (validation aggregates, views, export) reads the
-        # landed parquet, which is columnar, pruned, and ~10× faster to
+        # downstream fact read (validation aggregates, views, export) reads
+        # the landed parquet, which is columnar, pruned, and ~10× faster to
         # re-scan than re-running the CSV conform lineage per action.  The
         # validation gate then decides whether staging is PUBLISHED (atomic
         # directory rename) — same observable contract as the reference's
@@ -92,12 +92,12 @@ def run_pipeline(
         # that survives 100 TB, where caching the star in executor memory is
         # not an option.
         staging = output_dir / "parquet._staging"
-        # The null and range checks ride on the land write: each table's
-        # aggregates are observed while its rows stream to parquet, so they
-        # cost no job of their own (validate_all scans only what it is not
-        # handed).
+        # The facts' null and range checks ride on the land write: each
+        # table's aggregates are observed while its rows stream to parquet,
+        # so they cost no job of their own.  The dims' are counted on the
+        # driver, which holds their values.
         checks = integrity_checks(star, range_rules)
-        observed = {t: Observation() for t in checks}
+        observed = {t: Observation() for t in checks if t not in star.dims}
         # Time-range queries dominate the analytic surface (monthly rollups,
         # gap scans, as-of lookups), so fact files are range-clustered on
         # time_key when requested: disjoint per-file min/max intervals let
@@ -105,30 +105,39 @@ def run_pipeline(
         clustered = (
             ("fact_meters", "fact_hvac", "fact_zone_conditions") if cluster_facts else ()
         )
-        written = {}
-        for t, df in star.items():
+        written = dict(star.dims)
+        for t in observed:
+            df = star[t]
             if t in clustered:
                 df = range_clustered(df, ["time_key"])
             # Observed ABOVE the range shuffle, in the write's own stage: the
             # shuffle samples its input in a job of its own, and an
             # observation below it would count the sampled rows again.
-            if t in observed:
-                df = df.observe(observed[t], *checks[t].aggs)
-            written[t] = df
-        # The dims are local relations, so the fact writes broadcast them
-        # without rebuilding anything: all nine writes go out together.
+            written[t] = df.observe(observed[t], *checks[t].aggs)
+        # The dims are written from the driver; the fact writes go out
+        # together.
         load_to_parquet(written, staging, partition_facts=partition_facts)
     # Observation.get blocks until its write has finished; the writes have.
-    integrity = {t: c.errors(observed[t].get) for t, c in checks.items()}
+    integrity = {
+        t: c.errors(observed[t].get) if t in observed
+        else c.counted(star.dims[t].to_pydict())
+        for t, c in checks.items()
+    }
     # Re-reads carry the schema of the DataFrame that was written, which
     # spares one schema-inference job per read and, unlike the declared
     # STAR_SCHEMAS, keeps a column the star lacks visible to check_schema.
     schemas = {t: df.schema for t, df in star.items()}
+    # The checks and the summary read the dims as the local relations the
+    # files were written from: the driver reads those without a job.
+    dims = {t: star[t] for t in star.dims}
     landed = {
-        t: spark.read.schema(schemas[t]).parquet(str(staging / t)) for t in star
+        t: spark.read.schema(schemas[t]).parquet(str(staging / t))
+        for t in star if t not in dims
     }
 
-    report = validate_all(landed, range_rules=range_rules, integrity=integrity)
+    report = validate_all(
+        {**landed, **dims}, range_rules=range_rules, integrity=integrity
+    )
     if not report["is_valid"] and not force:
         raise ValidationGateError(report)  # staging left behind for triage
 
@@ -145,7 +154,7 @@ def run_pipeline(
         register_temp_views(spark, published)
 
     summary = export_summary(
-        published, output_dir / "summary.json", scenario_id=scenario_id
+        {**published, **dims}, output_dir / "summary.json", scenario_id=scenario_id
     )
     (output_dir / "validation_report.json").write_text(json.dumps(report, indent=2))
     return {

@@ -8,10 +8,9 @@ Re-expresses the reference's per-run pandas loops
   distinct zone and AHU keys, timestamps, the runs with meter rows) is
   collected in a single action.  Dims are bounded by the run count and the
   simulation span, the scale of the run manifest the driver already lists,
-  and every fact join broadcasts them anyway — so no dim costs a shuffle,
-  a single-partition window or a cache.  They come back as Arrow-built
-  local relations (a ``LocalTableScan``): fact joins broadcast them
-  without re-reading any raw source, and each is written as one file;
+  so they never enter Spark's execution: each is an Arrow table, which
+  ``load_to_parquet`` writes as one file with pyarrow, and which the star
+  also carries as a local relation that the driver reads without a job;
 * first-seen picks (D1, reference :29-40, 61-70) follow the reference's
   seen-set walk over ``sorted(glob('run_*.zip'))`` (extract:116);
 * dense surrogate keys (D4, reference :106-173) number the sorted distinct
@@ -19,18 +18,23 @@ Re-expresses the reference's per-run pandas loops
   the ``derived`` strategy computes ``time_key`` arithmetically from the
   timestamp (hours since epoch) — order-preserving, join-stable, and
   shuffle-free (documented divergence from "enumerate 1..n");
-* facts join dims with broadcast (J1–J3) and keep LEFT semantics: an
-  unmatched key yields NULL, which the validator then counts — the
-  reference's referential-integrity behavior (SURVEY §4 caveat 3);
+* facts are keyed without a join (J1–J3): ``time_key`` is an hour-bucketed
+  search of a literal timestamp array (``_time_key``), zone and AHU keys a
+  literal map lookup (``_fanned_key``).  Both keep the LEFT join's
+  semantics: an unmatched key yields NULL, which the validator then counts
+  — the reference's referential-integrity behavior (SURVEY §4 caveat 3);
 * fact_weather dedups the shared weather series by timestamp and
-  replicates per building via broadcast cross join (J4) instead of
-  trusting ``runs[0]`` (reference :373-382, SURVEY §4 caveat 2);
+  replicates it per building by exploding a literal array of the
+  dim's building ids (J4) instead of trusting ``runs[0]`` (reference
+  :373-382, SURVEY §4 caveat 2);
 * ``cop_proxy`` is NULL iff ``power_kw < 1.0`` — the load-bearing
   threshold (reference :267-274).
 """
 
 from __future__ import annotations
 
+import json
+from bisect import bisect_left
 from collections import defaultdict
 from functools import reduce
 
@@ -38,21 +42,31 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
 from ..schemas import STAR_SCHEMAS
 
 COP_POWER_THRESHOLD_KW = 1.0
+HOUR_US = 3_600_000_000
 
 
 class Star(dict):
-    """The nine star tables by name.  ``meter_runs`` holds the
-    ``(building_id, scenario_id)`` pairs that have meter rows, collected
-    with the dim keys: the run-coverage breaker's input."""
+    """The nine star tables by name, as DataFrames.  ``dims`` holds the
+    five dims as the Arrow tables their local relations were built from:
+    what ``load_to_parquet`` writes and the driver checks.  ``meter_runs``
+    holds the ``(building_id, scenario_id)`` pairs that have meter rows,
+    collected with the dim keys: the run-coverage breaker's input."""
 
-    def __init__(self, tables: dict[str, DataFrame], meter_runs: frozenset[tuple]):
+    def __init__(
+        self,
+        tables: dict[str, DataFrame],
+        meter_runs: frozenset[tuple],
+        dims: dict[str, pa.Table],
+    ):
         super().__init__(tables)
         self.meter_runs = meter_runs
+        self.dims = dims
 
 
 def _key(kind: str, *strings: Column, n: Column | None = None) -> Column:
@@ -132,28 +146,34 @@ def _numbered(rows: set[tuple]) -> list[tuple]:
     return [(i, *r) for i, r in enumerate(sorted(rows, key=_nulls_first), 1)]
 
 
-def _local(spark: SparkSession, table: str, columns: list, *required: str) -> DataFrame:
+def _arrow(table: str, columns: list, *required: str) -> pa.Table:
     """``columns`` (sequences or Arrow arrays; none for an empty dim) as an
-    Arrow-built local relation with the star schema's names and types;
-    only the ``required`` columns are non-nullable, as they were when
-    Spark built the dims.  (Built from Python tuples it would be
-    RDD-backed, which slows every fact write that broadcasts it.)"""
-    schema = StructType([
+    Arrow table with the star schema's names and types; only the
+    ``required`` columns are non-nullable, as they were when Spark built
+    the dims."""
+    schema = to_arrow_schema(StructType([
         StructField(f.name, f.dataType, f.name not in required)
         for f in STAR_SCHEMAS[table].fields
-    ])
+    ]))
     columns = columns or [[] for _ in schema.names]
-    df = spark.createDataFrame(pa.table(dict(zip(schema.names, columns))), schema)
-    # A local relation spans up to one partition per core: one is one file.
-    return df.coalesce(1)
+    return pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(columns, schema)], schema=schema
+    )
 
 
-def _dim_time(
-    spark: SparkSession, micros: list[int | None], key_strategy: str
-) -> DataFrame:
+def _local(spark: SparkSession, table: pa.Table) -> DataFrame:
+    """A dim's Arrow table as a local relation (a ``LocalTableScan``) with
+    the same names, types and nullability.  Nothing writes it; the driver
+    reads it (``collect``, a broadcast build) without a Spark job.  (Built
+    from Python tuples it would be RDD-backed, and every read a job.)"""
+    return spark.createDataFrame(table, from_arrow_schema(table.schema))
+
+
+def _dim_time(micros: list[int | None], key_strategy: str, tz: str) -> pa.Table:
     """Time dimension over the distinct timestamp universe (reference uses
-    zones' timestamps: src/etl/transform/__init__.py:161-170), its fields
-    in the session time zone, as ``year()``, ``hour()``, … give them.
+    zones' timestamps: src/etl/transform/__init__.py:161-170), sorted nulls
+    first, its fields in the session time zone ``tz``, as ``year()``,
+    ``hour()``, … give them.
 
     key_strategy='dense'   — 1..n over the sorted timestamps (reference
                              parity).
@@ -169,100 +189,135 @@ def _dim_time(
         time_key, required = pc.cast(hours, pa.int64(), safe=False), ()
     else:
         time_key, required = pa.array(range(1, len(us) + 1), pa.int64()), ("time_key",)
-    tz = spark.conf.get("spark.sql.session.timeZone")
     ts = us.cast(pa.timestamp("us", tz=tz))
     dow = pc.day_of_week(ts)  # Monday=0, the pandas convention (transform:182)
     columns = [time_key, ts, pc.year(ts), pc.month(ts), pc.day(ts), pc.hour(ts), dow,
                pc.greater_equal(dow, 5)]
-    return _local(spark, "dim_time", columns, *required)
+    return _arrow("dim_time", columns, *required)
 
 
 def _dims(
-    spark: SparkSession, keys: dict[str, list[tuple]], time_key_strategy: str
-) -> dict[str, DataFrame]:
-    """The five dims, decided from the collected key sets."""
+    keys: dict[str, list[tuple]], time_key_strategy: str, tz: str
+) -> dict[str, pa.Table]:
+    """The five dims as Arrow tables, decided from the collected key sets."""
 
-    def local(table: str, rows: list[tuple], *required: str) -> DataFrame:
-        return _local(spark, table, [*zip(*rows)], *required)
+    def arrow(table: str, rows: list[tuple], *required: str) -> pa.Table:
+        return _arrow(table, [*zip(*rows)], *required)
 
     # metadata rows: (building_id, scenario_id, name, location, description, area)
     meta = keys["meta"]
     return {
-        "dim_building": local("dim_building", _first_seen(meta, 0, (2, 3, 5))),
-        "dim_scenario": local("dim_scenario", _first_seen(meta, 1, (4,))),
-        "dim_zone": local(
+        "dim_building": arrow("dim_building", _first_seen(meta, 0, (2, 3, 5))),
+        "dim_scenario": arrow("dim_scenario", _first_seen(meta, 1, (4,))),
+        "dim_zone": arrow(
             "dim_zone", _numbered({k[:3] for k in keys["zone"]}), "zone_key"
         ),
-        "dim_ahu": local("dim_ahu", _numbered({k[:2] for k in keys["ahu"]}), "ahu_key"),
-        "dim_time": _dim_time(spark, [k[5] for k in keys["time"]], time_key_strategy),
+        "dim_ahu": arrow("dim_ahu", _numbered({k[:2] for k in keys["ahu"]}), "ahu_key"),
+        "dim_time": _dim_time([k[5] for k in keys["time"]], time_key_strategy, tz),
     }
 
 
-def _time_keyed(fact: DataFrame, dim_time: DataFrame) -> DataFrame:
-    """J1: left join to dim_time on timestamp; broadcast — dim_time is
-    bounded by the simulation span."""
-    return fact.join(
-        F.broadcast(dim_time.select("time_key", "timestamp")), "timestamp", "left"
+def _literal(value: object, ddl: str) -> Column:
+    """``value`` (JSON-able) as ONE literal of Spark type ``ddl``: the
+    optimizer folds the constant ``from_json`` before planning, so a fact
+    row pays a lookup, never a parse.  (``F.lit`` of a list builds one
+    expression per element: 9.6 s of plan building at 8,760 elements,
+    against 0.14 s this way.)"""
+    return F.from_json(F.lit(json.dumps(value)), ddl)
+
+
+def _time_key(dim_time: pa.Table, key_strategy: str) -> Column:
+    """J1: the ``time_key`` of the dim_time row whose timestamp equals the
+    fact's ``timestamp``, NULL when none does (the LEFT join's answer),
+    without a join and in O(1) per row on hourly data.
+
+    The dim's sorted timestamps are bucketed by whole hours since the
+    first; a literal array holds each bucket's first index, so a fact row
+    searches only its own bucket's slice of the (literal) timestamps.
+    That is exact for any dim_time: gaps, off-grid stamps and several
+    stamps in one hour.  Dense keys are positions, shifted past a
+    null-timestamp row (it sorts first); derived keys are the dim's own
+    arithmetic on the matched timestamp."""
+    stamps = dim_time.column("timestamp").cast(pa.int64())
+    us = stamps.drop_null().to_pylist()
+    if not us:
+        return F.lit(None).cast("long")
+    first, last = us[0], us[-1]
+    hours = [(u - first) // HOUR_US for u in us]
+    starts = _literal([bisect_left(hours, b) for b in range(hours[-1] + 2)], "array<int>")
+    ts = F.unix_micros("timestamp")
+    bucket = F.expr(f"(unix_micros(timestamp) - {first}) div {HOUR_US}").cast("int")
+    lo = F.try_element_at(starts, bucket + 1)
+    hi = F.try_element_at(starts, bucket + 2)
+    pos = F.array_position(F.slice(_literal(us, "array<bigint>"), lo + 1, hi - lo), ts)
+    if key_strategy == "derived":
+        key = F.expr("unix_micros(timestamp) div 1000000").cast("double") / 3600
+    else:
+        key = lo + pos + stamps.null_count
+    # The range guard comes first: outside it the bucket has no slot.
+    return F.when(ts.between(first, last), F.when(pos > 0, key)).cast("long")
+
+
+def _fanned_key(dim: pa.Table, key: str, part: str) -> Column:
+    """J2/J3: the ``key`` of every ``dim`` row whose ``(building_id,
+    part)`` equals the fact's, as a generator that gives the LEFT
+    equi-join's rows: one per match (a zone with two names fans out to
+    two), one NULL row for a miss.  A dim row with a null key part stays
+    out of the literal map, as an equi-join never matches it."""
+    lookup: dict = defaultdict(lambda: defaultdict(list))
+    for k, b, p in zip(*(dim.column(c).to_pylist() for c in (key, "building_id", part))):
+        if b is not None and p is not None:
+            lookup[b][p].append(k)
+    keys = _literal(lookup, "map<string,map<string,array<bigint>>>")
+    return F.explode_outer(
+        F.try_element_at(F.try_element_at(keys, F.col("building_id")), F.col(part))
     )
 
 
 def build_fact_zone_conditions(
-    zones: DataFrame, dim_time: DataFrame, dim_zone: DataFrame
+    zones: DataFrame, time_key: Column, zone_key: Column
 ) -> DataFrame:
     """Grain (timestamp, zone, scenario) — reference transform:203-241."""
-    keyed = _time_keyed(zones, dim_time).join(
-        F.broadcast(dim_zone.select("zone_key", "building_id", "zone_id")),
-        ["building_id", "zone_id"],
-        "left",
-    )
-    return keyed.select(
-        "time_key", "zone_key", "scenario_id",
+    return zones.select(
+        time_key.alias("time_key"), zone_key.alias("zone_key"), "scenario_id",
         "air_temp_C", "setpoint_C", "co2_ppm", "rh_pct",
     )
 
 
-def build_fact_hvac(
-    hvac: DataFrame, dim_time: DataFrame, dim_ahu: DataFrame
-) -> DataFrame:
+def build_fact_hvac(hvac: DataFrame, time_key: Column, ahu_key: Column) -> DataFrame:
     """Grain (timestamp, AHU, scenario); cop_proxy NULL iff power < 1 kW
     (reference transform:258-307, threshold at :267-269)."""
-    keyed = _time_keyed(hvac, dim_time).join(
-        F.broadcast(dim_ahu.select("ahu_key", "building_id", "ahu_id")),
-        ["building_id", "ahu_id"],
-        "left",
-    )
     cop = F.when(
         F.col("power_kw") >= COP_POWER_THRESHOLD_KW,
         (F.col("heating_kw") + F.col("cooling_kw")) / F.col("power_kw"),
     )
-    return keyed.select(
-        "time_key", "ahu_key", "scenario_id",
+    return hvac.select(
+        time_key.alias("time_key"), ahu_key.alias("ahu_key"), "scenario_id",
         "supply_temp_C", "return_temp_C", "power_kw", "cooling_kw", "heating_kw",
         cop.alias("cop_proxy"),
     )
 
 
-def build_fact_meters(meters: DataFrame, dim_time: DataFrame) -> DataFrame:
+def build_fact_meters(meters: DataFrame, time_key: Column) -> DataFrame:
     """Grain (timestamp, building, scenario) — reference transform:324-356."""
-    return _time_keyed(meters, dim_time).select(
-        "time_key", "building_id", "scenario_id",
+    return meters.select(
+        time_key.alias("time_key"), "building_id", "scenario_id",
         "electric_kwh", "heating_kwh", "cooling_kwh",
     )
 
 
 def build_fact_weather(
-    weather: DataFrame, dim_time: DataFrame, dim_building: DataFrame
+    weather: DataFrame, time_key: Column, buildings: list[str | None]
 ) -> DataFrame:
     """Grain (timestamp, building) — the shared weather series replicated
-    per building (J4).  Dedup by timestamp across runs (averaging is not
-    needed: the series is identical; distinct is exact) instead of the
-    reference's silent runs[0] pick (transform:373-409)."""
-    shared = weather.dropDuplicates(["timestamp"])
-    fanned = _time_keyed(shared, dim_time).crossJoin(
-        F.broadcast(dim_building.select("building_id"))
-    )
-    return fanned.select(
-        "time_key", "building_id", "drybulb_C", "relhum_pct", "ghi_W_m2"
+    per building of ``buildings`` (J4: the dim's ids, a null id included,
+    as a cross join keeps it).  Dedup by timestamp across runs (averaging
+    is not needed: the series is identical; distinct is exact) instead of
+    the reference's silent runs[0] pick (transform:373-409)."""
+    return weather.dropDuplicates(["timestamp"]).select(
+        time_key.alias("time_key"),
+        F.explode(_literal(buildings, "array<string>")).alias("building_id"),
+        "drybulb_C", "relhum_pct", "ghi_W_m2",
     )
 
 
@@ -271,16 +326,23 @@ def transform_all(
 ) -> Star:
     """Full star schema (reference transform_all, transform:412-445).
     Runs the key-set query (one action); the facts stay lazy."""
+    spark = entities["zones"].sparkSession
     keys = _collect_keys(entities)
-    dims = _dims(entities["zones"].sparkSession, keys, time_key_strategy)
+    dims = _dims(keys, time_key_strategy, spark.conf.get("spark.sql.session.timeZone"))
+    time_key = _time_key(dims["dim_time"], time_key_strategy)
+    zone_key = _fanned_key(dims["dim_zone"], "zone_key", "zone_id")
+    ahu_key = _fanned_key(dims["dim_ahu"], "ahu_key", "ahu_id")
+    buildings = dims["dim_building"].column("building_id").to_pylist()
     facts = {
         "fact_zone_conditions": build_fact_zone_conditions(
-            entities["zones"], dims["dim_time"], dims["dim_zone"]
+            entities["zones"], time_key, zone_key
         ),
-        "fact_hvac": build_fact_hvac(entities["hvac"], dims["dim_time"], dims["dim_ahu"]),
-        "fact_meters": build_fact_meters(entities["meters"], dims["dim_time"]),
-        "fact_weather": build_fact_weather(
-            entities["weather"], dims["dim_time"], dims["dim_building"]
-        ),
+        "fact_hvac": build_fact_hvac(entities["hvac"], time_key, ahu_key),
+        "fact_meters": build_fact_meters(entities["meters"], time_key),
+        "fact_weather": build_fact_weather(entities["weather"], time_key, buildings),
     }
-    return Star({**dims, **facts}, meter_runs=frozenset(k[:2] for k in keys["run"]))
+    return Star(
+        {**{t: _local(spark, d) for t, d in dims.items()}, **facts},
+        meter_runs=frozenset(k[:2] for k in keys["run"]),
+        dims=dims,
+    )

@@ -3,9 +3,11 @@
 The reference runs one pandas filter per rule (src/etl/validate/__init__.py:
 49-137) — a full scan each.  Here every table's null and range rules
 collapse into ONE list of conditional aggregates (A7, ``IntegrityCheck``).
-``run_pipeline`` attaches that list to each table's land write with
-``DataFrame.observe``, so the checks cost no job of their own; standalone
-``validate_all`` runs it as one ``df.agg`` per table.  Temporal coverage of
+``run_pipeline`` attaches that list to each fact's land write with
+``DataFrame.observe`` and counts the same specs over the dims it holds on
+the driver (``IntegrityCheck.counted``), so the checks cost no job of
+their own; standalone ``validate_all`` runs the list as one ``df.agg`` per
+table.  Temporal coverage of
 all four facts is ONE anti-join query (J8) — at 100 TB the whole suite is a
 handful of scans, not dozens.
 
@@ -19,14 +21,13 @@ Report shape mirrors the reference (validate/__init__.py:242-296):
 
 from __future__ import annotations
 
-from collections.abc import Mapping
+from collections.abc import Mapping, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import partial, reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..schemas import NULLABLE_WHITELIST, STAR_SCHEMAS
 
@@ -140,6 +141,30 @@ class IntegrityCheck:
         """The standalone path: the aggregates as one ``df.agg`` action."""
         return self.errors(df.agg(*self.aggs).collect()[0] if self.aggs else {})
 
+    def counted(self, columns: Mapping[str, Sequence]) -> Errors:
+        """The driver path, for a table whose values are already on the
+        driver (``{column: values}``): each spec counted as its aggregate
+        counts it.  A null is never out of range, and NaN sorts above
+        every number, as in Spark's comparisons."""
+
+        def order(v):
+            return (v != v, 0 if v != v else v)
+
+        def count(kind: str, col: str, lo: float | None, hi: float | None) -> int:
+            values = columns[col]
+            if kind == "nulls":
+                return sum(v is None for v in values)
+            return sum(
+                v is not None
+                and (
+                    (lo is not None and order(v) < order(lo))
+                    or (hi is not None and order(v) > order(hi))
+                )
+                for v in values
+            )
+
+        return self.errors({f"a{i}": count(*spec) for i, spec in enumerate(self.specs)})
+
 
 def integrity_checks(
     star: dict[str, DataFrame], range_rules: Rules | None = None
@@ -154,18 +179,15 @@ def integrity_checks(
 
 
 def _gap_errors(dim_time: DataFrame) -> Errors:
-    """Continuity: hourly with no gaps (lag window, reference
-    validate:159-168)."""
-    gaps = (
-        dim_time.select("timestamp")
-        .withColumn(
-            "gap_s",
-            F.unix_timestamp("timestamp")
-            - F.unix_timestamp(F.lag("timestamp").over(Window.orderBy("timestamp"))),
-        )
-        .filter(F.col("gap_s") != 3600)
-        .count()
+    """Continuity: hourly with no gaps (reference validate:159-168).
+    Decided on the driver from the dim's timestamps in whole seconds: one
+    step per consecutive non-null pair in ascending order.  Collecting
+    the local dim ``run_pipeline`` hands over costs no job."""
+    seconds = sorted(
+        s for (s,) in dim_time.select(F.unix_timestamp("timestamp")).collect()
+        if s is not None
     )
+    gaps = sum(b - a != 3600 for a, b in zip(seconds, seconds[1:]))
     msg = f"dim_time: {gaps} non-hourly gaps in timestamp sequence"
     return {"temporal": [msg] if gaps else []}
 
@@ -238,8 +260,9 @@ def validate_all(
     write); every star table it lacks is scanned here with one ``df.agg``.
 
     What remains is a few SMALL independent jobs — the unobserved
-    null+range scans, the dim_time gap check, the one coverage query and
-    the plausibility sums.  Executed serially each pays full
+    null+range scans, the dim_time gap check (no job on a local dim), the
+    one coverage query and the plausibility sums.  Executed serially each
+    pays full
     job-submission latency, which dominates wall time on landed parquet;
     Spark's scheduler runs concurrent jobs from separate driver threads
     side by side, so all of them go to ONE driver pool and the suite costs

@@ -3,7 +3,8 @@ bundles, written from SURVEY D1–D4 and the transform docstrings (first
 seen in zip-name order, dense keys nulls first), hash-compared with the
 dims ``run_pipeline`` publishes.  Plus what the driver-side dim build
 must not depend on: shuffle partitioning, AQE, and the driver's own time
-zone."""
+zone.  And the join-free fact keys built from the dims against the
+broadcast LEFT joins they replace."""
 
 from __future__ import annotations
 
@@ -257,3 +258,131 @@ def test_published_star_invariant_to_partitioning_and_aqe(spark, tmp_path):
     for conf, digest, report in outputs[1:]:
         assert digest == base[1], conf
         assert report == base[2], conf
+
+
+# --- the join-free fact keys against the broadcast LEFT join they replace --
+
+_T0 = int(datetime(2024, 1, 1, tzinfo=timezone.utc).timestamp()) * 1_000_000
+_H = 3_600_000_000
+_HOURLY = [_T0 + i * _H for i in range(8)]
+
+# dim_time timestamp sets (epoch microseconds)
+TIME_GRIDS = {
+    "hourly": _HOURLY,
+    "every_other_hour": [_T0 + 2 * i * _H for i in range(6)],
+    "off_grid_stamp": [*_HOURLY, _T0 + 3 * _H + 30 * 60_000_000],  # 03:30:00
+    "two_stamps_in_one_hour": [*_HOURLY[:2], *_HOURLY[3:],
+                               _T0 + 2 * _H + 600_000_000, _T0 + 2 * _H + 2_400_000_000],
+    "null_timestamp_row": [None, *_HOURLY],
+    # derived keys truncate seconds toward zero: -3599.5 s keys as -3599 s
+    "before_epoch": [-2 * _H, -_H - 500_000, -_H, -_H + 500_000, 0, _H],
+    "single": [_T0],
+    "empty": [],
+}
+
+
+def _fact_stamps(dim: list[int | None]) -> list[int | None]:
+    """Every dim stamp, plus stamps before, after and off the dim's grid."""
+    us = sorted(u for u in dim if u is not None) or [_T0]
+    lo, hi = us[0], us[-1]
+    extra = [lo - 100 * _H, lo - _H, lo - 1, hi + 1, hi + _H, hi + 10_000 * _H, None]
+    for u in us:
+        extra += [u + 1_000_000, u + _H // 2, u + _H - 1]
+    return [*dim, *dim, *extra]  # repeated stamps: more than one fact row
+
+
+@pytest.mark.parametrize("strategy", ["dense", "derived"])
+@pytest.mark.parametrize("grid", sorted(TIME_GRIDS))
+def test_time_key_kernel_matches_left_join(spark, grid, strategy):
+    from ida_ice_energy_simulation_etl_pipeline_spark.etl.transform import (
+        _dim_time,
+        _local,
+        _time_key,
+    )
+
+    dim = _dim_time(TIME_GRIDS[grid], strategy, "UTC")
+    facts = spark.createDataFrame(
+        [(u,) for u in _fact_stamps(TIME_GRIDS[grid])], "us long"
+    ).select(F.timestamp_micros("us").alias("timestamp"))
+    got = facts.select("timestamp", _time_key(dim, strategy).alias("time_key"))
+    want = facts.join(
+        F.broadcast(_local(spark, dim).select("time_key", "timestamp")), "timestamp", "left"
+    )
+
+    def rows(df):
+        return sorted(
+            map(tuple, df.select(F.unix_micros("timestamp"), "time_key").collect()),
+            key=repr,
+        )
+
+    assert rows(got) == rows(want)
+    assert dict(got.dtypes)["time_key"] == "bigint"
+
+
+_DIM_ZONE_ROWS = [
+    (1, "B1", "Z1", "a"),
+    (2, "B1", "Z1", "b"),  # one zone, two names: two dim rows
+    (3, "B1", "Z2", "c"),
+    (4, "B2", "Z1", "d"),
+    (5, None, "Z1", "e"),  # null key parts never match an equi-join
+    (6, "B2", None, "f"),
+]
+_FACT_KEYS = [("B1", "Z1"), ("B1", "Z2"), ("B1", "Z9"), ("B2", "Z1"), (None, "Z1"),
+              ("B2", None), (None, None), ("B3", "Z1"), ("B1", "Z1"),
+              ("null", "Z1"), ("B2", "null")]  # JSON spells a null map key "null"
+
+
+@pytest.mark.parametrize("dim_rows", [_DIM_ZONE_ROWS, []], ids=["zones", "empty"])
+def test_fanned_key_kernel_matches_left_join(spark, dim_rows):
+    from ida_ice_energy_simulation_etl_pipeline_spark.etl.transform import (
+        _arrow,
+        _fanned_key,
+        _local,
+    )
+
+    dim = _arrow("dim_zone", [*zip(*dim_rows)], "zone_key")
+    facts = spark.createDataFrame(_FACT_KEYS, "building_id string, zone_id string")
+    got = facts.select(
+        "building_id", "zone_id", _fanned_key(dim, "zone_key", "zone_id").alias("zone_key")
+    )
+    want = facts.join(
+        F.broadcast(_local(spark, dim).select("zone_key", "building_id", "zone_id")),
+        ["building_id", "zone_id"],
+        "left",
+    ).select("building_id", "zone_id", "zone_key")
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+    if dim_rows:
+        assert sorted(r.zone_key for r in got.collect() if r.zone_id == "Z1"
+                      and r.building_id == "B1") == [1, 1, 2, 2]
+
+
+@pytest.mark.parametrize(
+    "buildings", [["B1", None, "B2"], []], ids=["with_null_id", "empty"]
+)
+def test_weather_fan_out_matches_cross_join(spark, buildings):
+    from ida_ice_energy_simulation_etl_pipeline_spark.etl.transform import (
+        _arrow,
+        _dim_time,
+        _local,
+        _time_key,
+        build_fact_weather,
+    )
+
+    dim_time = _dim_time(_HOURLY[:4], "dense", "UTC")
+    dim_building = _arrow("dim_building", [buildings, *[[None] * len(buildings)] * 3])
+    weather = spark.createDataFrame(
+        # every run carries the same series: duplicates are identical rows
+        [(u, 1.0 * i, 50.0, 0.0) for i, u in [*enumerate(_HOURLY[:5])] * 2],
+        "us long, drybulb_C double, relhum_pct double, ghi_W_m2 double",
+    ).select(F.timestamp_micros("us").alias("timestamp"), "drybulb_C", "relhum_pct",
+             "ghi_W_m2")
+    got = build_fact_weather(weather, _time_key(dim_time, "dense"), buildings)
+    want = (
+        weather.dropDuplicates(["timestamp"])
+        .join(F.broadcast(_local(spark, dim_time).select("time_key", "timestamp")),
+              "timestamp", "left")
+        .crossJoin(F.broadcast(_local(spark, dim_building).select("building_id")))
+        .select(*got.columns)
+    )
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+    assert got.count() == 5 * len(buildings)
