@@ -8,16 +8,25 @@ constants (35 % / 45 % of electric, reference src/export_json.py:140-141)
 are preserved as constants, because they are modeling assumptions, not
 measurements.  The multi-source fallback chain (export_json.py:64-119) is
 replaced by explicit catalog reads.
+
+The scenario, buildings and month buckets are read off the dims; the
+fact figures are one aggregate list per fact table (``summary_aggs``),
+which ``run_pipeline`` observes on the land writes, so the summary costs
+no Spark job there.  A month bucket is a set of ``time_key`` ranges, so
+each meter row counts in one bucket, with no join to dim_time.
 """
 
 from __future__ import annotations
 
 import json
+from collections import defaultdict
+from collections.abc import Mapping
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
+from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import DataFrame, Row
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 LIGHTING_SHARE = 0.35
@@ -28,11 +37,100 @@ REQUIRED_FIELDS = ("pipeline", "generated_at", "scenario", "annual", "kpis")
 
 
 def _sorted_by(rows: list[Row], key: str) -> list[Row]:
-    """``rows`` ordered as ``orderBy(key)`` orders them, nulls first, so
-    driver-side float sums add up in the same order.  The rows are few
-    (a dim, or one per month), and sorting them here spares the sort's
-    Spark jobs."""
+    """``rows`` ordered as ``orderBy(key)`` orders them, nulls first.  The
+    rows are a dim's, and sorting them here spares the sort's Spark
+    jobs."""
     return sorted(rows, key=lambda r: (r[key] is not None, r[key]))
+
+
+def _exported(star: dict[str, DataFrame], scenario_id: str | None) -> Row:
+    """The dim_scenario row the summary describes: ``scenario_id``'s, or
+    the first (nulls first) when it is None."""
+    rows = _sorted_by(star["dim_scenario"].collect(), "scenario_id")
+    scenarios = [r["scenario_id"] for r in rows]
+    if scenario_id is None:
+        scenario_id = scenarios[0]
+    if scenario_id not in scenarios:
+        raise ValueError(f"unknown scenario {scenario_id!r}; have {scenarios}")
+    return next(r for r in rows if r["scenario_id"] == scenario_id)
+
+
+def _month_ranges(dim_time: DataFrame) -> dict[int, list[tuple[int, int]]]:
+    """Each month's ``time_key`` ranges, read off dim_time: one per (year,
+    month) the dim spans, from its smallest key to its largest, so a
+    month costs a few literals, not one per hour.  Keys follow the
+    timestamps, so a range holds its month's keys only; a range starts
+    past the one before it, so a key two months share (two stamps in one
+    derived hour) counts in the first.  A key outside every range (null,
+    or of a row with no timestamp) belongs to no month."""
+    spans: dict[tuple, tuple[int, int]] = {}
+    for key, year, month in dim_time.select("time_key", "year", "month").collect():
+        if key is not None and month is not None:
+            lo, hi = spans.get((year, month), (key, key))
+            spans[year, month] = (min(lo, key), max(hi, key))
+    ranges: dict[int, list[tuple[int, int]]] = defaultdict(list)
+    end = None
+    for (_, month), (lo, hi) in sorted(spans.items(), key=lambda kv: kv[1]):
+        lo = lo if end is None else max(lo, end + 1)
+        if lo <= hi:
+            ranges[month].append((lo, hi))
+            end = hi
+    return dict(sorted(ranges.items()))
+
+
+ENERGY = ("heating", "cooling", "electric")
+FACT_TABLES = ("fact_zone_conditions", "fact_hvac", "fact_meters")  # the summary reads
+
+
+def _aggs(
+    scenario_id: str | None, months: dict[int, list[tuple[int, int]]]
+) -> dict[str, tuple[Column, ...]]:
+    """The summary's figures for one scenario as aggregates per fact
+    table.  fact_meters gets a row count and the three sums per bucket:
+    bucket 0 holds the rows in no month (a null ``time_key``), bucket
+    ``i`` the ``i``-th month of ``months``.  Every row counts in exactly
+    one bucket, and a bucket is reported only if it has rows."""
+    scen = F.col("scenario_id") == scenario_id
+    key = F.col("time_key")
+    in_month = [
+        reduce(Column.__or__, (key.between(lo, hi) for lo, hi in ranges))
+        for ranges in months.values()
+    ]
+    no_month = ~F.coalesce(reduce(Column.__or__, in_month, F.lit(False)), F.lit(False))
+    meters = []
+    for i, bucket in enumerate([no_month, *in_month]):
+        hit = scen & bucket
+        meters += [
+            F.count(F.when(hit, 1)).alias(f"m{i}_rows"),
+            *(F.sum(F.when(hit, F.col(f"{e}_kwh"))).alias(f"m{i}_{e}") for e in ENERGY),
+        ]
+    comfortable = F.abs(F.col("air_temp_C") - F.col("setpoint_C")) <= COMFORT_BAND_C
+    return {
+        # Comfort: share of zone-hours within ±1 °C of setpoint — computed
+        # from fact_zone_conditions instead of the reference's constant 94.2.
+        "fact_zone_conditions": (
+            F.count(F.when(scen, 1)).alias("zone_hours"),
+            F.sum(F.when(scen & comfortable, 1).otherwise(0)).alias("comfort_hours"),
+        ),
+        # Peak demand: real max over hourly HVAC power (the reference admits
+        # "Would compute from hourly data" and hard-codes — export_json.py:188).
+        "fact_hvac": (F.max(F.when(scen, F.col("power_kw"))).alias("peak_kw"),),
+        "fact_meters": tuple(meters),
+    }
+
+
+def summary_aggs(
+    star: dict[str, DataFrame], scenario_id: str | None = None
+) -> dict[str, tuple[Column, ...]]:
+    """Per fact table, the aggregates ``build_summary`` reads for the
+    exported scenario, which ``run_pipeline`` observes on the land
+    writes.  None when ``scenario_id`` names no scenario: ``build_summary``
+    raises then, after publishing, as it always has."""
+    try:
+        scenario = _exported(star, scenario_id)
+    except (ValueError, IndexError):
+        return {}
+    return _aggs(scenario["scenario_id"], _month_ranges(star["dim_time"]))
 
 
 def build_summary(
@@ -40,92 +138,44 @@ def build_summary(
     *,
     scenario_id: str | None = None,
     pipeline_name: str = "ida-ice-energy-spark",
+    observed: Mapping[str, Mapping[str, object]] | None = None,
 ) -> dict:
     """Canonical summary document (shape: FIXTURES.md §3, reference
     src/export_json.py:49-62) — every number computed from the data.
 
-    FIVE collects total, and the three fact-side aggregates overlap as
-    concurrent jobs with the dim_building collect (same pool pattern as
-    ``validate_all``): the scenario-id gate collects dim_scenario once (its
-    rows also serve the description lookup), dim_building is collected once
-    (floor-area summed driver-side — it is a dim), annual figures derive
-    from the monthly breakdown instead of a second meters pass, and
-    peak/comfort run concurrently with it.  The collected rows are sorted
-    on the driver (``_sorted_by``), not by ``orderBy``.  Wall time is
-    max(fact scans), not their sum.
+    The scenario, the buildings and the month buckets come from the dims;
+    every fact figure from the aggregates of ``summary_aggs``.
+    ``observed`` carries their values per table (``run_pipeline`` observes
+    them on the land writes, so the summary runs no Spark job); every
+    fact table it lacks runs its list as one ``df.agg``, the three side by
+    side on one driver pool.  The reference's annual figures are
+    whole-table sums (export_json.py get_sum), so the annual totals add up
+    every bucket, the rows in no month included, while the monthly
+    breakdown lists the months.
     """
-    dim_building = star["dim_building"]
-    scen_rows = _sorted_by(star["dim_scenario"].collect(), "scenario_id")
-    scenarios = [r["scenario_id"] for r in scen_rows]
-    if scenario_id is None:
-        scenario_id = scenarios[0]
-    if scenario_id not in scenarios:
-        raise ValueError(f"unknown scenario {scenario_id!r}; have {scenarios}")
-    scen_desc = next(r for r in scen_rows if r["scenario_id"] == scenario_id)
+    scenario = _exported(star, scenario_id)
+    months = _month_ranges(star["dim_time"])
+    observed = observed or {}
+    unobserved = [t for t in FACT_TABLES if t not in observed]
+    # Built only when some table is scanned: every Column costs driver
+    # round trips.
+    aggs = _aggs(scenario["scenario_id"], months) if unobserved else {}
+    with ThreadPoolExecutor(max_workers=len(FACT_TABLES)) as pool:
+        scans = {
+            t: pool.submit(lambda t: star[t].agg(*aggs[t]).first().asDict(), t)
+            for t in unobserved
+        }
+        buildings = _sorted_by(star["dim_building"].collect(), "building_id")
+        values = {
+            t: observed[t] if t in observed else scans[t].result() for t in FACT_TABLES
+        }
 
-    meters = star["fact_meters"].filter(F.col("scenario_id") == scenario_id)
-    # LEFT join: fact_meters is time-keyed by a LEFT join upstream
-    # (transform._time_key), so a row can carry a null time_key.  The
-    # reference's annual figures are whole-table sums (export_json.py
-    # get_sum), so such rows must still count toward ANNUAL totals — they
-    # land in a null-month bucket here, which the monthly breakdown skips
-    # but the annual roll-forward includes.
-    time_keyed = meters.join(
-        F.broadcast(star["dim_time"].select("time_key", "month")),
-        "time_key",
-        "left",
-    )
-
-    def _monthly_rows():
-        return (
-            time_keyed.groupBy("month")
-            .agg(
-                F.sum("heating_kwh").alias("heating"),
-                F.sum("cooling_kwh").alias("cooling"),
-                F.sum("electric_kwh").alias("electric"),
-            )
-            .collect()
-        )
-
-    def _peak_kw():
-        # Peak demand: real max over hourly HVAC power (the reference admits
-        # "Would compute from hourly data" and hard-codes — export_json.py:188).
-        return float(
-            star["fact_hvac"]
-            .filter(F.col("scenario_id") == scenario_id)
-            .agg(F.max("power_kw"))
-            .collect()[0][0]
-            or 0.0
-        )
-
-    def _comfort_row():
-        # Comfort: share of zone-hours within ±1 °C of setpoint — computed
-        # from fact_zone_conditions instead of the reference's constant 94.2.
-        return (
-            star["fact_zone_conditions"]
-            .filter(F.col("scenario_id") == scenario_id)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    F.when(
-                        F.abs(F.col("air_temp_C") - F.col("setpoint_C"))
-                        <= COMFORT_BAND_C,
-                        1,
-                    ).otherwise(0)
-                ).alias("ok"),
-            )
-            .collect()[0]
-        )
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        monthly_f = pool.submit(_monthly_rows)
-        peak_f = pool.submit(_peak_kw)
-        comfort_f = pool.submit(_comfort_row)
-        buildings = _sorted_by(dim_building.collect(), "building_id")
-        monthly_rows = _sorted_by(monthly_f.result(), "month")
-        peak_kw = peak_f.result()
-        comfort_row = comfort_f.result()
-
+    meters = values["fact_meters"]
+    buckets = [
+        {"month": month, **{e: meters[f"m{i}_{e}"] for e in ENERGY}}
+        for i, month in enumerate([None, *months])
+        if meters[f"m{i}_rows"]
+    ]
     monthly = [
         {
             "month": int(r["month"]),
@@ -133,27 +183,27 @@ def build_summary(
             "cooling_kwh": round(float(r["cooling"]), 1),
             "total_kwh": round(float(r["heating"] + r["cooling"] + r["electric"]), 1),
         }
-        for r in monthly_rows
+        for r in buckets
         if r["month"] is not None
     ]
-    # Annual sums include the null-month bucket (rows with no time_key) —
-    # reconciling with the reference's whole-table sums.
-    electric = float(sum(r["electric"] for r in monthly_rows))
-    heating = float(sum(r["heating"] for r in monthly_rows))
-    cooling = float(sum(r["cooling"] for r in monthly_rows))
+    electric = float(sum(r["electric"] for r in buckets))
+    heating = float(sum(r["heating"] for r in buckets))
+    cooling = float(sum(r["cooling"] for r in buckets))
     total = electric + heating + cooling
 
     floor_area = float(sum(b["floor_area_m2"] or 0.0 for b in buildings))
+    zones = values["fact_zone_conditions"]
     comfort_pct = (
-        100.0 * comfort_row["ok"] / comfort_row["n"] if comfort_row["n"] else 0.0
+        100.0 * zones["comfort_hours"] / zones["zone_hours"] if zones["zone_hours"] else 0.0
     )
+    peak_kw = float(values["fact_hvac"]["peak_kw"] or 0.0)
 
     return {
         "pipeline": pipeline_name,
         "generated_at": datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ"),
         "scenario": {
-            "name": scenario_id,
-            "building_type": scen_desc["description"] or "unspecified",
+            "name": scenario["scenario_id"],
+            "building_type": scenario["description"] or "unspecified",
             "location": buildings[0]["location"] if buildings else "unknown",
             "floor_area_m2": floor_area,
         },
@@ -204,10 +254,11 @@ def export_summary(
     out_path: str | Path,
     *,
     scenario_id: str | None = None,
+    observed: Mapping[str, Mapping[str, object]] | None = None,
 ) -> dict:
     """Build, validate, and write the summary JSON (reference
     src/export_json.py:229-232)."""
-    doc = build_summary(star, scenario_id=scenario_id)
+    doc = build_summary(star, scenario_id=scenario_id, observed=observed)
     errors = validate_summary(doc)
     if errors:
         raise ValueError(f"summary failed schema validation: {errors}")

@@ -1,6 +1,6 @@
 """Pipeline orchestration: extract → transform → land (staging parquet, the
-null/range checks observed on the write) → validate (gate) → publish
-(rename) → views → export (reference run_pipeline.py:25-157).
+checks and summary figures observed on the write) → validate (gate) →
+publish (rename) → views → export (reference run_pipeline.py:25-157).
 
 The interactive continue-despite-validation prompt (run_pipeline.py:106-120)
 has no place in a cluster job — only the explicit ``force`` flag overrides
@@ -19,7 +19,7 @@ from pathlib import Path
 from pyspark.sql import Observation, SparkSession
 
 from ..session import get_spark
-from .export import export_summary
+from .export import export_summary, summary_aggs
 from .extract import (
     check_run_coverage,
     extract_runs,
@@ -33,7 +33,7 @@ from .load import (
     register_temp_views,
 )
 from .transform import transform_all
-from .validate import integrity_checks, validate_all
+from .validate import fact_aggs, integrity_checks, validate_all
 
 
 class ValidationGateError(RuntimeError):
@@ -92,12 +92,17 @@ def run_pipeline(
         # that survives 100 TB, where caching the star in executor memory is
         # not an option.
         staging = output_dir / "parquet._staging"
-        # The facts' null and range checks ride on the land write: each
-        # table's aggregates are observed while its rows stream to parquet,
-        # so they cost no job of their own.  The dims' are counted on the
-        # driver, which holds their values.
+        # Every check and summary figure over the facts rides on the land
+        # write: each fact's aggregates are observed while its rows stream
+        # to parquet, so they cost no job of their own.  The dims' checks
+        # are counted on the driver, which holds their values, and the
+        # per-run meter sums came with the dim key set.  An unknown
+        # scenario observes no summary figures; export raises after
+        # publishing.
         checks = integrity_checks(star, range_rules)
-        observed = {t: Observation() for t in checks if t not in star.dims}
+        aggs = fact_aggs(star, range_rules)
+        summary = summary_aggs(star, scenario_id)
+        observations = {t: Observation() for t in star if t not in star.dims}
         # Time-range queries dominate the analytic surface (monthly rollups,
         # gap scans, as-of lookups), so fact files are range-clustered on
         # time_key when requested: disjoint per-file min/max intervals let
@@ -106,22 +111,22 @@ def run_pipeline(
             ("fact_meters", "fact_hvac", "fact_zone_conditions") if cluster_facts else ()
         )
         written = dict(star.dims)
-        for t in observed:
+        for t, observation in observations.items():
             df = star[t]
             if t in clustered:
                 df = range_clustered(df, ["time_key"])
             # Observed ABOVE the range shuffle, in the write's own stage: the
             # shuffle samples its input in a job of its own, and an
             # observation below it would count the sampled rows again.
-            written[t] = df.observe(observed[t], *checks[t].aggs)
+            written[t] = df.observe(observation, *aggs[t], *summary.get(t, ()))
         # The dims are written from the driver; the fact writes go out
         # together.
         load_to_parquet(written, staging, partition_facts=partition_facts)
     # Observation.get blocks until its write has finished; the writes have.
-    integrity = {
-        t: c.errors(observed[t].get) if t in observed
-        else c.counted(star.dims[t].to_pydict())
-        for t, c in checks.items()
+    observed = {
+        t: observations[t].get if t in observations
+        else checks[t].counted(star.dims[t].to_pydict())
+        for t in checks
     }
     # Re-reads carry the schema of the DataFrame that was written, which
     # spares one schema-inference job per read and, unlike the declared
@@ -130,13 +135,19 @@ def run_pipeline(
     # The checks and the summary read the dims as the local relations the
     # files were written from: the driver reads those without a job.
     dims = {t: star[t] for t in star.dims}
+    # The checks are read back in the written column order (a partitioned
+    # read puts the partition column last): the observed aggregates are
+    # named by the position of their column.
     landed = {
-        t: spark.read.schema(schemas[t]).parquet(str(staging / t))
+        t: spark.read.schema(schemas[t]).parquet(str(staging / t)).select(*star[t].columns)
         for t in star if t not in dims
     }
 
     report = validate_all(
-        {**landed, **dims}, range_rules=range_rules, integrity=integrity
+        {**landed, **dims},
+        range_rules=range_rules,
+        observed=observed,
+        meter_runs=star.meter_runs,
     )
     if not report["is_valid"] and not force:
         raise ValidationGateError(report)  # staging left behind for triage
@@ -154,7 +165,10 @@ def run_pipeline(
         register_temp_views(spark, published)
 
     summary = export_summary(
-        {**published, **dims}, output_dir / "summary.json", scenario_id=scenario_id
+        {**published, **dims},
+        output_dir / "summary.json",
+        scenario_id=scenario_id,
+        observed=observed,
     )
     (output_dir / "validation_report.json").write_text(json.dumps(report, indent=2))
     return {

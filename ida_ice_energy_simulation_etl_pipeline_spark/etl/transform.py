@@ -5,12 +5,13 @@ Re-expresses the reference's per-run pandas loops
 
 * the five dims are decided on the driver from ONE key-set query: each raw
   source is scanned once and every dim-scale key set (metadata rows,
-  distinct zone and AHU keys, timestamps, the runs with meter rows) is
-  collected in a single action.  Dims are bounded by the run count and the
-  simulation span, the scale of the run manifest the driver already lists,
-  so they never enter Spark's execution: each is an Arrow table, which
-  ``load_to_parquet`` writes as one file with pyarrow, and which the star
-  also carries as a local relation that the driver reads without a job;
+  distinct zone and AHU keys, timestamps, the runs with meter rows and
+  their energy sums) is collected in a single action.  Dims are bounded
+  by the run count and the simulation span, the scale of the run manifest
+  the driver already lists, so they never enter Spark's execution: each
+  is an Arrow table, which ``load_to_parquet`` writes as one file with
+  pyarrow, and which the star also carries as a local relation that the
+  driver reads without a job;
 * first-seen picks (D1, reference :29-40, 61-70) follow the reference's
   seen-set walk over ``sorted(glob('run_*.zip'))`` (extract:116);
 * dense surrogate keys (D4, reference :106-173) number the sorted distinct
@@ -55,13 +56,15 @@ class Star(dict):
     """The nine star tables by name, as DataFrames.  ``dims`` holds the
     five dims as the Arrow tables their local relations were built from:
     what ``load_to_parquet`` writes and the driver checks.  ``meter_runs``
-    holds the ``(building_id, scenario_id)`` pairs that have meter rows,
-    collected with the dim keys: the run-coverage breaker's input."""
+    maps each ``(building_id, scenario_id)`` pair that has meter rows to
+    its ``(electric, heating, cooling)`` kWh sums, collected with the dim
+    keys: the run-coverage breaker's input (its keys) and the
+    plausibility check's (its sums)."""
 
     def __init__(
         self,
         tables: dict[str, DataFrame],
-        meter_runs: frozenset[tuple],
+        meter_runs: dict[tuple, tuple],
         dims: dict[str, pa.Table],
     ):
         super().__init__(tables)
@@ -80,32 +83,40 @@ def _key(kind: str, *strings: Column, n: Column | None = None) -> Column:
     )
 
 
-def _collect_keys(entities: dict[str, DataFrame]) -> dict[str, list[tuple]]:
+def _collect_keys(entities: dict[str, DataFrame]) -> dict[str, dict[tuple, tuple]]:
     """Every dim-scale key set in ONE action.  Each raw source is scanned
     once (zones yields its zone keys and its timestamps from the same
-    scan), and one distinct reduces the rows to key scale before they
-    reach the driver.  Timestamps travel as epoch microseconds: a Python
-    datetime in a DST-observing driver zone would fold the fall-back
-    hour onto its neighbour."""
+    scan), and one ``groupBy`` reduces the rows to key scale before they
+    reach the driver.  The ``run`` keys carry the meters' energy columns,
+    so the same query sums them per run: ``{kind: {key: (electric,
+    heating, cooling)}}``, the sums None for the other kinds.  (It costs
+    the jobs a bare ``distinct`` does.)  Timestamps travel as epoch
+    microseconds: a Python datetime in a DST-observing driver zone would
+    fold the fall-back hour onto its neighbour."""
     b, s = F.col("building_id"), F.col("scenario_id")
+    energy = ("electric_kwh", "heating_kwh", "cooling_kwh")
+    no_energy = [F.lit(None).cast("double").alias(c) for c in energy]
     parts = [
         entities["metadata"].select(
             _key("meta", b, s, *map(F.col, ("building_name", "location", "description")),
-                 n=F.col("floor_area_m2"))
+                 n=F.col("floor_area_m2")),
+            *no_energy,
         ),
         entities["zones"].select(
             F.explode(F.array(
                 _key("zone", b, F.col("zone_id"), F.col("zone_name")),
                 _key("time", n=F.unix_micros("timestamp")),
-            ))
+            )),
+            *no_energy,
         ),
-        entities["hvac"].select(_key("ahu", b, F.col("ahu_id"))),
-        entities["meters"].select(_key("run", b, s)),
+        entities["hvac"].select(_key("ahu", b, F.col("ahu_id")), *no_energy),
+        entities["meters"].select(_key("run", b, s), *energy),
     ]
-    rows = reduce(DataFrame.union, [p.toDF("k") for p in parts]).select("k.*")
-    keys: dict[str, list[tuple]] = defaultdict(list)
-    for kind, *values in rows.distinct().collect():
-        keys[kind].append(tuple(values))
+    rows = reduce(DataFrame.union, [p.toDF("k", *energy) for p in parts])
+    keys: dict[str, dict[tuple, tuple]] = defaultdict(dict)
+    for k, *sums in rows.groupBy("k").agg(*(F.sum(c) for c in energy)).collect():
+        kind, *values = k
+        keys[kind][tuple(values)] = tuple(sums)
     return keys
 
 
@@ -343,6 +354,6 @@ def transform_all(
     }
     return Star(
         {**{t: _local(spark, d) for t, d in dims.items()}, **facts},
-        meter_runs=frozenset(k[:2] for k in keys["run"]),
+        meter_runs={k[:2]: sums for k, sums in keys["run"].items()},
         dims=dims,
     )

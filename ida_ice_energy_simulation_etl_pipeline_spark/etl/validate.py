@@ -1,15 +1,20 @@
 """Validation suite: schema, nulls, ranges, temporal coverage, plausibility.
 
 The reference runs one pandas filter per rule (src/etl/validate/__init__.py:
-49-137) — a full scan each.  Here every table's null and range rules
-collapse into ONE list of conditional aggregates (A7, ``IntegrityCheck``).
-``run_pipeline`` attaches that list to each fact's land write with
-``DataFrame.observe`` and counts the same specs over the dims it holds on
-the driver (``IntegrityCheck.counted``), so the checks cost no job of
-their own; standalone ``validate_all`` runs the list as one ``df.agg`` per
-table.  Temporal coverage of
-all four facts is ONE anti-join query (J8) — at 100 TB the whole suite is a
-handful of scans, not dozens.
+49-137) — a full scan each.  Here each check is ONE kernel: a list of
+aggregates plus a formatter that turns their values into report lines.
+A table's null and range rules are conditional counts (A7,
+``IntegrityCheck``); coverage of dim_time by a fact (J8,
+``CoverageCheck``) is a bitmap of the keys it holds, decoded on the
+driver; plausibility formats per-run meter sums; the dim_time gap check
+reads the dim's timestamps on the driver.
+
+``run_pipeline`` attaches each fact's aggregates (``fact_aggs``) to its
+land write with ``DataFrame.observe``, counts the same specs over the dims
+it holds on the driver (``IntegrityCheck.counted``) and has the meter sums
+from the transform's key-set query, so the gate costs no Spark job.
+Standalone, ``validate_all`` runs each table's list as one ``df.agg`` and
+the sums as one ``groupBy`` — at 100 TB a handful of scans, not dozens.
 
 A malformed star (a missing table or column) fails ``check_schema``; the
 other checks skip what is missing instead of raising, so the outcome is a
@@ -24,7 +29,7 @@ from __future__ import annotations
 from collections.abc import Mapping, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
-from functools import partial, reduce
+from operator import le, lt
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -81,6 +86,11 @@ def check_schema(star: dict[str, DataFrame]) -> dict:
 Errors = dict[str, list[str]]  # report check name -> error lines
 
 
+def _order(v: float) -> tuple:
+    """Sort key of a non-null number in Spark's order: NaN above all."""
+    return (v != v, 0 if v != v else v)
+
+
 @dataclass(frozen=True)
 class IntegrityCheck:
     """Null counts and range violations of one table as ONE list of
@@ -96,31 +106,39 @@ class IntegrityCheck:
 
     table: str
     specs: tuple[tuple[str, str, float | None, float | None], ...]
-    aggs: tuple[Column, ...]
     unchecked: tuple[str, ...]
 
     @classmethod
     def of(cls, table: str, columns: list[str], rules: Rules) -> IntegrityCheck:
         allowed = NULLABLE_WHITELIST.get(table, set())
         specs = [("nulls", c, None, None) for c in columns if c not in allowed]
-        conds = [F.col(c).isNull() for _, c, _, _ in specs]
         unchecked = []
         for col, lo, hi in rules.get(table, []):
             if col not in columns:
                 unchecked.append(col)
                 continue
-            cond = F.lit(False)
-            if lo is not None:
-                cond = cond | (F.col(col) < lo)
-            if hi is not None:
-                cond = cond | (F.col(col) > hi)
             specs.append(("ranges", col, lo, hi))
-            conds.append(cond)
-        aggs = tuple(
-            F.sum(F.when(cond, 1).otherwise(0)).cast("long").alias(f"a{i}")
-            for i, cond in enumerate(conds)
+        return cls(table, tuple(specs), tuple(unchecked))
+
+    @property
+    def aggs(self) -> tuple[Column, ...]:
+        """Built on demand: formatting observed or counted values needs
+        only the specs, and every Column costs driver round trips."""
+
+        def cond(kind: str, col: str, lo: float | None, hi: float | None) -> Column:
+            if kind == "nulls":
+                return F.col(col).isNull()
+            out = F.lit(False)
+            if lo is not None:
+                out = out | (F.col(col) < lo)
+            if hi is not None:
+                out = out | (F.col(col) > hi)
+            return out
+
+        return tuple(
+            F.sum(F.when(cond(*spec), 1).otherwise(0)).cast("long").alias(f"a{i}")
+            for i, spec in enumerate(self.specs)
         )
-        return cls(table, tuple(specs), aggs, tuple(unchecked))
 
     def errors(self, values: Mapping[str, int | None]) -> Errors:
         errors: Errors = {"nulls": [], "ranges": []}
@@ -137,18 +155,11 @@ class IntegrityCheck:
         ]
         return errors
 
-    def scan(self, df: DataFrame) -> Errors:
-        """The standalone path: the aggregates as one ``df.agg`` action."""
-        return self.errors(df.agg(*self.aggs).collect()[0] if self.aggs else {})
-
-    def counted(self, columns: Mapping[str, Sequence]) -> Errors:
+    def counted(self, columns: Mapping[str, Sequence]) -> dict[str, int]:
         """The driver path, for a table whose values are already on the
-        driver (``{column: values}``): each spec counted as its aggregate
-        counts it.  A null is never out of range, and NaN sorts above
-        every number, as in Spark's comparisons."""
-
-        def order(v):
-            return (v != v, 0 if v != v else v)
+        driver (``{column: values}``): the aggregates' values, each spec
+        counted as its aggregate counts it.  A null is never out of range,
+        and NaN sorts above every number, as in Spark's comparisons."""
 
         def count(kind: str, col: str, lo: float | None, hi: float | None) -> int:
             values = columns[col]
@@ -157,13 +168,13 @@ class IntegrityCheck:
             return sum(
                 v is not None
                 and (
-                    (lo is not None and order(v) < order(lo))
-                    or (hi is not None and order(v) > order(hi))
+                    (lo is not None and _order(v) < _order(lo))
+                    or (hi is not None and _order(v) > _order(hi))
                 )
                 for v in values
             )
 
-        return self.errors({f"a{i}": count(*spec) for i, spec in enumerate(self.specs)})
+        return {f"a{i}": count(*spec) for i, spec in enumerate(self.specs)}
 
 
 def integrity_checks(
@@ -178,115 +189,199 @@ def integrity_checks(
     }
 
 
-def _gap_errors(dim_time: DataFrame) -> Errors:
+def _gap_errors(seconds: list[int | None]) -> Errors:
     """Continuity: hourly with no gaps (reference validate:159-168).
     Decided on the driver from the dim's timestamps in whole seconds: one
-    step per consecutive non-null pair in ascending order.  Collecting
-    the local dim ``run_pipeline`` hands over costs no job."""
-    seconds = sorted(
-        s for (s,) in dim_time.select(F.unix_timestamp("timestamp")).collect()
-        if s is not None
-    )
+    step per consecutive non-null pair in ascending order."""
+    seconds = sorted(s for s in seconds if s is not None)
     gaps = sum(b - a != 3600 for a, b in zip(seconds, seconds[1:]))
     msg = f"dim_time: {gaps} non-hourly gaps in timestamp sequence"
     return {"temporal": [msg] if gaps else []}
 
 
-def _coverage_errors(facts: dict[str, DataFrame], dim_time: DataFrame) -> Errors:
-    """Coverage: every fact covers every time_key (reference
-    validate:171-180).  One query for all facts: the expected
-    (table, time_key) pairs anti-joined against the distinct observed
-    ones, counted per table."""
-    covered = reduce(
-        DataFrame.unionByName,
-        (df.select(F.lit(t).alias("table"), "time_key") for t, df in facts.items()),
-    ).distinct()
-    expected = dim_time.select(
-        F.explode(F.array(*(F.lit(t) for t in facts))).alias("table"), "time_key"
-    )
-    missing = dict(
-        expected.join(covered, ["table", "time_key"], "left_anti")
-        .groupBy("table")
-        .count()
-        .collect()
-    )
-    return {
-        "temporal": [
-            f"{t}: {missing[t]} time periods uncovered" for t in facts if t in missing
-        ]
-    }
+BITMAP_BITS = 32_768  # positions in one bitmap_construct_agg bucket (4 KiB)
 
 
-def _plausibility_errors(fact_meters: DataFrame) -> Errors:
+@dataclass(frozen=True)
+class CoverageCheck:
+    """Coverage (J8, reference validate:171-180): every fact covers every
+    dim_time row.  ``keys`` is dim_time's ``time_key`` column.
+
+    The aggregates set one bit per fact row at ``time_key`` offset from the
+    dim's smallest key, one ``bitmap_construct_agg`` per
+    ``bitmap_bucket_number`` bucket (a span of 32,768 keys, 4 KiB); a null
+    or off-dim key sets none.  ``errors`` decodes the bitmaps on the
+    driver and counts the dim rows whose key is not set: the anti-join's
+    answer, duplicate keys and a null-key row included (a null key is
+    never covered)."""
+
+    keys: tuple[int | None, ...]
+
+    @property
+    def _base(self) -> int | None:
+        return min((k for k in self.keys if k is not None), default=None)
+
+    @property
+    def aggs(self) -> tuple[Column, ...]:
+        if self._base is None:
+            return ()
+        buckets = (max(k for k in self.keys if k is not None) - self._base) // BITMAP_BITS
+        offset = F.col("time_key") - self._base + 1
+        return tuple(
+            F.bitmap_construct_agg(
+                F.when(F.bitmap_bucket_number(offset) == b, F.bitmap_bit_position(offset))
+            ).alias(f"t{b}")
+            for b in range(1, buckets + 2)
+        )
+
+    def errors(self, table: str, values: Mapping[str, object]) -> Errors:
+        base = self._base
+
+        def covered(key: int | None) -> bool:
+            if key is None:
+                return False
+            bucket, bit = divmod(key - base, BITMAP_BITS)
+            bitmap = values[f"t{bucket + 1}"]
+            return bool(bitmap[bit >> 3] >> (bit & 7) & 1)
+
+        missing = sum(not covered(k) for k in self.keys)
+        msg = f"{table}: {missing} time periods uncovered"
+        return {"temporal": [msg] if missing else []}
+
+
+def _plausibility_errors(sums: Mapping[tuple, tuple]) -> Errors:
     """Per-(building, scenario) energy sums must be physically plausible
     (reference validate:204-227): electric > 0, heating+cooling > 0,
-    electric >= 0.2 × (heating+cooling)."""
-    sums = fact_meters.groupBy("building_id", "scenario_id").agg(
-        F.sum("electric_kwh").alias("electric"),
-        F.sum("heating_kwh").alias("heating"),
-        F.sum("cooling_kwh").alias("cooling"),
-    )
-    bad = sums.filter(
-        (F.col("electric") <= 0)
-        | ((F.col("heating") + F.col("cooling")) <= 0)
-        | (F.col("electric") < 0.2 * (F.col("heating") + F.col("cooling")))
-    ).collect()
+    electric >= 0.2 × (heating+cooling).  ``sums`` maps each pair to its
+    ``(electric, heating, cooling)`` sums; a comparison with a null sum
+    fails no rule, and NaN sorts above every number, as in Spark.  Lines
+    are sorted by pair, nulls first."""
+
+    def holds(a, op, b) -> bool:
+        return a is not None and b is not None and op(_order(a), _order(b))
+
+    def implausible(electric, heating, cooling) -> bool:
+        both = None if heating is None or cooling is None else heating + cooling
+        return (
+            holds(electric, le, 0.0)
+            or holds(both, le, 0.0)
+            or holds(electric, lt, None if both is None else 0.2 * both)
+        )
+
+    def nulls_first(item: tuple) -> list:
+        return [(v is not None, v) for v in item[0]]
+
     return {
         "plausibility": [
-            f"({r['building_id']}, {r['scenario_id']}): implausible energy totals "
-            f"electric={r['electric']:.1f} heating={r['heating']:.1f} "
-            f"cooling={r['cooling']:.1f}"
-            for r in bad
+            f"({b}, {s}): implausible energy totals "
+            f"electric={e:.1f} heating={h:.1f} cooling={c:.1f}"
+            for (b, s), (e, h, c) in sorted(sums.items(), key=nulls_first)
+            if implausible(e, h, c)
         ]
     }
+
+
+def meter_sums(fact_meters: DataFrame) -> dict[tuple, tuple]:
+    """The plausibility check's input from ``fact_meters`` itself: one
+    ``groupBy`` of the per-run sums (``run_pipeline`` has them from the
+    key-set query, ``Star.meter_runs``)."""
+    rows = fact_meters.groupBy("building_id", "scenario_id").agg(
+        *(F.sum(c) for c in ("electric_kwh", "heating_kwh", "cooling_kwh"))
+    )
+    return {(b, s): (e, h, c) for b, s, e, h, c in rows.collect()}
 
 
 def _has(star: dict[str, DataFrame], table: str, *columns: str) -> bool:
     return table in star and set(columns) <= set(star[table].columns)
 
 
+def _dim_time(star: dict[str, DataFrame]) -> dict[str, list]:
+    """dim_time's ``time_key`` and ``timestamp`` (in epoch seconds)
+    columns, those the star has, in one collect: no job on the local dim
+    ``run_pipeline`` hands over, one on a parquet dim."""
+    exprs = {"time_key": F.col("time_key"), "timestamp": F.unix_timestamp("timestamp")}
+    have = [c for c in exprs if _has(star, "dim_time", c)]
+    rows = star["dim_time"].select(*(exprs[c] for c in have)).collect() if have else []
+    return {c: [r[i] for r in rows] for i, c in enumerate(have)}
+
+
+def _suite(star: dict[str, DataFrame], range_rules: Rules | None):
+    """The checks of ``star``: its integrity checks, the coverage check of
+    each time-keyed fact, dim_time's timestamps for the gap check (None
+    without them) and a function giving a table's aggregates (integrity,
+    then coverage).  A check whose table or columns are missing is left
+    out."""
+    checks = integrity_checks(star, range_rules)
+    time = _dim_time(star)
+    coverage = {}
+    if "time_key" in time:
+        check = CoverageCheck(tuple(time["time_key"]))
+        coverage = {t: check for t in FACT_TABLES if _has(star, t, "time_key")}
+
+    def aggs(table: str) -> tuple[Column, ...]:
+        return (*checks[table].aggs, *(coverage[table].aggs if table in coverage else ()))
+
+    return checks, coverage, aggs, time.get("timestamp")
+
+
+def _aggregated(df: DataFrame, aggs: Sequence[Column]) -> dict[str, object]:
+    """The values of ``aggs`` over ``df``: one ``df.agg`` action (none for
+    an empty list)."""
+    return df.agg(*aggs).first().asDict() if aggs else {}
+
+
+def fact_aggs(
+    star: dict[str, DataFrame], range_rules: Rules | None = None
+) -> dict[str, tuple[Column, ...]]:
+    """Per fact table, every aggregate ``validate_all`` reads from it: its
+    null/range counts and, if time-keyed, the coverage bitmaps.
+    ``run_pipeline`` observes the list on the fact's land write;
+    standalone, ``validate_all`` runs it as one ``df.agg``."""
+    checks, _, aggs, _ = _suite(star, range_rules)
+    return {t: aggs(t) for t in FACT_TABLES if t in checks}
+
+
 def validate_all(
     star: dict[str, DataFrame],
     *,
     range_rules: Rules | None = None,
-    integrity: dict[str, Errors] | None = None,
+    observed: Mapping[str, Mapping[str, object]] | None = None,
+    meter_runs: Mapping[tuple, tuple] | None = None,
 ) -> dict:
     """Run all five check families (reference validate_all,
     validate:232-296).  This is the pipeline gate: load only proceeds when
     ``is_valid`` (or the caller explicitly overrides).  ``range_rules``
     overrides the defaults (config surface, reference config.yaml:40-55).
-    ``integrity`` carries per-table null/range errors already computed from
-    the same ``IntegrityCheck`` (``run_pipeline`` observes them on the land
-    write); every star table it lacks is scanned here with one ``df.agg``.
 
-    What remains is a few SMALL independent jobs — the unobserved
-    null+range scans, the dim_time gap check (no job on a local dim), the
-    one coverage query and the plausibility sums.  Executed serially each
-    pays full
-    job-submission latency, which dominates wall time on landed parquet;
-    Spark's scheduler runs concurrent jobs from separate driver threads
-    side by side, so all of them go to ONE driver pool and the suite costs
-    ~the slowest single check instead of the sum.  Checks whose table or
-    columns are missing are skipped; ``check_schema`` fails the report."""
-    given = integrity or {}
-    checks = integrity_checks(star, range_rules)
-    actions = []
-    if _has(star, "dim_time", "timestamp"):
-        actions.append(partial(_gap_errors, star["dim_time"]))
-    facts = {t: star[t] for t in FACT_TABLES if _has(star, t, "time_key")}
-    if facts and _has(star, "dim_time", "time_key"):
-        actions.append(partial(_coverage_errors, facts, star["dim_time"]))
+    ``observed`` carries, per table, the values of its aggregates already
+    computed (``run_pipeline`` observes the facts' ``fact_aggs`` on the
+    land write and counts the dims' on the driver); every table it lacks
+    is scanned here with one ``df.agg`` of its list.  ``meter_runs`` carries
+    the per-run meter sums (``Star.meter_runs``); without it they are one
+    ``groupBy`` of fact_meters.  So a pipeline gate runs no Spark job, and
+    a standalone suite one ``df.agg`` per table, the dim_time collect and
+    the ``groupBy``; the scans go to ONE driver pool, where Spark runs
+    them side by side and the suite costs ~the slowest instead of the
+    sum.  Checks whose table or columns are missing are skipped;
+    ``check_schema`` fails the report."""
+    checks, coverage, aggs, seconds = _suite(star, range_rules)
+    observed = observed or {}
     meter_cols = ("building_id", "scenario_id", "electric_kwh", "heating_kwh", "cooling_kwh")
-    if _has(star, "fact_meters", *meter_cols):
-        actions.append(partial(_plausibility_errors, star["fact_meters"]))
-    errors: Errors = {"nulls": [], "ranges": [], "temporal": [], "plausibility": []}
-    with ThreadPoolExecutor(max_workers=len(checks) + len(actions) or 1) as pool:
-        scanned = {
-            t: pool.submit(c.scan, star[t]) for t, c in checks.items() if t not in given
+    with ThreadPoolExecutor(max_workers=len(checks) or 1) as pool:
+        scans = {
+            t: pool.submit(_aggregated, star[t], aggs(t))
+            for t in checks if t not in observed
         }
-        rest = [pool.submit(run) for run in actions]
-        found = [given[t] if t in given else scanned[t].result() for t in checks]
-        found += [f.result() for f in rest]
+        if meter_runs is None and _has(star, "fact_meters", *meter_cols):
+            meter_runs = meter_sums(star["fact_meters"])
+        values = {t: observed[t] if t in observed else scans[t].result() for t in checks}
+    found = [checks[t].errors(values[t]) for t in checks]
+    if seconds is not None:
+        found.append(_gap_errors(seconds))
+    found += [coverage[t].errors(t, values[t]) for t in coverage]
+    if meter_runs is not None:
+        found.append(_plausibility_errors(meter_runs))
+    errors: Errors = {"nulls": [], "ranges": [], "temporal": [], "plausibility": []}
     for part in found:
         for name, errs in part.items():
             errors[name].extend(errs)

@@ -92,8 +92,8 @@ def test_extract_missing_dir(spark, tmp_path):
 
 
 def test_run_coverage_breaker(star):
-    # the runs with meter rows come with the dim key set
-    assert star.meter_runs == {(b, s) for b in BUILDINGS for s in SCENARIOS}
+    # the runs with meter rows come with the dim key set, with their sums
+    assert star.meter_runs.keys() == {(b, s) for b in BUILDINGS for s in SCENARIOS}
     # all expected runs present → no trip
     check_run_coverage(star.meter_runs, ["run_BLDG_01_BASE"])
     # majority missing → trips with a bounded failure sample
@@ -363,6 +363,39 @@ def test_export_annual_includes_null_time_key_rows(spark, star):
     assert doc["monthly_breakdown"] == base["monthly_breakdown"]
 
 
+def test_summary_counts_each_meter_row_once_under_derived_keys(spark, tmp_path):
+    """Under time_key_strategy="derived" two dim_time stamps in one hour
+    (23:00 and 23:30) share a key.  Each meter row must still count once:
+    the annual and monthly figures equal the raw meter sums.  (Joined to
+    dim_time on the key, the 23:00 row counted twice.)"""
+    from datetime import datetime, timedelta, timezone
+
+    import pandas as pd
+
+    from ida_ice_energy_simulation_etl_pipeline_spark.fixtures import (
+        generate_run,
+        write_run_dir,
+    )
+
+    start = datetime(2024, 1, 31, 22, tzinfo=timezone.utc)
+    run = generate_run("BLDG_01", "BASE", start=start, hours=4, n_zones=1, n_ahus=1)
+    zones = run["zones"]
+    half = zones.iloc[[1]].assign(timestamp=zones["timestamp"][1] + timedelta(minutes=30))
+    run["zones"] = pd.concat([zones, half], ignore_index=True)
+    meters = run["meters"].assign(electric_kwh=1.0, heating_kwh=2.0, cooling_kwh=3.0)
+    run["meters"] = meters
+    write_run_dir(run, tmp_path / "runs")
+    doc = run_pipeline(
+        spark, tmp_path / "runs", tmp_path / "out", time_key_strategy="derived",
+        force=True,  # the 23:30 stamp is a non-hourly gap
+    )["summary"]
+    # two meter rows in January (22:00, 23:00), two in February
+    month = {"heating_kwh": 4.0, "cooling_kwh": 6.0, "total_kwh": 12.0}
+    assert doc["monthly_breakdown"] == [{"month": 1, **month}, {"month": 2, **month}]
+    assert (doc["annual"]["electric_kwh"], doc["annual"]["heating_kwh"],
+            doc["annual"]["cooling_kwh"]) == (4.0, 8.0, 12.0)
+
+
 def test_pipeline_end_to_end(spark, runs_dir, tmp_path):
     # cluster_facts exercises the range-clustered write path end-to-end
     result = run_pipeline(spark, runs_dir, tmp_path / "out", cluster_facts=True)
@@ -415,8 +448,12 @@ def test_pipeline_gate_blocks(spark, tmp_path):
 
 def _mutated_runs(out_dir):
     """Two run bundles with one out-of-range air_temp_C, one null
-    electric_kwh, one negative cooling_kw and a null building_name on
-    BLDG_01's first-seen run (a null in a dim)."""
+    electric_kwh, one negative cooling_kw, a null building_name on
+    BLDG_01's first-seen run (a null in a dim), an hour no hvac row covers,
+    implausible meters in both runs and an off-grid meter stamp (a null
+    time_key)."""
+    from datetime import timedelta
+
     from ida_ice_energy_simulation_etl_pipeline_spark.fixtures import (
         generate_run,
         write_run_dir,
@@ -424,11 +461,16 @@ def _mutated_runs(out_dir):
 
     for b in ("BLDG_01", "BLDG_02"):
         run = generate_run(b, "BASE", hours=24, n_zones=2, n_ahus=1)
+        hvac, meters = run["hvac"], run["meters"]
+        run["hvac"] = hvac[hvac["timestamp"] != hvac["timestamp"][9]].copy()
         if b == "BLDG_01":
             run["metadata"]["building_name"] = None
+            meters["electric_kwh"] = 0.0
         if b == "BLDG_02":
             run["zones"].loc[3, "air_temp_C"] = 99.0
-            run["meters"].loc[5, "electric_kwh"] = None
+            meters.loc[5, "electric_kwh"] = None
+            meters.loc[6, "timestamp"] += timedelta(minutes=30)
+            meters[["heating_kwh", "cooling_kwh"]] = 0.0
             run["hvac"].loc[7, "cooling_kw"] = -4.0
         write_run_dir(run, out_dir)
     return out_dir
@@ -436,12 +478,25 @@ def _mutated_runs(out_dir):
 
 @pytest.mark.parametrize("cluster_facts", [False, True])
 def test_pipeline_observed_integrity_matches_standalone(spark, tmp_path, cluster_facts):
-    """run_pipeline observes the facts' null/range aggregates on the land
-    write and counts the dims' on the driver; standalone validate_all
-    computes them all with df.agg.  On the same star, both paths must give
-    the same report — also when the facts are range-clustered, whose
-    shuffle samples its input in a job of its own, and for range rules on
-    dims with a NaN bound (Spark orders NaN above every number)."""
+    """run_pipeline observes the facts' checks and summary figures on the
+    land write, counts the dims' null/range checks on the driver and takes
+    the plausibility sums from the key-set query; standalone validate_all
+    and build_summary compute them all with df.agg (and one groupBy).  On
+    the same star, both paths must give the same report and summary —
+    also when the facts are range-clustered, whose shuffle samples its
+    input in a job of its own, and for range rules on dims with a NaN
+    bound (Spark orders NaN above every number)."""
+    _observed_matches_standalone(spark, tmp_path, cluster_facts=cluster_facts)
+
+
+def test_pipeline_observed_checks_match_standalone_partitioned(spark, tmp_path):
+    """As above with partitioned facts, whose landed read puts the
+    partition column last: the observed values still meet their own
+    columns."""
+    _observed_matches_standalone(spark, tmp_path, partition_facts=True)
+
+
+def _observed_matches_standalone(spark, tmp_path, **layout):
     from ida_ice_energy_simulation_etl_pipeline_spark.etl.validate import RANGE_RULES
 
     nan = float("nan")
@@ -452,9 +507,7 @@ def test_pipeline_observed_integrity_matches_standalone(spark, tmp_path, cluster
     }
     runs = _mutated_runs(tmp_path / "runs")
     out = tmp_path / "out"
-    result = run_pipeline(
-        spark, runs, out, force=True, cluster_facts=cluster_facts, range_rules=rules
-    )
+    result = run_pipeline(spark, runs, out, force=True, range_rules=rules, **layout)
     written = json.loads((out / "validation_report.json").read_text())
     assert written == result["validation"]
     errors = written["checks"]
@@ -466,10 +519,22 @@ def test_pipeline_observed_integrity_matches_standalone(spark, tmp_path, cluster
     ]
     assert errors["nulls"]["errors"] == [
         "dim_building.building_name: 1 null values",
+        "fact_meters.time_key: 1 null values",
         "fact_meters.electric_kwh: 1 null values",
+    ]
+    assert errors["temporal"]["errors"] == ["fact_hvac: 1 time periods uncovered"]
+    assert [e.split(":")[0] for e in errors["plausibility"]["errors"]] == [
+        "(BLDG_01, BASE)", "(BLDG_02, BASE)"
     ]
     landed = {t: spark.read.parquet(p) for t, p in result["parquet"].items()}
     assert validate_all(landed, range_rules=rules) == written
+    summary = json.loads((out / "summary.json").read_text())
+    standalone = build_summary(landed)
+    assert summary.pop("generated_at") and standalone.pop("generated_at")
+    assert summary == standalone
+    # the off-grid meter row is in no month, but in the annual total
+    months = sum(m["total_kwh"] for m in summary["monthly_breakdown"])
+    assert summary["annual"]["total_kwh"] > months
 
 
 def test_pipeline_partitioned_reads_keep_inferred_schema(spark, runs_dir, tmp_path):
@@ -502,20 +567,29 @@ def _next_job_id(tracker, first: int) -> int:
 
 
 def test_pipeline_job_count_guard(spark, runs_dir, tmp_path):
-    """A warm run_pipeline with the CLI defaults stays within 19 Spark
-    jobs: the dims come from one key-set query and are written, checked
-    and read on the driver, the facts are keyed without broadcast joins,
-    the fact integrity checks ride on the land write, run coverage needs
-    no query of its own and the re-reads infer no schema.  Another
-    per-table action fails here, not only in the benchmark."""
+    """A warm run_pipeline with the CLI defaults stays within 7 Spark
+    jobs: the key-set query (2) and the land writes (5).  The dims are
+    written, checked and read on the driver, the facts are keyed without
+    broadcast joins, every fact check and summary figure rides on the land
+    write, and the re-reads infer no schema.  Another per-table action
+    fails here, not only in the benchmark.  Standalone validate_all on the
+    published star stays within 21: one dim_time collect, one df.agg per
+    table (2 jobs each) and the plausibility groupBy (2) — no coverage
+    query (24 with it)."""
     tracker = spark.sparkContext.statusTracker()
-    run_pipeline(spark, runs_dir, tmp_path / "out")
+    result = run_pipeline(spark, runs_dir, tmp_path / "out")
     # run_pipeline's jobs carry no job group, so the newest of them is
     # among the ungrouped ids the tracker still retains.
     start = _next_job_id(tracker, max(tracker.getJobIdsForGroup(None)))
     run_pipeline(spark, runs_dir, tmp_path / "out")
+    end = _next_job_id(tracker, start)
+    assert end - start <= 7, f"{end - start} Spark jobs in one warm pass"
+
+    published = {t: spark.read.parquet(p) for t, p in result["parquet"].items()}
+    start = _next_job_id(tracker, end)
+    assert validate_all(published) == result["validation"]
     jobs = _next_job_id(tracker, start) - start
-    assert jobs <= 19, f"{jobs} Spark jobs in one warm pass"
+    assert jobs <= 21, f"{jobs} Spark jobs in a standalone validate_all"
 
 
 def test_pipeline_coverage_breaker_publishes_nothing(spark, tmp_path):

@@ -319,6 +319,59 @@ def test_time_key_kernel_matches_left_join(spark, grid, strategy):
     assert dict(got.dtypes)["time_key"] == "bigint"
 
 
+# dim_time key columns: the grids' dense and derived keys (duplicate
+# derived keys, a null key, negative keys), and keys spanning four
+# 32,768-key bitmap buckets.
+COVERAGE_KEYS = {
+    **{f"{grid}-{strategy}": (grid, strategy)
+       for grid in ("hourly", "two_stamps_in_one_hour", "null_timestamp_row",
+                    "before_epoch", "empty")
+       for strategy in ("dense", "derived")},
+    "four_buckets": [None, 7, 7, 8, 40_000, 70_000, 100_000],
+}
+
+
+@pytest.mark.parametrize("case", sorted(COVERAGE_KEYS))
+def test_coverage_kernel_matches_anti_join(spark, case):
+    """CoverageCheck's bitmaps, decoded on the driver, count the dim_time
+    rows no fact row covers, as the left-anti join did: a fact that holds
+    every other key, keys off the dim and a null; then an empty fact."""
+    from ida_ice_energy_simulation_etl_pipeline_spark.etl.transform import _dim_time
+    from ida_ice_energy_simulation_etl_pipeline_spark.etl.validate import CoverageCheck
+
+    keys = COVERAGE_KEYS[case]
+    if isinstance(keys, tuple):
+        grid, strategy = keys
+        keys = _dim_time(TIME_GRIDS[grid], strategy, "UTC").column("time_key").to_pylist()
+    present = sorted({k for k in keys if k is not None}) or [0]
+    fact_keys = [*present[::2], None, present[0] - 1, present[-1] + 1, 10**12]
+    dim = spark.createDataFrame([(k,) for k in keys], "time_key long")
+    check = CoverageCheck(tuple(keys))
+    for fact in (fact_keys, []):
+        facts = spark.createDataFrame([(k,) for k in fact], "time_key long")
+        want = dim.join(facts, "time_key", "left_anti").count()
+        values = facts.agg(*check.aggs).first().asDict() if check.aggs else {}
+        assert check.errors("fact", values) == {
+            "temporal": [f"fact: {want} time periods uncovered"] if want else []
+        }
+
+
+def test_month_ranges_give_a_shared_derived_key_one_month(spark):
+    """At +05:30 the derived key (the UTC hour) of 18:00 UTC, 23:30 on
+    Jan 31, is also the key of 18:30 UTC, 00:00 on Feb 1.  The month
+    buckets must not both hold it, or export counts its meter rows twice:
+    the first month keeps it."""
+    from ida_ice_energy_simulation_etl_pipeline_spark.etl.export import _month_ranges
+    from ida_ice_energy_simulation_etl_pipeline_spark.etl.transform import _dim_time, _local
+
+    t17 = int(datetime(2024, 1, 31, 17, tzinfo=timezone.utc).timestamp()) * 1_000_000
+    stamps = [t17, t17 + _H, t17 + _H + _H // 2, t17 + 2 * _H]
+    dim = _dim_time(stamps, "derived", "Asia/Kolkata")
+    k = dim.column("time_key")[0].as_py()
+    assert dim.column("month").to_pylist() == [1, 1, 2, 2]
+    assert _month_ranges(_local(spark, dim)) == {1: [(k, k + 1)], 2: [(k + 2, k + 2)]}
+
+
 _DIM_ZONE_ROWS = [
     (1, "B1", "Z1", "a"),
     (2, "B1", "Z1", "b"),  # one zone, two names: two dim rows
