@@ -10,9 +10,10 @@ measurements.  The multi-source fallback chain (export_json.py:64-119) is
 replaced by explicit catalog reads.
 
 The scenario, buildings and month buckets are read off the dims; the
-fact figures are one aggregate list per fact table (``summary_aggs``),
-which ``run_pipeline`` observes on the land writes, so the summary costs
-no Spark job there.  A month bucket is a set of ``time_key`` ranges, so
+fact figures are one aggregate list per fact table (``summary_aggs``,
+SQL text with the scenario id quoted by ``sqltext``), which
+``run_pipeline`` observes on the land writes, so the summary costs no
+Spark job there.  A month bucket is a set of ``time_key`` ranges, so
 each meter row counts in one bucket, with no join to dim_time.
 """
 
@@ -23,11 +24,13 @@ from collections import defaultdict
 from collections.abc import Mapping
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
-from functools import reduce
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, Row
-from pyspark.sql import functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame
+
+from .sqltext import number, string
+from .transform import dim_table
 
 LIGHTING_SHARE = 0.35
 EQUIPMENT_SHARE = 0.45
@@ -36,17 +39,17 @@ COMFORT_BAND_C = 1.0
 REQUIRED_FIELDS = ("pipeline", "generated_at", "scenario", "annual", "kpis")
 
 
-def _sorted_by(rows: list[Row], key: str) -> list[Row]:
+def _sorted_by(rows: list[dict], key: str) -> list[dict]:
     """``rows`` ordered as ``orderBy(key)`` orders them, nulls first.  The
     rows are a dim's, and sorting them here spares the sort's Spark
     jobs."""
     return sorted(rows, key=lambda r: (r[key] is not None, r[key]))
 
 
-def _exported(star: dict[str, DataFrame], scenario_id: str | None) -> Row:
+def _exported(dim_scenario: pa.Table, scenario_id: str | None) -> dict:
     """The dim_scenario row the summary describes: ``scenario_id``'s, or
     the first (nulls first) when it is None."""
-    rows = _sorted_by(star["dim_scenario"].collect(), "scenario_id")
+    rows = _sorted_by(dim_scenario.to_pylist(), "scenario_id")
     scenarios = [r["scenario_id"] for r in rows]
     if scenario_id is None:
         scenario_id = scenarios[0]
@@ -55,7 +58,7 @@ def _exported(star: dict[str, DataFrame], scenario_id: str | None) -> Row:
     return next(r for r in rows if r["scenario_id"] == scenario_id)
 
 
-def _month_ranges(dim_time: DataFrame) -> dict[int, list[tuple[int, int]]]:
+def _month_ranges(dim_time: pa.Table) -> dict[int, list[tuple[int, int]]]:
     """Each month's ``time_key`` ranges, read off dim_time: one per (year,
     month) the dim spans, from its smallest key to its largest, so a
     month costs a few literals, not one per hour.  Keys follow the
@@ -64,7 +67,8 @@ def _month_ranges(dim_time: DataFrame) -> dict[int, list[tuple[int, int]]]:
     derived hour) counts in the first.  A key outside every range (null,
     or of a row with no timestamp) belongs to no month."""
     spans: dict[tuple, tuple[int, int]] = {}
-    for key, year, month in dim_time.select("time_key", "year", "month").collect():
+    columns = (dim_time.column(c).to_pylist() for c in ("time_key", "year", "month"))
+    for key, year, month in zip(*columns):
         if key is not None and month is not None:
             lo, hi = spans.get((year, month), (key, key))
             spans[year, month] = (min(lo, key), max(hi, key))
@@ -84,53 +88,54 @@ FACT_TABLES = ("fact_zone_conditions", "fact_hvac", "fact_meters")  # the summar
 
 def _aggs(
     scenario_id: str | None, months: dict[int, list[tuple[int, int]]]
-) -> dict[str, tuple[Column, ...]]:
-    """The summary's figures for one scenario as aggregates per fact
-    table.  fact_meters gets a row count and the three sums per bucket:
-    bucket 0 holds the rows in no month (a null ``time_key``), bucket
-    ``i`` the ``i``-th month of ``months``.  Every row counts in exactly
-    one bucket, and a bucket is reported only if it has rows."""
-    scen = F.col("scenario_id") == scenario_id
-    key = F.col("time_key")
+) -> dict[str, tuple[str, ...]]:
+    """The summary's figures for one scenario as aggregates (SQL text) per
+    fact table.  fact_meters gets a row count and the three sums per
+    bucket: bucket 0 holds the rows in no month (a null ``time_key``),
+    bucket ``i`` the ``i``-th month of ``months``.  Every row counts in
+    exactly one bucket, and a bucket is reported only if it has rows."""
+    scen = "scenario_id = " + ("NULL" if scenario_id is None else string(scenario_id))
     in_month = [
-        reduce(Column.__or__, (key.between(lo, hi) for lo, hi in ranges))
+        "(" + " OR ".join(
+            f"(time_key >= {number(lo)} AND time_key <= {number(hi)})" for lo, hi in ranges
+        ) + ")"
         for ranges in months.values()
     ]
-    no_month = ~F.coalesce(reduce(Column.__or__, in_month, F.lit(False)), F.lit(False))
+    no_month = f"(NOT coalesce({' OR '.join(['false', *in_month])}, false))"
     meters = []
     for i, bucket in enumerate([no_month, *in_month]):
-        hit = scen & bucket
+        hit = f"{scen} AND {bucket}"
         meters += [
-            F.count(F.when(hit, 1)).alias(f"m{i}_rows"),
-            *(F.sum(F.when(hit, F.col(f"{e}_kwh"))).alias(f"m{i}_{e}") for e in ENERGY),
+            f"count(CASE WHEN {hit} THEN 1 END) AS m{i}_rows",
+            *(f"sum(CASE WHEN {hit} THEN {e}_kwh END) AS m{i}_{e}" for e in ENERGY),
         ]
-    comfortable = F.abs(F.col("air_temp_C") - F.col("setpoint_C")) <= COMFORT_BAND_C
+    comfortable = f"abs(air_temp_C - setpoint_C) <= {number(COMFORT_BAND_C)}"
     return {
         # Comfort: share of zone-hours within ±1 °C of setpoint — computed
         # from fact_zone_conditions instead of the reference's constant 94.2.
         "fact_zone_conditions": (
-            F.count(F.when(scen, 1)).alias("zone_hours"),
-            F.sum(F.when(scen & comfortable, 1).otherwise(0)).alias("comfort_hours"),
+            f"count(CASE WHEN {scen} THEN 1 END) AS zone_hours",
+            f"sum(CASE WHEN {scen} AND {comfortable} THEN 1 ELSE 0 END) AS comfort_hours",
         ),
         # Peak demand: real max over hourly HVAC power (the reference admits
         # "Would compute from hourly data" and hard-codes — export_json.py:188).
-        "fact_hvac": (F.max(F.when(scen, F.col("power_kw"))).alias("peak_kw"),),
+        "fact_hvac": (f"max(CASE WHEN {scen} THEN power_kw END) AS peak_kw",),
         "fact_meters": tuple(meters),
     }
 
 
 def summary_aggs(
     star: dict[str, DataFrame], scenario_id: str | None = None
-) -> dict[str, tuple[Column, ...]]:
+) -> dict[str, tuple[str, ...]]:
     """Per fact table, the aggregates ``build_summary`` reads for the
     exported scenario, which ``run_pipeline`` observes on the land
     writes.  None when ``scenario_id`` names no scenario: ``build_summary``
     raises then, after publishing, as it always has."""
     try:
-        scenario = _exported(star, scenario_id)
+        scenario = _exported(dim_table(star, "dim_scenario"), scenario_id)
     except (ValueError, IndexError):
         return {}
-    return _aggs(scenario["scenario_id"], _month_ranges(star["dim_time"]))
+    return _aggs(scenario["scenario_id"], _month_ranges(dim_table(star, "dim_time")))
 
 
 def build_summary(
@@ -143,36 +148,36 @@ def build_summary(
     """Canonical summary document (shape: FIXTURES.md §3, reference
     src/export_json.py:49-62) — every number computed from the data.
 
-    The scenario, the buildings and the month buckets come from the dims;
-    every fact figure from the aggregates of ``summary_aggs``.
-    ``observed`` carries their values per table (``run_pipeline`` observes
-    them on the land writes, so the summary runs no Spark job); every
-    fact table it lacks runs its list as one ``df.agg``, the three side by
-    side on one driver pool.  The reference's annual figures are
-    whole-table sums (export_json.py get_sum), so the annual totals add up
-    every bucket, the rows in no month included, while the monthly
-    breakdown lists the months.
+    The scenario, the buildings and the month buckets come from the dims,
+    each read once on the driver (``dim_table``); every fact figure from
+    the aggregates of ``summary_aggs``.  ``observed`` carries their values
+    per table (``run_pipeline`` observes them on the land writes, so the
+    summary runs no Spark job); every fact table it lacks runs its list as
+    one aggregate, the three side by side on one driver pool.  The
+    reference's annual figures are whole-table sums (export_json.py
+    get_sum), so the annual totals add up every bucket, the rows in no
+    month included, while the monthly breakdown lists the months.  A
+    bucket sum over only nulls counts as 0.0, as a whole-column sum and
+    the reference's pandas sum count it.
     """
-    scenario = _exported(star, scenario_id)
-    months = _month_ranges(star["dim_time"])
+    scenario = _exported(dim_table(star, "dim_scenario"), scenario_id)
+    months = _month_ranges(dim_table(star, "dim_time"))
     observed = observed or {}
-    unobserved = [t for t in FACT_TABLES if t not in observed]
-    # Built only when some table is scanned: every Column costs driver
-    # round trips.
-    aggs = _aggs(scenario["scenario_id"], months) if unobserved else {}
+    aggs = _aggs(scenario["scenario_id"], months)
     with ThreadPoolExecutor(max_workers=len(FACT_TABLES)) as pool:
         scans = {
-            t: pool.submit(lambda t: star[t].agg(*aggs[t]).first().asDict(), t)
-            for t in unobserved
+            t: pool.submit(lambda t: star[t].selectExpr(*aggs[t]).first().asDict(), t)
+            for t in FACT_TABLES if t not in observed
         }
-        buildings = _sorted_by(star["dim_building"].collect(), "building_id")
+        buildings = _sorted_by(dim_table(star, "dim_building").to_pylist(), "building_id")
         values = {
             t: observed[t] if t in observed else scans[t].result() for t in FACT_TABLES
         }
 
     meters = values["fact_meters"]
+    sums = {k: 0.0 if v is None else v for k, v in meters.items()}
     buckets = [
-        {"month": month, **{e: meters[f"m{i}_{e}"] for e in ENERGY}}
+        {"month": month, **{e: sums[f"m{i}_{e}"] for e in ENERGY}}
         for i, month in enumerate([None, *months])
         if meters[f"m{i}_rows"]
     ]

@@ -17,6 +17,7 @@ from contextlib import nullcontext
 from pathlib import Path
 
 from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..session import get_spark
 from .export import export_summary, summary_aggs
@@ -118,7 +119,8 @@ def run_pipeline(
             # Observed ABOVE the range shuffle, in the write's own stage: the
             # shuffle samples its input in a job of its own, and an
             # observation below it would count the sampled rows again.
-            written[t] = df.observe(observation, *aggs[t], *summary.get(t, ()))
+            figures = (*aggs[t], *summary.get(t, ()))
+            written[t] = df.observe(observation, *map(F.expr, figures))
         # The dims are written from the driver; the fact writes go out
         # together.
         load_to_parquet(written, staging, partition_facts=partition_facts)
@@ -128,26 +130,12 @@ def run_pipeline(
         else checks[t].counted(star.dims[t].to_pydict())
         for t in checks
     }
-    # Re-reads carry the schema of the DataFrame that was written, which
-    # spares one schema-inference job per read and, unlike the declared
-    # STAR_SCHEMAS, keeps a column the star lacks visible to check_schema.
-    schemas = {t: df.schema for t, df in star.items()}
-    # The checks and the summary read the dims as the local relations the
-    # files were written from: the driver reads those without a job.
-    dims = {t: star[t] for t in star.dims}
-    # The checks are read back in the written column order (a partitioned
-    # read puts the partition column last): the observed aggregates are
-    # named by the position of their column.
-    landed = {
-        t: spark.read.schema(schemas[t]).parquet(str(staging / t)).select(*star[t].columns)
-        for t in star if t not in dims
-    }
-
+    # Every check over the facts was observed, so the gate reads only the
+    # star's columns (the observed aggregates are named by the position of
+    # their column) and its dims, which it reads as the Arrow tables the
+    # star holds.
     report = validate_all(
-        {**landed, **dims},
-        range_rules=range_rules,
-        observed=observed,
-        meter_runs=star.meter_runs,
+        star, range_rules=range_rules, observed=observed, meter_runs=star.meter_runs
     )
     if not report["is_valid"] and not force:
         raise ValidationGateError(report)  # staging left behind for triage
@@ -157,15 +145,21 @@ def run_pipeline(
         shutil.rmtree(final)
     staging.rename(final)
     paths = {t: str(final / t) for t in star}
-    published = {t: spark.read.schema(schemas[t]).parquet(p) for t, p in paths.items()}
+    # The re-reads carry the schema of the DataFrame that was written,
+    # which spares one schema-inference job per read.
+    published = {
+        t: spark.read.schema(df.schema).parquet(paths[t]) for t, df in star.items()
+    }
 
     if to_warehouse:
         load_to_warehouse(spark, published)
     else:
         register_temp_views(spark, published)
 
+    # Every summary figure over the facts was observed too (none for an
+    # unknown scenario, which raises before any is read).
     summary = export_summary(
-        {**published, **dims},
+        star,
         output_dir / "summary.json",
         scenario_id=scenario_id,
         observed=observed,

@@ -10,8 +10,8 @@ Re-expresses the reference's per-run pandas loops
   by the run count and the simulation span, the scale of the run manifest
   the driver already lists, so they never enter Spark's execution: each
   is an Arrow table, which ``load_to_parquet`` writes as one file with
-  pyarrow, and which the star also carries as a local relation that the
-  driver reads without a job;
+  pyarrow and the checks and the summary read on the driver
+  (``dim_table``), and which the star also carries as a local relation;
 * first-seen picks (D1, reference :29-40, 61-70) follow the reference's
   seen-set walk over ``sorted(glob('run_*.zip'))`` (extract:116);
 * dense surrogate keys (D4, reference :106-173) number the sorted distinct
@@ -30,6 +30,9 @@ Re-expresses the reference's per-run pandas loops
   :373-382, SURVEY §4 caveat 2);
 * ``cop_proxy`` is NULL iff ``power_kw < 1.0`` — the load-bearing
   threshold (reference :267-274).
+
+The key-set structs, the keys and the fact selects are SQL text, which
+Spark parses in one driver round trip per select.
 """
 
 from __future__ import annotations
@@ -41,12 +44,12 @@ from functools import reduce
 
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructField, StructType
 
 from ..schemas import STAR_SCHEMAS
+from .sqltext import ident, number, string
 
 COP_POWER_THRESHOLD_KW = 1.0
 HOUR_US = 3_600_000_000
@@ -72,15 +75,22 @@ class Star(dict):
         self.dims = dims
 
 
-def _key(kind: str, *strings: Column, n: Column | None = None) -> Column:
-    """A key-set row of the one shape every source shares:
-    ``(kind, a..e strings, n long)``."""
-    padded = [*strings, *[F.lit(None)] * (5 - len(strings))]
-    return F.struct(
-        F.lit(kind).alias("kind"),
-        *[v.cast("string").alias(f) for v, f in zip(padded, "abcde")],
-        (F.lit(None) if n is None else n).cast("long").alias("n"),
-    )
+def dim_table(star: dict[str, DataFrame], table: str) -> pa.Table:
+    """The dim ``table`` of ``star`` on the driver: the Arrow table a
+    ``Star`` holds (no Spark job, no driver round trip), else one collect
+    of ``star[table]``."""
+    if isinstance(star, Star) and table in star.dims:
+        return star.dims[table]
+    return star[table].toArrow()
+
+
+def _key(kind: str, *columns: str, n: str = "NULL") -> str:
+    """A key-set row of the one shape every source shares, as SQL text:
+    ``(kind, a..e strings, n long)`` from the named ``columns`` and the
+    expression ``n``."""
+    strings = [*map(ident, columns), *["NULL"] * (5 - len(columns))]
+    fields = "".join(f", '{f}', CAST({v} AS STRING)" for f, v in zip("abcde", strings))
+    return f"named_struct('kind', {string(kind)}{fields}, 'n', CAST({n} AS BIGINT))"
 
 
 def _collect_keys(entities: dict[str, DataFrame]) -> dict[str, dict[tuple, tuple]]:
@@ -93,28 +103,22 @@ def _collect_keys(entities: dict[str, DataFrame]) -> dict[str, dict[tuple, tuple
     the jobs a bare ``distinct`` does.)  Timestamps travel as epoch
     microseconds: a Python datetime in a DST-observing driver zone would
     fold the fall-back hour onto its neighbour."""
-    b, s = F.col("building_id"), F.col("scenario_id")
     energy = ("electric_kwh", "heating_kwh", "cooling_kwh")
-    no_energy = [F.lit(None).cast("double").alias(c) for c in energy]
+    no_energy = [f"CAST(NULL AS DOUBLE) AS {c}" for c in energy]
+    meta = _key("meta", "building_id", "scenario_id", "building_name", "location",
+                "description", n="floor_area_m2")
+    zone = _key("zone", "building_id", "zone_id", "zone_name")
+    time = _key("time", n="unix_micros(timestamp)")
+    ahu = _key("ahu", "building_id", "ahu_id")
+    run = _key("run", "building_id", "scenario_id")
     parts = [
-        entities["metadata"].select(
-            _key("meta", b, s, *map(F.col, ("building_name", "location", "description")),
-                 n=F.col("floor_area_m2")),
-            *no_energy,
-        ),
-        entities["zones"].select(
-            F.explode(F.array(
-                _key("zone", b, F.col("zone_id"), F.col("zone_name")),
-                _key("time", n=F.unix_micros("timestamp")),
-            )),
-            *no_energy,
-        ),
-        entities["hvac"].select(_key("ahu", b, F.col("ahu_id")), *no_energy),
-        entities["meters"].select(_key("run", b, s), *energy),
+        entities["metadata"].selectExpr(f"{meta} AS k", *no_energy),
+        entities["zones"].selectExpr(f"explode(array({zone}, {time})) AS k", *no_energy),
+        entities["hvac"].selectExpr(f"{ahu} AS k", *no_energy),
+        entities["meters"].selectExpr(f"{run} AS k", *energy),
     ]
-    rows = reduce(DataFrame.union, [p.toDF("k", *energy) for p in parts])
     keys: dict[str, dict[tuple, tuple]] = defaultdict(dict)
-    for k, *sums in rows.groupBy("k").agg(*(F.sum(c) for c in energy)).collect():
+    for k, *sums in reduce(DataFrame.union, parts).groupBy("k").sum(*energy).collect():
         kind, *values = k
         keys[kind][tuple(values)] = tuple(sums)
     return keys
@@ -228,19 +232,19 @@ def _dims(
     }
 
 
-def _literal(value: object, ddl: str) -> Column:
-    """``value`` (JSON-able) as ONE literal of Spark type ``ddl``: the
-    optimizer folds the constant ``from_json`` before planning, so a fact
-    row pays a lookup, never a parse.  (``F.lit`` of a list builds one
-    expression per element: 9.6 s of plan building at 8,760 elements,
-    against 0.14 s this way.)"""
-    return F.from_json(F.lit(json.dumps(value)), ddl)
+def _literal(value: object, ddl: str) -> str:
+    """``value`` (JSON-able) as ONE literal of Spark type ``ddl``, as SQL
+    text: the optimizer folds the constant ``from_json`` before planning,
+    so a fact row pays a lookup, never a parse.  (``F.lit`` of a list
+    builds one expression per element: 9.6 s of plan building at 8,760
+    elements, against 0.14 s this way.)"""
+    return f"from_json({string(json.dumps(value))}, {string(ddl)})"
 
 
-def _time_key(dim_time: pa.Table, key_strategy: str) -> Column:
+def _time_key(dim_time: pa.Table, key_strategy: str) -> str:
     """J1: the ``time_key`` of the dim_time row whose timestamp equals the
     fact's ``timestamp``, NULL when none does (the LEFT join's answer),
-    without a join and in O(1) per row on hourly data.
+    without a join and in O(1) per row on hourly data.  SQL text.
 
     The dim's sorted timestamps are bucketed by whole hours since the
     first; a literal array holds each bucket's first index, so a fact row
@@ -252,82 +256,83 @@ def _time_key(dim_time: pa.Table, key_strategy: str) -> Column:
     stamps = dim_time.column("timestamp").cast(pa.int64())
     us = stamps.drop_null().to_pylist()
     if not us:
-        return F.lit(None).cast("long")
-    first, last = us[0], us[-1]
-    hours = [(u - first) // HOUR_US for u in us]
+        return "CAST(NULL AS BIGINT)"
+    first, last = number(us[0]), number(us[-1])
+    hours = [(u - us[0]) // HOUR_US for u in us]
     starts = _literal([bisect_left(hours, b) for b in range(hours[-1] + 2)], "array<int>")
-    ts = F.unix_micros("timestamp")
-    bucket = F.expr(f"(unix_micros(timestamp) - {first}) div {HOUR_US}").cast("int")
-    lo = F.try_element_at(starts, bucket + 1)
-    hi = F.try_element_at(starts, bucket + 2)
-    pos = F.array_position(F.slice(_literal(us, "array<bigint>"), lo + 1, hi - lo), ts)
+    ts = "unix_micros(timestamp)"
+    bucket = f"CAST(({ts} - {first}) div {HOUR_US} AS INT)"
+    lo = f"try_element_at({starts}, {bucket} + 1)"
+    hi = f"try_element_at({starts}, {bucket} + 2)"
+    stamp_array = _literal(us, "array<bigint>")
+    pos = f"array_position(slice({stamp_array}, {lo} + 1, {hi} - {lo}), {ts})"
     if key_strategy == "derived":
-        key = F.expr("unix_micros(timestamp) div 1000000").cast("double") / 3600
+        key = f"CAST({ts} div 1000000 AS DOUBLE) / 3600"
     else:
-        key = lo + pos + stamps.null_count
+        key = f"{lo} + {pos} + {stamps.null_count}"
     # The range guard comes first: outside it the bucket has no slot.
-    return F.when(ts.between(first, last), F.when(pos > 0, key)).cast("long")
+    return (
+        f"CAST(CASE WHEN {ts} >= {first} AND {ts} <= {last} "
+        f"THEN CASE WHEN {pos} > 0 THEN {key} END END AS BIGINT)"
+    )
 
 
-def _fanned_key(dim: pa.Table, key: str, part: str) -> Column:
+def _fanned_key(dim: pa.Table, key: str, part: str) -> str:
     """J2/J3: the ``key`` of every ``dim`` row whose ``(building_id,
-    part)`` equals the fact's, as a generator that gives the LEFT
-    equi-join's rows: one per match (a zone with two names fans out to
-    two), one NULL row for a miss.  A dim row with a null key part stays
-    out of the literal map, as an equi-join never matches it."""
+    part)`` equals the fact's, as a generator (SQL text) that gives the
+    LEFT equi-join's rows: one per match (a zone with two names fans out
+    to two), one NULL row for a miss.  A dim row with a null key part
+    stays out of the literal map, as an equi-join never matches it."""
     lookup: dict = defaultdict(lambda: defaultdict(list))
     for k, b, p in zip(*(dim.column(c).to_pylist() for c in (key, "building_id", part))):
         if b is not None and p is not None:
             lookup[b][p].append(k)
     keys = _literal(lookup, "map<string,map<string,array<bigint>>>")
-    return F.explode_outer(
-        F.try_element_at(F.try_element_at(keys, F.col("building_id")), F.col(part))
-    )
+    return f"explode_outer(try_element_at(try_element_at({keys}, building_id), {ident(part)}))"
 
 
-def build_fact_zone_conditions(
-    zones: DataFrame, time_key: Column, zone_key: Column
-) -> DataFrame:
-    """Grain (timestamp, zone, scenario) — reference transform:203-241."""
-    return zones.select(
-        time_key.alias("time_key"), zone_key.alias("zone_key"), "scenario_id",
+def build_fact_zone_conditions(zones: DataFrame, time_key: str, zone_key: str) -> DataFrame:
+    """Grain (timestamp, zone, scenario) — reference transform:203-241.
+    The keys are SQL text."""
+    return zones.selectExpr(
+        f"{time_key} AS time_key", f"{zone_key} AS zone_key", "scenario_id",
         "air_temp_C", "setpoint_C", "co2_ppm", "rh_pct",
     )
 
 
-def build_fact_hvac(hvac: DataFrame, time_key: Column, ahu_key: Column) -> DataFrame:
+def build_fact_hvac(hvac: DataFrame, time_key: str, ahu_key: str) -> DataFrame:
     """Grain (timestamp, AHU, scenario); cop_proxy NULL iff power < 1 kW
-    (reference transform:258-307, threshold at :267-269)."""
-    cop = F.when(
-        F.col("power_kw") >= COP_POWER_THRESHOLD_KW,
-        (F.col("heating_kw") + F.col("cooling_kw")) / F.col("power_kw"),
-    )
-    return hvac.select(
-        time_key.alias("time_key"), ahu_key.alias("ahu_key"), "scenario_id",
+    (reference transform:258-307, threshold at :267-269).  The keys are
+    SQL text."""
+    return hvac.selectExpr(
+        f"{time_key} AS time_key", f"{ahu_key} AS ahu_key", "scenario_id",
         "supply_temp_C", "return_temp_C", "power_kw", "cooling_kw", "heating_kw",
-        cop.alias("cop_proxy"),
+        f"CASE WHEN power_kw >= {number(COP_POWER_THRESHOLD_KW)} "
+        "THEN (heating_kw + cooling_kw) / power_kw END AS cop_proxy",
     )
 
 
-def build_fact_meters(meters: DataFrame, time_key: Column) -> DataFrame:
-    """Grain (timestamp, building, scenario) — reference transform:324-356."""
-    return meters.select(
-        time_key.alias("time_key"), "building_id", "scenario_id",
+def build_fact_meters(meters: DataFrame, time_key: str) -> DataFrame:
+    """Grain (timestamp, building, scenario) — reference transform:324-356.
+    The key is SQL text."""
+    return meters.selectExpr(
+        f"{time_key} AS time_key", "building_id", "scenario_id",
         "electric_kwh", "heating_kwh", "cooling_kwh",
     )
 
 
 def build_fact_weather(
-    weather: DataFrame, time_key: Column, buildings: list[str | None]
+    weather: DataFrame, time_key: str, buildings: list[str | None]
 ) -> DataFrame:
     """Grain (timestamp, building) — the shared weather series replicated
     per building of ``buildings`` (J4: the dim's ids, a null id included,
     as a cross join keeps it).  Dedup by timestamp across runs (averaging
     is not needed: the series is identical; distinct is exact) instead of
-    the reference's silent runs[0] pick (transform:373-409)."""
-    return weather.dropDuplicates(["timestamp"]).select(
-        time_key.alias("time_key"),
-        F.explode(_literal(buildings, "array<string>")).alias("building_id"),
+    the reference's silent runs[0] pick (transform:373-409).  The key is
+    SQL text."""
+    return weather.dropDuplicates(["timestamp"]).selectExpr(
+        f"{time_key} AS time_key",
+        f"explode({_literal(buildings, 'array<string>')}) AS building_id",
         "drybulb_C", "relhum_pct", "ghi_W_m2",
     )
 

@@ -7,13 +7,15 @@ A table's null and range rules are conditional counts (A7,
 ``IntegrityCheck``); coverage of dim_time by a fact (J8,
 ``CoverageCheck``) is a bitmap of the keys it holds, decoded on the
 driver; plausibility formats per-run meter sums; the dim_time gap check
-reads the dim's timestamps on the driver.
+reads the dim's timestamps on the driver.  The aggregates are SQL text
+(names and bounds quoted by ``sqltext``): a table's list costs one
+driver round trip as a select, a few per aggregate as observed Columns.
 
 ``run_pipeline`` attaches each fact's aggregates (``fact_aggs``) to its
 land write with ``DataFrame.observe``, counts the same specs over the dims
 it holds on the driver (``IntegrityCheck.counted``) and has the meter sums
 from the transform's key-set query, so the gate costs no Spark job.
-Standalone, ``validate_all`` runs each table's list as one ``df.agg`` and
+Standalone, ``validate_all`` runs each table's list as one aggregate and
 the sums as one ``groupBy`` — at 100 TB a handful of scans, not dozens.
 
 A malformed star (a missing table or column) fails ``check_schema``; the
@@ -31,10 +33,12 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from operator import le, lt
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame
 
 from ..schemas import NULLABLE_WHITELIST, STAR_SCHEMAS
+from .sqltext import ident, number
+from .transform import dim_table
 
 
 Rules = dict[str, list[tuple[str, float | None, float | None]]]
@@ -99,9 +103,10 @@ class IntegrityCheck:
     whitelist (cop_proxy) must be non-null (reference validate:49-55,
     whitelist :32-34).
 
-    ``aggs`` are aliased positionally (``a0``, ``a1``, …) so rule columns
-    can never collide with data columns; ``errors`` turns their values —
-    a ``df.agg`` row or an ``Observation.get`` dict — into report lines.
+    ``aggs`` are SQL text, aliased positionally (``a0``, ``a1``, …) so
+    rule columns can never collide with data columns; ``errors`` turns
+    their values — an aggregate row or an ``Observation.get`` dict — into
+    report lines.
     A range rule on a column the table lacks is reported, not run."""
 
     table: str
@@ -121,22 +126,18 @@ class IntegrityCheck:
         return cls(table, tuple(specs), tuple(unchecked))
 
     @property
-    def aggs(self) -> tuple[Column, ...]:
-        """Built on demand: formatting observed or counted values needs
-        only the specs, and every Column costs driver round trips."""
-
-        def cond(kind: str, col: str, lo: float | None, hi: float | None) -> Column:
+    def aggs(self) -> tuple[str, ...]:
+        def cond(kind: str, col: str, lo: float | None, hi: float | None) -> str:
             if kind == "nulls":
-                return F.col(col).isNull()
-            out = F.lit(False)
-            if lo is not None:
-                out = out | (F.col(col) < lo)
-            if hi is not None:
-                out = out | (F.col(col) > hi)
-            return out
+                return f"{ident(col)} IS NULL"
+            bounds = [
+                f"{ident(col)} {op} {number(v)}" for op, v in (("<", lo), (">", hi))
+                if v is not None
+            ]
+            return " OR ".join(bounds) or "false"
 
         return tuple(
-            F.sum(F.when(cond(*spec), 1).otherwise(0)).cast("long").alias(f"a{i}")
+            f"CAST(sum(CASE WHEN {cond(*spec)} THEN 1 ELSE 0 END) AS BIGINT) AS a{i}"
             for i, spec in enumerate(self.specs)
         )
 
@@ -222,15 +223,14 @@ class CoverageCheck:
         return min((k for k in self.keys if k is not None), default=None)
 
     @property
-    def aggs(self) -> tuple[Column, ...]:
+    def aggs(self) -> tuple[str, ...]:
         if self._base is None:
             return ()
         buckets = (max(k for k in self.keys if k is not None) - self._base) // BITMAP_BITS
-        offset = F.col("time_key") - self._base + 1
+        offset = f"time_key - {number(self._base)} + 1"
         return tuple(
-            F.bitmap_construct_agg(
-                F.when(F.bitmap_bucket_number(offset) == b, F.bitmap_bit_position(offset))
-            ).alias(f"t{b}")
+            f"bitmap_construct_agg(CASE WHEN bitmap_bucket_number({offset}) = {b} "
+            f"THEN bitmap_bit_position({offset}) END) AS t{b}"
             for b in range(1, buckets + 2)
         )
 
@@ -254,8 +254,8 @@ def _plausibility_errors(sums: Mapping[tuple, tuple]) -> Errors:
     (reference validate:204-227): electric > 0, heating+cooling > 0,
     electric >= 0.2 × (heating+cooling).  ``sums`` maps each pair to its
     ``(electric, heating, cooling)`` sums; a comparison with a null sum
-    fails no rule, and NaN sorts above every number, as in Spark.  Lines
-    are sorted by pair, nulls first."""
+    fails no rule, and NaN sorts above every number, as in Spark; a null
+    sum prints as ``null``.  Lines are sorted by pair, nulls first."""
 
     def holds(a, op, b) -> bool:
         return a is not None and b is not None and op(_order(a), _order(b))
@@ -271,10 +271,13 @@ def _plausibility_errors(sums: Mapping[tuple, tuple]) -> Errors:
     def nulls_first(item: tuple) -> list:
         return [(v is not None, v) for v in item[0]]
 
+    def fmt(v: float | None) -> str:
+        return "null" if v is None else f"{v:.1f}"
+
     return {
         "plausibility": [
             f"({b}, {s}): implausible energy totals "
-            f"electric={e:.1f} heating={h:.1f} cooling={c:.1f}"
+            f"electric={fmt(e)} heating={fmt(h)} cooling={fmt(c)}"
             for (b, s), (e, h, c) in sorted(sums.items(), key=nulls_first)
             if implausible(e, h, c)
         ]
@@ -285,8 +288,8 @@ def meter_sums(fact_meters: DataFrame) -> dict[tuple, tuple]:
     """The plausibility check's input from ``fact_meters`` itself: one
     ``groupBy`` of the per-run sums (``run_pipeline`` has them from the
     key-set query, ``Star.meter_runs``)."""
-    rows = fact_meters.groupBy("building_id", "scenario_id").agg(
-        *(F.sum(c) for c in ("electric_kwh", "heating_kwh", "cooling_kwh"))
+    rows = fact_meters.groupBy("building_id", "scenario_id").sum(
+        "electric_kwh", "heating_kwh", "cooling_kwh"
     )
     return {(b, s): (e, h, c) for b, s, e, h, c in rows.collect()}
 
@@ -296,13 +299,19 @@ def _has(star: dict[str, DataFrame], table: str, *columns: str) -> bool:
 
 
 def _dim_time(star: dict[str, DataFrame]) -> dict[str, list]:
-    """dim_time's ``time_key`` and ``timestamp`` (in epoch seconds)
-    columns, those the star has, in one collect: no job on the local dim
-    ``run_pipeline`` hands over, one on a parquet dim."""
-    exprs = {"time_key": F.col("time_key"), "timestamp": F.unix_timestamp("timestamp")}
-    have = [c for c in exprs if _has(star, "dim_time", c)]
-    rows = star["dim_time"].select(*(exprs[c] for c in have)).collect() if have else []
-    return {c: [r[i] for r in rows] for i, c in enumerate(have)}
+    """dim_time's ``time_key`` and ``timestamp`` (in epoch seconds, as
+    ``unix_timestamp`` floors them) columns, those the star has, read on
+    the driver (``dim_table``)."""
+    if "dim_time" not in star:
+        return {}
+    dim = dim_table(star, "dim_time")
+    out = {}
+    if "time_key" in dim.column_names:
+        out["time_key"] = dim.column("time_key").to_pylist()
+    if "timestamp" in dim.column_names:
+        micros = dim.column("timestamp").cast(pa.int64()).to_pylist()
+        out["timestamp"] = [None if u is None else u // 1_000_000 for u in micros]
+    return out
 
 
 def _suite(star: dict[str, DataFrame], range_rules: Rules | None):
@@ -318,25 +327,25 @@ def _suite(star: dict[str, DataFrame], range_rules: Rules | None):
         check = CoverageCheck(tuple(time["time_key"]))
         coverage = {t: check for t in FACT_TABLES if _has(star, t, "time_key")}
 
-    def aggs(table: str) -> tuple[Column, ...]:
+    def aggs(table: str) -> tuple[str, ...]:
         return (*checks[table].aggs, *(coverage[table].aggs if table in coverage else ()))
 
     return checks, coverage, aggs, time.get("timestamp")
 
 
-def _aggregated(df: DataFrame, aggs: Sequence[Column]) -> dict[str, object]:
-    """The values of ``aggs`` over ``df``: one ``df.agg`` action (none for
-    an empty list)."""
-    return df.agg(*aggs).first().asDict() if aggs else {}
+def _aggregated(df: DataFrame, aggs: Sequence[str]) -> dict[str, object]:
+    """The values of ``aggs`` over ``df``: one global aggregate action
+    (none for an empty list)."""
+    return df.selectExpr(*aggs).first().asDict() if aggs else {}
 
 
 def fact_aggs(
     star: dict[str, DataFrame], range_rules: Rules | None = None
-) -> dict[str, tuple[Column, ...]]:
+) -> dict[str, tuple[str, ...]]:
     """Per fact table, every aggregate ``validate_all`` reads from it: its
     null/range counts and, if time-keyed, the coverage bitmaps.
     ``run_pipeline`` observes the list on the fact's land write;
-    standalone, ``validate_all`` runs it as one ``df.agg``."""
+    standalone, ``validate_all`` runs it as one aggregate."""
     checks, _, aggs, _ = _suite(star, range_rules)
     return {t: aggs(t) for t in FACT_TABLES if t in checks}
 
@@ -356,10 +365,10 @@ def validate_all(
     ``observed`` carries, per table, the values of its aggregates already
     computed (``run_pipeline`` observes the facts' ``fact_aggs`` on the
     land write and counts the dims' on the driver); every table it lacks
-    is scanned here with one ``df.agg`` of its list.  ``meter_runs`` carries
+    is scanned here with one aggregate of its list.  ``meter_runs`` carries
     the per-run meter sums (``Star.meter_runs``); without it they are one
     ``groupBy`` of fact_meters.  So a pipeline gate runs no Spark job, and
-    a standalone suite one ``df.agg`` per table, the dim_time collect and
+    a standalone suite one aggregate per table, the dim_time collect and
     the ``groupBy``; the scans go to ONE driver pool, where Spark runs
     them side by side and the suite costs ~the slowest instead of the
     sum.  Checks whose table or columns are missing are skipped;

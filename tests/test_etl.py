@@ -396,6 +396,86 @@ def test_summary_counts_each_meter_row_once_under_derived_keys(spark, tmp_path):
             doc["annual"]["cooling_kwh"]) == (4.0, 8.0, 12.0)
 
 
+def test_pipeline_writes_reports_when_a_meter_column_is_all_null(spark, tmp_path):
+    """A meter column null in every row of a month bucket sums to null in
+    SQL.  The bucket counts it as 0.0, as a whole-column sum and the
+    reference's pandas sum do, so a forced run still writes both JSON
+    files.  (float(None) raised after the star was published.)"""
+    from ida_ice_energy_simulation_etl_pipeline_spark.fixtures import (
+        generate_run,
+        write_run_dir,
+    )
+
+    run = generate_run("BLDG_01", "BASE", hours=6, n_zones=1, n_ahus=1)
+    run["meters"]["heating_kwh"] = None
+    write_run_dir(run, tmp_path / "runs")
+    out = tmp_path / "out"
+    result = run_pipeline(spark, tmp_path / "runs", out, force=True)
+    report = json.loads((out / "validation_report.json").read_text())
+    assert report == result["validation"]
+    assert "fact_meters.heating_kwh: 6 null values" in report["checks"]["nulls"]["errors"]
+    summary = json.loads((out / "summary.json").read_text())
+    assert summary["annual"]["heating_kwh"] == 0.0
+    assert [m["heating_kwh"] for m in summary["monthly_breakdown"]] == [0.0]
+    electric = run["meters"]["electric_kwh"].sum() + run["meters"]["cooling_kwh"].sum()
+    assert summary["annual"]["total_kwh"] == pytest.approx(electric, abs=0.1)
+
+
+def test_plausibility_prints_a_null_sum():
+    """A run whose sum is null and that trips a rule prints the sum as
+    null (a ':.1f' of None raised)."""
+    from ida_ice_energy_simulation_etl_pipeline_spark.etl.validate import (
+        _plausibility_errors,
+    )
+
+    assert _plausibility_errors({("B1", "S"): (0.0, None, 1.0)}) == {
+        "plausibility": [
+            "(B1, S): implausible energy totals electric=0.0 heating=null cooling=1.0"
+        ]
+    }
+
+
+def test_summary_exports_a_scenario_id_that_needs_quoting(spark, tmp_path):
+    """Scenario ids are spliced into the aggregates' SQL text as string
+    literals: one holding a quote, a backslash, a double quote or a
+    non-ASCII letter must select its own rows, observed on the land write
+    and scanned standalone."""
+    from ida_ice_energy_simulation_etl_pipeline_spark.fixtures import (
+        generate_run,
+        write_run_dir,
+    )
+
+    weird = "O'B\\ü"
+    for s in ("BASE", weird):
+        write_run_dir(generate_run("BLDG_01", s, hours=6, n_zones=1, n_ahus=1),
+                      tmp_path / "runs")
+    result = run_pipeline(spark, tmp_path / "runs", tmp_path / "out", scenario_id=weird)
+    landed = {t: spark.read.parquet(p) for t, p in result["parquet"].items()}
+    doc, base = result["summary"], build_summary(landed, scenario_id="BASE")
+    assert doc["scenario"]["name"] == weird
+    assert doc["annual"]["total_kwh"] > 0
+    assert doc["annual"] != base["annual"]
+    for d in (doc, base):
+        d.pop("generated_at")
+    standalone = build_summary(landed, scenario_id=weird)
+    standalone.pop("generated_at")
+    assert standalone == doc
+    # the same rows under an id a CSV cannot carry unquoted
+    quoted = 'say "\\\'hi\'" ü'
+    renamed = {
+        t: df.withColumn("scenario_id", F.when(F.col("scenario_id") == weird, quoted)
+                         .otherwise(F.col("scenario_id")))
+        if "scenario_id" in df.columns else df
+        for t, df in landed.items()
+    }
+    again = build_summary(renamed, scenario_id=quoted)
+    again.pop("generated_at")
+    assert again["scenario"]["name"] == quoted
+    assert again["annual"] == doc["annual"]
+    assert again["monthly_breakdown"] == doc["monthly_breakdown"]
+    assert again["kpis"] == doc["kpis"]
+
+
 def test_pipeline_end_to_end(spark, runs_dir, tmp_path):
     # cluster_facts exercises the range-clustered write path end-to-end
     result = run_pipeline(spark, runs_dir, tmp_path / "out", cluster_facts=True)
@@ -590,6 +670,37 @@ def test_pipeline_job_count_guard(spark, runs_dir, tmp_path):
     assert validate_all(published) == result["validation"]
     jobs = _next_job_id(tracker, start) - start
     assert jobs <= 21, f"{jobs} Spark jobs in a standalone validate_all"
+
+
+def test_pipeline_py4j_round_trip_guard(spark, runs_dir, tmp_path, monkeypatch):
+    """A warm run_pipeline stays within 753 py4j round trips (6,028 when
+    every aggregate, key struct and fact select was built from Column
+    calls, each call a round trip or more).  Every driver-to-JVM call goes
+    through the gateway client's send_command, on every thread.  The
+    deletes py4j's finalizer thread sends for released Java references
+    are left out: when they go depends on Python's garbage collector, not
+    on the pass."""
+    import threading
+    from itertools import count
+
+    from py4j.clientserver import FinalizerWorker
+
+    run_pipeline(spark, runs_dir, tmp_path / "out")
+    client = spark.sparkContext._gateway._gateway_client
+    calls = count()
+    send = client.send_command
+
+    def counted(*args, **kwargs):
+        if not isinstance(threading.current_thread(), FinalizerWorker):
+            next(calls)  # atomic under the GIL: pool threads call too
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counted)
+    run_pipeline(spark, runs_dir, tmp_path / "out")
+    monkeypatch.undo()
+    trips = next(calls)
+    assert trips > 0, "the counting hook saw no call: it no longer sits on the path"
+    assert trips <= 753, f"{trips} py4j round trips in one warm pass"
 
 
 def test_pipeline_coverage_breaker_publishes_nothing(spark, tmp_path):

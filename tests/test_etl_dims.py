@@ -304,7 +304,7 @@ def test_time_key_kernel_matches_left_join(spark, grid, strategy):
     facts = spark.createDataFrame(
         [(u,) for u in _fact_stamps(TIME_GRIDS[grid])], "us long"
     ).select(F.timestamp_micros("us").alias("timestamp"))
-    got = facts.select("timestamp", _time_key(dim, strategy).alias("time_key"))
+    got = facts.selectExpr("timestamp", f"{_time_key(dim, strategy)} AS time_key")
     want = facts.join(
         F.broadcast(_local(spark, dim).select("time_key", "timestamp")), "timestamp", "left"
     )
@@ -350,26 +350,56 @@ def test_coverage_kernel_matches_anti_join(spark, case):
     for fact in (fact_keys, []):
         facts = spark.createDataFrame([(k,) for k in fact], "time_key long")
         want = dim.join(facts, "time_key", "left_anti").count()
-        values = facts.agg(*check.aggs).first().asDict() if check.aggs else {}
+        values = facts.selectExpr(*check.aggs).first().asDict() if check.aggs else {}
         assert check.errors("fact", values) == {
             "temporal": [f"fact: {want} time periods uncovered"] if want else []
         }
 
 
-def test_month_ranges_give_a_shared_derived_key_one_month(spark):
+_BOUNDS = [float("nan"), float("inf"), float("-inf"), -1.5, 2, 1e-300, 0.1, None]
+_VALUES = [None, float("nan"), float("inf"), float("-inf"), -2.0, -1.5, -1e-300, -0.0,
+           0.0, 1e-300, 0.1, 0.10000000000000002, 1.0, 2.0, 2.5]
+
+
+def test_integrity_sql_text_counts_as_counted(spark):
+    """Range bounds and a column name are spliced into the null/range
+    aggregates' SQL text: NaN, the infinities, a negative, an int, a tiny
+    and an inexact double must each bound as the number itself, and a
+    name with a backtick must name its column.  Observed on a write and
+    run as one aggregate, the counts equal the driver's ``counted`` over
+    the same values (nulls, NaN and the infinities among them)."""
+    from pyspark.sql import Observation
+
+    from ida_ice_energy_simulation_etl_pipeline_spark.etl.validate import IntegrityCheck
+
+    col = "v`x"
+    rules = {"t": [(col, lo, hi) for lo in _BOUNDS for hi in _BOUNDS]}
+    check = IntegrityCheck.of("t", [col], rules)
+    want = check.counted({col: _VALUES})
+    assert len(set(want.values())) > 5  # the grid tells the bounds apart
+    df = spark.createDataFrame([(v,) for v in _VALUES], f"`{col.replace('`', '``')}` double")
+    assert df.selectExpr(*check.aggs).first().asDict() == want
+    observation = Observation()
+    df.observe(observation, *map(F.expr, check.aggs)).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    assert observation.get == want
+
+
+def test_month_ranges_give_a_shared_derived_key_one_month():
     """At +05:30 the derived key (the UTC hour) of 18:00 UTC, 23:30 on
     Jan 31, is also the key of 18:30 UTC, 00:00 on Feb 1.  The month
     buckets must not both hold it, or export counts its meter rows twice:
     the first month keeps it."""
     from ida_ice_energy_simulation_etl_pipeline_spark.etl.export import _month_ranges
-    from ida_ice_energy_simulation_etl_pipeline_spark.etl.transform import _dim_time, _local
+    from ida_ice_energy_simulation_etl_pipeline_spark.etl.transform import _dim_time
 
     t17 = int(datetime(2024, 1, 31, 17, tzinfo=timezone.utc).timestamp()) * 1_000_000
     stamps = [t17, t17 + _H, t17 + _H + _H // 2, t17 + 2 * _H]
     dim = _dim_time(stamps, "derived", "Asia/Kolkata")
     k = dim.column("time_key")[0].as_py()
     assert dim.column("month").to_pylist() == [1, 1, 2, 2]
-    assert _month_ranges(_local(spark, dim)) == {1: [(k, k + 1)], 2: [(k + 2, k + 2)]}
+    assert _month_ranges(dim) == {1: [(k, k + 1)], 2: [(k + 2, k + 2)]}
 
 
 _DIM_ZONE_ROWS = [
@@ -379,10 +409,13 @@ _DIM_ZONE_ROWS = [
     (4, "B2", "Z1", "d"),
     (5, None, "Z1", "e"),  # null key parts never match an equi-join
     (6, "B2", None, "f"),
+    (7, "B'1", "Z1", "g"),  # quotes and backslashes read back as themselves
+    (8, "B\\2", "Z'1", "h"),
 ]
 _FACT_KEYS = [("B1", "Z1"), ("B1", "Z2"), ("B1", "Z9"), ("B2", "Z1"), (None, "Z1"),
               ("B2", None), (None, None), ("B3", "Z1"), ("B1", "Z1"),
-              ("null", "Z1"), ("B2", "null")]  # JSON spells a null map key "null"
+              ("null", "Z1"), ("B2", "null"),  # JSON spells a null map key "null"
+              ("B'1", "Z1"), ("B\\2", "Z'1"), ("B\\2", "Z1"), ("B\\'1", "Z1")]
 
 
 @pytest.mark.parametrize("dim_rows", [_DIM_ZONE_ROWS, []], ids=["zones", "empty"])
@@ -395,8 +428,8 @@ def test_fanned_key_kernel_matches_left_join(spark, dim_rows):
 
     dim = _arrow("dim_zone", [*zip(*dim_rows)], "zone_key")
     facts = spark.createDataFrame(_FACT_KEYS, "building_id string, zone_id string")
-    got = facts.select(
-        "building_id", "zone_id", _fanned_key(dim, "zone_key", "zone_id").alias("zone_key")
+    got = facts.selectExpr(
+        "building_id", "zone_id", f"{_fanned_key(dim, 'zone_key', 'zone_id')} AS zone_key"
     )
     want = facts.join(
         F.broadcast(_local(spark, dim).select("zone_key", "building_id", "zone_id")),
@@ -405,8 +438,11 @@ def test_fanned_key_kernel_matches_left_join(spark, dim_rows):
     ).select("building_id", "zone_id", "zone_key")
     assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
     if dim_rows:
-        assert sorted(r.zone_key for r in got.collect() if r.zone_id == "Z1"
-                      and r.building_id == "B1") == [1, 1, 2, 2]
+        keys = [(r.building_id, r.zone_id, r.zone_key) for r in got.collect()]
+        assert sorted(k for b, z, k in keys if (b, z) == ("B1", "Z1")) == [1, 1, 2, 2]
+        assert {(b, z, k) for b, z, k in keys if k in (7, 8)} == {
+            ("B'1", "Z1", 7), ("B\\2", "Z'1", 8)
+        }
 
 
 @pytest.mark.parametrize(
