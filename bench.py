@@ -161,6 +161,23 @@ def _timed(run) -> float:
     return time.perf_counter() - start
 
 
+def _next_job_id(tracker, start: int, settle: float = 0.0) -> int:
+    """Id one past the last Spark job registered, probing ``getJobInfo``
+    upward from ``start`` (a retained id, or the next one).  Unlike
+    ``getJobIdsForGroup(None)`` this sees jobs run under any job group.
+    The status store is fed asynchronously: with ``settle`` the probe
+    waits that long and runs once more, so an action that has just
+    returned has all its jobs seen."""
+    nxt = start
+    while True:
+        while tracker.getJobInfo(nxt) is not None:
+            nxt += 1
+        if settle <= 0:
+            return nxt
+        time.sleep(settle)
+        settle = 0.0
+
+
 def _summarize(samples: dict[str, list[float]]) -> tuple[dict, dict]:
     timings, spreads = {}, {}
     for name, ts in samples.items():
@@ -296,10 +313,16 @@ def main() -> None:
         shuffle_partitions=shuffle_parts,
     )
     spark.sparkContext.setLogLevel("ERROR")
+    # Job ids are probed upward from a cursor that every query advances
+    # (untimed): the status store keeps only the newest jobs
+    # (spark.ui.retainedJobs), so the cursor must never fall that far back.
+    tracker = spark.sparkContext.statusTracker()
+    job_cursor = 0
 
     # Untimed warmup pass: JIT + codegen compile + OS page cache.
     for name in MEASURED:
         ALL_QUERIES[name].fn(spark, sf_dir).toPandas()
+        job_cursor = _next_job_id(tracker, job_cursor)
 
     # REPEATS full passes, INTERLEAVED (pass 1 runs every query, then pass
     # 2, ...): back-to-back samples of one query share any transient load
@@ -352,6 +375,7 @@ def main() -> None:
                 t2 = time.perf_counter()
                 build_samples[name].append(t1 - t0)
                 samples[name].append(t2 - t0)
+                job_cursor = _next_job_id(tracker, job_cursor)
         timings, spreads = _summarize(samples)
         builds, _ = _summarize(build_samples)
         worst = max(spreads.values()) if spreads else 0.0
@@ -379,15 +403,6 @@ def main() -> None:
     floors: dict[str, float | None] = {}
     floor_jobs: dict[str, int | None] = {}
     if os.path.isdir(floor_dir):
-        tracker = spark.sparkContext.statusTracker()
-
-        def _latest_job_id() -> int:
-            # max id, not len(): the status store evicts old entries
-            # (spark.ui.retainedJobs), so a length can DECREASE across a
-            # run; job ids are monotonic, so the id delta is exact.
-            ids = tracker.getJobIdsForGroup(None) or []
-            return max(ids) if ids else -1
-
         for name in MEASURED:
             try:
                 fn = ALL_QUERIES[name].fn
@@ -396,9 +411,10 @@ def main() -> None:
                 # floor signal (wall-clock floors below drift ±25% with
                 # box contention; the job count is a property of the
                 # plan).  Judge-auditable across rounds.
-                j0 = _latest_job_id()
+                j0 = _next_job_id(tracker, job_cursor, settle=0.05)
                 fn(spark, floor_dir).toPandas()
-                floor_jobs[name] = _latest_job_id() - j0
+                job_cursor = _next_job_id(tracker, j0, settle=0.05)
+                floor_jobs[name] = job_cursor - j0
                 floors[name] = round(
                     min(
                         _timed(lambda: fn(spark, floor_dir).toPandas())

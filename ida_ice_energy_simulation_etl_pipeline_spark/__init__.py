@@ -11,12 +11,18 @@ Layout
 ------
 session     SparkSession factory (UTC, AQE, Arrow, shuffle sizing)
 schemas     explicit StructType catalog for every input/output table
-etl         extract → transform → validate → load → export (reference parity)
+config      YAML config surface of the pipeline CLI
+client      local simulation client (run discovery, metadata reads)
+fixtures    seeded reference-shaped input generator (dirs or ZIPs)
+etl         extract (CSV/ZIP/JSON ingestion) → transform → land → validate
+            → publish → export (reference parity)
 plans       analytical query registry + DuckDB oracle SQL (driver contract)
+functions   column expressions shared by the ETL, plans and operators
 operators   scale extensions: dedup, similarity search, text analysis,
-            multimodal columns
-sources     CSV/ZIP/JSON ingestion with error tolerance
-streaming   Structured Streaming variants of the hourly aggregations
+            graph, temporal joins, skew, multimodal columns
+corpus      composed training-corpus pipeline built from the operators
+streaming   Structured Streaming variants of the hourly aggregations and
+            of the corpus stages
 """
 
 __version__ = "0.1.0"

@@ -1,10 +1,8 @@
 """Simulation-client API parity (C3).
 
 The reference ships a mock cloud client (reference src/idaice_client.py:
-16-116: configure → run → poll status → fetch results) plus a local-files
-client (:118-218).  The cloud side is out of engine scope (SURVEY §2.12) —
-kept here as a thin, dependency-free stub with the same call shape; the
-local client is real and Spark-backed.
+16-116) plus a local-files client (:118-218).  The cloud side is out of
+engine scope (SURVEY §2.12); the local client is real and Spark-backed.
 """
 
 from __future__ import annotations
@@ -60,39 +58,3 @@ class LocalSimulationClient:
     def get_run(self, building_id: str, scenario_id: str) -> dict[str, DataFrame]:
         """Full single-run extraction (exploded-directory bundles)."""
         return extract_run_by_id(self.spark, self.runs_dir, building_id, scenario_id)
-
-
-class MockCloudClient:
-    """API-shape stub for the reference's mock HTTP client
-    (src/idaice_client.py:16-116).  No network; submitted jobs complete
-    immediately with a deterministic handle — enough to keep code written
-    against the reference's client surface importable and testable."""
-
-    def __init__(self) -> None:
-        self._jobs: dict[str, dict] = {}
-
-    def configure_simulation(self, building_id: str, scenario_id: str, **params) -> str:
-        job_id = f"job_{building_id}_{scenario_id}_{len(self._jobs)}"
-        self._jobs[job_id] = {
-            "building_id": building_id,
-            "scenario_id": scenario_id,
-            "params": params,
-            "status": "COMPLETED",
-        }
-        return job_id
-
-    def run_simulation(self, job_id: str) -> dict:
-        return {"job_id": job_id, "status": self.get_status(job_id)}
-
-    def get_status(self, job_id: str) -> str:
-        if job_id not in self._jobs:
-            raise KeyError(f"unknown job: {job_id}")
-        return self._jobs[job_id]["status"]
-
-    def get_results(self, job_id: str) -> dict:
-        job = self._jobs[job_id]
-        return {
-            "job_id": job_id,
-            "run_id": f"run_{job['building_id']}_{job['scenario_id']}",
-            "status": job["status"],
-        }

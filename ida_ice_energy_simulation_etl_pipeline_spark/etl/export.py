@@ -30,7 +30,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 
 from .sqltext import number, string
-from .transform import dim_table
+from .transform import _nulls_first, dim_table
 
 LIGHTING_SHARE = 0.35
 EQUIPMENT_SHARE = 0.45
@@ -43,7 +43,7 @@ def _sorted_by(rows: list[dict], key: str) -> list[dict]:
     """``rows`` ordered as ``orderBy(key)`` orders them, nulls first.  The
     rows are a dim's, and sorting them here spares the sort's Spark
     jobs."""
-    return sorted(rows, key=lambda r: (r[key] is not None, r[key]))
+    return sorted(rows, key=lambda r: _nulls_first((r[key],)))
 
 
 def _exported(dim_scenario: pa.Table, scenario_id: str | None) -> dict:

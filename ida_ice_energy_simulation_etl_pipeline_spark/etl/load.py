@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import re
 import shutil
-from collections.abc import Callable, Mapping, Sequence
+from collections.abc import Mapping
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
 
@@ -194,28 +194,14 @@ def load_to_warehouse(
     *,
     database: str = "energy",
     with_views: bool = True,
-    bucket_specs: dict[str, tuple[int, list[str]]] | None = None,
 ) -> None:
     """Register the star schema as catalog tables + views (reference
-    load:36-64).
-
-    ``bucket_specs`` maps table → (n_buckets, bucket_columns): the table is
-    written ``bucketBy(n, cols).sortBy(cols)``.  Two fact tables bucketed
-    on their join key with the same bucket count join WITHOUT any exchange
-    — the shuffle is paid once at write time and amortized over every
-    subsequent join (the co-location contract a 100 TB fact⋈fact workload
-    needs; pinned by ``test_bucketed_join_avoids_shuffle``).
-    """
+    load:36-64)."""
     _check_identifier(database)
     spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
     for table, df in star.items():
         _check_identifier(table)
-        writer = df.write.mode("overwrite")
-        spec = (bucket_specs or {}).get(table)
-        if spec is not None:
-            n_buckets, cols = spec
-            writer = writer.bucketBy(n_buckets, *cols).sortBy(*cols)
-        writer.saveAsTable(f"{database}.{table}")
+        df.write.mode("overwrite").saveAsTable(f"{database}.{table}")
     if with_views:
         create_views(spark, database=database)
 
@@ -276,19 +262,6 @@ def merge_upsert_parquet(
     set a real MERGE holds.  Returns the touched partition values.
     """
     path = Path(path)
-    # A crashed compaction may have left the live table under ._retired:
-    # roll it back (or refuse on ambiguity) BEFORE the empty-table branch
-    # below could recreate the table from just this batch and strand the
-    # pre-crash rows.
-    retired = path.with_name(path.name + "._retired")
-    if retired.exists():
-        if not path.exists():
-            retired.rename(path)
-        else:
-            raise RuntimeError(
-                f"{retired} and {path} both exist — reconcile the crashed "
-                "compaction before merging"
-            )
     writer_cols = batch.columns
     if not path.exists():
         batch.write.partitionBy(partition_col).parquet(str(path))
@@ -320,255 +293,3 @@ def merge_upsert_parquet(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return sorted(str(t) for t in touched)
 
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str | Path,
-    *,
-    target_mb: int = 128,
-    sort_by: list[str] | None = None,
-) -> dict[str, int]:
-    """Small-file compaction: rewrite a parquet directory into
-    ``ceil(bytes / target_mb)`` right-sized files.
-
-    Streaming sinks and frequent MERGE batches accrete small files; at
-    100 TB a scan pays per-file open/footer costs and the scheduler pays
-    per-split overhead, so periodic compaction is standard table
-    maintenance (what OPTIMIZE does in table formats).  ``sort_by``
-    additionally range-clusters during the rewrite (the
-    ``range_clustered`` data-skipping layout), so one
-    maintenance pass buys both fewer files AND narrow per-file min/max
-    stats.  A Hive-partitioned layout (``col=value`` directories — what
-    ``merge_upsert_parquet`` and the streaming upsert sink write) is
-    detected from the data-file paths and PRESERVED: each partition
-    directory is compacted in place, so partition pruning and subsequent
-    dynamic-partition merges keep working.
-
-    The rewrite is staged next to the target and swapped in with two
-    renames.  Readers can hit a brief not-found window between them
-    (local-FS rename gives no atomic directory swap; a table format's
-    metadata pointer is the real fix).  Crash recovery is CONSERVATIVE:
-    a leftover ``._retired`` directory rolls back automatically only
-    when the table path itself is missing (crash exactly between the two
-    renames); if BOTH exist — e.g. another writer recreated the table
-    after the crash — the function refuses to run rather than guess
-    which copy is authoritative, because deleting ``._retired`` on a
-    guess would silently discard the pre-crash table.  Returns
-    {"files_before", "files_after", "bytes"}.
-    """
-    path = Path(path)
-    staging = path.with_name(path.name + "._compacting")
-    retired = path.with_name(path.name + "._retired")
-    shutil.rmtree(staging, ignore_errors=True)  # staged data is never unique
-    if retired.exists():
-        if not path.exists():
-            retired.rename(path)  # crashed between the two renames: roll back
-        else:
-            raise RuntimeError(
-                f"{retired} and {path} both exist (crash followed by new "
-                "writes?) — reconcile manually before compacting; refusing "
-                "to delete either copy"
-            )
-
-    files = [p for p in path.rglob("*.parquet") if p.is_file()]
-    total = sum(p.stat().st_size for p in files)
-    target_bytes = target_mb * 1024 * 1024
-    n_out = max(1, -(-total // target_bytes))
-    # partition columns, in nesting order, from any data file's dirs
-    part_cols: list[str] = []
-    if files:
-        for seg in files[0].relative_to(path).parts[:-1]:
-            if "=" in seg:
-                part_cols.append(seg.split("=", 1)[0])
-    df = spark.read.parquet(str(path))
-    if part_cols:
-        # Distribute WITHIN each Hive partition too: hashing on the
-        # partition columns alone would land a whole partition value in
-        # one task (one arbitrarily large output file, zero rewrite
-        # parallelism), so a deterministic row-hash salt sized from the
-        # LARGEST partition directory spreads each value over enough
-        # tasks that every output file still targets ~target_mb.
-        by_dir: dict[str, int] = {}
-        for f in files:
-            by_dir[f.relative_to(path).parts[0]] = (
-                by_dir.get(f.relative_to(path).parts[0], 0) + f.stat().st_size
-            )
-        max_part = max(by_dir.values(), default=0)
-        salt_n = max(1, -(-max_part // target_bytes))
-        salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(salt_n))
-        keys = [F.col(c) for c in (sort_by or [])] or [salt]
-        df = df.repartitionByRange(
-            n_out, *[F.col(c) for c in part_cols], *keys
-        )
-        if sort_by:
-            df = df.sortWithinPartitions(*part_cols, *sort_by)
-    elif sort_by:
-        df = df.repartitionByRange(n_out, *sort_by).sortWithinPartitions(*sort_by)
-    else:
-        df = df.repartition(n_out)
-    writer = df.write.mode("overwrite")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(str(staging))
-    path.rename(retired)
-    staging.rename(path)
-    shutil.rmtree(retired)
-    after = len([p for p in path.rglob("*.parquet") if p.is_file()])
-    return {"files_before": len(files), "files_after": after, "bytes": total}
-
-
-def zorder_cluster(
-    df: DataFrame,
-    cols: list[str],
-    *,
-    bits: int = 8,
-    n_files: int | None = None,
-) -> DataFrame:
-    """Z-order (Morton-curve) clustering for MULTI-column data skipping.
-
-    ``repartitionByRange(sort_col)`` (``range_clustered``)
-    narrows per-file min/max stats on ONE column; queries filtering the
-    second column still scan everything.  Z-ordering interleaves the bit
-    patterns of each column's normalized bucket, so files cover a small
-    hyper-rectangle of the combined key space and parquet min/max stats
-    stay narrow on EVERY participating column — the multi-dimension
-    layout OPTIMIZE ZORDER BY provides in table formats.
-
-    Buckets are value-normalized against broadcast per-column min/max
-    (one tiny extra aggregate over the input — no driver collect), the
-    interleave is a folded shift/or expression (pure codegen), and the
-    result is range-partitioned + sorted on the z-value, ready to write.
-    Skewed columns get skewed buckets — production would swap the linear
-    normalization for quantile buckets; the interleave is unchanged.
-    """
-    stats = df.agg(
-        *[F.min(c).cast("double").alias(f"mn_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"mx_{c}") for c in cols],
-    )
-    out = df.crossJoin(F.broadcast(stats))
-    top = (1 << bits) - 1
-    z = F.lit(0).cast("long")
-    for i in range(bits - 1, -1, -1):  # high bits first
-        for j, c in enumerate(cols):
-            span = F.col(f"mx_{c}") - F.col(f"mn_{c}")
-            bucket = F.least(
-                F.lit(top),
-                F.floor(
-                    (F.col(c).cast("double") - F.col(f"mn_{c}"))
-                    / F.when(span > 0, span).otherwise(F.lit(1.0))
-                    * (top + 1)
-                ),
-            ).cast("long")
-            bit = F.shiftright(bucket, i).bitwiseAND(F.lit(1))
-            z = F.shiftleft(z, 1).bitwiseOR(bit)
-    out = out.withColumn("_z", z).drop(
-        *[f"mn_{c}" for c in cols], *[f"mx_{c}" for c in cols]
-    )
-    parts = [n_files] if n_files else []
-    return (
-        out.repartitionByRange(*parts, F.col("_z"))
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-
-
-def vacuum_partitions(
-    path: str | Path,
-    partition_col: str,
-    keep: Callable[[str], bool],
-) -> list[str]:
-    """Retention sweep over a Hive-partitioned table: drop every
-    ``partition_col=value`` directory whose value fails ``keep``.
-
-    Pure directory-level deletes — no Spark job, no data rewrite: with a
-    date-valued partition column this is the O(1)-per-partition retention
-    pass (e.g. ``keep=lambda ds: ds >= cutoff``) that pairs with the
-    MERGE/compaction maintenance suite.  Values are the raw Hive
-    directory-name strings (dates in ISO form order correctly), INCLUDING
-    the ``__HIVE_DEFAULT_PARTITION__`` sentinel for null partition values
-    — a date-parsing ``keep`` must handle it explicitly or it is retained
-    forever.  All ``keep`` decisions are made BEFORE the first delete, so
-    a raising callback aborts the sweep cleanly instead of leaving a
-    half-vacuumed table.  A missing table is a no-op.  Returns the
-    dropped partition values.
-    """
-    path = Path(path)
-    if not path.exists():
-        return []
-    prefix = f"{partition_col}="
-    # two-phase: decide everything first, then delete — keep() errors
-    # must not strand a partially-swept table
-    doomed = [
-        d
-        for d in sorted(path.iterdir())
-        if d.is_dir()
-        and d.name.startswith(prefix)
-        and not keep(d.name[len(prefix):])
-    ]
-    dropped = []
-    for d in doomed:
-        shutil.rmtree(d)
-        dropped.append(d.name[len(prefix):])
-    return dropped
-
-
-def snapshot_diff(
-    spark: SparkSession,
-    old_path: str | Path,
-    new_path: str | Path,
-    key_cols: Sequence[str],
-    compare_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """CDC-style diff of two parquet snapshots of the same table.
-
-    Returns one row per key present in either snapshot, with ``status`` ∈
-    {added, removed, changed, unchanged} — ``changed`` compares an md5
-    over the row's JSON encoding (``to_json`` of a struct with
-    ``ignoreNullFields=false``): NULLs are encoded explicitly and
-    strings are quoted, so a NULL↔value swap between columns or a
-    separator character inside a value can never collide (both
-    ``concat_ws`` AND Spark's ``hash``/``xxhash64`` silently SKIP null
-    inputs and would miss such changes).  ``compare_cols`` defaults to
-    the non-key columns present in
-    BOTH snapshots (sorted) — columns added or dropped between versions
-    are excluded from the comparison (schema evolution must not crash
-    the diff; pass ``compare_cols`` explicitly to fail on asymmetry).
-    Shape: two column-pruned scans + ONE key-aligned full outer join;
-    the hash collapses arbitrary row width to 8 bytes before the
-    exchange, so the shuffle moves keys + hashes, never payloads — the
-    diff of two 100 TB snapshots costs two scans and one keyed shuffle.
-    (For partitioned tables, diff partition by partition and skip
-    partitions whose file listings are identical — the vacuum/compact
-    maintenance pattern above.)
-    """
-    key_cols = list(key_cols)
-    old = spark.read.parquet(str(old_path))
-    new = spark.read.parquet(str(new_path))
-    if compare_cols is None:
-        compare_cols = sorted(
-            (set(new.columns) & set(old.columns)) - set(key_cols)
-        )
-    compare_cols = list(compare_cols)
-    if not compare_cols:
-        raise ValueError("snapshot_diff: no shared non-key columns to compare")
-
-    def hashed(df: DataFrame, out: str) -> DataFrame:
-        h = F.md5(
-            F.to_json(
-                F.struct(*[F.col(c) for c in compare_cols]),
-                {"ignoreNullFields": "false"},
-            ).cast("binary")
-        )
-        return df.select(*key_cols, h.alias(out))
-
-    o = hashed(old, "h_old")
-    n = hashed(new, "h_new")
-    status = (
-        F.when(F.col("h_old").isNull(), F.lit("added"))
-        .when(F.col("h_new").isNull(), F.lit("removed"))
-        .when(F.col("h_old") != F.col("h_new"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return o.join(n, key_cols, "full_outer").select(
-        *key_cols, status.alias("status")
-    )

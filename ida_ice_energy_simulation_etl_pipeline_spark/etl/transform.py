@@ -198,7 +198,7 @@ def _dim_time(micros: list[int | None], key_strategy: str, tz: str) -> pa.Table:
                              not 1..n).  Both divisions truncate toward
                              zero, as Spark's do.
     """
-    us = pa.array(sorted(micros, key=lambda u: (u is not None, u)), pa.int64())
+    us = pa.array(sorted(micros, key=lambda u: _nulls_first((u,))), pa.int64())
     if key_strategy == "derived":
         hours = pc.divide(pc.cast(pc.divide(us, 1_000_000), pa.float64()), 3600.0)
         time_key, required = pc.cast(hours, pa.int64(), safe=False), ()

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 
 from ..schemas import NULLABLE_WHITELIST, STAR_SCHEMAS
 from .sqltext import ident, number
-from .transform import dim_table
+from .transform import _nulls_first, dim_table
 
 
 Rules = dict[str, list[tuple[str, float | None, float | None]]]
@@ -268,9 +268,6 @@ def _plausibility_errors(sums: Mapping[tuple, tuple]) -> Errors:
             or holds(electric, lt, None if both is None else 0.2 * both)
         )
 
-    def nulls_first(item: tuple) -> list:
-        return [(v is not None, v) for v in item[0]]
-
     def fmt(v: float | None) -> str:
         return "null" if v is None else f"{v:.1f}"
 
@@ -278,7 +275,9 @@ def _plausibility_errors(sums: Mapping[tuple, tuple]) -> Errors:
         "plausibility": [
             f"({b}, {s}): implausible energy totals "
             f"electric={fmt(e)} heating={fmt(h)} cooling={fmt(c)}"
-            for (b, s), (e, h, c) in sorted(sums.items(), key=nulls_first)
+            for (b, s), (e, h, c) in sorted(
+                sums.items(), key=lambda item: _nulls_first(item[0])
+            )
             if implausible(e, h, c)
         ]
     }

@@ -20,14 +20,12 @@ over a random permutation of the shingle space.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import hashed_word_shingles, round_pz, word_shingles, word_tokens
-from ..plans.core import QuerySpec, ensure_parallelism, hash_parallelism, load_table
+from ..plans.core import QuerySpec, ensure_parallelism, load_table
 
 N_MINHASHES = 8
 N_BANDS = 4  # rows per band = N_MINHASHES // N_BANDS = 2
@@ -464,58 +462,6 @@ SELECT doc_id,
        {' || '.join(_simhash_bit_sql(j) for j in range(1, SIMHASH_BITS + 1))} AS simhash
 FROM toks
 """
-
-
-def simhash_near_pairs(docs: DataFrame, max_hamming: int = 2) -> DataFrame:
-    """Near-dup pairs by Hamming distance, bucketed by signature halves.
-
-    Pigeonhole: two signatures within Hamming distance ≤ 2 over 16 bits
-    share at least one identical half if distance ≤ 1 per half — we bucket
-    on each half so candidates collide on a 8-bit prefix instead of the
-    full O(n²) cross join (standard SimHash block-permutation trick).
-    """
-    sig = docs.select("doc_id", simhash_col(word_tokens(F.col("text"))).alias("simhash"))
-    half = SIMHASH_BITS // 2
-    blocks = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                F.struct(F.lit(0).alias("blk"), F.substring("simhash", 1, half).alias("key")),
-                F.struct(F.lit(1).alias("blk"), F.substring("simhash", half + 1, half).alias("key")),
-            )
-        ).alias("b"),
-    ).select("doc_id", "simhash", "b.blk", "b.key")
-    # Same sort-merge pin as lsh_candidate_pairs/ngram_jaccard_pairs: the
-    # sides share one subtree, the merge join reuses its exchange; AQE's
-    # broadcast pick would re-execute the simhash derivation.
-    a, b = blocks.alias("a"), blocks.hint("shuffle_merge").alias("b")
-    hamming = reduce(
-        lambda x, y: x + y,
-        [
-            F.when(
-                F.substring(F.col("a.simhash"), j, 1)
-                != F.substring(F.col("b.simhash"), j, 1),
-                1,
-            ).otherwise(0)
-            for j in range(1, SIMHASH_BITS + 1)
-        ],
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
 
 
 # --------------------------------------------------------------------------

@@ -1,28 +1,22 @@
 """Multimodal-column plumbing: opaque ``binary`` payloads + typed metadata.
 
 Real at this layer: schema, partitioning, Arrow-batched ``mapInPandas``
-feature extraction, the driver-contract query, and — with no codec
-library at all — image METADATA decode (``parse_image_dims`` reads
-PNG/GIF/BMP/JPEG dimensions+format straight from container headers, the
-curation predicate most multimodal filters actually need) AND baseline
-PNG + first-frame GIF + baseline-Huffman JPEG PIXEL decode
-(``decode_png_pixels`` / ``encode_png`` / ``decode_gif_pixels`` /
-``decode_jpeg_pixels`` / ``encode_jpeg``: deflate + scanline
-unfiltering, GIF's LZW, and JPEG's Huffman + IDCT are pure
-stdlib+numpy, so ``image_pixel_stats`` does genuine pixel-level feature
-extraction over the three highest-volume corpus formats in this
-container) AND audio /
-video container METADATA + PCM samples (``parse_audio_meta`` /
-``decode_wav_samples`` for WAV, ``parse_video_meta`` for AVI — the same
-RIFF chunk walk, iterative over AVI's nested LIST headers — and for
-MP4/ISO-BMFF, a length-prefixed box walk over moov → mvhd/trak that
-recovers resolution/frame-count/fps/duration).  Still gated
-or stubbed (clearly): non-PNG pixel decode/resize (real via PIL when
-installed; NotImplementedError here — for JPEG only the non-baseline
-profiles: progressive, arithmetic, 12-bit), compressed/non-WAV audio
-sample decode, and video FRAME decode (``frame_sample`` is a
-deterministic fake with the real batch shape; every real video codec
-needs a decoder library).
+feature extraction and the driver-contract queries, with no codec
+library at all.  Pixel decode is pure stdlib+numpy for PNG, first-frame
+GIF, BMP, baseline TIFF and Huffman JPEG (``decode_image_pixels``, which
+``extract_pixel_stats`` runs per row); EXIF tags come from the TIFF IFD
+walk (``parse_exif``).  The codec kernels beside them — container
+header parsers (``parse_image_dims``, ``parse_audio_meta``,
+``parse_video_meta``: the RIFF chunk walk, iterative over AVI's nested
+LIST headers, and the MP4/ISO-BMFF box walk), WAV sample decode
+(``decode_wav_samples``) and Motion-JPEG frames
+(``decode_mjpeg_frames``) — are dependency-free too; the encoders
+(``encode_png``, ``encode_jpeg``, ``encode_jpeg_progressive``) are the
+independent producers the decoder tests compare against.  Still
+stubbed (clearly): frame sampling and resize (``frame_sample`` /
+``resize_bytes`` are deterministic byte-level fakes with the real batch
+shape); perceptual audio and inter-frame video codecs need a decoder
+library.
 
 At 100 TB the payload column dominates IO: feature extraction is map-only
 (no shuffle), and `spark.sql.files.maxPartitionBytes` bounds the Arrow
@@ -31,16 +25,13 @@ batch memory per task.
 
 from __future__ import annotations
 
-import importlib.util
-from collections.abc import Callable, Iterator
+from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
-    DoubleType,
     LongType,
     StringType,
     StructField,
@@ -48,21 +39,6 @@ from pyspark.sql.types import (
 )
 
 from ..plans.core import QuerySpec, ensure_parallelism, load_table
-
-# Real codecs are OPTIONAL: when PIL is installed the decode/resize
-# functions below use it; in this container (no imaging libs) they raise
-# NotImplementedError and the byte-level stand-ins keep the Spark-side
-# plumbing fully exercised.
-HAS_PIL = importlib.util.find_spec("PIL") is not None
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("item_id", LongType(), False),
-        StructField("media_type", StringType(), False),
-        StructField("payload", BinaryType(), True),
-        StructField("source", StringType(), True),
-    ]
-)
 
 FEATURE_SCHEMA = StructType(
     [
@@ -72,47 +48,6 @@ FEATURE_SCHEMA = StructType(
         StructField("head_byte", LongType(), True),
     ]
 )
-
-
-def decode_image(payload: bytes) -> object:
-    """Decode an image payload: PIL.Image when PIL is installed; without
-    PIL, every spec-legal PNG profile (8/16-bit, palette incl. tRNS
-    alpha, sub-byte gray, Adam7), first-frame GIF and baseline-Huffman
-    JPEG still decode for real via the pure-stdlib codecs (returns an
-    (h, w, ch) uint8 numpy array — see decode_image_pixels); only the
-    remaining profiles (progressive/arithmetic JPEG, WebP, TIFF, ...)
-    are gated on the optional dependency."""
-    if not HAS_PIL:
-        px = decode_image_pixels(payload)
-        if px is not None:
-            return px
-        raise NotImplementedError(
-            "pixel decode beyond PNG/GIF/baseline-JPEG requires PIL (not "
-            "installed); those three decode via the stdlib codecs, other "
-            "formats and non-baseline JPEG profiles are gated"
-        )
-    from io import BytesIO
-
-    from PIL import Image
-
-    return Image.open(BytesIO(payload))
-
-
-def decode_audio(payload: bytes) -> object:
-    """Audio SAMPLE decode: REAL for PCM / IEEE-float WAV plus the
-    COMPRESSED in-container codecs G.711 µ-law/A-law and IMA ADPCM via
-    the pure-stdlib RIFF walk (returns an (n_frames, n_channels)
-    float64 array in [-1, 1] — see decode_wav_samples); perceptual
-    codecs (MP3/AAC/Vorbis) and vendor ADPCM variants still need a
-    codec library and stay gated."""
-    samples = decode_wav_samples(payload)
-    if samples is not None:
-        return samples
-    raise NotImplementedError(
-        "perceptual-codec / non-WAV sample decode requires an audio "
-        "library; PCM, IEEE-float, G.711 and IMA-ADPCM WAV decode via "
-        "the stdlib RIFF walk, other formats are gated"
-    )
 
 
 def _riff_chunks(payload: bytes, lo: int, hi: int):
@@ -404,9 +339,9 @@ def parse_video_meta(payload: bytes) -> tuple[int, int, int, float, float] | Non
     box walk over moov → mvhd/trak).  Either header set carries
     everything a curation filter needs without touching a codec: returns
     (width, height, n_frames, fps, duration_s), or None for an
-    unrecognized payload.  FRAME decode still needs a codec library and
-    stays gated (decode_video below); resolution/duration/fps filtering
-    does not.
+    unrecognized payload.  FRAME decode of inter-frame codecs still
+    needs a codec library (Motion-JPEG frames decode via
+    decode_mjpeg_frames); resolution/duration/fps filtering does not.
     """
     if not payload or len(payload) < 12:
         return None
@@ -602,56 +537,6 @@ def decode_mjpeg_frames(payload: bytes) -> "list | None":
     if not saw_video_chunk or not frames:
         return None
     return frames
-
-
-def decode_video(payload: bytes) -> object:
-    """Video FRAME decode: REAL for Motion-JPEG AVIs (JPEG-per-frame —
-    see decode_mjpeg_frames, riding the full pure-stdlib JPEG codec
-    including progressive streams); every inter-frame codec
-    (H.264/VP9/AV1/MPEG) needs a real decoder library and stays gated.
-    Container METADATA (resolution, frame count, fps, duration) is real
-    and dependency-free for AVI and MP4/ISO-BMFF via parse_video_meta;
-    ``frame_sample`` is the byte-level stand-in that keeps the fan-out
-    plumbing testable for the gated codecs."""
-    frames = decode_mjpeg_frames(payload)
-    if frames is not None:
-        return frames
-    raise NotImplementedError(
-        "inter-frame video codecs require a decoder library; MJPEG AVIs "
-        "decode frame-by-frame via the stdlib JPEG codec, AVI and MP4 "
-        "container metadata via parse_video_meta, frame sampling is "
-        "stubbed by frame_sample"
-    )
-
-
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """Resize an image payload: PIL when installed; without PIL, a REAL
-    nearest-neighbor resample for every stdlib-decodable format (PNG/
-    GIF/JPEG/BMP/TIFF via decode_image_pixels → integer index map →
-    PNG re-encode; non-PNG inputs come back as PNG, the one format the
-    stdlib encoder can produce).  Undecodable formats stay gated."""
-    if not HAS_PIL:
-        px = decode_image_pixels(payload)
-        if px is not None:
-            import numpy as np
-
-            h, w = px.shape[:2]
-            yi = np.arange(height) * h // height
-            xi = np.arange(width) * w // width
-            return encode_png(px[yi][:, xi])
-        raise NotImplementedError(
-            "resize of non-stdlib-decodable formats requires PIL (not "
-            "installed); PNG/GIF/JPEG/BMP/TIFF resample via the stdlib "
-            "codecs (re-encoded as PNG), other formats are gated"
-        )
-    from io import BytesIO
-
-    from PIL import Image
-
-    img = Image.open(BytesIO(payload)).resize((width, height))
-    out = BytesIO()
-    img.save(out, format=img.format or "PNG")
-    return out.getvalue()
 
 
 def parse_image_dims(payload: bytes) -> tuple[int, int, str] | None:
@@ -1101,11 +986,11 @@ def decode_gif_pixels(payload: bytes) -> "object | None":
 # interleaved/non-interleaved scan geometry, EOB runs and DC/AC
 # successive approximation with the correction-bit protocol (the
 # jdphuff.c algorithms from the spec's G.2 flowcharts).  Arithmetic-
-# coded, lossless, hierarchical and 12-bit streams return None — those
-# stay behind the PIL gate (decode_image).  The bit-serial Huffman walk
-# is Python-speed: fine for the Arrow-batched stats lane at fixture
-# scale; a production cluster swaps in a codec library via the same
-# decode_image seam.
+# coded, lossless, hierarchical and 12-bit streams return None (the
+# undecodable-payload contract of decode_image_pixels).  The bit-serial
+# Huffman walk is Python-speed: fine for the Arrow-batched stats lane at
+# fixture scale; a production cluster swaps in a codec library behind
+# decode_image_pixels.
 
 _JPEG_ZIGZAG = [
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -2565,80 +2450,6 @@ def decode_image_pixels(payload: bytes) -> "object | None":
     return px
 
 
-PIXEL_STATS_SCHEMA = StructType(
-    [
-        StructField("item_id", LongType(), False),
-        StructField("width", LongType(), True),
-        StructField("height", LongType(), True),
-        StructField("channels", LongType(), True),
-        StructField("mean_px", DoubleType(), True),
-        StructField("std_px", DoubleType(), True),
-    ]
-)
-
-
-def image_pixel_stats(media: DataFrame) -> DataFrame:
-    """REAL pixel-level feature extraction over PNG and GIF payloads —
-    decode via the stdlib codecs inside Arrow-batched ``mapInPandas``,
-    emit per-item dimensions and channel-pooled mean/std.  Other or
-    unsupported payloads yield null stats (curation filters treat
-    undecodable as drop-worthy, not as an error)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in it:
-            rows = []
-            for item_id, payload in zip(pdf["item_id"], pdf["payload"]):
-                px = decode_image_pixels(payload) if payload is not None else None
-                if px is None:
-                    rows.append((item_id, None, None, None, None, None))
-                else:
-                    rows.append(
-                        (
-                            item_id,
-                            px.shape[1],
-                            px.shape[0],
-                            px.shape[2],
-                            round(float(np.mean(px)), 4),
-                            round(float(np.std(px)), 4),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "item_id", "width", "height", "channels",
-                    "mean_px", "std_px",
-                ],
-            )
-
-    return media.mapInPandas(batches, schema=PIXEL_STATS_SCHEMA)
-
-
-def _default_image_decoder() -> Callable[[bytes], tuple[int, int, str] | None]:
-    """Payload → (width, height, format), or None when undecodable.
-    The dependency-free default is the REAL header parser above; PIL
-    (when installed) upgrades to pixel-level decode but reports the SAME
-    vocabulary (``img.format`` — 'PNG'/'JPEG'/...), so a curation
-    predicate written against one environment cannot silently match
-    nothing in the other.  Color-mode filtering needs an explicit
-    PIL-backed ``decoder=`` since only pixel decode knows the mode."""
-    if not HAS_PIL:
-        return parse_image_dims
-    from io import BytesIO
-
-    from PIL import Image
-
-    def decode(payload: bytes) -> tuple[int, int, str] | None:
-        try:
-            img = Image.open(BytesIO(payload))
-            return int(img.width), int(img.height), str(img.format or "UNKNOWN")
-        except Exception:
-            return None
-
-    return decode
-
-
 def resize_bytes(payload: bytes, stride: int = 2) -> bytes:
     """Deterministic fake resize: keep every ``stride``-th byte (stands in
     for downsampling; same batch shape and size-reduction contract)."""
@@ -2687,199 +2498,6 @@ def extract_features(media: DataFrame) -> DataFrame:
             )
 
     return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
-
-
-AUDIO_FEATURE_SCHEMA = StructType(
-    [
-        StructField("item_id", LongType(), False),
-        StructField("source", StringType(), True),
-        StructField("n_channels", LongType(), True),
-        StructField("sample_rate", LongType(), True),
-        StructField("bits_per_sample", LongType(), True),
-        StructField("duration_s", DoubleType(), True),
-        StructField("truncated", BooleanType(), True),
-    ]
-)
-
-
-def extract_audio_features(media: DataFrame) -> DataFrame:
-    """Audio metadata extraction through the same Arrow-batched
-    ``mapInPandas`` path — real (dependency-free) for WAV payloads via
-    the RIFF chunk walk; non-WAV rows yield null features."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [
-                parse_audio_meta(b) if b is not None else None
-                for b in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"],
-                    "source": pdf["source"],
-                    "n_channels": [m[0] if m else None for m in metas],
-                    "sample_rate": [m[1] if m else None for m in metas],
-                    "bits_per_sample": [m[2] if m else None for m in metas],
-                    "duration_s": [m[3] if m else None for m in metas],
-                    "truncated": [m[4] if m else None for m in metas],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=AUDIO_FEATURE_SCHEMA)
-
-
-VIDEO_FEATURE_SCHEMA = StructType(
-    [
-        StructField("item_id", LongType(), False),
-        StructField("source", StringType(), True),
-        StructField("width", LongType(), True),
-        StructField("height", LongType(), True),
-        StructField("n_frames", LongType(), True),
-        StructField("fps", DoubleType(), True),
-        StructField("duration_s", DoubleType(), True),
-    ]
-)
-
-
-def extract_video_features(media: DataFrame) -> DataFrame:
-    """Video metadata extraction through the same Arrow-batched
-    ``mapInPandas`` path as the audio twin — real (dependency-free) for
-    AVI payloads via the recursive RIFF chunk walk; non-AVI rows yield
-    null features."""
-
-    def safe_meta(b):
-        # a malformed payload degrades to a null row, never a failed
-        # stage (the extract_audio_sample_stats contract)
-        try:
-            return parse_video_meta(b) if b is not None else None
-        except Exception:
-            return None
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [safe_meta(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"],
-                    "source": pdf["source"],
-                    "width": [m[0] if m else None for m in metas],
-                    "height": [m[1] if m else None for m in metas],
-                    "n_frames": [m[2] if m else None for m in metas],
-                    "fps": [m[3] if m else None for m in metas],
-                    "duration_s": [m[4] if m else None for m in metas],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=VIDEO_FEATURE_SCHEMA)
-
-
-AUDIO_SAMPLE_STATS_SCHEMA = StructType(
-    [
-        StructField("item_id", LongType(), False),
-        StructField("source", StringType(), True),
-        StructField("n_frames", LongType(), True),
-        StructField("n_channels", LongType(), True),
-        StructField("rms", DoubleType(), True),
-        StructField("peak", DoubleType(), True),
-        StructField("zero_cross_rate", DoubleType(), True),
-    ]
-)
-
-
-def extract_audio_sample_stats(media: DataFrame) -> DataFrame:
-    """SAMPLE-level audio statistics — real, dependency-free for PCM /
-    IEEE-float WAV payloads via decode_wav_samples; the curation
-    signals (silence via rms/peak, noisiness via zero-crossing rate)
-    that metadata alone cannot provide.  Same Arrow-batched
-    ``mapInPandas`` shape as the metadata path: the payload column
-    never leaves the executor, undecodable rows yield nulls."""
-    import numpy as np
-
-    def stats(b):
-        # Documented contract: undecodable rows yield nulls.  The decoder
-        # clips malformed tails itself, but a defensive except keeps any
-        # future pathological payload from failing the whole Spark stage.
-        try:
-            arr = decode_wav_samples(b) if b is not None else None
-        except Exception:
-            return None
-        if arr is None or arr.size == 0:
-            return None
-        mono = arr.mean(axis=1)
-        zc = (
-            float(np.count_nonzero(np.signbit(mono[1:]) != np.signbit(mono[:-1])))
-            / max(len(mono) - 1, 1)
-        )
-        return (
-            int(arr.shape[0]),
-            int(arr.shape[1]),
-            float(np.sqrt(np.mean(arr * arr))),
-            float(np.max(np.abs(arr))),
-            zc,
-        )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = [stats(b) for b in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"],
-                    "source": pdf["source"],
-                    "n_frames": [r[0] if r else None for r in rows],
-                    "n_channels": [r[1] if r else None for r in rows],
-                    "rms": [r[2] if r else None for r in rows],
-                    "peak": [r[3] if r else None for r in rows],
-                    "zero_cross_rate": [r[4] if r else None for r in rows],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=AUDIO_SAMPLE_STATS_SCHEMA)
-
-
-IMAGE_FEATURE_SCHEMA = StructType(
-    [
-        StructField("item_id", LongType(), False),
-        StructField("source", StringType(), True),
-        StructField("width", LongType(), True),
-        StructField("height", LongType(), True),
-        StructField("mode", StringType(), True),
-    ]
-)
-
-
-def extract_image_features(
-    media: DataFrame,
-    *,
-    decoder: Callable[[bytes], tuple[int, int, str] | None] | None = None,
-) -> DataFrame:
-    """Decode-and-measure image payloads through the SAME Arrow-batched
-    ``mapInPandas`` path as extract_features.
-
-    ``decoder`` maps payload bytes → (width, height, mode) or None for
-    undecodable rows.  The default is REAL with no dependencies: the
-    pure-Python container-header parser (PNG/GIF/BMP/JPEG dims +
-    format), upgraded to full PIL decode (adds color mode) when PIL is
-    installed.  The callable is captured in the task closure, so it
-    ships to executors with the task, not via an import.
-    """
-    decode = decoder if decoder is not None else _default_image_decoder()
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            decoded = [
-                decode(b) if b is not None else None for b in pdf["payload"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "item_id": pdf["item_id"],
-                    "source": pdf["source"],
-                    "width": [d[0] if d else None for d in decoded],
-                    "height": [d[1] if d else None for d in decoded],
-                    "mode": [d[2] if d else None for d in decoded],
-                }
-            )
-
-    return media.mapInPandas(batches, schema=IMAGE_FEATURE_SCHEMA)
 
 
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:

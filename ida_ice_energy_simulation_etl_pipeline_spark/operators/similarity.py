@@ -949,23 +949,6 @@ def _pq_coded(
     )
 
 
-def pq_encode(
-    emb: DataFrame,
-    *,
-    dim: int = EMB_DIM,
-    m: int = PQ_M,
-    k: int = PQ_K,
-) -> DataFrame:
-    """Append ``code_0..code_{m-1}`` PQ codes to the embeddings (map-only;
-    see ``_pq_coded``)."""
-    coded = _pq_coded(emb, dim=dim, m=m, k=k)
-    return coded.select(
-        "vec_id",
-        "embedding",
-        *[F.element_at("codes", i + 1).alias(f"code_{i}") for i in range(m)],
-    )
-
-
 def pq_topk(
     emb: DataFrame,
     query_ids: list[int],

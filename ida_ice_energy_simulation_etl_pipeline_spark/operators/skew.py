@@ -1,21 +1,15 @@
-"""Skew mitigation: salted joins and two-phase salted aggregation.
+"""Skew mitigation: two-phase salted aggregation.
 
-AQE's skew-join splitting (enabled in session.py) handles moderate skew
-automatically, but a single pathological hot key — one building_id with
-half the rows, one document shingle shared corpus-wide — can exceed what
-partition-splitting fixes, because every row of the hot key still meets
-every matching build row.  Salting is the explicit remedy:
+AQE's skew handling (enabled in session.py) splits oversized shuffle
+partitions, but a single pathological hot key — one building_id with
+half the rows, one document shingle shared corpus-wide — still lands
+all its rows on one reducer of a plain GROUP BY.  Salting is the
+explicit remedy: ``salted_agg`` pre-aggregates on (keys, salt), then
+finishes on keys.  Both phases are hash aggregates with map-side
+combine; the salt bounds the per-reducer group size in phase 1.
 
-* ``salted_join``: the large (skewed) side gets a uniform random salt in
-  [0, n); the small side is replicated once per salt value.  The shuffle
-  key becomes (key, salt) so a hot key spreads over n reducers.  Join
-  output is IDENTICAL to the unsalted join — salt only load-balances.
-* ``salted_agg``: pre-aggregate on (keys, salt), then finish on keys.
-  Both phases are hash aggregates with map-side combine; the salt bounds
-  the per-reducer group size in phase 1.
-
-Both are pure DataFrame compositions — no RDDs, no UDFs — so Catalyst
-still prunes/pushes through them.  Salt values never reach the result,
+It is a pure DataFrame composition — no RDDs, no UDFs — so Catalyst
+still prunes/pushes through it.  Salt values never reach the result,
 so determinism of outputs is unaffected by the RNG.
 """
 
@@ -30,30 +24,6 @@ from ..plans.core import QuerySpec, load_table
 
 DEFAULT_SALTS = 8
 _SALT = "__salt"
-
-
-def salted_join(
-    large: DataFrame,
-    small: DataFrame,
-    on: Sequence[str],
-    *,
-    n_salts: int = DEFAULT_SALTS,
-    how: str = "inner",
-    seed: int = 42,
-) -> DataFrame:
-    """Equi-join robust to hot keys on the large side.
-
-    ``large`` is salted row-wise; ``small`` is exploded n_salts× (do NOT
-    pass a big table as ``small`` — its shuffle volume multiplies by
-    n_salts).  Result equals ``large.join(small, on, how)`` exactly.
-    """
-    salted_large = large.withColumn(
-        _SALT, F.floor(F.rand(seed) * n_salts).cast("int")
-    )
-    exploded_small = small.withColumn(
-        _SALT, F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return salted_large.join(exploded_small, [*on, _SALT], how).drop(_SALT)
 
 
 def salted_agg(

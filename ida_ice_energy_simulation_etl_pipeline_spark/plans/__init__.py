@@ -6,7 +6,7 @@ at least one entry here, expressed over the driver's TPC-H-ish fixture
 tables.
 """
 
-from .core import QuerySpec, load_table, register_views
+from .core import QuerySpec, load_table
 
 __all__ = [
     "QuerySpec",
@@ -14,7 +14,6 @@ __all__ = [
     "EXTRA_QUERIES",
     "ALL_QUERIES",
     "load_table",
-    "register_views",
 ]
 
 

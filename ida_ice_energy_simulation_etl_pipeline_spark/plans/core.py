@@ -332,9 +332,3 @@ def hash_parallelism(spark: SparkSession, df: DataFrame, *keys: str) -> DataFram
     """
     target = min(spark.sparkContext.defaultParallelism, shuffle_partitions(spark))
     return df.repartition(target, *[F.col(k) for k in keys])
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for ``spark.sql`` use."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

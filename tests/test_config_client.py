@@ -4,10 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from ida_ice_energy_simulation_etl_pipeline_spark.client import (
-    LocalSimulationClient,
-    MockCloudClient,
-)
+from ida_ice_energy_simulation_etl_pipeline_spark.client import LocalSimulationClient
 from ida_ice_energy_simulation_etl_pipeline_spark.config import (
     load_config,
     range_rules_from_config,
@@ -85,11 +82,3 @@ def test_local_client_zip_metadata(tmp_path, spark):
         client.get_run_metadata("NOPE", "BASE")
 
 
-def test_mock_cloud_client():
-    c = MockCloudClient()
-    job = c.configure_simulation("BLDG_01", "BASE", days=7)
-    assert c.get_status(job) == "COMPLETED"
-    assert c.run_simulation(job)["status"] == "COMPLETED"
-    assert c.get_results(job)["run_id"] == "run_BLDG_01_BASE"
-    with pytest.raises(KeyError):
-        c.get_status("nope")

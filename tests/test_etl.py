@@ -22,6 +22,7 @@ from ida_ice_energy_simulation_etl_pipeline_spark.etl.extract import (
 )
 from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import (
     load_to_parquet,
+    load_to_warehouse,
     query,
     range_clustered,
     register_temp_views,
@@ -256,6 +257,30 @@ def test_views_and_query(spark, star):
         """,
     )
     assert cop.count() > 0
+
+
+def test_load_to_warehouse_saves_tables_and_views(spark, star):
+    """The ``--warehouse`` sink: every star table becomes a catalog table
+    of the database, with the three views over them.  It runs in a new
+    session (same catalog): the temp views other tests register under the
+    star's table names would otherwise shadow the tables the views read."""
+    import shutil
+    from pathlib import Path
+
+    # a previous session's warehouse dir would collide with the in-memory
+    # catalog (LOCATION_ALREADY_EXISTS), so clean both sides first
+    spark.sql("DROP DATABASE IF EXISTS etl_wh CASCADE")
+    wh = Path(spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"))
+    shutil.rmtree(wh / "etl_wh.db", ignore_errors=True)
+    session = spark.newSession()
+    try:
+        load_to_warehouse(session, star, database="etl_wh")
+        assert {t.name for t in session.catalog.listTables("etl_wh")} >= set(star)
+        assert session.table("etl_wh.fact_meters").count() == N_RUNS * HOURS
+        es = session.sql("SELECT * FROM etl_wh.vw_energy_summary").collect()
+        assert len(es) == N_RUNS
+    finally:
+        spark.sql("DROP DATABASE IF EXISTS etl_wh CASCADE")
 
 
 def test_parquet_roundtrip(spark, star, tmp_path):
@@ -780,79 +805,6 @@ def test_merge_upsert_parquet_touches_only_batch_partitions(spark, tmp_path):
     }
 
 
-def test_compact_parquet_binpacks_and_preserves_rows(spark, tmp_path):
-    from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import (
-        compact_parquet,
-    )
-
-    path = tmp_path / "events_landing"
-    df = spark.range(0, 10000).withColumn("v", F.col("id") * 2)
-    # simulate a fragmented streaming landing zone: 64 tiny files
-    df.repartition(64).write.parquet(str(path))
-    import os
-
-    n_before = sum(
-        1 for _, _, fs in os.walk(path) for f in fs if f.endswith(".parquet")
-    )
-    assert n_before >= 32
-    stats = compact_parquet(spark, path, target_mb=128, sort_by=["id"])
-    assert stats["files_before"] == n_before
-    assert stats["files_after"] == 1  # tiny data -> one right-sized file
-    out = spark.read.parquet(str(path))
-    assert out.count() == 10000
-    assert out.agg(F.sum("v")).first()[0] == 2 * sum(range(10000))
-
-
-def test_zorder_narrows_file_stats_on_both_columns(spark, tmp_path):
-    """Z-order vs linear sort on a 2-D uniform grid: the linear layout
-    narrows per-file min/max only on its sort column, z-order on BOTH —
-    the property parquet data skipping actually uses."""
-    import pyarrow.parquet as pq
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import (
-        zorder_cluster,
-    )
-
-    grid = (
-        spark.range(0, 64)
-        .withColumnRenamed("id", "x")
-        .crossJoin(spark.range(0, 64).withColumnRenamed("id", "y"))
-    )
-
-    def mean_frac(path, col):
-        """Mean fraction of the global [0,63] range a file's stats cover."""
-        fracs = []
-        for f in (tmp_path / path).rglob("*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            lo = min(
-                md.row_group(i).column(
-                    [md.schema.column(j).name for j in range(md.num_columns)].index(col)
-                ).statistics.min
-                for i in range(md.num_row_groups)
-            )
-            hi = max(
-                md.row_group(i).column(
-                    [md.schema.column(j).name for j in range(md.num_columns)].index(col)
-                ).statistics.max
-                for i in range(md.num_row_groups)
-            )
-            fracs.append((hi - lo) / 63.0)
-        return sum(fracs) / len(fracs)
-
-    grid.repartitionByRange(16, "x").sortWithinPartitions("x").write.parquet(
-        str(tmp_path / "linear")
-    )
-    zorder_cluster(grid, ["x", "y"], n_files=16).write.parquet(
-        str(tmp_path / "zorder")
-    )
-    # linear: x narrow, y full-range
-    assert mean_frac("linear", "x") < 0.2
-    assert mean_frac("linear", "y") > 0.9
-    # z-order: BOTH columns substantially narrowed
-    assert mean_frac("zorder", "x") < 0.5
-    assert mean_frac("zorder", "y") < 0.5
-
-
 def test_merge_upsert_preserves_null_partition_survivors(spark, tmp_path):
     from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import (
         merge_upsert_parquet,
@@ -870,170 +822,6 @@ def test_merge_upsert_preserves_null_partition_survivors(spark, tmp_path):
     # A and B lived in the null partition the batch touched: they must
     # survive the dynamic overwrite of __HIVE_DEFAULT_PARTITION__
     assert got == {"A": 1.0, "B": 2.0, "C": 3.0, "D": 4.0}
-
-
-def test_compact_parquet_preserves_hive_partition_layout(spark, tmp_path):
-    import os
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import (
-        compact_parquet,
-        merge_upsert_parquet,
-    )
-
-    path = tmp_path / "t"
-    base = spark.createDataFrame(
-        [(f"k{i}", float(i), f"2026-01-0{1 + i % 2}") for i in range(20)],
-        "k string, v double, ds string",
-    ).repartition(8)
-    base.write.partitionBy("ds").parquet(str(path))
-    compact_parquet(spark, path, target_mb=128)
-    # layout preserved: ds=... dirs remain, no root-level data files
-    root_files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    assert root_files == []
-    assert sorted(d for d in os.listdir(path) if d.startswith("ds=")) == [
-        "ds=2026-01-01",
-        "ds=2026-01-02",
-    ]
-    # and a subsequent MERGE still works against the compacted table
-    batch = spark.createDataFrame(
-        [("k0", 99.0, "2026-01-01")], "k string, v double, ds string"
-    )
-    merge_upsert_parquet(spark, batch, path, keys=["k"], partition_col="ds")
-    got = {r["k"]: r["v"] for r in spark.read.parquet(str(path)).collect()}
-    assert len(got) == 20 and got["k0"] == 99.0
-
-
-def test_vacuum_partitions_drops_expired_only(spark, tmp_path):
-    from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import (
-        vacuum_partitions,
-    )
-
-    path = tmp_path / "t"
-    spark.createDataFrame(
-        [(i, f"2026-01-0{1 + i % 3}") for i in range(9)], "k long, ds string"
-    ).write.partitionBy("ds").parquet(str(path))
-    dropped = vacuum_partitions(path, "ds", keep=lambda ds: ds >= "2026-01-02")
-    assert dropped == ["2026-01-01"]
-    # Spark infers the partition dir values as DATE — compare as strings
-    got = {str(r["ds"]) for r in spark.read.parquet(str(path)).collect()}
-    assert got == {"2026-01-02", "2026-01-03"}
-
-
-def test_compact_refuses_when_both_table_and_retired_exist(spark, tmp_path):
-    from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import (
-        compact_parquet,
-        merge_upsert_parquet,
-    )
-
-    path = tmp_path / "t"
-    spark.range(10).write.parquet(str(path))
-    retired = tmp_path / "t._retired"
-    retired.mkdir()
-    (retired / "stale.parquet").write_bytes(b"x")
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="reconcile"):
-        compact_parquet(spark, path)
-    batch = spark.createDataFrame([(1, "a")], "k long, ds string")
-    with _pytest.raises(RuntimeError, match="reconcile"):
-        merge_upsert_parquet(spark, batch, path, keys=["k"], partition_col="ds")
-
-
-def test_vacuum_decides_before_deleting_and_skips_missing(tmp_path):
-    from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import (
-        vacuum_partitions,
-    )
-
-    assert vacuum_partitions(tmp_path / "absent", "ds", keep=lambda v: True) == []
-    path = tmp_path / "t"
-    for ds in ("2026-01-01", "__HIVE_DEFAULT_PARTITION__", "2026-03-01"):
-        (path / f"ds={ds}").mkdir(parents=True)
-
-    def raising_keep(v):
-        if v.startswith("__"):
-            raise ValueError(v)
-        return v >= "2026-02-01"
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        vacuum_partitions(path, "ds", keep=raising_keep)
-    # decide-first: NOTHING was deleted despite 2026-01-01 failing keep
-    assert sorted(d.name for d in path.iterdir()) == [
-        "ds=2026-01-01",
-        "ds=2026-03-01",
-        "ds=__HIVE_DEFAULT_PARTITION__",
-    ]
-
-
-def test_compact_splits_oversized_partition_and_respects_sort(spark, tmp_path):
-    """A single huge Hive partition must be rewritten by MULTIPLE tasks
-    into multiple target-sized files, not one unbounded file."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import (
-        compact_parquet,
-    )
-
-    path = tmp_path / "t"
-    df = (
-        spark.range(0, 200_000)
-        .withColumn("payload", F.sha2(F.col("id").cast("string"), 256))
-        .withColumn("ds", F.lit("2026-01-01"))
-    )
-    df.repartition(16).write.partitionBy("ds").parquet(str(path))
-    # ~14 MB of payload in ONE partition; 1 MB target => many files
-    stats = compact_parquet(spark, path, target_mb=1)
-    import os
-
-    part = path / "ds=2026-01-01"
-    files = [f for f in os.listdir(part) if f.endswith(".parquet")]
-    assert len(files) >= 4, f"partition not split: {len(files)} file(s)"
-    assert spark.read.parquet(str(path)).count() == 200_000
-
-
-def test_snapshot_diff_classifies_added_removed_changed(spark, tmp_path):
-    """CDC diff of two snapshots: keys only in new -> added, only in old
-    -> removed, both-with-different-payload -> changed, else unchanged."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import snapshot_diff
-
-    old = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], ["id", "s", "v"]
-    )
-    new = spark.createDataFrame(
-        [(2, "b", 20.0), (3, "c", 31.0), (4, "d", 40.0)], ["id", "s", "v"]
-    )
-    old.write.parquet(str(tmp_path / "old"))
-    new.write.parquet(str(tmp_path / "new"))
-    got = {
-        r["id"]: r["status"]
-        for r in snapshot_diff(
-            spark, tmp_path / "old", tmp_path / "new", ["id"]
-        ).collect()
-    }
-    assert got == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
-
-
-def test_snapshot_diff_null_swaps_and_schema_evolution(spark, tmp_path):
-    """A NULL moving between adjacent columns is a CHANGE (a string-concat
-    hash would silently drop the NULL and call it unchanged), and a column
-    added in the new snapshot must not crash the diff — it is excluded
-    from the default comparison set."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.etl.load import snapshot_diff
-
-    old = spark.createDataFrame(
-        [(1, None, "x"), (2, "same", "v")], ["id", "s", "v"]
-    )
-    new = spark.createDataFrame(
-        [(1, "x", None, 9.0), (2, "same", "v", 9.0)], ["id", "s", "v", "w"]
-    )
-    old.write.parquet(str(tmp_path / "old"))
-    new.write.parquet(str(tmp_path / "new"))
-    got = {
-        r["id"]: r["status"]
-        for r in snapshot_diff(
-            spark, tmp_path / "old", tmp_path / "new", ["id"]
-        ).collect()
-    }
-    assert got == {1: "changed", 2: "unchanged"}
 
 
 def _assert_columns_match(a, b, label):

@@ -276,8 +276,7 @@ def test_parse_video_meta_total_over_arbitrary_bytes(prefix, tail):
 def test_decode_wav_samples_total_over_arbitrary_bytes(prefix, tail):
     """decode_wav_samples never raises on malformed bytes: every branch
     clips to element-size multiples, so the worst outcome is None or an
-    empty/short sample array (the extract_audio_sample_stats
-    degrade-to-nulls contract depends on this)."""
+    empty/short sample array."""
     from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
         decode_wav_samples,
     )

@@ -10,17 +10,13 @@ from pyspark.sql import functions as F
 from ida_ice_energy_simulation_etl_pipeline_spark.operators.dedup import (
     lsh_candidate_pairs,
     ngram_jaccard_pairs,
-    simhash_near_pairs,
     with_minhash_signature,
 )
 from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-    decode_audio,
-    decode_image,
     documents_as_media,
     extract_features,
     frame_sample,
     resize_bytes,
-    resize_image,
     sample_frames,
 )
 from ida_ice_energy_simulation_etl_pipeline_spark.operators.similarity import (
@@ -117,16 +113,6 @@ def test_ngram_jaccard_cap_never_binds_on_fixture(spark, sf_dir):
     capped = sorted(map(tuple, ngram_jaccard_pairs(docs).collect()))
     uncapped = sorted(map(tuple, ngram_jaccard_pairs(docs, df_cap=None).collect()))
     assert capped == uncapped
-
-
-def test_simhash_near_pairs(planted_docs):
-    pairs = {
-        (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in simhash_near_pairs(planted_docs, max_hamming=3).collect()
-    }
-    assert pairs[(0, 1)] == 0  # identical text → identical simhash
-    assert (0, 2) in pairs  # near-dup within hamming 3
-    assert (4, 5) not in pairs
 
 
 def test_lsh_topk_finds_true_neighbors(spark):
@@ -435,31 +421,6 @@ def test_multimodal_plumbing(spark):
 
 
 def test_multimodal_stubs_are_explicit():
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        HAS_PIL,
-    )
-
-    if not HAS_PIL:  # this container: NON-PNG codec path is an explicit
-        # stub (a truncated magic is not a decodable PNG); baseline PNG
-        # decodes + resizes for real via the stdlib codec
-        import numpy as np
-
-        from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-            decode_png_pixels,
-            encode_png,
-        )
-
-        with pytest.raises(NotImplementedError):
-            decode_image(b"\x89PNG")
-        with pytest.raises(NotImplementedError):
-            resize_image(b"\x89PNG", 32, 32)
-        px = np.arange(64, dtype=np.uint8).reshape(8, 8)
-        assert (decode_image(encode_png(px)).reshape(8, 8) == px).all()
-        small = decode_png_pixels(resize_image(encode_png(px), 4, 4))
-        assert small.shape == (4, 4, 1)
-        assert (small.reshape(4, 4) == px[::2, ::2]).all()  # NN resample
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"RIFF")
     frames = frame_sample(b"0123456789abcdef", n_frames=4)
     assert len(frames) == 4 and frames[0] == b"0123"
     assert frame_sample(b"") == []
@@ -532,81 +493,6 @@ def test_parse_image_dims_real_headers():
     assert parse_image_dims(b"\xff\xd8\xff") is None  # truncated JPEG
 
 
-def test_image_features_default_decoder_needs_no_codec(spark):
-    """extract_image_features with NO decoder and NO PIL runs end-to-end
-    on real container headers — metadata decode is genuinely functional
-    in a library-free container, not a stub."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        HAS_PIL,
-        extract_image_features,
-    )
-
-    if HAS_PIL:
-        pytest.skip("PIL installed: this pins the dependency-free branch")
-    media = spark.createDataFrame(
-        [
-            (1, "image/png", _png(320, 200), "s1"),
-            (2, "image/jpeg", _jpeg(64, 32), "s1"),
-            (3, "image/bin", b"junk bytes", "s2"),
-        ],
-        ["item_id", "media_type", "payload", "source"],
-    )
-    rows = {r["item_id"]: r for r in extract_image_features(media).collect()}
-    assert (rows[1]["width"], rows[1]["height"], rows[1]["mode"]) == (320, 200, "PNG")
-    assert (rows[2]["width"], rows[2]["height"], rows[2]["mode"]) == (64, 32, "JPEG")
-    assert rows[3]["width"] is None and rows[3]["mode"] is None
-
-
-def test_image_features_wiring_with_injected_decoder(spark):
-    """The decode → mapInPandas wiring runs end-to-end with an injected
-    decoder (the closure ships with the task), so the Spark-side path is
-    real in this container even though the PIL codec itself is optional."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        extract_image_features,
-    )
-
-    def fake_decode(payload: bytes):
-        if not payload:
-            return None  # undecodable → null features
-        return (len(payload), len(payload) * 2, "FAKE")
-
-    docs = spark.createDataFrame(
-        [(1, "hello", "s1"), (2, "", "s2")], ["doc_id", "text", "source"]
-    )
-    rows = {
-        r["item_id"]: r
-        for r in extract_image_features(
-            documents_as_media(docs), decoder=fake_decode
-        ).collect()
-    }
-    assert (rows[1]["width"], rows[1]["height"], rows[1]["mode"]) == (5, 10, "FAKE")
-    assert rows[2]["width"] is None and rows[2]["mode"] is None
-
-
-def test_image_features_real_pil_decode(spark):
-    """Real-codec branch: exercised only where PIL is installed."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        HAS_PIL,
-        extract_image_features,
-    )
-
-    if not HAS_PIL:
-        pytest.skip("PIL not installed in this container")
-    from io import BytesIO
-
-    from PIL import Image
-
-    buf = BytesIO()
-    Image.new("RGB", (7, 3)).save(buf, format="PNG")
-    media = spark.createDataFrame(
-        [(1, "image/png", buf.getvalue(), "s1")],
-        ["item_id", "media_type", "payload", "source"],
-    )
-    row = extract_image_features(media).collect()[0]
-    # same vocabulary as the dependency-free fallback: container FORMAT
-    assert (row["width"], row["height"], row["mode"]) == (7, 3, "PNG")
-
-
 def test_progressive_jpeg_decode_against_independent_encoder():
     """Golden cross-check against an INDEPENDENT progressive encoder
     (PIL/libjpeg), not just the in-repo encode_jpeg_progressive twin — a
@@ -615,12 +501,10 @@ def test_progressive_jpeg_decode_against_independent_encoder():
     Skipped where PIL is absent (this container); the handcrafted-
     bitstream unit tests pin the same mechanisms dependency-free."""
     from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        HAS_PIL,
         decode_jpeg_pixels,
     )
 
-    if not HAS_PIL:
-        pytest.skip("PIL not installed in this container")
+    pytest.importorskip("PIL", reason="PIL not installed in this container")
     from io import BytesIO
 
     import numpy as np
@@ -721,21 +605,6 @@ def _skewed_frames(spark):
     return fact, dim
 
 
-def test_salted_join_matches_plain_join(spark):
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.skew import (
-        salted_join,
-    )
-
-    fact, dim = _skewed_frames(spark)
-    plain = fact.join(dim, ["k"]).select("row_id", "k", "v", "k_name")
-    salted = salted_join(fact, dim, ["k"], n_salts=4).select(
-        "row_id", "k", "v", "k_name"
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(
-        map(tuple, salted.collect())
-    )
-
-
 def test_salted_agg_matches_plain_agg(spark):
     from ida_ice_energy_simulation_etl_pipeline_spark.operators.skew import (
         salted_agg,
@@ -766,18 +635,6 @@ def test_salted_agg_matches_plain_agg(spark):
         ).collect()
     }
     assert plain == salted
-
-
-def test_salted_join_shuffles_on_salt(spark):
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.skew import (
-        salted_join,
-    )
-
-    fact, dim = _skewed_frames(spark)
-    df = salted_join(fact, dim, ["k"], n_salts=4)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    # the salt column participates in the join condition → shuffle key
-    assert "__salt" in plan
 
 
 def test_approx_distinct_error_bound(spark):
@@ -1358,29 +1215,6 @@ def test_parse_audio_meta_real_wav_header():
     assert parse_audio_meta(b"") is None
 
 
-def test_extract_audio_features_end_to_end(spark):
-    """WAV metadata extraction runs through mapInPandas with no codec:
-    real WAV rows get channels/rate/duration, junk rows get nulls."""
-    import struct
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        extract_audio_features,
-    )
-
-    media = spark.createDataFrame(
-        [
-            (1, "audio/wav", _wav(1, 16000, 16, 2.0), "s1"),
-            (2, "audio/mp3", b"ID3\x04junk", "s1"),
-        ],
-        ["item_id", "media_type", "payload", "source"],
-    )
-    rows = {r["item_id"]: r for r in extract_audio_features(media).collect()}
-    assert (rows[1]["n_channels"], rows[1]["sample_rate"]) == (1, 16000)
-    assert rows[1]["duration_s"] == 2.0 and rows[1]["truncated"] is False
-    assert rows[2]["n_channels"] is None and rows[2]["duration_s"] is None
-    assert rows[2]["truncated"] is None
-
-
 def _avi(
     width: int, height: int, n_frames: int, us_per_frame: int
 ) -> bytes:
@@ -1571,39 +1405,6 @@ def test_parse_video_meta_deeply_nested_lists_no_recursion():
     assert parse_video_meta(deep) == (320, 240, 10, 10.0, 1.0)
 
 
-def test_extract_video_features_end_to_end(spark):
-    """AVI + MP4 metadata extraction runs through mapInPandas with no
-    codec: real container rows get resolution/fps/duration, junk rows
-    (headerless MP4 fragments included) get nulls."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        extract_video_features,
-    )
-
-    media = spark.createDataFrame(
-        [
-            (1, "video/avi", _avi(1920, 1080, 300, 33_333), "s1"),
-            (2, "video/mp4", b"\x00\x00\x00\x18ftypmp42junk", "s1"),
-            (3, "video/avi", None, "s2"),
-            (4, "video/mp4", _mp4(1280, 720, 240, 1000, 8000), "s2"),
-        ],
-        "item_id long, media_type string, payload binary, source string",
-    )
-    rows = {r["item_id"]: r for r in extract_video_features(media).collect()}
-    assert (rows[1]["width"], rows[1]["height"], rows[1]["n_frames"]) == (
-        1920,
-        1080,
-        300,
-    )
-    assert abs(rows[1]["fps"] - 30.00030) < 1e-3
-    assert rows[2]["width"] is None and rows[3]["duration_s"] is None
-    assert (rows[4]["width"], rows[4]["height"], rows[4]["n_frames"]) == (
-        1280,
-        720,
-        240,
-    )
-    assert rows[4]["fps"] == 30.0 and rows[4]["duration_s"] == 8.0
-
-
 def test_parse_image_dims_edge_variants():
     """Round-4 review regressions: JPEG fill bytes before markers, OS/2
     core-header BMPs, and compressed-WAV duration via the byte-rate
@@ -1746,12 +1547,10 @@ def test_lm_perplexity_ranks_gibberish_above_fluent(spark, tmp_path):
 
 def test_pq_topk_recovers_planted_clusters(spark):
     """PQ asymmetric-distance ANN on tight clusters: quantized candidates
-    must still rank same-cluster neighbors first, and cluster members
-    must collapse to identical PQ codes (the 16x compression claim)."""
+    must still rank same-cluster neighbors first."""
     import math
 
     from ida_ice_energy_simulation_etl_pipeline_spark.operators.similarity import (
-        pq_encode,
         pq_topk,
     )
 
@@ -1769,17 +1568,6 @@ def test_pq_topk_recovers_planted_clusters(spark):
         assert r["query_id"] % 3 == r["neighbor_id"] % 3, (
             f"PQ ANN crossed clusters: {r}"
         )
-    codes = {
-        r["vec_id"]: tuple(r[f"code_{i}"] for i in range(4))
-        for r in pq_encode(emb, dim=16, m=4, k=8).collect()
-    }
-    # every member quantizes to SAME-cluster codebook entries in every
-    # subspace (the codebook holds ~3 entries per cluster, so members may
-    # split across them, but never across clusters)
-    for c in range(3):
-        for j in range(8):
-            for code in codes[j * 3 + c]:
-                assert code % 3 == c, f"vec {j * 3 + c} quantized cross-cluster"
 
 
 def test_passage_dedup_unique_corpus_is_identity(spark):
@@ -2325,35 +2113,6 @@ def test_png_decoder_rejects_unsupported_profiles():
     assert decode_png_pixels(bytes(encode_png(np.zeros((2, 2), np.uint8)))[:30]) is None
 
 
-def test_image_pixel_stats_decodes_real_pngs_in_spark(spark):
-    """The pixel-stats operator does REAL decode inside mapInPandas:
-    planted constant-color PNGs come back with exact means; a non-PNG
-    payload yields null stats."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        encode_png,
-        image_pixel_stats,
-    )
-
-    flat42 = encode_png(np.full((4, 6, 3), 42, dtype=np.uint8))
-    half = np.zeros((2, 2), dtype=np.uint8)
-    half[0] = 200  # mean 100, std 100
-    rows = [
-        (1, "image/png", bytearray(flat42), "s"),
-        (2, "image/png", bytearray(encode_png(half)), "s"),
-        (3, "text/plain", bytearray(b"not an image"), "s"),
-    ]
-    media = spark.createDataFrame(
-        rows, "item_id long, media_type string, payload binary, source string"
-    )
-    got = {r["item_id"]: r for r in image_pixel_stats(media).collect()}
-    assert (got[1]["width"], got[1]["height"], got[1]["channels"]) == (6, 4, 3)
-    assert got[1]["mean_px"] == 42.0 and got[1]["std_px"] == 0.0
-    assert got[2]["mean_px"] == 100.0 and got[2]["std_px"] == 100.0
-    assert got[3]["width"] is None and got[3]["mean_px"] is None
-
-
 def test_jpeg_huffman_and_dct_match_spec_vectors():
     """The canonical-code constructor and the DCT basis are the two
     pieces the encoder and decoder SHARE, so a mistake there would
@@ -2455,35 +2214,6 @@ def test_jpeg_decoder_gates_and_truncation():
         assert got is None or got.shape == (8, 8, 1)
 
 
-def test_image_pixel_stats_decodes_real_jpegs_in_spark(spark):
-    """The pixel-stats lane decodes planted JPEGs for real inside
-    mapInPandas, alongside PNGs — flat payloads come back with exact
-    means (quantization preserves a constant block exactly)."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        encode_jpeg,
-        image_pixel_stats,
-    )
-
-    flat = encode_jpeg(np.full((8, 16, 3), 200, dtype=np.uint8), quality=90)
-    gray = encode_jpeg(np.full((5, 7), 64, dtype=np.uint8), quality=90)
-    rows = [
-        (1, "image/jpeg", bytearray(flat), "s"),
-        (2, "image/jpeg", bytearray(gray), "s"),
-        (3, "image/jpeg", bytearray(flat[:40]), "s"),  # truncated → nulls
-    ]
-    media = spark.createDataFrame(
-        rows, "item_id long, media_type string, payload binary, source string"
-    )
-    got = {r["item_id"]: r for r in image_pixel_stats(media).collect()}
-    assert (got[1]["width"], got[1]["height"], got[1]["channels"]) == (16, 8, 3)
-    assert got[1]["mean_px"] == 200.0 and got[1]["std_px"] == 0.0
-    assert (got[2]["width"], got[2]["height"], got[2]["channels"]) == (7, 5, 1)
-    assert got[2]["mean_px"] == 64.0
-    assert got[3]["width"] is None and got[3]["mean_px"] is None
-
-
 def _pcm16_wav(n_ch, rate, frames):
     """WAV with REAL 16-bit PCM sample content: frames is a list of
     per-frame tuples of floats in [-1, 1]."""
@@ -2576,66 +2306,6 @@ def test_decode_wav_samples_truncated_data_chunk_drops_partial_sample():
     arr = decode_wav_samples(truncated)
     assert arr.shape == (2, 1)
     assert np.allclose(arr.ravel(), [0.5, -0.5], atol=1.5 / 32767)
-
-
-def test_audio_sample_stats_tolerates_truncated_wav(spark):
-    """extract_audio_sample_stats degrades malformed payloads to usable
-    rows (truncated tail dropped) instead of failing the stage."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        extract_audio_sample_stats,
-    )
-
-    wav = _pcm16_wav(1, 8000, [(0.5,), (-0.5,), (0.25,)])
-    rows = [
-        (1, "audio/wav", bytearray(wav[:-1]), "s"),  # truncated 16-bit
-        (2, "text/plain", bytearray(b"junk"), "s"),
-    ]
-    media = spark.createDataFrame(
-        rows, "item_id long, media_type string, payload binary, source string"
-    )
-    got = {r["item_id"]: r for r in extract_audio_sample_stats(media).collect()}
-    assert got[1]["n_frames"] == 2 and got[1]["peak"] is not None
-    assert got[2]["n_frames"] is None and got[2]["rms"] is None
-
-
-def test_decode_audio_returns_samples_for_pcm_and_gates_others():
-    import pytest
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_audio,
-    )
-
-    arr = decode_audio(_pcm16_wav(1, 8000, [(0.5,), (-0.5,)]))
-    assert arr.shape == (2, 1)
-    with pytest.raises(NotImplementedError):
-        decode_audio(b"ID3\x04 not a wav")
-
-
-def test_extract_audio_sample_stats_end_to_end(spark):
-    """Sample-level stats (rms / peak / zero-crossing) computed from
-    REAL decoded PCM through the Arrow mapInPandas path; undecodable
-    rows yield nulls instead of poisoning the batch."""
-    import math
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        extract_audio_sample_stats,
-    )
-
-    # mono square wave +0.5/-0.5: rms 0.5, peak 0.5, every step crosses
-    frames = [(0.5,), (-0.5,), (0.5,), (-0.5,)]
-    media = spark.createDataFrame(
-        [
-            (1, "audio/wav", bytearray(_pcm16_wav(1, 8000, frames)), "s"),
-            (2, "audio/mp3", bytearray(b"ID3\x04junk"), "s"),
-        ],
-        "item_id long, media_type string, payload binary, source string",
-    )
-    got = {r["item_id"]: r for r in extract_audio_sample_stats(media).collect()}
-    assert got[1]["n_frames"] == 4 and got[1]["n_channels"] == 1
-    assert math.isclose(got[1]["rms"], 0.5, rel_tol=1e-3)
-    assert math.isclose(got[1]["peak"], 0.5, rel_tol=1e-3)
-    assert got[1]["zero_cross_rate"] == 1.0
-    assert got[2]["n_frames"] is None and got[2]["rms"] is None
 
 
 def test_table_profile_approx_within_hll_tolerance(spark):
@@ -3387,15 +3057,13 @@ def test_decode_video_mjpeg_avi_frames():
     """An MJPEG AVI decodes frame-by-frame through the stdlib JPEG
     codec: a handcrafted RIFF 'AVI ' with hdrl + movi carrying three
     JPEG frames (one of them PROGRESSIVE) yields three pixel arrays in
-    stream order; non-MJPEG video chunks stay gated."""
+    stream order; an AVI whose video chunks are not JPEG yields None."""
     import struct
 
     import numpy as np
-    import pytest
 
     from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
         decode_mjpeg_frames,
-        decode_video,
         encode_jpeg,
         encode_jpeg_progressive,
     )
@@ -3422,7 +3090,7 @@ def test_decode_video_mjpeg_avi_frames():
     riff_body = b"AVI " + hdrl + movi
     avi = b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
 
-    frames = decode_video(avi)
+    frames = decode_mjpeg_frames(avi)
     assert len(frames) == 3
     for got, want in zip(frames, frames_px):
         assert got.shape == (16, 16, 3)
@@ -3433,8 +3101,6 @@ def test_decode_video_mjpeg_avi_frames():
     riff2 = b"AVI " + hdrl + movi2
     bad = b"RIFF" + struct.pack("<I", len(riff2)) + riff2
     assert decode_mjpeg_frames(bad) is None
-    with pytest.raises(NotImplementedError):
-        decode_video(bad)
     assert decode_mjpeg_frames(b"RIFF\x00\x00\x00\x00WAVE") is None
 
 
@@ -3638,24 +3304,6 @@ def test_parse_image_dims_tiff():
     blob = b"II*\x00" + struct.pack("<I", 8) + ifd
     assert parse_image_dims(blob) == (640, 480, "TIFF")
     assert parse_image_dims(b"II*\x00\x08\x00\x00\x00") is None
-
-
-def test_resize_image_stdlib_formats_resample_to_png():
-    """Without PIL, resize decodes ANY stdlib-decodable format and
-    re-encodes as PNG — a flat-color JPEG resamples to the same color,
-    and a GIF's palette pixels survive the index-map resample."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators import multimodal as M
-
-    if M.HAS_PIL:
-        import pytest
-
-        pytest.skip("stdlib resample path only runs without PIL")
-    flat = np.full((16, 16, 3), 77, dtype=np.uint8)
-    out = M.decode_png_pixels(M.resize_image(M.encode_jpeg(flat, 95), 4, 4))
-    assert out.shape == (4, 4, 3)
-    assert abs(out.astype(int).mean() - 77) < 3  # JPEG-lossy tolerance
 
 
 def test_bpe_train_recounts_after_each_merge(spark):
