@@ -217,11 +217,14 @@ def register_temp_views(spark: SparkSession, star: dict[str, DataFrame]) -> None
 
 
 def create_views(spark: SparkSession, *, database: str = "energy") -> None:
-    """The three analytical views (reference load:67-164)."""
+    """The three analytical views (reference load:67-164), created in
+    ``database`` over its tables.  Every name is qualified, so temp views
+    named like the star tables cannot shadow the tables, and the
+    session's current database is left as it was."""
     _check_identifier(database)
-    spark.sql(f"USE {database}")
     for view, body in VIEW_DDL.items():
-        spark.sql(f"CREATE OR REPLACE VIEW {view} AS {body}")
+        body = re.sub(r"\b(FROM|JOIN)(\s+)(\w+)", rf"\1\2{database}.\3", body)
+        spark.sql(f"CREATE OR REPLACE VIEW {database}.{view} AS {body}")
 
 
 def query(spark: SparkSession, sql: str) -> DataFrame:

@@ -1,22 +1,22 @@
 """Multimodal-column plumbing: opaque ``binary`` payloads + typed metadata.
 
-Real at this layer: schema, partitioning, Arrow-batched ``mapInPandas``
-feature extraction and the driver-contract queries, with no codec
-library at all.  Pixel decode is pure stdlib+numpy for PNG, first-frame
-GIF, BMP, baseline TIFF and Huffman JPEG (``decode_image_pixels``, which
-``extract_pixel_stats`` runs per row); EXIF tags come from the TIFF IFD
-walk (``parse_exif``).  The codec kernels beside them — container
-header parsers (``parse_image_dims``, ``parse_audio_meta``,
-``parse_video_meta``: the RIFF chunk walk, iterative over AVI's nested
-LIST headers, and the MP4/ISO-BMFF box walk), WAV sample decode
-(``decode_wav_samples``) and Motion-JPEG frames
-(``decode_mjpeg_frames``) — are dependency-free too; the encoders
-(``encode_png``, ``encode_jpeg``, ``encode_jpeg_progressive``) are the
-independent producers the decoder tests compare against.  Still
-stubbed (clearly): frame sampling and resize (``frame_sample`` /
-``resize_bytes`` are deterministic byte-level fakes with the real batch
-shape); perceptual audio and inter-frame video codecs need a decoder
-library.
+Five driver-contract queries run everything here, each through
+Arrow-batched ``mapInPandas`` stages with no codec library:
+
+* text lift — ``documents_as_media`` turns document text into UTF-8
+  payload bytes; ``extract_features`` rolls them up per source
+  (``multimodal_features``);
+* frame and resize fakes — ``frame_sample`` / ``resize_bytes`` are
+  deterministic byte-level stand-ins with a real video pipeline's batch
+  shape (``multimodal_frames``, and ``multimodal_pipeline`` joining both);
+* the EXIF walk — ``parse_exif`` reads the TIFF IFDs and their Exif/GPS
+  sub-IFDs of payloads that ``synth_exif_tiff`` writes (``exif_census``);
+* the LZW-TIFF decode — ``decode_tiff_pixels`` (strip walk, TIFF LZW,
+  predictor) over payloads that ``synth_lzw_tiff`` writes with
+  ``_tiff_lzw_encode`` (``lzw_tiff_census``).
+
+``tests/test_contract.py::test_multimodal_queries_enter_every_definition``
+holds the module to what those queries execute.
 
 At 100 TB the payload column dominates IO: feature extraction is map-only
 (no shuffle), and `spark.sql.files.maxPartitionBytes` bounds the Arrow
@@ -50,2122 +50,14 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _riff_chunks(payload: bytes, lo: int, hi: int):
-    """Yield ``(chunk_id, body_lo, body_hi)`` over one RIFF chunk list —
-    the ONE place the word-alignment and bounds rules live, shared by the
-    WAV parsers and the AVI walk (robustness fixes land once).  Bodies
-    are clipped to ``hi`` so a truncated payload yields short bodies
-    instead of out-of-range slices."""
-    import struct
-
-    pos = lo
-    while pos + 8 <= hi:
-        cid = payload[pos : pos + 4]
-        size = struct.unpack("<I", payload[pos + 4 : pos + 8])[0]
-        body_lo = pos + 8
-        yield cid, body_lo, min(body_lo + size, hi)
-        pos = body_lo + size + (size % 2)  # chunks are word-aligned
-
-
-def _g711_ulaw_table() -> "object":
-    """256-entry µ-law → linear int16 expansion table (ITU G.711)."""
-    import numpy as np
-
-    out = np.empty(256, dtype=np.int32)
-    for b in range(256):
-        u = ~b & 0xFF
-        t = (((u & 0x0F) << 3) + 0x84) << ((u & 0x70) >> 4)
-        out[b] = (0x84 - t) if (u & 0x80) else (t - 0x84)
-    return out
-
-
-def _g711_alaw_table() -> "object":
-    """256-entry A-law → linear int16 expansion table (ITU G.711)."""
-    import numpy as np
-
-    out = np.empty(256, dtype=np.int32)
-    for b in range(256):
-        a = b ^ 0x55
-        t = (a & 0x0F) << 4
-        seg = (a & 0x70) >> 4
-        if seg == 0:
-            t += 8
-        elif seg == 1:
-            t += 0x108
-        else:
-            t = (t + 0x108) << (seg - 1)
-        out[b] = t if (a & 0x80) else -t
-    return out
-
-
-_IMA_STEP_TABLE = [
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-]
-_IMA_INDEX_TABLE = [-1, -1, -1, -1, 2, 4, 6, 8]
-
-
-def _ima_adpcm_decode_block(
-    body: bytes, n_ch: int, block_align: int
-) -> "object | None":
-    """Decode ONE IMA ADPCM block → (n_samples, n_ch) int16 array.
-    Block layout: per-channel 4-byte header (int16 predictor, uint8 step
-    index, reserved), then nibble data interleaved per channel in 4-byte
-    (8-nibble) groups; low nibble first."""
-    import struct
-
-    import numpy as np
-
-    if len(body) < 4 * n_ch:
-        return None
-    pred = [0] * n_ch
-    index = [0] * n_ch
-    for c in range(n_ch):
-        pred[c], index[c] = struct.unpack("<hB", body[4 * c : 4 * c + 3])
-        if index[c] > 88:
-            return None
-    data = body[4 * n_ch : block_align]
-    n_per_ch = len(data) // (4 * n_ch) * 8  # nibbles per channel
-    out = np.empty((1 + n_per_ch, n_ch), dtype=np.int16)
-    out[0] = pred
-    # walk 4-byte groups, channel-interleaved
-    n_groups = len(data) // (4 * n_ch)
-    for g in range(n_groups):
-        for c in range(n_ch):
-            chunk = data[(g * n_ch + c) * 4 : (g * n_ch + c) * 4 + 4]
-            for i in range(8):
-                nib = (chunk[i // 2] >> (4 * (i % 2))) & 0x0F
-                step = _IMA_STEP_TABLE[index[c]]
-                diff = step >> 3
-                if nib & 1:
-                    diff += step >> 2
-                if nib & 2:
-                    diff += step >> 1
-                if nib & 4:
-                    diff += step
-                p = pred[c] - diff if nib & 8 else pred[c] + diff
-                pred[c] = max(-32768, min(32767, p))
-                index[c] = max(
-                    0, min(88, index[c] + _IMA_INDEX_TABLE[nib & 7])
-                )
-                out[1 + g * 8 + i, c] = pred[c]
-    return out
-
-
-def decode_wav_samples(payload: bytes):
-    """REAL sample decode in pure stdlib + numpy.
-
-    Walks the RIFF chunk list (same traversal as parse_audio_meta),
-    then reinterprets the ``data`` chunk: integer PCM (format code 1;
-    8-bit unsigned, 16/32-bit signed little-endian, 24-bit packed),
-    IEEE float (code 3; f32/f64), the G.711 COMPRESSED telephony
-    codecs (code 6 A-law, code 7 µ-law — table expansion) and IMA
-    ADPCM (code 0x11 — block-based 4-bit differential decode, mono or
-    stereo) all decode to a float64 (n_frames, n_channels) array
-    scaled to [-1, 1].  Returns None for anything else (MP3/GSM/
-    vendor ADPCM variants need a real codec library), so callers can
-    gate cleanly.
-    """
-    import struct
-
-    import numpy as np
-
-    if not payload or len(payload) < 12:
-        return None
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    fmt = None
-    block_align = 0
-    data = None
-    fact_frames = None
-    for cid, lo, hi in _riff_chunks(payload, 12, len(payload)):
-        if cid == b"fmt " and hi - lo >= 16:
-            code, n_ch = struct.unpack("<HH", payload[lo : lo + 4])
-            block_align = struct.unpack("<H", payload[lo + 12 : lo + 14])[0]
-            bits = struct.unpack("<H", payload[lo + 14 : lo + 16])[0]
-            fmt = (code, n_ch, bits)
-        elif cid == b"fact" and hi - lo >= 4:
-            # dwSampleLength: the DECLARED per-channel frame count —
-            # compressed codecs pad their final block, so the block walk
-            # over-produces without this bound
-            fact_frames = struct.unpack("<I", payload[lo : lo + 4])[0]
-        elif cid == b"data":
-            data = payload[lo:hi]
-    if fmt is None or data is None:
-        return None
-    code, n_ch, bits = fmt
-    if code == 6 or code == 7:  # G.711 A-law / µ-law
-        table = _g711_alaw_table() if code == 6 else _g711_ulaw_table()
-        arr = (
-            table[np.frombuffer(data, dtype=np.uint8)].astype(np.float64)
-            / 32768.0
-        )
-        n_ch = max(int(n_ch), 1)
-        frames = arr[: len(arr) // n_ch * n_ch].reshape(-1, n_ch)
-        # byte-per-sample codecs rarely need the fact bound, but honor a
-        # declared shorter frame count when present (same contract as
-        # the block-padded ADPCM path)
-        return frames[:fact_frames] if fact_frames is not None else frames
-    if code == 0x11:  # IMA ADPCM
-        n_ch = max(int(n_ch), 1)
-        if bits != 4 or block_align < 4 * n_ch:
-            return None
-        blocks = []
-        for off in range(0, len(data) // block_align * block_align, block_align):
-            blk = _ima_adpcm_decode_block(
-                data[off : off + block_align], n_ch, block_align
-            )
-            if blk is None:
-                return None
-            blocks.append(blk)
-        if not blocks:
-            return None
-        full = np.vstack(blocks)
-        # the encoder pads the final block's nibble area — without the
-        # fact chunk's declared frame count those padding nibbles decode
-        # to phantom trailing samples and skew rms/zero-crossing stats
-        if fact_frames is not None:
-            full = full[:fact_frames]
-        return full.astype(np.float64) / 32768.0
-    # A truncated payload can leave the data chunk shorter than a whole
-    # number of samples; np.frombuffer refuses partial elements, so every
-    # branch clips to an element-size multiple (the 24-bit packed path
-    # already did) — malformed tails drop the final partial sample rather
-    # than raising mid-stage.
-    if code == 1:  # integer PCM
-        if bits == 8:
-            arr = (
-                np.frombuffer(data, dtype=np.uint8).astype(np.float64) - 128.0
-            ) / 128.0
-        elif bits == 16:
-            arr = (
-                np.frombuffer(data[: len(data) // 2 * 2], dtype="<i2").astype(
-                    np.float64
-                )
-                / 32768.0
-            )
-        elif bits == 24:
-            raw = np.frombuffer(
-                data[: len(data) // 3 * 3], dtype=np.uint8
-            ).reshape(-1, 3)
-            vals = (
-                raw[:, 0].astype(np.int32)
-                | (raw[:, 1].astype(np.int32) << 8)
-                | (raw[:, 2].astype(np.int32) << 16)
-            )
-            vals = np.where(vals >= 1 << 23, vals - (1 << 24), vals)
-            arr = vals.astype(np.float64) / float(1 << 23)
-        elif bits == 32:
-            arr = (
-                np.frombuffer(data[: len(data) // 4 * 4], dtype="<i4").astype(
-                    np.float64
-                )
-                / 2147483648.0
-            )
-        else:
-            return None
-    elif code == 3:  # IEEE float
-        if bits == 32:
-            arr = np.frombuffer(data[: len(data) // 4 * 4], dtype="<f4").astype(
-                np.float64
-            )
-        elif bits == 64:
-            arr = np.frombuffer(data[: len(data) // 8 * 8], dtype="<f8")
-        else:
-            return None
-    else:
-        return None
-    n_ch = max(int(n_ch), 1)
-    return arr[: len(arr) // n_ch * n_ch].reshape(-1, n_ch)
-
-
-def parse_audio_meta(
-    payload: bytes,
-) -> tuple[int, int, int, float, bool] | None:
-    """REAL audio metadata decode in pure Python — WAV/RIFF container
-    headers carry everything a curation filter needs: returns
-    (n_channels, sample_rate, bits_per_sample, duration_s, truncated)
-    by walking the RIFF chunk list (fmt → data), or None for a non-WAV
-    payload.  Sample decode still needs a codec; duration/rate filtering
-    does not.
-
-    ``duration_s`` reports the header's DECLARED data size (a derived
-    n_ch*rate*bits/8 figure would misreport compressed WAVs — ADPCM
-    bits=4, GSM bits=0 — by 2-13x), so a corrupt payload with an
-    inflated size field (up to 0xFFFFFFFF) can claim an arbitrarily
-    large duration; ``truncated`` flags exactly that case (declared data
-    bytes > bytes actually present), letting curation filters tell
-    header intent from actual content instead of being fooled by
-    malformed payloads.
-    """
-    import struct
-
-    if not payload or len(payload) < 12:
-        return None
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        return None
-    fmt = None
-    data_size = None
-    data_present = 0
-    for cid, lo, hi in _riff_chunks(payload, 12, len(payload)):
-        if cid == b"fmt " and hi - lo >= 16:
-            _, n_ch, rate, byte_rate = struct.unpack(
-                "<HHII", payload[lo : lo + 12]
-            )
-            bits = struct.unpack("<H", payload[lo + 14 : lo + 16])[0]
-            fmt = (n_ch, rate, bits, byte_rate)
-        elif cid == b"data":
-            # declared size (header intent) + clipped body actually present
-            data_size = struct.unpack(
-                "<I", payload[lo - 4 : lo]
-            )[0]
-            data_present = hi - lo
-    if fmt is None or data_size is None:
-        return None
-    n_ch, rate, bits, byte_rate = fmt
-    duration = data_size / byte_rate if byte_rate else 0.0
-    return n_ch, rate, bits, duration, data_size > data_present
-
-
-def parse_video_meta(payload: bytes) -> tuple[int, int, int, float, float] | None:
-    """REAL video container metadata in pure stdlib for the two dominant
-    corpus containers: AVI (the RIFF chunk walk the WAV parsers use,
-    generalized to nested LIST chunks) and MP4/ISO-BMFF (a length-prefixed
-    box walk over moov → mvhd/trak).  Either header set carries
-    everything a curation filter needs without touching a codec: returns
-    (width, height, n_frames, fps, duration_s), or None for an
-    unrecognized payload.  FRAME decode of inter-frame codecs still
-    needs a codec library (Motion-JPEG frames decode via
-    decode_mjpeg_frames); resolution/duration/fps filtering does not.
-    """
-    if not payload or len(payload) < 12:
-        return None
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-        return _parse_avi_meta(payload)
-    if payload[4:8] == b"ftyp":
-        return _parse_mp4_meta(payload)
-    return None
-
-
-def _parse_avi_meta(payload: bytes) -> tuple[int, int, int, float, float] | None:
-    """AVI branch: iterative breadth-first walk over nested LIST chunks
-    (explicit queue, NOT recursion: a corrupt/adversarial payload can
-    nest LISTs thousands deep, which a recursive walk turns into
-    RecursionError mid-Spark-stage).  Total work is linear in chunk
-    count; the avih main header of a well-formed AVI is unique, so
-    traversal order doesn't change the result."""
-    import struct
-    from collections import deque
-
-    ranges = deque([(12, len(payload))])
-    while ranges:
-        lo, hi = ranges.popleft()
-        for cid, body_lo, body_hi in _riff_chunks(payload, lo, hi):
-            if cid == b"LIST" and body_hi - body_lo >= 4:
-                # LIST body = 4-byte list type, then sub-chunks
-                ranges.append((body_lo + 4, body_hi))
-            elif cid == b"avih" and body_hi - body_lo >= 40:
-                (
-                    us_per_frame,
-                    _max_bps,
-                    _padding,
-                    _flags,
-                    n_frames,
-                    _initial,
-                    _streams,
-                    _bufsize,
-                    width,
-                    height,
-                ) = struct.unpack("<10I", payload[body_lo : body_lo + 40])
-                fps = 1e6 / us_per_frame if us_per_frame else 0.0
-                duration = n_frames * us_per_frame / 1e6
-                return int(width), int(height), int(n_frames), fps, duration
-    return None
-
-
-def _mp4_boxes(payload: bytes, lo: int, hi: int):
-    """Yield ``(box_type, body_lo, body_hi)`` over one ISO-BMFF box list —
-    the MP4 twin of :func:`_riff_chunks` and, like it, the ONE place the
-    size/bounds rules live: big-endian 32-bit sizes, size==1 → 64-bit
-    largesize header, size==0 → box extends to the end of the range;
-    undersized or range-overrunning sizes clip to ``hi`` and stop, so a
-    corrupt payload yields short bodies instead of slices out of range or
-    an infinite loop."""
-    pos = lo
-    while pos + 8 <= hi:
-        size = int.from_bytes(payload[pos : pos + 4], "big")
-        btype = payload[pos + 4 : pos + 8]
-        body_lo = pos + 8
-        header = 8
-        if size == 1:
-            if pos + 16 > hi:
-                return
-            size = int.from_bytes(payload[pos + 8 : pos + 16], "big")
-            body_lo = pos + 16
-            header = 16
-        elif size == 0:
-            size = hi - pos
-        if size < header or pos + size > hi:
-            # corrupt/truncated size field: clip the body and stop —
-            # nothing after an unparseable length can be trusted
-            yield btype, body_lo, hi
-            return
-        yield btype, body_lo, pos + size
-        pos += size
-
-
-def _parse_mp4_meta(payload: bytes) -> tuple[int, int, int, float, float] | None:
-    """MP4/ISO-BMFF branch: movie grid from ``moov → mvhd`` (timescale +
-    duration), first video track from ``moov → trak`` subtrees — handler
-    ``vide`` (``mdia → hdlr``), 16.16-fixed resolution (``tkhd``, version
-    0/1 layouts), sample count (``stbl → stsz``).  fps derives as
-    n_frames / movie duration — the honest curation figure without
-    decoding per-sample timing (stts).  Same iterative explicit-queue
-    discipline as the AVI walk."""
-    from collections import deque
-
-    timescale = None
-    duration_ticks = None
-    traks: list[tuple[int, int]] = []
-    for btype, lo, hi in _mp4_boxes(payload, 0, len(payload)):
-        if btype != b"moov":
-            continue
-        for b2, l2, h2 in _mp4_boxes(payload, lo, hi):
-            if b2 == b"mvhd" and h2 - l2 >= 20:
-                ver = payload[l2]
-                if ver == 1:
-                    # a v1 box shorter than its 32-byte minimum is
-                    # truncated/corrupt — reading it with v0 offsets
-                    # would report mid-ctime bytes as duration, so skip
-                    if h2 - l2 >= 32:
-                        timescale = int.from_bytes(
-                            payload[l2 + 20 : l2 + 24], "big"
-                        )
-                        duration_ticks = int.from_bytes(
-                            payload[l2 + 24 : l2 + 32], "big"
-                        )
-                else:
-                    timescale = int.from_bytes(payload[l2 + 12 : l2 + 16], "big")
-                    duration_ticks = int.from_bytes(
-                        payload[l2 + 16 : l2 + 20], "big"
-                    )
-            elif b2 == b"trak":
-                traks.append((l2, h2))
-    if timescale is None or not traks:
-        return None
-    duration = duration_ticks / timescale if timescale else 0.0
-    for lo, hi in traks:
-        handler = None
-        width = height = None
-        n_samples = None
-        q = deque([(lo, hi)])
-        while q:
-            l2, h2 = q.popleft()
-            for bt, bl, bh in _mp4_boxes(payload, l2, h2):
-                if bt in (b"mdia", b"minf", b"stbl"):
-                    q.append((bl, bh))
-                elif bt == b"tkhd":
-                    ver = payload[bl] if bh > bl else 0
-                    # v0 body: ver/flags 4 + times/id/reserved/duration 20
-                    # + reserved 8 + layer/alt/vol/pad 8 + matrix 36 = 76;
-                    # v1 carries 64-bit times/duration → 88
-                    off = 88 if ver == 1 else 76
-                    if bh - bl >= off + 8:
-                        width = (
-                            int.from_bytes(payload[bl + off : bl + off + 4], "big")
-                            / 65536.0
-                        )
-                        height = (
-                            int.from_bytes(
-                                payload[bl + off + 4 : bl + off + 8], "big"
-                            )
-                            / 65536.0
-                        )
-                elif bt == b"hdlr" and bh - bl >= 12:
-                    handler = payload[bl + 8 : bl + 12]
-                elif bt == b"stsz" and bh - bl >= 12:
-                    n_samples = int.from_bytes(payload[bl + 8 : bl + 12], "big")
-        if handler == b"vide" and width is not None:
-            n_frames = int(n_samples or 0)
-            fps = n_frames / duration if duration > 0 else 0.0
-            return int(width), int(height), n_frames, fps, duration
-    return None
-
-
-def decode_mjpeg_frames(payload: bytes) -> "list | None":
-    """REAL video FRAME decode for Motion-JPEG AVIs — each video chunk
-    in the ``movi`` LIST is an independent JPEG, so the pure-stdlib
-    JPEG codec decodes the movie frame-by-frame.  Walks the RIFF tree
-    with the same iterative queue as _parse_avi_meta, collects
-    ``##dc``/``##db`` stream chunks whose body starts with a JPEG SOI,
-    and returns the list of (h, w, ch) uint8 frame arrays (undecodable
-    frames are skipped).  None for non-AVI payloads or AVIs whose video
-    chunks are not JPEG-coded."""
-    from collections import deque
-
-    if (
-        not payload
-        or len(payload) < 12
-        or payload[:4] != b"RIFF"
-        or payload[8:12] != b"AVI "
-    ):
-        return None
-    frames = []
-    saw_video_chunk = False
-    ranges = deque([(12, len(payload))])
-    while ranges:
-        lo, hi = ranges.popleft()
-        for cid, body_lo, body_hi in _riff_chunks(payload, lo, hi):
-            if cid == b"LIST" and body_hi - body_lo >= 4:
-                ranges.append((body_lo + 4, body_hi))
-            elif (
-                len(cid) == 4
-                and cid[:2].isdigit()
-                and cid[2:] in (b"dc", b"db")
-            ):
-                saw_video_chunk = True
-                body = payload[body_lo:body_hi]
-                if body[:2] == b"\xff\xd8":
-                    px = decode_jpeg_pixels(body)
-                    if px is not None:
-                        frames.append(px)
-    if not saw_video_chunk or not frames:
-        return None
-    return frames
-
-
-def parse_image_dims(payload: bytes) -> tuple[int, int, str] | None:
-    """REAL image metadata decode in pure Python — no codec library.
-
-    Container headers carry the dimensions, so width/height/format for
-    PNG, GIF, BMP, and JPEG (SOF marker scan) parse with ``struct``
-    alone; only PIXEL decode needs a codec.  This is what makes the
-    default feature-extraction path genuinely functional in a
-    library-free environment — dimension/format filtering (the common
-    multimodal curation predicate) never needed PIL.
-    Returns (width, height, format) or None for an unknown container.
-    """
-    import struct
-
-    if not payload or len(payload) < 10:
-        return None
-    if payload[:8] == b"\x89PNG\r\n\x1a\n" and len(payload) >= 24:
-        w, h = struct.unpack(">II", payload[16:24])
-        return int(w), int(h), "PNG"
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        w, h = struct.unpack("<HH", payload[6:10])
-        return int(w), int(h), "GIF"
-    if payload[:2] == b"BM" and len(payload) >= 26:
-        dib = struct.unpack("<I", payload[14:18])[0]
-        if dib == 12:  # OS/2 BITMAPCOREHEADER: uint16 dims
-            w, h = struct.unpack("<HH", payload[18:22])
-            return int(w), int(h), "BMP"
-        if dib >= 40:  # BITMAPINFOHEADER family: int32 dims
-            w, h = struct.unpack("<ii", payload[18:26])
-            return abs(int(w)), abs(int(h)), "BMP"  # negative h = top-down
-        return None
-    if payload[:4] in (b"II*\x00", b"MM\x00*"):
-        bo = "<" if payload[:1] == b"I" else ">"
-        try:
-            ifd = struct.unpack(bo + "I", payload[4:8])[0]
-            n = struct.unpack(bo + "H", payload[ifd : ifd + 2])[0]
-            dims = {}
-            for e in range(n):
-                lo = ifd + 2 + 12 * e
-                tag, typ = struct.unpack(bo + "HH", payload[lo : lo + 4])
-                if tag in (256, 257) and typ in (3, 4):
-                    fmt = "H" if typ == 3 else "I"
-                    dims[tag] = struct.unpack(
-                        bo + fmt, payload[lo + 8 : lo + 8 + (2 if typ == 3 else 4)]
-                    )[0]
-            if 256 in dims and 257 in dims:
-                return int(dims[256]), int(dims[257]), "TIFF"
-        except (struct.error, IndexError):
-            pass
-        return None
-    if payload[:2] == b"\xff\xd8":
-        i = 2
-        while i + 4 <= len(payload):
-            if payload[i] != 0xFF:
-                i += 1
-                continue
-            marker = payload[i + 1]
-            if marker == 0xFF:
-                i += 1  # fill byte before a marker (B.1.1.2)
-                continue
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2  # standalone markers carry no length
-                continue
-            seg_len = struct.unpack(">H", payload[i + 2 : i + 4])[0]
-            if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-                if i + 9 <= len(payload):
-                    h, w = struct.unpack(">HH", payload[i + 5 : i + 9])
-                    return int(w), int(h), "JPEG"
-                return None
-            i += 2 + seg_len
-    return None
-
-
-# ---------------------------------------------------------------------------
-# Pure-python PNG PIXEL codec — real decode with NO imaging library.
-#
-# PNG is deflate + per-scanline byte filters, both fully expressible
-# with the stdlib (`zlib`, `struct`): this closes the "pixel decode is
-# PIL-gated" gap for the one container a data pipeline can always
-# produce itself.  Supports the baseline profile (8-bit depth, gray /
-# gray+alpha / RGB / RGBA, non-interlaced) and all five scanline
-# filters; anything else returns None rather than guessing.  The
-# unfilter loop is per-scanline python over numpy rows — fine at
-# thumbnail scale (the curation use case); a production pipeline
-# decoding megapixel assets swaps in a codec library via `decoder=`,
-# same as before.
-_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # colortype -> samples/pixel
-# spec-legal bit depths per color type (PNG spec §11.2.2)
-_PNG_DEPTHS = {
-    0: (1, 2, 4, 8, 16),
-    2: (8, 16),
-    3: (1, 2, 4, 8),
-    4: (8, 16),
-    6: (8, 16),
-}
-# Adam7 interlace passes: (x0, y0, dx, dy) — PNG spec §8.2 pass order
-_PNG_ADAM7 = [
-    (0, 0, 8, 8),
-    (4, 0, 8, 8),
-    (0, 4, 4, 8),
-    (2, 0, 4, 4),
-    (0, 2, 2, 4),
-    (1, 0, 2, 2),
-    (0, 1, 1, 2),
-]
-
-
-def _png_unfilter(raw: bytes, offset: int, h: int, stride: int, bpp: int):
-    """Undo the per-scanline filters over ``h`` rows of ``stride`` bytes
-    starting at ``offset`` (each row prefixed by its filter byte).
-    ``bpp`` is the filter's left-neighbour distance in BYTES (1 for
-    sub-byte depths, samples×2 for 16-bit).  Returns the (h, stride)
-    uint8 array, or None on truncation / unknown filter."""
-    import numpy as np
-
-    if len(raw) - offset < h * (stride + 1):
-        return None
-    out = np.empty((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        base = offset + y * (stride + 1)
-        ftype = raw[base]
-        row = np.frombuffer(
-            raw, dtype=np.uint8, count=stride, offset=base + 1
-        ).astype(np.int32)
-        if ftype == 0:  # None
-            cur = row
-        elif ftype == 2:  # Up
-            cur = (row + prev) & 0xFF
-        else:  # Sub / Average / Paeth need the left neighbour: scan
-            cur = np.empty(stride, dtype=np.int32)
-            for x in range(stride):
-                a = cur[x - bpp] if x >= bpp else 0  # left
-                b = int(prev[x])  # up
-                if ftype == 1:  # Sub
-                    pred = a
-                elif ftype == 3:  # Average
-                    pred = (a + b) // 2
-                elif ftype == 4:  # Paeth
-                    c = int(prev[x - bpp]) if x >= bpp else 0
-                    p = a + b - c
-                    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                    pred = a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-                else:
-                    return None
-                cur[x] = (row[x] + pred) & 0xFF
-        out[y] = cur.astype(np.uint8)
-        prev = out[y]
-    return out
-
-
-def decode_png_pixels(payload: bytes) -> "object | None":
-    """Decode a PNG to an (h, w, channels) uint8 numpy array — pure
-    stdlib (zlib + struct), no PIL.  Covers every spec-legal profile:
-    gray/RGB/gray+alpha/RGBA at 8 and 16 bit (16-bit samples downscale
-    to their high byte — the standard 16→8 reduction), palette at
-    1/2/4/8 bit (PLTE expansion, tRNS palette alpha → RGBA), sub-byte
-    grayscale (1/2/4 bit, scaled to full range), and Adam7 interlacing
-    for all of the above.  None for non-PNG or malformed payloads; the
-    only un-decoded tRNS form is the color-key variant on non-palette
-    images (the image still decodes, without the alpha key)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    if not payload or not payload.startswith(_PNG_MAGIC):
-        return None
-    pos, w = len(_PNG_MAGIC), None
-    idat = bytearray()
-    plte = trns = None
-    try:
-        while pos + 8 <= len(payload):
-            (length,) = struct.unpack(">I", payload[pos : pos + 4])
-            ctype = payload[pos + 4 : pos + 8]
-            data = payload[pos + 8 : pos + 8 + length]
-            if len(data) < length:
-                return None  # truncated
-            if ctype == b"IHDR":
-                w, h, depth, color, comp, filt, interlace = struct.unpack(
-                    ">IIBBBBB", data
-                )
-                if (
-                    color not in _PNG_CHANNELS
-                    or depth not in _PNG_DEPTHS[color]
-                    or comp != 0
-                    or filt != 0
-                    or interlace not in (0, 1)
-                ):
-                    return None
-            elif ctype == b"PLTE":
-                if length % 3:
-                    return None
-                plte = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3)
-            elif ctype == b"tRNS":
-                trns = np.frombuffer(data, dtype=np.uint8)
-            elif ctype == b"IDAT":
-                idat += data
-            elif ctype == b"IEND":
-                break
-            pos += 12 + length  # length + type + data + crc
-        if w is None or not idat or (color == 3 and plte is None):
-            return None
-        raw = zlib.decompress(bytes(idat))
-    except (struct.error, zlib.error):
-        return None
-
-    samples = _PNG_CHANNELS[color]
-    bpp = max(1, samples * depth // 8)
-
-    def to_samples(flat: "object", ph: int, pw: int) -> "object":
-        """(ph, stride) filtered-out bytes → (ph, pw, samples) uint8."""
-        if depth == 8:
-            return flat.reshape(ph, pw, samples)
-        if depth == 16:
-            # big-endian sample pairs; keep the high byte (16→8)
-            return flat.reshape(ph, pw, samples, 2)[:, :, :, 0]
-        bits = np.unpackbits(flat, axis=1)[:, : pw * depth]
-        weights = 1 << np.arange(depth - 1, -1, -1)
-        vals = (bits.reshape(ph, pw, depth) * weights).sum(axis=2)
-        return vals.astype(np.uint8)[:, :, None]
-
-    def pass_stride(pw: int) -> int:
-        return (pw * samples * depth + 7) // 8
-
-    if interlace == 0:
-        flat = _png_unfilter(raw, 0, h, pass_stride(w), bpp)
-        if flat is None or len(raw) != h * (pass_stride(w) + 1):
-            return None
-        img = to_samples(flat, h, w)
-    else:  # Adam7: seven sub-images, each filtered independently
-        img = np.zeros((h, w, samples), dtype=np.uint8)
-        offset = 0
-        for x0, y0, dx, dy in _PNG_ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
-                continue
-            flat = _png_unfilter(raw, offset, ph, pass_stride(pw), bpp)
-            if flat is None:
-                return None
-            offset += ph * (pass_stride(pw) + 1)
-            img[y0::dy, x0::dx] = to_samples(flat, ph, pw)
-        if offset != len(raw):
-            return None
-
-    if color == 3:  # palette expansion (+ optional palette alpha)
-        idx = img[:, :, 0]
-        if idx.max(initial=0) >= len(plte):
-            return None
-        rgb = plte[idx]
-        if trns is not None:
-            alpha = np.full(len(plte), 255, dtype=np.uint8)
-            alpha[: min(len(trns), len(plte))] = trns[: len(plte)]
-            return np.concatenate([rgb, alpha[idx][:, :, None]], axis=2)
-        return rgb
-    if depth < 8:  # sub-byte grayscale: scale to full 0..255 range
-        return (img.astype(np.int32) * (255 // ((1 << depth) - 1))).astype(
-            np.uint8
-        )
-    return img
-
-
-def encode_png(pixels: "object") -> bytes:
-    """Encode an (h, w) or (h, w, channels) uint8 array as a baseline
-    PNG (filter 0, one IDAT) — pure stdlib; the fixture-side twin of
-    :func:`decode_png_pixels`."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    px = np.asarray(pixels, dtype=np.uint8)
-    if px.ndim == 2:
-        px = px[:, :, None]
-    h, w, ch = px.shape
-    color = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    raw = b"".join(b"\x00" + px[y].tobytes() for y in range(h))
-    return (
-        _PNG_MAGIC
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Pure-python GIF PIXEL codec — the second format with real pixel decode
-# and no imaging library.  GIF is LZW over palette indices; the variable-
-# width LSB-first code stream is fully expressible with ints and a list-
-# backed string table.  Decodes the FIRST frame (the curation use case —
-# animated GIFs' later frames are deltas), honors local palettes and
-# interlacing; anything malformed returns None rather than guessing.
-def _gif_lzw_decode(data: bytes, min_code: int) -> bytes | None:
-    """GIF-variant LZW: variable code width (min_code+1 .. 12 bits),
-    LSB-first packing, CLEAR resets the table, missing EOI tolerated
-    (common in the wild — decode ends at stream end)."""
-    clear = 1 << min_code
-    eoi = clear + 1
-    width = min_code + 1
-    table: list[bytes] = [bytes([i]) for i in range(clear)] + [b"", b""]
-    out = bytearray()
-    acc = 0
-    nbits = 0
-    pos = 0
-    prev: bytes | None = None
-    while True:
-        while nbits < width:
-            if pos >= len(data):
-                return bytes(out)
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            del table[eoi + 1 :]
-            width = min_code + 1
-            prev = None
-            continue
-        if code == eoi:
-            return bytes(out)
-        if prev is None:
-            if code >= len(table):
-                return None  # first code after clear must be a literal
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-        elif code == len(table):
-            entry = prev + prev[:1]  # the KwKwK case
-        else:
-            return None
-        out += entry
-        if prev is not None:
-            table.append(prev + entry[:1])
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-
-
-# Interlaced GIFs store rows in four passes; stream row i lands on
-# display row _gif_row_order(h)[i].
-def _gif_row_order(h: int) -> list[int]:
-    return (
-        list(range(0, h, 8))
-        + list(range(4, h, 8))
-        + list(range(2, h, 4))
-        + list(range(1, h, 2))
-    )
-
-
-def decode_gif_pixels(payload: bytes) -> "object | None":
-    """Decode a GIF's first frame to an (h, w, 3) uint8 RGB numpy array —
-    pure stdlib (the LZW decoder above), no PIL.  None for non-GIF or a
-    malformed/truncated stream.  Transparency is ignored (the stats use
-    case pools channels; a curation filter needing alpha uses PIL)."""
-    import struct
-
-    import numpy as np
-
-    if not payload or len(payload) < 13:
-        return None
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        return None
-    try:
-        _sw, _sh, packed, _bg, _ar = struct.unpack("<HHBBB", payload[6:13])
-        pos = 13
-        gct = None
-        if packed & 0x80:
-            n = 2 ** ((packed & 0x07) + 1)
-            raw = payload[pos : pos + 3 * n]
-            if len(raw) < 3 * n:
-                return None
-            gct = np.frombuffer(raw, dtype=np.uint8).reshape(n, 3)
-            pos += 3 * n
-        while pos < len(payload):
-            block = payload[pos]
-            if block == 0x21:  # extension: label byte + data sub-blocks
-                pos += 2
-                while pos < len(payload) and payload[pos] != 0:
-                    pos += 1 + payload[pos]
-                pos += 1
-                continue
-            if block != 0x2C:  # trailer (0x3B) or junk before any image
-                return None
-            _l, _t, w, h, ipacked = struct.unpack(
-                "<HHHHB", payload[pos + 1 : pos + 10]
-            )
-            pos += 10
-            pal = gct
-            if ipacked & 0x80:  # local color table overrides
-                n = 2 ** ((ipacked & 0x07) + 1)
-                raw = payload[pos : pos + 3 * n]
-                if len(raw) < 3 * n:
-                    return None
-                pal = np.frombuffer(raw, dtype=np.uint8).reshape(n, 3)
-                pos += 3 * n
-            if pal is None or w == 0 or h == 0 or pos >= len(payload):
-                return None
-            min_code = payload[pos]
-            pos += 1
-            if not 2 <= min_code <= 11:
-                return None
-            data = bytearray()
-            while pos < len(payload) and payload[pos] != 0:
-                ln = payload[pos]
-                data += payload[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            idx = _gif_lzw_decode(bytes(data), min_code)
-            if idx is None or len(idx) < w * h:
-                return None
-            a = np.frombuffer(idx[: w * h], dtype=np.uint8).reshape(h, w)
-            if ipacked & 0x40:  # interlaced: reorder stream rows
-                out = np.empty_like(a)
-                out[_gif_row_order(h)] = a
-                a = out
-            if int(a.max()) >= len(pal):
-                return None
-            return pal[a]
-    except (struct.error, IndexError):
-        return None
-    return None
-
-
-# ---------------------------------------------------------------------------
-# Pure-python JPEG PIXEL codec — the third format with real pixel
-# decode and no imaging library, and the highest-volume one a real
-# curation corpus meets.  Baseline DCT (SOF0), extended sequential
-# (SOF1) AND progressive (SOF2) Huffman streams decode fully: DQT/DHT/
-# DRI/SOS parsing, byte-unstuffing, restart-interval segmentation,
-# per-MCU Huffman block decode, dequant + inverse zigzag, matrix IDCT,
-# chroma upsampling and JFIF YCbCr→RGB; the progressive path (new r9)
-# adds the multi-scan coefficient store, spectral selection,
-# interleaved/non-interleaved scan geometry, EOB runs and DC/AC
-# successive approximation with the correction-bit protocol (the
-# jdphuff.c algorithms from the spec's G.2 flowcharts).  Arithmetic-
-# coded, lossless, hierarchical and 12-bit streams return None (the
-# undecodable-payload contract of decode_image_pixels).  The bit-serial
-# Huffman walk is Python-speed: fine for the Arrow-batched stats lane at
-# fixture scale; a production cluster swaps in a codec library behind
-# decode_image_pixels.
-
-_JPEG_ZIGZAG = [
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-]
-
-
-def _jpeg_dct_basis() -> "object":
-    """Orthonormal 8×8 DCT-II basis A: forward F = A f Aᵀ, inverse
-    f = Aᵀ F A — one matrix shared by encoder and decoder."""
-    import numpy as np
-
-    x = np.arange(8)
-    a = np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16) / 2.0
-    a[0] /= np.sqrt(2.0)
-    return a
-
-
-def _huff_decode_table(counts: list[int], symbols: bytes) -> dict:
-    """Canonical JPEG Huffman table → {(n_bits, code): symbol}."""
-    table, code, k = {}, 0, 0
-    for n_bits in range(1, 17):
-        for _ in range(counts[n_bits - 1]):
-            table[(n_bits, code)] = symbols[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-class _JpegBits:
-    """MSB-first bit reader over an UNSTUFFED entropy segment."""
-
-    def __init__(self, data: bytes):
-        self.data = data
-        self.pos = 0
-        self.bit = 0
-
-    def read(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            if self.pos >= len(self.data):
-                raise IndexError("bit stream exhausted")
-            v = (v << 1) | ((self.data[self.pos] >> (7 - self.bit)) & 1)
-            self.bit += 1
-            if self.bit == 8:
-                self.bit = 0
-                self.pos += 1
-        return v
-
-    def huff(self, table: dict) -> int:
-        code = 0
-        for n_bits in range(1, 17):
-            code = (code << 1) | self.read(1)
-            sym = table.get((n_bits, code))
-            if sym is not None:
-                return sym
-        raise ValueError("invalid Huffman code")
-
-
-def _jpeg_extend(v: int, t: int) -> int:
-    return v - (1 << t) + 1 if t and v < (1 << (t - 1)) else v
-
-
-def decode_jpeg_pixels(payload: bytes) -> "object | None":
-    """Decode a Huffman-coded JPEG to an (h, w, channels) uint8 numpy
-    array — grayscale → 1 channel, YCbCr → 3-channel RGB.  Covers
-    baseline (SOF0), extended sequential (SOF1) AND progressive (SOF2:
-    spectral selection, successive approximation for DC and AC,
-    interleaved and non-interleaved scans, EOB runs, per-scan table
-    redefinition, restart intervals).  Pure stdlib + numpy; None for
-    non-JPEG, the remaining profiles (arithmetic-coded, lossless,
-    hierarchical, 12-bit, CMYK) or a malformed/truncated stream."""
-    import struct
-
-    import numpy as np
-
-    if len(payload) < 4 or payload[:2] != b"\xff\xd8":
-        return None
-    qt: dict[int, "object"] = {}
-    huff: dict[tuple[int, int], dict] = {}  # (class, id) → decode table
-    frame = None  # (h, w, comps) where comps = [(cid, hs, vs, tq)]
-    progressive = False
-    coef = None  # per-component zigzag coefficient store (SOF2 only)
-    scans_done = 0
-    restart = 0
-    pos = 2
-    try:
-        while pos + 4 <= len(payload):
-            if payload[pos] != 0xFF:
-                return None
-            marker = payload[pos + 1]
-            if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-                pos += 2
-                continue
-            if marker == 0xD9:  # EOI
-                break
-            (seglen,) = struct.unpack(">H", payload[pos + 2 : pos + 4])
-            body = payload[pos + 4 : pos + 2 + seglen]
-            if len(body) != seglen - 2:
-                return None  # truncated segment
-            if marker == 0xDB:  # DQT
-                i = 0
-                while i < len(body):
-                    pq, tq = body[i] >> 4, body[i] & 15
-                    n = 128 if pq else 64
-                    raw = body[i + 1 : i + 1 + n]
-                    if len(raw) < n:
-                        return None
-                    vals = (
-                        np.frombuffer(raw, dtype=">u2").astype(np.int32)
-                        if pq
-                        else np.frombuffer(raw, dtype=np.uint8).astype(np.int32)
-                    )
-                    tbl = np.zeros(64, dtype=np.int32)
-                    tbl[_JPEG_ZIGZAG] = vals
-                    qt[tq] = tbl.reshape(8, 8)
-                    i += 1 + n
-            elif marker == 0xC4:  # DHT
-                i = 0
-                while i + 17 <= len(body):
-                    tc, th = body[i] >> 4, body[i] & 15
-                    counts = list(body[i + 1 : i + 17])
-                    n = sum(counts)
-                    syms = body[i + 17 : i + 17 + n]
-                    if len(syms) < n:
-                        return None
-                    huff[(tc, th)] = _huff_decode_table(counts, syms)
-                    i += 17 + n
-            elif marker in (0xC0, 0xC1, 0xC2):  # SOF0 / SOF1 / SOF2
-                prec, h, w, nc = struct.unpack(">BHHB", body[:6])
-                if prec != 8 or nc not in (1, 3) or not h or not w:
-                    return None
-                comps = []
-                for c in range(nc):
-                    cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
-                    comps.append((cid, hv >> 4, hv & 15, tq))
-                frame = (h, w, comps)
-                if marker == 0xC2:
-                    progressive = True
-                    max_h = max(c[1] for c in comps)
-                    max_v = max(c[2] for c in comps)
-                    if not max_h or not max_v:
-                        return None
-                    mcus_x = -(-w // (8 * max_h))
-                    mcus_y = -(-h // (8 * max_v))
-                    # zigzag-ordered coefficients on the PADDED (MCU)
-                    # grid; scans accumulate into this store and the
-                    # IDCT runs once at EOI
-                    coef = [
-                        np.zeros(
-                            (mcus_y * c[2], mcus_x * c[1], 64),
-                            dtype=np.int32,
-                        )
-                        for c in comps
-                    ]
-            elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA,
-                            0xCB, 0xCD, 0xCE, 0xCF):
-                return None  # arithmetic / lossless / hierarchical gates
-            elif marker == 0xDD:  # DRI
-                (restart,) = struct.unpack(">H", body[:2])
-            elif marker == 0xDA:  # SOS → entropy-coded data follows
-                if frame is None:
-                    return None
-                ns = body[0]
-                scan = []  # (comp_idx, dc_table, ac_table)
-                for s in range(ns):
-                    cs, tables = body[1 + 2 * s], body[2 + 2 * s]
-                    idx = next(
-                        (i for i, c in enumerate(frame[2]) if c[0] == cs),
-                        None,
-                    )
-                    if idx is None:
-                        return None
-                    scan.append((idx, tables >> 4, tables & 15))
-                data_lo = pos + 2 + seglen
-                if not progressive:
-                    if len(scan) != len(frame[2]):
-                        return None  # multi-scan sequential: unsupported
-                    return _jpeg_decode_scan(
-                        payload, data_lo, frame, scan, qt, huff, restart
-                    )
-                ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-                ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 15
-                segments, end = _jpeg_entropy_segments(payload, data_lo)
-                if not _jpeg_progressive_scan(
-                    frame, coef, scan, ss, se, ah, al, segments, huff, restart
-                ):
-                    return None
-                scans_done += 1
-                pos = end
-                continue
-            pos += 2 + seglen
-    except (struct.error, IndexError, ValueError):
-        return None
-    if progressive and scans_done:
-        try:
-            return _jpeg_reconstruct(frame, coef, qt)
-        except (IndexError, ValueError, KeyError, ZeroDivisionError):
-            return None
-    return None
-
-
-def _jpeg_entropy_segments(payload: bytes, lo: int) -> tuple:
-    """Split one entropy-coded stream starting at ``lo`` into restart
-    segments, un-stuffing FF00 as it goes.  Returns (segments, end)
-    where ``end`` is the offset of the first real marker after the
-    stream (or len(payload))."""
-    segments: list[bytes] = []
-    cur = bytearray()
-    pos = lo
-    while pos < len(payload):
-        b = payload[pos]
-        if b != 0xFF:
-            cur.append(b)
-            pos += 1
-            continue
-        nxt = payload[pos + 1] if pos + 1 < len(payload) else 0xD9
-        if nxt == 0x00:
-            cur.append(0xFF)
-            pos += 2
-        elif 0xD0 <= nxt <= 0xD7:
-            segments.append(bytes(cur))
-            cur = bytearray()
-            pos += 2
-        else:
-            break  # real marker (EOI or next header)
-    segments.append(bytes(cur))
-    return segments, pos
-
-
-def _jpeg_decode_scan(
-    payload: bytes,
-    lo: int,
-    frame: tuple,
-    scan: list,
-    qt: dict,
-    huff: dict,
-    restart: int,
-) -> "object | None":
-    import numpy as np
-
-    h, w, comps = frame
-    if len(comps) == 1:
-        # a single-component scan is non-interleaved: one block per MCU
-        # regardless of declared sampling factors
-        comps = [(comps[0][0], 1, 1, comps[0][3])]
-    try:
-        segments, _end = _jpeg_entropy_segments(payload, lo)
-
-        max_h = max(c[1] for c in comps)
-        max_v = max(c[2] for c in comps)
-        if not max_h or not max_v:
-            return None
-        mcus_x = -(-w // (8 * max_h))
-        mcus_y = -(-h // (8 * max_v))
-        planes = [
-            np.zeros((mcus_y * c[2] * 8, mcus_x * c[1] * 8), dtype=np.float64)
-            for c in comps
-        ]
-        basis = _jpeg_dct_basis()
-        dc_pred = [0] * len(comps)
-        seg_i = 0
-        bits = _JpegBits(segments[0])
-        for mcu in range(mcus_x * mcus_y):
-            if restart and mcu and mcu % restart == 0:
-                seg_i += 1
-                if seg_i >= len(segments):
-                    return None
-                bits = _JpegBits(segments[seg_i])
-                dc_pred = [0] * len(comps)
-            my, mx = divmod(mcu, mcus_x)
-            for ci, tdc, tac in scan:
-                _cid, hs, vs, tq = comps[ci]
-                if tq not in qt or (0, tdc) not in huff or (1, tac) not in huff:
-                    return None
-                for by in range(vs):
-                    for bx in range(hs):
-                        zz = np.zeros(64, dtype=np.int32)
-                        t = bits.huff(huff[(0, tdc)])
-                        dc_pred[ci] += _jpeg_extend(bits.read(t), t)
-                        zz[0] = dc_pred[ci]
-                        k = 1
-                        while k < 64:
-                            sym = bits.huff(huff[(1, tac)])
-                            run, size = sym >> 4, sym & 15
-                            if size == 0:
-                                if run != 15:
-                                    break  # EOB
-                                k += 16
-                                continue
-                            k += run
-                            if k > 63:
-                                return None
-                            zz[k] = _jpeg_extend(bits.read(size), size)
-                            k += 1
-                        block = np.zeros(64, dtype=np.int32)
-                        block[_JPEG_ZIGZAG] = zz
-                        coef = block.reshape(8, 8) * qt[tq]
-                        px = basis.T @ coef @ basis + 128.0
-                        y0 = (my * vs + by) * 8
-                        x0 = (mx * hs + bx) * 8
-                        planes[ci][y0 : y0 + 8, x0 : x0 + 8] = px
-        return _jpeg_planes_to_pixels(planes, comps, h, w, max_h, max_v)
-    except (IndexError, ValueError, ZeroDivisionError):
-        return None
-
-
-def _jpeg_planes_to_pixels(
-    planes: list, comps: list, h: int, w: int, max_h: int, max_v: int
-) -> "object":
-    """Upsample subsampled planes, crop to (h, w), JFIF YCbCr→RGB —
-    the reconstruction tail shared by the sequential and progressive
-    decode paths."""
-    import numpy as np
-
-    out = []
-    for ci, (_cid, hs, vs, _tq) in enumerate(comps):
-        p = planes[ci]
-        if hs != max_h or vs != max_v:
-            p = np.repeat(
-                np.repeat(p, max_v // vs, axis=0), max_h // hs, axis=1
-            )
-        out.append(p[:h, :w])
-    if len(out) == 1:
-        gray = np.clip(np.round(out[0]), 0, 255).astype(np.uint8)
-        return gray[:, :, None]
-    y, cb, cr = out[0], out[1] - 128.0, out[2] - 128.0
-    rgb = np.stack(
-        [
-            y + 1.402 * cr,
-            y - 0.344136 * cb - 0.714136 * cr,
-            y + 1.772 * cb,
-        ],
-        axis=2,
-    )
-    return np.clip(np.round(rgb), 0, 255).astype(np.uint8)
-
-
-def _jpeg_progressive_scan(
-    frame: tuple,
-    coef: list,
-    scan: list,
-    ss: int,
-    se: int,
-    ah: int,
-    al: int,
-    segments: list,
-    huff: dict,
-    restart: int,
-) -> bool:
-    """Apply ONE progressive scan (spec G.2 / the jdphuff algorithms) to
-    the zigzag coefficient store.  DC scans (Ss=0) may be interleaved;
-    AC scans are single-component over the component's REAL block grid
-    (edge-MCU padding blocks are not coded in non-interleaved scans).
-    Successive approximation: first scans (Ah=0) code values at point
-    transform Al; refinement scans (Ah=Al+1) add one magnitude bit via
-    the correction-bit protocol.  Returns False on malformed input."""
-    h, w, comps = frame
-    max_h = max(c[1] for c in comps)
-    max_v = max(c[2] for c in comps)
-    mcus_x = -(-w // (8 * max_h))
-    mcus_y = -(-h // (8 * max_v))
-    ns = len(scan)
-    if ss == 0:
-        if se != 0:
-            return False
-    else:
-        if ns != 1 or se < ss or se > 63:
-            return False
-    if ah and ah != al + 1:
-        return False
-
-    # unit = what the restart interval counts: an MCU (interleaved) or
-    # one block (non-interleaved)
-    if ns > 1:
-        n_units = mcus_x * mcus_y
-
-        def unit_blocks(u):
-            my, mx = divmod(u, mcus_x)
-            for ci, tdc, tac in scan:
-                _cid, hs, vs, _tq = comps[ci]
-                for by in range(vs):
-                    for bx in range(hs):
-                        yield ci, my * vs + by, mx * hs + bx, tdc, tac
-    else:
-        ci0, tdc0, tac0 = scan[0]
-        _cid, hs, vs, _tq = comps[ci0]
-        comp_w = -(-(w * hs) // max_h)
-        comp_h = -(-(h * vs) // max_v)
-        bw = -(-comp_w // 8)
-        bh = -(-comp_h // 8)
-        n_units = bw * bh
-
-        def unit_blocks(u):
-            yield ci0, u // bw, u % bw, tdc0, tac0
-
-    p1, m1 = 1 << al, -1 << al
-    try:
-        seg_i = 0
-        bits = _JpegBits(segments[0])
-        dc_pred = [0] * len(comps)
-        eobrun = 0
-        for u in range(n_units):
-            if restart and u and u % restart == 0:
-                seg_i += 1
-                if seg_i >= len(segments):
-                    return False
-                bits = _JpegBits(segments[seg_i])
-                dc_pred = [0] * len(comps)
-                eobrun = 0
-            for ci, by, bx, tdc, tac in unit_blocks(u):
-                blk = coef[ci][by, bx]  # 64-entry zigzag view
-                if ss == 0:
-                    if ah == 0:  # DC first: diff-coded, point transform Al
-                        if (0, tdc) not in huff:
-                            return False
-                        t = bits.huff(huff[(0, tdc)])
-                        dc_pred[ci] += _jpeg_extend(bits.read(t), t)
-                        blk[0] = dc_pred[ci] << al
-                    else:  # DC refinement: one raw bit per block
-                        if bits.read(1):
-                            blk[0] |= p1
-                    continue
-                # ---- AC scan ----
-                if (1, tac) not in huff:
-                    return False
-                actbl = huff[(1, tac)]
-                if ah == 0:  # AC first scan (jdphuff decode_mcu_AC_first)
-                    if eobrun > 0:
-                        eobrun -= 1
-                        continue
-                    k = ss
-                    while k <= se:
-                        sym = bits.huff(actbl)
-                        r, s = sym >> 4, sym & 15
-                        if s:
-                            k += r
-                            if k > se:
-                                return False
-                            blk[k] = _jpeg_extend(bits.read(s), s) << al
-                            k += 1
-                        else:
-                            if r != 15:  # EOBr
-                                eobrun = 1 << r
-                                if r:
-                                    eobrun += bits.read(r)
-                                eobrun -= 1  # current block is a member
-                                break
-                            k += 16  # ZRL
-                    continue
-                # AC refinement (jdphuff decode_mcu_AC_refine)
-                k = ss
-                if eobrun == 0:
-                    while k <= se:
-                        sym = bits.huff(actbl)
-                        r, s = sym >> 4, sym & 15
-                        if s:
-                            # new coef: size is always 1 in a refinement
-                            s = p1 if bits.read(1) else m1
-                        else:
-                            if r != 15:
-                                eobrun = 1 << r
-                                if r:
-                                    eobrun += bits.read(r)
-                                break  # rest handled by EOB logic below
-                            # ZRL: s stays 0, skip 16 zero-history coefs
-                        # advance over r zero-history coefs, appending
-                        # correction bits to already-nonzero ones
-                        while k <= se:
-                            cur = int(blk[k])
-                            if cur != 0:
-                                if bits.read(1) and (cur & p1) == 0:
-                                    blk[k] = cur + (p1 if cur >= 0 else m1)
-                            else:
-                                r -= 1
-                                if r < 0:
-                                    break  # reached target zero coef
-                            k += 1
-                        if s:
-                            if k > se:
-                                return False
-                            blk[k] = s
-                        k += 1
-                if eobrun > 0:
-                    # correction bits for the rest of the band
-                    while k <= se:
-                        cur = int(blk[k])
-                        if cur != 0:
-                            if bits.read(1) and (cur & p1) == 0:
-                                blk[k] = cur + (p1 if cur >= 0 else m1)
-                        k += 1
-                    eobrun -= 1
-    except (IndexError, ValueError):
-        return False
-    return True
-
-
-def _jpeg_reconstruct(frame: tuple, coef: list, qt: dict) -> "object":
-    """Dequantize + IDCT the accumulated progressive coefficient store
-    (vectorized over all blocks) and assemble pixels."""
-    import numpy as np
-
-    h, w, comps = frame
-    max_h = max(c[1] for c in comps)
-    max_v = max(c[2] for c in comps)
-    basis = _jpeg_dct_basis()
-    planes = []
-    for ci, (_cid, _hs, _vs, tq) in enumerate(comps):
-        if tq not in qt:
-            raise KeyError(tq)
-        bh, bw, _ = coef[ci].shape
-        natural = np.zeros((bh, bw, 64), dtype=np.int32)
-        natural[:, :, _JPEG_ZIGZAG] = coef[ci]
-        blocks = natural.reshape(bh, bw, 8, 8) * qt[tq][None, None]
-        px = (
-            np.einsum("ij,xyjk,kl->xyil", basis.T, blocks.astype(np.float64), basis)
-            + 128.0
-        )
-        planes.append(px.transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8))
-    return _jpeg_planes_to_pixels(planes, comps, h, w, max_h, max_v)
-
-
-# Annex-K example tables (JPEG spec, public): quantization +
-# Huffman specs the encoder writes into DQT/DHT.  The decoder never
-# assumes them — it reads whatever tables the file carries — so a
-# table typo could only mis-encode, and the round-trip test would
-# catch it against the independent decode path.
-_JPEG_STD_LUM_QT = [
-    16, 11, 10, 16, 24, 40, 51, 61, 12, 12, 14, 19, 26, 58, 60, 55,
-    14, 13, 16, 24, 40, 57, 69, 56, 14, 17, 22, 29, 51, 87, 80, 62,
-    18, 22, 37, 56, 68, 109, 103, 77, 24, 35, 55, 64, 81, 104, 113, 92,
-    49, 64, 78, 87, 103, 121, 120, 101, 72, 92, 95, 98, 112, 100, 103, 99,
-]
-_JPEG_STD_CHR_QT = [
-    17, 18, 24, 47, 99, 99, 99, 99, 18, 21, 26, 66, 99, 99, 99, 99,
-    24, 26, 56, 99, 99, 99, 99, 99, 47, 66, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99,
-    99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99, 99,
-]
-_JPEG_DC_LUM = ([0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0],
-                list(range(12)))
-_JPEG_DC_CHR = ([0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0],
-                list(range(12)))
-_JPEG_AC_LUM = (
-    [0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125],
-    [
-        0x01, 0x02, 0x03, 0x00, 0x04, 0x11, 0x05, 0x12, 0x21, 0x31, 0x41,
-        0x06, 0x13, 0x51, 0x61, 0x07, 0x22, 0x71, 0x14, 0x32, 0x81, 0x91,
-        0xA1, 0x08, 0x23, 0x42, 0xB1, 0xC1, 0x15, 0x52, 0xD1, 0xF0, 0x24,
-        0x33, 0x62, 0x72, 0x82, 0x09, 0x0A, 0x16, 0x17, 0x18, 0x19, 0x1A,
-        0x25, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x34, 0x35, 0x36, 0x37, 0x38,
-        0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A, 0x53,
-        0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65, 0x66,
-        0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78, 0x79,
-        0x7A, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A, 0x92, 0x93,
-        0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3, 0xA4, 0xA5,
-        0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5, 0xB6, 0xB7,
-        0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7, 0xC8, 0xC9,
-        0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9, 0xDA, 0xE1,
-        0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF1, 0xF2,
-        0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-    ],
-)
-_JPEG_AC_CHR = (
-    [0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 119],
-    [
-        0x00, 0x01, 0x02, 0x03, 0x11, 0x04, 0x05, 0x21, 0x31, 0x06, 0x12,
-        0x41, 0x51, 0x07, 0x61, 0x71, 0x13, 0x22, 0x32, 0x81, 0x08, 0x14,
-        0x42, 0x91, 0xA1, 0xB1, 0xC1, 0x09, 0x23, 0x33, 0x52, 0xF0, 0x15,
-        0x62, 0x72, 0xD1, 0x0A, 0x16, 0x24, 0x34, 0xE1, 0x25, 0xF1, 0x17,
-        0x18, 0x19, 0x1A, 0x26, 0x27, 0x28, 0x29, 0x2A, 0x35, 0x36, 0x37,
-        0x38, 0x39, 0x3A, 0x43, 0x44, 0x45, 0x46, 0x47, 0x48, 0x49, 0x4A,
-        0x53, 0x54, 0x55, 0x56, 0x57, 0x58, 0x59, 0x5A, 0x63, 0x64, 0x65,
-        0x66, 0x67, 0x68, 0x69, 0x6A, 0x73, 0x74, 0x75, 0x76, 0x77, 0x78,
-        0x79, 0x7A, 0x82, 0x83, 0x84, 0x85, 0x86, 0x87, 0x88, 0x89, 0x8A,
-        0x92, 0x93, 0x94, 0x95, 0x96, 0x97, 0x98, 0x99, 0x9A, 0xA2, 0xA3,
-        0xA4, 0xA5, 0xA6, 0xA7, 0xA8, 0xA9, 0xAA, 0xB2, 0xB3, 0xB4, 0xB5,
-        0xB6, 0xB7, 0xB8, 0xB9, 0xBA, 0xC2, 0xC3, 0xC4, 0xC5, 0xC6, 0xC7,
-        0xC8, 0xC9, 0xCA, 0xD2, 0xD3, 0xD4, 0xD5, 0xD6, 0xD7, 0xD8, 0xD9,
-        0xDA, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2,
-        0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
-    ],
-)
-
-
-def _huff_encode_table(counts: list[int], symbols: list[int]) -> dict:
-    """Canonical JPEG Huffman table → {symbol: (code, n_bits)}."""
-    table, code, k = {}, 0, 0
-    for n_bits in range(1, 17):
-        for _ in range(counts[n_bits - 1]):
-            table[symbols[k]] = (code, n_bits)
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-class _JpegBitWriter:
-    """MSB-first bit writer with FF byte-stuffing."""
-
-    def __init__(self):
-        self.out = bytearray()
-        self.acc = 0
-        self.n = 0
-
-    def write(self, code: int, n_bits: int) -> None:
-        for i in range(n_bits - 1, -1, -1):
-            self.acc = (self.acc << 1) | ((code >> i) & 1)
-            self.n += 1
-            if self.n == 8:
-                self.out.append(self.acc)
-                if self.acc == 0xFF:
-                    self.out.append(0x00)
-                self.acc = 0
-                self.n = 0
-
-    def flush(self) -> None:
-        while self.n:
-            self.write(1, 1)  # pad with 1-bits per the spec
-
-
-def _jpeg_magnitude(v: int) -> tuple[int, int]:
-    """Value → (category, category-bit pattern) for DC/AC coding."""
-    t, a = 0, abs(v)
-    while a:
-        t += 1
-        a >>= 1
-    return t, (v if v >= 0 else v + (1 << t) - 1)
-
-
-def encode_jpeg(
-    pixels: "object",
-    quality: int = 90,
-    *,
-    subsample: bool = False,
-    restart_interval: int = 0,
-) -> bytes:
-    """Encode an (h, w) / (h, w, 1) grayscale or (h, w, 3) RGB uint8
-    array as a baseline JFIF JPEG — pure stdlib + numpy; the
-    fixture-side twin of :func:`decode_jpeg_pixels` (Annex-K tables,
-    IJG quality scaling, optional 4:2:0 subsampling and restart
-    intervals so every decoder branch has an independent producer)."""
-    import struct
-
-    import numpy as np
-
-    px = np.asarray(pixels, dtype=np.uint8)
-    if px.ndim == 2:
-        px = px[:, :, None]
-    h, w, ch = px.shape
-    if ch not in (1, 3):
-        raise ValueError("encode_jpeg supports 1 or 3 channels")
-    scale = 5000 // max(quality, 1) if quality < 50 else 200 - 2 * min(quality, 100)
-    mk_qt = lambda base: np.clip(  # noqa: E731
-        (np.array(base, dtype=np.int64) * scale + 50) // 100, 1, 255
-    ).astype(np.int32)
-    qts = [mk_qt(_JPEG_STD_LUM_QT)] + ([mk_qt(_JPEG_STD_CHR_QT)] if ch == 3 else [])
-
-    if ch == 3:
-        rgb = px.astype(np.float64)
-        r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-        planes = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
-            0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
-        ]
-    else:
-        planes = [px[:, :, 0].astype(np.float64)]
-    sampling = [(2, 2), (1, 1), (1, 1)] if (ch == 3 and subsample) else [(1, 1)] * ch
-    if ch == 3 and subsample:
-        for i in (1, 2):
-            p = planes[i]
-            ph, pw = p.shape
-            p = np.pad(p, ((0, ph % 2), (0, pw % 2)), mode="edge")
-            planes[i] = (
-                p.reshape(p.shape[0] // 2, 2, p.shape[1] // 2, 2).mean(axis=(1, 3))
-            )
-
-    max_h = max(s[0] for s in sampling)
-    max_v = max(s[1] for s in sampling)
-    mcus_x = -(-w // (8 * max_h))
-    mcus_y = -(-h // (8 * max_v))
-    padded = []
-    for i, p in enumerate(planes):
-        th = mcus_y * sampling[i][1] * 8
-        tw = mcus_x * sampling[i][0] * 8
-        padded.append(
-            np.pad(p, ((0, th - p.shape[0]), (0, tw - p.shape[1])), mode="edge")
-        )
-
-    basis = _jpeg_dct_basis()
-    dc_tabs = [_huff_encode_table(*_JPEG_DC_LUM)]
-    ac_tabs = [_huff_encode_table(*_JPEG_AC_LUM)]
-    if ch == 3:
-        dc_tabs.append(_huff_encode_table(*_JPEG_DC_CHR))
-        ac_tabs.append(_huff_encode_table(*_JPEG_AC_CHR))
-    tsel = [0, 1, 1][:ch]
-
-    chunks: list[bytes] = []
-    wr = _JpegBitWriter()
-    dc_pred = [0] * ch
-    for mcu in range(mcus_x * mcus_y):
-        if restart_interval and mcu and mcu % restart_interval == 0:
-            wr.flush()
-            chunks.append(bytes(wr.out))
-            chunks.append(bytes([0xFF, 0xD0 + ((mcu // restart_interval - 1) % 8)]))
-            wr = _JpegBitWriter()
-            dc_pred = [0] * ch
-        my, mx = divmod(mcu, mcus_x)
-        for ci in range(ch):
-            hs, vs = sampling[ci]
-            t = tsel[ci]
-            for by in range(vs):
-                for bx in range(hs):
-                    y0 = (my * vs + by) * 8
-                    x0 = (mx * hs + bx) * 8
-                    block = padded[ci][y0 : y0 + 8, x0 : x0 + 8] - 128.0
-                    coef = basis @ block @ basis.T
-                    q = np.round(coef / qts[t].reshape(8, 8))
-                    zz = q.astype(np.int64).reshape(64)[_JPEG_ZIGZAG]
-                    diff = int(zz[0]) - dc_pred[ci]
-                    dc_pred[ci] = int(zz[0])
-                    cat, bits_v = _jpeg_magnitude(diff)
-                    code, n = dc_tabs[t][cat]
-                    wr.write(code, n)
-                    if cat:
-                        wr.write(bits_v, cat)
-                    run = 0
-                    last_nz = max(
-                        (k for k in range(1, 64) if zz[k]), default=0
-                    )
-                    for k in range(1, last_nz + 1):
-                        v = int(zz[k])
-                        if v == 0:
-                            run += 1
-                            continue
-                        while run > 15:
-                            code, n = ac_tabs[t][0xF0]
-                            wr.write(code, n)
-                            run -= 16
-                        cat, bits_v = _jpeg_magnitude(v)
-                        code, n = ac_tabs[t][(run << 4) | cat]
-                        wr.write(code, n)
-                        wr.write(bits_v, cat)
-                        run = 0
-                    if last_nz < 63:
-                        code, n = ac_tabs[t][0x00]
-                        wr.write(code, n)
-    wr.flush()
-    chunks.append(bytes(wr.out))
-    entropy = b"".join(chunks)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    for tq, q in enumerate(qts):
-        # DQT carries zigzag-ordered entries; the base tables are kept in
-        # natural row-major order (spec Table K.1 layout), so reorder here.
-        out += seg(0xDB, bytes([tq]) + bytes(int(v) for v in q[_JPEG_ZIGZAG]))
-    nf = bytes([8]) + struct.pack(">HH", h, w) + bytes([ch])
-    for ci in range(ch):
-        hs, vs = sampling[ci]
-        nf += bytes([ci + 1, (hs << 4) | vs, tsel[ci]])
-    out += seg(0xC0, nf)
-    specs = [(0, 0, _JPEG_DC_LUM), (1, 0, _JPEG_AC_LUM)]
-    if ch == 3:
-        specs += [(0, 1, _JPEG_DC_CHR), (1, 1, _JPEG_AC_CHR)]
-    for tc, th, (counts, syms) in specs:
-        out += seg(
-            0xC4, bytes([(tc << 4) | th]) + bytes(counts) + bytes(syms)
-        )
-    if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    sos = bytes([ch])
-    for ci in range(ch):
-        sos += bytes([ci + 1, (tsel[ci] << 4) | tsel[ci]])
-    sos += b"\x00\x3f\x00"
-    out += seg(0xDA, sos)
-    out += entropy
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def encode_jpeg_progressive(
-    pixels: "object", quality: int = 90, *, subsample: bool = False
-) -> bytes:
-    """Encode as a PROGRESSIVE JFIF JPEG (SOF2) — pure stdlib + numpy;
-    the fixture-side twin of the progressive decode path.  The scan
-    script exercises every progressive mechanism: an interleaved DC
-    first scan at point transform Al=1, per-component spectral-selection
-    AC first scans (bands 1–5 and 6–63, Al=1, EOB-run accumulation
-    across blocks), a DC refinement scan (raw bits), and per-component
-    AC refinement scans (Ah=1→Al=0, the correction-bit protocol).
-    Huffman tables are built per scan from the actual symbol census
-    (two-pass, like real progressive encoders — the Annex-K tables lack
-    the EOBn symbols) and written as a fresh DHT before each SOS.  The
-    transmitted coefficients reassemble EXACTLY, so decoding this
-    stream equals decoding the same image's baseline encoding."""
-    import struct
-
-    import numpy as np
-
-    px = np.asarray(pixels, dtype=np.uint8)
-    if px.ndim == 2:
-        px = px[:, :, None]
-    h, w, ch = px.shape
-    if ch not in (1, 3):
-        raise ValueError("encode_jpeg_progressive supports 1 or 3 channels")
-    scale = 5000 // max(quality, 1) if quality < 50 else 200 - 2 * min(quality, 100)
-    mk_qt = lambda base: np.clip(  # noqa: E731
-        (np.array(base, dtype=np.int64) * scale + 50) // 100, 1, 255
-    ).astype(np.int32)
-    qts = [mk_qt(_JPEG_STD_LUM_QT)] + ([mk_qt(_JPEG_STD_CHR_QT)] if ch == 3 else [])
-
-    if ch == 3:
-        rgb = px.astype(np.float64)
-        r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-        planes = [
-            0.299 * r + 0.587 * g + 0.114 * b,
-            -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
-            0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
-        ]
-    else:
-        planes = [px[:, :, 0].astype(np.float64)]
-    sampling = [(2, 2), (1, 1), (1, 1)] if (ch == 3 and subsample) else [(1, 1)] * ch
-    if ch == 3 and subsample:
-        for i in (1, 2):
-            p = planes[i]
-            ph, pw = p.shape
-            p = np.pad(p, ((0, ph % 2), (0, pw % 2)), mode="edge")
-            planes[i] = (
-                p.reshape(p.shape[0] // 2, 2, p.shape[1] // 2, 2).mean(axis=(1, 3))
-            )
-    max_h = max(s[0] for s in sampling)
-    max_v = max(s[1] for s in sampling)
-    mcus_x = -(-w // (8 * max_h))
-    mcus_y = -(-h // (8 * max_v))
-    tsel = [0, 1, 1][:ch]
-
-    # per-component ZIGZAG quantized coefficients over the padded grid
-    basis = _jpeg_dct_basis()
-    coefs = []
-    real_grid = []  # (bh_real, bw_real) — what non-interleaved scans code
-    for ci, p in enumerate(planes):
-        hs, vs = sampling[ci]
-        th = mcus_y * vs * 8
-        tw = mcus_x * hs * 8
-        p = np.pad(p, ((0, th - p.shape[0]), (0, tw - p.shape[1])), mode="edge")
-        bh, bw = th // 8, tw // 8
-        blocks = p.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3) - 128.0
-        f = np.einsum("ij,xyjk,kl->xyil", basis, blocks, basis.T)
-        q = np.round(f / qts[tsel[ci]].reshape(8, 8)[None, None]).astype(np.int64)
-        coefs.append(q.reshape(bh, bw, 64)[:, :, _JPEG_ZIGZAG])
-        comp_w = -(-(w * hs) // max_h)
-        comp_h = -(-(h * vs) // max_v)
-        real_grid.append((-(-comp_h // 8), -(-comp_w // 8)))
-
-    def mag_shift(v: int, al: int) -> int:
-        s = abs(v) >> al
-        return s if v >= 0 else -s
-
-    def render_scan(scan_comps: list[int], ss: int, se: int, ah: int, al: int) -> bytes:
-        """Two-pass scan writer: symbol census → per-scan DHT → bits."""
-        ops: list[tuple] = []  # ('h', tclass, sym) | ('b', value, nbits)
-
-        if ss == 0 and ah == 0:  # DC first (interleaved if several comps)
-            pred = {ci: 0 for ci in scan_comps}
-            for mcu in range(mcus_x * mcus_y):
-                my, mx = divmod(mcu, mcus_x)
-                for ci in scan_comps:
-                    hs, vs = sampling[ci]
-                    for by in range(vs):
-                        for bx in range(hs):
-                            v = int(coefs[ci][my * vs + by, mx * hs + bx, 0]) >> al
-                            diff = v - pred[ci]
-                            pred[ci] = v
-                            t, bv = _jpeg_magnitude(diff)
-                            ops.append(("h", 0, t))
-                            if t:
-                                ops.append(("b", bv, t))
-        elif ss == 0:  # DC refinement: one raw bit per block
-            for mcu in range(mcus_x * mcus_y):
-                my, mx = divmod(mcu, mcus_x)
-                for ci in scan_comps:
-                    hs, vs = sampling[ci]
-                    for by in range(vs):
-                        for bx in range(hs):
-                            v = int(coefs[ci][my * vs + by, mx * hs + bx, 0])
-                            ops.append(("b", (v >> al) & 1, 1))
-        elif ah == 0:  # AC first scan (jcphuff encode_mcu_AC_first)
-            (ci,) = scan_comps
-            bh, bw = real_grid[ci]
-            eobrun = 0
-
-            def flush_eob():
-                nonlocal eobrun
-                if eobrun:
-                    nbits = eobrun.bit_length() - 1
-                    ops.append(("h", 1, nbits << 4))
-                    if nbits:
-                        ops.append(("b", eobrun & ((1 << nbits) - 1), nbits))
-                    eobrun = 0
-
-            for u in range(bh * bw):
-                blk = coefs[ci][u // bw, u % bw]
-                r = 0
-                for k in range(ss, se + 1):
-                    v = mag_shift(int(blk[k]), al)
-                    if v == 0:
-                        r += 1
-                        continue
-                    flush_eob()
-                    while r > 15:
-                        ops.append(("h", 1, 0xF0))
-                        r -= 16
-                    t, bv = _jpeg_magnitude(v)
-                    ops.append(("h", 1, (r << 4) | t))
-                    ops.append(("b", bv, t))
-                    r = 0
-                if r > 0:
-                    eobrun += 1
-                    if eobrun == 0x7FFF:
-                        flush_eob()
-            flush_eob()
-        else:  # AC refinement (jcphuff encode_mcu_AC_refine)
-            (ci,) = scan_comps
-            bh, bw = real_grid[ci]
-            eobrun = 0
-            be: list[int] = []  # correction bits buffered across EOB run
-
-            def flush_eob_refine():
-                nonlocal eobrun, be
-                if eobrun:
-                    nbits = eobrun.bit_length() - 1
-                    ops.append(("h", 1, nbits << 4))
-                    if nbits:
-                        ops.append(("b", eobrun & ((1 << nbits) - 1), nbits))
-                    eobrun = 0
-                for bit in be:
-                    ops.append(("b", bit, 1))
-                be = []
-
-            for u in range(bh * bw):
-                blk = coefs[ci][u // bw, u % bw]
-                absv = [abs(int(blk[k])) >> al for k in range(ss, se + 1)]
-                eob = -1  # band index of last NEWLY-nonzero coef
-                for i, t in enumerate(absv):
-                    if t == 1:
-                        eob = i
-                r = 0
-                br: list[int] = []  # this block's buffered correction bits
-                for i, t in enumerate(absv):
-                    if t == 0:
-                        r += 1
-                        continue
-                    while r > 15 and i <= eob:
-                        flush_eob_refine()
-                        ops.append(("h", 1, 0xF0))
-                        r -= 16
-                        for bit in br:
-                            ops.append(("b", bit, 1))
-                        br = []
-                    if t > 1:  # history coef: one correction bit
-                        br.append(t & 1)
-                        continue
-                    # newly nonzero (t == 1)
-                    flush_eob_refine()
-                    ops.append(("h", 1, (r << 4) | 1))
-                    ops.append(("b", 1 if int(blk[ss + i]) >= 0 else 0, 1))
-                    for bit in br:
-                        ops.append(("b", bit, 1))
-                    br = []
-                    r = 0
-                if r > 0 or br:
-                    eobrun += 1
-                    be.extend(br)
-                    if eobrun == 0x7FFF or len(be) > 900:
-                        flush_eob_refine()
-            flush_eob_refine()
-
-        # per-scan Huffman tables from the census (canonical, all codes
-        # one length L with 2^L > n so the all-ones code stays unused)
-        out = bytearray()
-        tables: dict[int, dict] = {}
-        for tclass in (0, 1):
-            syms = sorted({op[2] for op in ops if op[0] == "h" and op[1] == tclass})
-            if not syms:
-                continue
-            ln = max(1, len(syms).bit_length())
-            counts = [0] * 16
-            counts[ln - 1] = len(syms)
-            tables[tclass] = _huff_encode_table(counts, syms)
-            out += _jpeg_seg(
-                0xC4, bytes([(tclass << 4)]) + bytes(counts) + bytes(syms)
-            )
-        sos = bytes([len(scan_comps)])
-        for ci in scan_comps:
-            sos += bytes([ci + 1, 0])  # DC and AC table 0 (fresh per scan)
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += _jpeg_seg(0xDA, sos)
-        wr = _JpegBitWriter()
-        for op in ops:
-            if op[0] == "h":
-                code, n = tables[op[1]][op[2]]
-                wr.write(code, n)
-            else:
-                wr.write(op[1], op[2])
-        wr.flush()
-        out += bytes(wr.out)
-        return bytes(out)
-
-    out = bytearray(b"\xff\xd8")
-    out += _jpeg_seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    for tq, q in enumerate(qts):
-        out += _jpeg_seg(
-            0xDB, bytes([tq]) + bytes(int(v) for v in q[_JPEG_ZIGZAG])
-        )
-    nf = bytes([8]) + struct.pack(">HH", h, w) + bytes([ch])
-    for ci in range(ch):
-        hs, vs = sampling[ci]
-        nf += bytes([ci + 1, (hs << 4) | vs, tsel[ci]])
-    out += _jpeg_seg(0xC2, nf)
-    all_comps = list(range(ch))
-    out += render_scan(all_comps, 0, 0, 0, 1)  # DC first, Al=1
-    for ci in all_comps:  # spectral selection, Al=1
-        out += render_scan([ci], 1, 5, 0, 1)
-        out += render_scan([ci], 6, 63, 0, 1)
-    out += render_scan(all_comps, 0, 0, 1, 0)  # DC refine
-    for ci in all_comps:  # AC refine, Ah=1 → Al=0
-        out += render_scan([ci], 1, 5, 1, 0)
-        out += render_scan([ci], 6, 63, 1, 0)
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _jpeg_seg(marker: int, body: bytes) -> bytes:
-    import struct
-
-    return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-
-def decode_bmp_pixels(payload: bytes) -> "object | None":
-    """Decode an uncompressed / RLE8 BMP (BITMAPINFOHEADER family) to an
-    (h, w, ch) uint8 array — pure stdlib + numpy.  Supports 24/32-bit
-    BI_RGB (BGR(X) → RGB), 1/4/8-bit palette (including BI_RLE8),
-    bottom-up and top-down row orders.  None for other profiles
-    (BI_RLE4, BITFIELDS, OS/2 core headers) or malformed payloads."""
-    import struct
-
-    import numpy as np
-
-    if not payload or len(payload) < 54 or payload[:2] != b"BM":
-        return None
-    try:
-        px_off = struct.unpack("<I", payload[10:14])[0]
-        dib = struct.unpack("<I", payload[14:18])[0]
-        if dib < 40:
-            return None
-        w, h_raw = struct.unpack("<ii", payload[18:26])
-        bpp = struct.unpack("<H", payload[28:30])[0]
-        compression = struct.unpack("<I", payload[30:34])[0]
-        clr_used = struct.unpack("<I", payload[46:50])[0]
-        if w <= 0 or h_raw == 0:
-            return None
-        top_down = h_raw < 0
-        h = abs(h_raw)
-        if bpp in (24, 32) and compression == 0:
-            stride = (w * (bpp // 8) + 3) // 4 * 4
-            need = px_off + stride * h
-            if len(payload) < need:
-                return None
-            rows = np.frombuffer(
-                payload, dtype=np.uint8, count=stride * h, offset=px_off
-            ).reshape(h, stride)
-            nb = bpp // 8
-            img = rows[:, : w * nb].reshape(h, w, nb)[:, :, :3][:, :, ::-1]
-            return (img if top_down else img[::-1]).copy()
-        if bpp in (1, 4, 8) and compression in (0, 1):
-            n_pal = clr_used or (1 << bpp)
-            pal_lo = 14 + dib
-            if len(payload) < pal_lo + 4 * n_pal:
-                return None
-            pal = np.frombuffer(
-                payload, dtype=np.uint8, count=4 * n_pal, offset=pal_lo
-            ).reshape(n_pal, 4)[:, :3][:, ::-1]  # BGRX → RGB
-            if compression == 1:  # BI_RLE8 (bpp must be 8)
-                if bpp != 8:
-                    return None
-                idx = np.zeros((h, w), dtype=np.uint8)
-                x = y = 0
-                i = px_off
-                while i + 1 < len(payload):
-                    n, v = payload[i], payload[i + 1]
-                    i += 2
-                    if n:  # run of v
-                        idx[y, x : min(x + n, w)] = v
-                        x = min(x + n, w)
-                    elif v == 0:  # end of line
-                        x, y = 0, y + 1
-                        if y >= h:
-                            break
-                    elif v == 1:  # end of bitmap
-                        break
-                    elif v == 2:  # delta
-                        if i + 1 >= len(payload):
-                            return None
-                        x = min(x + payload[i], w)
-                        y = min(y + payload[i + 1], h - 1)
-                        i += 2
-                    else:  # absolute mode: v literal bytes, word-aligned
-                        if i + v > len(payload):
-                            return None
-                        run = np.frombuffer(
-                            payload, dtype=np.uint8, count=v, offset=i
-                        )
-                        end = min(x + v, w)
-                        idx[y, x:end] = run[: end - x]
-                        x = end
-                        i += v + (v % 2)
-            else:
-                stride = ((w * bpp + 7) // 8 + 3) // 4 * 4
-                if len(payload) < px_off + stride * h:
-                    return None
-                rows = np.frombuffer(
-                    payload, dtype=np.uint8, count=stride * h, offset=px_off
-                ).reshape(h, stride)
-                if bpp == 8:
-                    idx = rows[:, :w]
-                else:  # 1/4-bit: unpack MSB-first
-                    bits = np.unpackbits(rows, axis=1)[:, : w * bpp]
-                    weights = 1 << np.arange(bpp - 1, -1, -1)
-                    idx = (bits.reshape(h, w, bpp) * weights).sum(axis=2)
-            if int(idx.max(initial=0)) >= n_pal:
-                return None
-            img = pal[idx]
-            return (img if top_down else img[::-1]).copy()
-        return None
-    except (struct.error, IndexError, ValueError):
-        return None
-
-
-def _packbits_decode(data: bytes, expect: int) -> "bytes | None":
-    """Apple PackBits RLE (TIFF compression 32773) → raw bytes."""
-    out = bytearray()
-    i = 0
-    while i < len(data) and len(out) < expect:
-        n = data[i]
-        i += 1
-        if n < 128:  # literal run of n+1 bytes
-            if i + n + 1 > len(data):
-                return None
-            out += data[i : i + n + 1]
-            i += n + 1
-        elif n > 128:  # repeat next byte 257-n times
-            if i >= len(data):
-                return None
-            out += bytes([data[i]]) * (257 - n)
-            i += 1
-        # n == 128: no-op
-    return bytes(out[:expect]) if len(out) >= expect else None
-
-
 def _tiff_lzw_decode(data: bytes, expect: int) -> "bytes | None":
     """TIFF-variant LZW (TIFF6 §13): MSB-first bit packing, codes start
     at 9 bits, ClearCode=256/EOI=257, and the EARLY-CHANGE quirk — the
     code width grows when the next code to assign reaches 2^width − 1
-    (one code earlier than the GIF variant above).  A stream that ends
-    before ``expect`` bytes decode, or any code not yet in the table
-    (beyond the standard KwKwK case), returns None — fail closed like
-    every other profile gate in this module."""
+    (one code earlier than GIF's LZW).  A stream that ends before
+    ``expect`` bytes decode, or any code not yet in the table (beyond
+    the standard KwKwK case), returns None — fail closed like every
+    other profile gate in this module."""
     clear, eoi = 256, 257
     table: list[bytes] = [bytes([i]) for i in range(256)] + [b"", b""]
     width = 9
@@ -2273,12 +165,12 @@ def _tiff_lzw_encode(data: bytes) -> bytes:
 
 def decode_tiff_pixels(payload: bytes) -> "object | None":
     """Decode a baseline TIFF (8-bit samples, strip-organized,
-    uncompressed, PackBits, LZW or Adobe-deflate — optionally with the
+    uncompressed, LZW or Adobe-deflate — optionally with the
     horizontal-differencing Predictor) to an (h, w, ch) uint8 array —
     pure stdlib + numpy.  Supports grayscale (both photometric
     polarities), RGB(A) and 16-bit-colormap palette images, either
-    byte order.  None for other profiles (JPEG-in-TIFF, tiles,
-    sub-byte or 16-bit samples, planar multi-sample layout) or
+    byte order.  None for other profiles (PackBits, JPEG-in-TIFF,
+    tiles, sub-byte or 16-bit samples, planar multi-sample layout) or
     malformed payloads."""
     import struct
 
@@ -2341,7 +233,7 @@ def decode_tiff_pixels(payload: bytes) -> "object | None":
             or len(offsets) != len(counts)
             or any(b != 8 for b in bits)
             or spp not in (1, 3, 4)
-            or compression not in (1, 32773, 5, 8)
+            or compression not in (1, 5, 8)
             or photometric not in (0, 1, 2, 3)
             or (planar != 1 and spp > 1)
             or predictor not in (1, 2)
@@ -2355,11 +247,7 @@ def decode_tiff_pixels(payload: bytes) -> "object | None":
             n_rows = min(rows_per_strip, h - i * rows_per_strip)
             if n_rows <= 0:
                 return None
-            if compression == 32773:
-                strip = _packbits_decode(strip, n_rows * w * spp)
-                if strip is None:
-                    return None
-            elif compression == 5:
+            if compression == 5:
                 strip = _tiff_lzw_decode(strip, n_rows * w * spp)
                 if strip is None:
                     return None
@@ -2372,9 +260,9 @@ def decode_tiff_pixels(payload: bytes) -> "object | None":
                 # inflater at the strip's SPEC-MAXIMAL size — a padded
                 # final strip (a real encoder pattern: the last strip
                 # compressed at full rows_per_strip rows) may honestly
-                # inflate past the n_rows geometry, and the
-                # PackBits/LZW siblings truncate-and-accept that shape,
-                # so this path does too; anything inflating BEYOND the
+                # inflate past the n_rows geometry, and the LZW
+                # sibling truncates-and-accepts that shape, so this
+                # path does too; anything inflating BEYOND the
                 # full-strip geometry is a bomb and fails closed, as
                 # does a stream that never reaches a checksum-valid
                 # EOF (truncation).
@@ -2382,12 +270,12 @@ def decode_tiff_pixels(payload: bytes) -> "object | None":
                 # The honest padded bound is the strip's declared
                 # geometry (rows_per_strip rows — covers the common
                 # huge-rows_per_strip single-strip idiom padded past h,
-                # which the PackBits/LZW siblings truncate-and-accept),
+                # which the LZW sibling truncates-and-accepts),
                 # under an ABSOLUTE sanity cap of 4x the image so a
                 # crafted rows_per_strip cannot widen the bomb bound
                 # unboundedly (r13 ADVICE: the previous min(rows_per_
                 # strip, h) clamp rejected legitimately padded deflate
-                # strips the other codecs accept).
+                # strips the LZW path accepts).
                 full_expect = min(
                     rows_per_strip * w * spp,
                     max(expect, 4 * h * w * spp),
@@ -2426,28 +314,6 @@ def decode_tiff_pixels(payload: bytes) -> "object | None":
         return img.copy()
     except (struct.error, IndexError, ValueError):
         return None
-
-
-def decode_image_pixels(payload: bytes) -> "object | None":
-    """Dependency-free pixel decode for the formats the stdlib can fully
-    express: PNG at every spec-legal profile (deflate + scanline
-    filters; 8/16-bit, palette incl. tRNS alpha, sub-byte gray, Adam7),
-    first-frame GIF (LZW + palette), Huffman JPEG (baseline + extended
-    sequential + progressive), uncompressed/RLE8 BMP and baseline TIFF
-    (uncompressed, PackBits, LZW or deflate strips, horizontal-
-    differencing predictor — r12).  Arithmetic-coded JPEG and the
-    non-stdlib-expressible formats (WebP/VP8, JPEG-in-TIFF, ...) stay
-    the PIL-gated remainder."""
-    px = decode_png_pixels(payload)
-    if px is None:
-        px = decode_gif_pixels(payload)
-    if px is None:
-        px = decode_bmp_pixels(payload)
-    if px is None:
-        px = decode_tiff_pixels(payload)
-    if px is None:
-        px = decode_jpeg_pixels(payload)
-    return px
 
 
 def resize_bytes(payload: bytes, stride: int = 2) -> bytes:
@@ -3117,15 +983,15 @@ PIXEL_STAT_SCHEMA = StructType(
 
 
 def extract_pixel_stats(media: DataFrame) -> DataFrame:
-    """Pixel-stat extraction over binary image payloads through the
-    REAL decode_image_pixels codec stack (Arrow-batched); undecodable
-    payloads yield NULL stats rather than failing the batch."""
+    """Pixel-stat extraction over binary TIFF payloads through the REAL
+    decode_tiff_pixels decoder (Arrow-batched); undecodable payloads
+    yield NULL stats rather than failing the batch."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             sums, mins, maxs = [], [], []
             for b in pdf["payload"]:
-                px = decode_image_pixels(b) if b is not None else None
+                px = decode_tiff_pixels(b) if b is not None else None
                 if px is None:
                     sums.append(None), mins.append(None), maxs.append(None)
                 else:

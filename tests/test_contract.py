@@ -268,8 +268,6 @@ def test_package_reads_no_env_knobs():
 # Top-level definitions that only tests reach and that stay on purpose,
 # keyed "<module path under the package>::<name>", each with why.
 _TWIN = "streaming twin COVERAGE names"
-_ENCODER = "independent encoder the decoder tests compare against"
-_CODEC = "dependency-free codec COVERAGE's multimodal row names"
 TEST_ONLY_KEPT = {
     "client.py::LocalSimulationClient": "the local simulation client (COVERAGE C3, S6)",
     "streaming/corpus.py::corpus_ingest_stream": _TWIN,
@@ -282,17 +280,14 @@ TEST_ONLY_KEPT = {
     "streaming/corpus.py::drift_vocab": "fits the vocabulary corpus_drift_stream tracks",
     "streaming/hourly.py::run_to_memory": "the streaming tests' sink; a copy in tests/ "
     "would not be smaller",
-    "operators/multimodal.py::encode_png": _ENCODER,
-    "operators/multimodal.py::encode_jpeg": _ENCODER,
-    "operators/multimodal.py::encode_jpeg_progressive": _ENCODER,
-    "operators/multimodal.py::parse_image_dims": _CODEC,
-    "operators/multimodal.py::parse_audio_meta": _CODEC,
-    "operators/multimodal.py::parse_video_meta": _CODEC,
-    "operators/multimodal.py::decode_wav_samples": _CODEC,
-    "operators/multimodal.py::decode_mjpeg_frames": _CODEC,
     "operators/similarity.py::kmeans_centroids": "builds the trained codebook that "
     "ivf_topk(codebook=) and semantic dedup take",
 }
+
+
+def _span(node: ast.AST) -> tuple[int, int]:
+    """First and last line of a definition, its decorators included."""
+    return min([node.lineno] + [d.lineno for d in node.decorator_list]), node.end_lineno
 
 
 def _unreached(pkg: Path, readers: list[Path]) -> set[str]:
@@ -324,9 +319,9 @@ def _unreached(pkg: Path, readers: list[Path]) -> set[str]:
             ]
     unreached = set()
     for path, node in defs:
-        start = min([node.lineno] + [d.lineno for d in node.decorator_list])
+        start, end = _span(node)
         if all(
-            p == path and start <= line <= node.end_lineno
+            p == path and start <= line <= end
             for p, line in mentions.get(node.name, [])
         ):
             unreached.add(f"{path.relative_to(pkg).as_posix()}::{node.name}")
@@ -355,3 +350,78 @@ def test_package_defines_nothing_only_tests_reach():
     # the scan itself must tell a kept exception from a user path
     assert "streaming/hourly.py::run_to_memory" in unreached
     assert "etl/pipeline.py::run_pipeline" not in unreached
+
+
+# The queries whose Python lives in operators/multimodal.py.
+_MULTIMODAL_QUERIES = (
+    "multimodal_features",
+    "multimodal_frames",
+    "multimodal_pipeline",
+    "exif_census",
+    "lzw_tiff_census",
+)
+
+
+def _never_entered():
+    """Canary for the execution rule below: nothing calls this."""
+
+
+def _unentered(path: Path, entered: set[tuple[str, int]]) -> set[str]:
+    """Top-level functions and classes of the module at ``path`` whose
+    lines start no code object in ``entered`` (pairs of file name and
+    first line, as ``sys.settrace`` saw them called)."""
+    lines = [line for file, line in entered if file == str(path)]
+    tree = ast.parse(path.read_text(), str(path))
+    unentered = set()
+    for node in tree.body:
+        if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            continue
+        start, end = _span(node)
+        if not any(start <= line <= end for line in lines):
+            unentered.add(node.name)
+    return unentered
+
+
+def test_multimodal_queries_enter_every_definition(spark):
+    """Execution rule for operators/multimodal.py: a definition stays only
+    if one of the five multimodal queries runs it; a name in a dispatch
+    chain does not count.  Building each query's DataFrame runs its
+    driver-side Python, and the row kernels its ``mapInPandas`` closures
+    call run here over the same doc ids, all under ``sys.settrace`` (the
+    kernels are pure Python, so no coverage tool is needed).  A closure
+    that starts calling another function of the module must add it to
+    the kernel loop, or the test lists it."""
+    import pyarrow.parquet as pq
+
+    from ida_ice_energy_simulation_etl_pipeline_spark.operators import (
+        multimodal as mm,
+    )
+    from ida_ice_energy_simulation_etl_pipeline_spark.plans import ALL_QUERIES
+
+    sf_dir = "/root/testdata/sf0.001"
+    docs = pq.read_table(
+        f"{sf_dir}/documents.parquet", columns=["doc_id", "text"]
+    ).to_pylist()
+    entered: set[tuple[str, int]] = set()
+
+    def tracer(frame, event, arg):
+        entered.add((frame.f_code.co_filename, frame.f_code.co_firstlineno))
+
+    sys.settrace(tracer)
+    try:
+        for name in _MULTIMODAL_QUERIES:
+            ALL_QUERIES[name].fn(spark, sf_dir)
+        for doc in docs:
+            mm.parse_exif(mm.synth_exif_tiff(doc["doc_id"]))
+            mm.decode_tiff_pixels(mm.synth_lzw_tiff(doc["doc_id"]))
+            for frame in mm.frame_sample((doc["text"] or "").encode()):
+                mm.resize_bytes(frame)
+    finally:
+        sys.settrace(None)
+
+    unentered = sorted(_unentered(Path(mm.__file__), entered))
+    assert not unentered, "no multimodal query enters:\n" + "\n".join(unentered)
+    # the probe itself must see what ran and list what did not
+    for fn in (mm.decode_tiff_pixels, mm.parse_exif):
+        assert (fn.__code__.co_filename, fn.__code__.co_firstlineno) in entered
+    assert "_never_entered" in _unentered(Path(__file__), entered)

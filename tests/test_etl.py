@@ -261,9 +261,11 @@ def test_views_and_query(spark, star):
 
 def test_load_to_warehouse_saves_tables_and_views(spark, star):
     """The ``--warehouse`` sink: every star table becomes a catalog table
-    of the database, with the three views over them.  It runs in a new
-    session (same catalog): the temp views other tests register under the
-    star's table names would otherwise shadow the tables the views read."""
+    of the database, with the three views over them.  Empty temp views
+    named like the star tables are registered first in the same session,
+    as a plain run does before a ``--warehouse`` run: the warehouse views
+    must still read the catalog tables, and the session's current
+    database must not change."""
     import shutil
     from pathlib import Path
 
@@ -272,15 +274,20 @@ def test_load_to_warehouse_saves_tables_and_views(spark, star):
     spark.sql("DROP DATABASE IF EXISTS etl_wh CASCADE")
     wh = Path(spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"))
     shutil.rmtree(wh / "etl_wh.db", ignore_errors=True)
-    session = spark.newSession()
+    current = spark.catalog.currentDatabase()
+    register_temp_views(spark, {t: df.limit(0) for t, df in star.items()})
     try:
-        load_to_warehouse(session, star, database="etl_wh")
-        assert {t.name for t in session.catalog.listTables("etl_wh")} >= set(star)
-        assert session.table("etl_wh.fact_meters").count() == N_RUNS * HOURS
-        es = session.sql("SELECT * FROM etl_wh.vw_energy_summary").collect()
+        load_to_warehouse(spark, star, database="etl_wh")
+        assert spark.catalog.currentDatabase() == current
+        assert {t.name for t in spark.catalog.listTables("etl_wh")} >= set(star)
+        assert spark.table("etl_wh.fact_meters").count() == N_RUNS * HOURS
+        es = spark.sql("SELECT * FROM etl_wh.vw_energy_summary").collect()
         assert len(es) == N_RUNS
+        assert all(r["num_hours"] == HOURS for r in es)
+        assert spark.sql("SELECT * FROM vw_energy_summary").count() == 0
     finally:
         spark.sql("DROP DATABASE IF EXISTS etl_wh CASCADE")
+        register_temp_views(spark, star)
 
 
 def test_parquet_roundtrip(spark, star, tmp_path):

@@ -201,106 +201,6 @@ def test_mix_copies_matches_python_model(spark, doc_ids):
         assert got[i] == expected
 
 
-# --------------------------------------------------------------------------
-# Binary header parsers: total functions over arbitrary bytes
-@given(payload=st.binary(max_size=64))
-@SLOW
-def test_parse_image_dims_never_raises(payload):
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        parse_image_dims,
-    )
-
-    out = parse_image_dims(payload)
-    assert out is None or (
-        len(out) == 3 and out[0] >= 0 and out[1] >= 0 and isinstance(out[2], str)
-    )
-
-
-@given(
-    prefix=st.sampled_from(
-        [b"\x89PNG\r\n\x1a\n", b"GIF89a", b"BM", b"\xff\xd8", b"RIFF"]
-    ),
-    tail=st.binary(max_size=48),
-    cut=st.integers(0, 56),
-)
-@SLOW
-def test_header_parsers_survive_truncation(prefix, tail, cut):
-    """Valid magic numbers followed by arbitrary/truncated bodies parse to
-    None or a sane tuple — never an exception or negative dimension."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        parse_audio_meta,
-        parse_image_dims,
-    )
-
-    payload = (prefix + tail)[:cut]
-    img = parse_image_dims(payload)
-    assert img is None or (img[0] >= 0 and img[1] >= 0)
-    aud = parse_audio_meta(payload)
-    assert aud is None or (aud[0] >= 0 and aud[1] >= 0 and aud[3] >= 0)
-
-
-@given(
-    prefix=st.sampled_from(
-        [
-            b"RIFF\xff\xff\x00\x00AVI ",
-            b"RIFF\x20\x00\x00\x00AVI ",
-            b"\x00\x00\x00\x18ftypmp42",  # MP4: valid ftyp header
-            b"\x00\x00\x00\x01ftyp",  # MP4: largesize header, no size
-            b"\x00\x00\x00\x00ftyp",  # MP4: to-EOF size
-            b"",
-        ]
-    ),
-    tail=st.binary(max_size=64),
-)
-@SLOW
-def test_parse_video_meta_total_over_arbitrary_bytes(prefix, tail):
-    """parse_video_meta is a total function: arbitrary bytes behind a
-    valid (or absent) AVI/MP4 magic parse to None or a sane tuple —
-    never an exception (the iterative LIST/box walks bound adversarial
-    nesting and clip corrupt size fields)."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        parse_video_meta,
-    )
-
-    out = parse_video_meta(prefix + tail)
-    assert out is None or (
-        len(out) == 5 and out[0] >= 0 and out[1] >= 0 and out[4] >= 0
-    )
-
-
-@given(
-    prefix=st.sampled_from([b"RIFF\x40\x00\x00\x00WAVE", b""]),
-    tail=st.binary(max_size=96),
-)
-@SLOW
-def test_decode_wav_samples_total_over_arbitrary_bytes(prefix, tail):
-    """decode_wav_samples never raises on malformed bytes: every branch
-    clips to element-size multiples, so the worst outcome is None or an
-    empty/short sample array."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_wav_samples,
-    )
-
-    out = decode_wav_samples(prefix + tail)
-    assert out is None or out.ndim == 2
-
-
-@given(
-    prefix=st.sampled_from([b"GIF89a", b"GIF87a", b""]),
-    tail=st.binary(max_size=96),
-)
-@SLOW
-def test_decode_gif_pixels_total_over_arbitrary_bytes(prefix, tail):
-    """decode_gif_pixels never raises on malformed bytes — None or a
-    decoded (h, w, 3) frame, whatever the LZW stream claims."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_gif_pixels,
-    )
-
-    out = decode_gif_pixels(prefix + tail)
-    assert out is None or (out.ndim == 3 and out.shape[2] == 3)
-
-
 @given(
     docs=st.lists(
         st.lists(st.sampled_from("ab"), min_size=0, max_size=14).map(

@@ -428,146 +428,6 @@ def test_multimodal_stubs_are_explicit():
     assert resize_bytes(b"", 2) == b""
 
 
-def _png(w, h):
-    import struct
-
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + struct.pack(">I", 13)
-        + b"IHDR"
-        + struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-    )
-
-
-def _gif(w, h):
-    import struct
-
-    return b"GIF89a" + struct.pack("<HH", w, h)
-
-
-def _bmp(w, h):
-    import struct
-
-    # BITMAPINFOHEADER (dib size 40 at offset 14), top-down (negative h)
-    return (
-        b"BM" + b"\x00" * 12 + struct.pack("<I", 40)
-        + struct.pack("<ii", w, -h) + b"\x00" * 4
-    )
-
-
-def _jpeg(w, h):
-    import struct
-
-    app0 = b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-    sof0 = b"\xff\xc0" + struct.pack(">H", 17) + b"\x08" + struct.pack(">HH", h, w)
-    return b"\xff\xd8" + app0 + sof0 + b"\x00" * 12
-
-
-def _wav(n_ch, rate, bits, seconds):
-    import struct
-
-    data = b"\x00" * int(seconds * rate * n_ch * bits // 8)
-    byte_rate = rate * n_ch * bits // 8
-    fmt = struct.pack("<HHIIHH", 1, n_ch, rate, byte_rate, n_ch * bits // 8, bits)
-    return (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-
-
-def test_parse_image_dims_real_headers():
-    """The dependency-free default decoder REALLY parses the four common
-    container headers (handcrafted per-format binary payloads), and
-    returns None for junk instead of raising."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        parse_image_dims,
-    )
-
-    assert parse_image_dims(_png(640, 480)) == (640, 480, "PNG")
-    assert parse_image_dims(_gif(13, 37)) == (13, 37, "GIF")
-    assert parse_image_dims(_bmp(800, 600)) == (800, 600, "BMP")  # top-down abs
-    assert parse_image_dims(_jpeg(1920, 1080)) == (1920, 1080, "JPEG")
-    assert parse_image_dims(b"not an image at all") is None
-    assert parse_image_dims(b"") is None
-    assert parse_image_dims(b"\xff\xd8\xff") is None  # truncated JPEG
-
-
-def test_progressive_jpeg_decode_against_independent_encoder():
-    """Golden cross-check against an INDEPENDENT progressive encoder
-    (PIL/libjpeg), not just the in-repo encode_jpeg_progressive twin — a
-    shared spec misunderstanding (AC-refinement ZRL, EOB-run handling)
-    would round-trip the twins cleanly yet fail on real libjpeg streams.
-    Skipped where PIL is absent (this container); the handcrafted-
-    bitstream unit tests pin the same mechanisms dependency-free."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-    )
-
-    pytest.importorskip("PIL", reason="PIL not installed in this container")
-    from io import BytesIO
-
-    import numpy as np
-    from PIL import Image
-
-    rng = np.random.default_rng(7)
-    px = rng.integers(0, 256, size=(24, 17, 3), dtype=np.uint8)
-    for quality in (95, 75):
-        buf = BytesIO()
-        Image.fromarray(px).save(
-            buf, format="JPEG", quality=quality, progressive=True
-        )
-        got = decode_jpeg_pixels(buf.getvalue())
-        assert got is not None and got.shape == (24, 17, 3)
-        want = np.asarray(Image.open(BytesIO(buf.getvalue())).convert("RGB"))
-        # libjpeg's IDCT and ours may round intermediate values apart by
-        # a hair; the decoded planes must agree within a tight tolerance
-        diff = np.abs(got.astype(int) - want.astype(int))
-        assert diff.max() <= 2, diff.max()
-
-
-def test_progressive_jpeg_decode_against_libjpeg_golden():
-    """Checked-in golden cross-check that runs in EVERY container (no PIL
-    needed): three progressive streams produced by the system libjpeg via
-    ``tests/golden/gen_jpeg_golden.c``, asserted against libjpeg's own
-    decode of each stream.  Odd dims + 2x2 subsampling, unsubsampled
-    low-quality, and grayscale cover the scan-script/EOB/refinement paths
-    the round-9 advisory flagged as twin-only-verified."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-    )
-
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "jpeg_progressive_golden",
-        os.path.join(
-            os.path.dirname(__file__), "golden", "jpeg_progressive_golden.py"
-        ),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    GOLDENS = mod.GOLDENS
-
-    for name, g in GOLDENS.items():
-        h, w, c = g["shape"]
-        # the stream really is progressive (SOF2 marker present)
-        assert b"\xff\xc2" in g["jpeg"], name
-        got = decode_jpeg_pixels(g["jpeg"])
-        assert got is not None, name
-        got = np.asarray(got).reshape(h, w, c)
-        want = np.frombuffer(g["libjpeg_pixels"], dtype=np.uint8).reshape(
-            h, w, c
-        )
-        diff = np.abs(got.astype(int) - want.astype(int))
-        # libjpeg islow IDCT vs our float IDCT round apart by ≤2 LSB
-        assert diff.max() <= 2, (name, diff.max())
-        assert diff.mean() < 0.5, (name, diff.mean())
-
-
 def test_multimodal_frame_explosion(spark):
     docs = spark.createDataFrame(
         [(1, "0123456789abcdef", "s1"), (2, "xy", "s2"), (3, "", "s3")],
@@ -1194,253 +1054,6 @@ def test_semantic_dedup_cell_size_guard_fires(spark):
     assert len(got) == 6
 
 
-def test_parse_audio_meta_real_wav_header():
-    """Handcrafted 16-bit stereo 8 kHz WAV: the RIFF chunk walk recovers
-    channels/rate/bits and computes duration from the data-chunk size."""
-    import struct
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        parse_audio_meta,
-    )
-
-    assert parse_audio_meta(_wav(2, 8000, 16, 0.5)) == (2, 8000, 16, 0.5, False)
-    # inflated size field (truncated/corrupt body): duration still reports
-    # the header's intent, but the truncated flag exposes the mismatch so
-    # duration-based curation filters can't be fooled by a forged header
-    full = _wav(2, 8000, 16, 0.5)
-    cut = full[: len(full) - 100]
-    assert parse_audio_meta(cut) == (2, 8000, 16, 0.5, True)
-    assert parse_audio_meta(b"ID3\x04 not a wav") is None
-    assert parse_audio_meta(b"RIFF\x00\x00\x00\x00AVI ") is None  # not WAVE
-    assert parse_audio_meta(b"") is None
-
-
-def _avi(
-    width: int, height: int, n_frames: int, us_per_frame: int
-) -> bytes:
-    """Minimal spec-shaped AVI: RIFF 'AVI ' → LIST 'hdrl' → avih(56) +
-    a LIST 'movi' stub — enough structure that the parser must actually
-    recurse into the nested LIST to find the main header."""
-    import struct
-
-    avih_body = struct.pack(
-        "<14I",
-        us_per_frame,
-        1_000_000,  # max bytes/sec
-        0,  # padding granularity
-        0x10,  # flags (HASINDEX)
-        n_frames,
-        0,  # initial frames
-        1,  # streams
-        65536,  # suggested buffer
-        width,
-        height,
-        0,
-        0,
-        0,
-        0,  # reserved
-    )
-    avih = b"avih" + struct.pack("<I", len(avih_body)) + avih_body
-    hdrl_body = b"hdrl" + avih
-    hdrl = b"LIST" + struct.pack("<I", len(hdrl_body)) + hdrl_body
-    movi_body = b"movi"
-    movi = b"LIST" + struct.pack("<I", len(movi_body)) + movi_body
-    riff_body = b"AVI " + hdrl + movi
-    return b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
-
-
-def test_parse_video_meta_real_avi_header():
-    """Handcrafted 640x480 25fps AVI: the recursive RIFF walk finds the
-    avih header inside the nested hdrl LIST; non-AVI and truncated
-    payloads degrade to None instead of raising."""
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        parse_video_meta,
-    )
-
-    got = parse_video_meta(_avi(640, 480, 250, 40_000))
-    assert got == (640, 480, 250, 25.0, 10.0)
-    assert parse_video_meta(b"RIFF\x00\x00\x00\x00WAVE") is None  # a WAV
-    # bare ftyp with no moov: recognized as MP4 but carries no metadata
-    assert parse_video_meta(b"\x00\x00\x00\x18ftypmp42") is None
-    assert parse_video_meta(b"") is None
-    # truncated mid-header: the avih body is clipped below 40 bytes
-    whole = _avi(640, 480, 250, 40_000)
-    assert parse_video_meta(whole[:40]) is None
-    # zero us_per_frame must not divide by zero
-    assert parse_video_meta(_avi(10, 10, 5, 0))[3] == 0.0
-
-
-def _box(btype: bytes, body: bytes, largesize: bool = False) -> bytes:
-    """One ISO-BMFF box; largesize=True uses the size==1 64-bit header."""
-    import struct
-
-    if largesize:
-        return struct.pack(">I", 1) + btype + struct.pack(">Q", 16 + len(body)) + body
-    return struct.pack(">I", 8 + len(body)) + btype + body
-
-
-def _mp4(
-    width: int,
-    height: int,
-    n_frames: int,
-    timescale: int,
-    duration_ticks: int,
-    *,
-    v1: bool = False,
-    handler: bytes = b"vide",
-    large_moov: bool = False,
-) -> bytes:
-    """Minimal spec-shaped MP4: ftyp + moov(mvhd + trak(tkhd +
-    mdia(hdlr + minf(stbl(stsz))))) — enough nesting that the parser
-    must walk the real container tree and associate the hdlr/tkhd/stsz
-    of ONE trak.  v1 switches mvhd/tkhd to the 64-bit-time layouts."""
-    import struct
-
-    if v1:
-        mvhd = b"\x01\x00\x00\x00" + b"\x00" * 16 + struct.pack(
-            ">IQ", timescale, duration_ticks
-        )
-        tkhd = (
-            b"\x01\x00\x00\x00"
-            + b"\x00" * 32  # ctime8 mtime8 trackid4 reserved4 duration8
-            + b"\x00" * 16  # reserved8 + layer/alt/vol/pad
-            + b"\x00" * 36  # matrix
-            + struct.pack(">II", width << 16, height << 16)
-        )
-    else:
-        mvhd = b"\x00" * 12 + struct.pack(">II", timescale, duration_ticks)
-        tkhd = (
-            b"\x00" * 4
-            + b"\x00" * 20  # ctime mtime trackid reserved duration
-            + b"\x00" * 16  # reserved8 + layer/alt/vol/pad
-            + b"\x00" * 36  # matrix
-            + struct.pack(">II", width << 16, height << 16)
-        )
-    hdlr = b"\x00" * 8 + handler + b"\x00" * 12
-    stsz = b"\x00" * 8 + struct.pack(">I", n_frames)
-    stbl = _box("stbl".encode(), _box(b"stsz", stsz))
-    minf = _box(b"minf", stbl)
-    mdia = _box(b"mdia", _box(b"hdlr", hdlr) + minf)
-    trak = _box(b"trak", _box(b"tkhd", tkhd) + mdia)
-    moov = _box(b"moov", _box(b"mvhd", mvhd) + trak, largesize=large_moov)
-    return _box(b"ftyp", b"mp42\x00\x00\x00\x00mp42isom") + moov
-
-
-def test_parse_video_meta_real_mp4_header():
-    """Handcrafted 1280x720 MP4 (v0 and v1 box layouts, plus a 64-bit
-    largesize moov): the ISO-BMFF box walk recovers resolution from
-    tkhd's 16.16 fixed point, frame count from stsz, and duration from
-    mvhd; audio-only tracks and corrupt size fields degrade to None."""
-    import struct
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        parse_video_meta,
-    )
-
-    # 300 frames over 12 s (timescale 1000) = 25 fps
-    assert parse_video_meta(_mp4(1280, 720, 300, 1000, 12_000)) == (
-        1280, 720, 300, 25.0, 12.0,
-    )
-    assert parse_video_meta(_mp4(640, 360, 48, 600, 1200, v1=True)) == (
-        640, 360, 48, 24.0, 2.0,
-    )
-    assert parse_video_meta(
-        _mp4(320, 240, 10, 1000, 5000, large_moov=True)
-    ) == (320, 240, 10, 2.0, 5.0)
-    # audio-only MP4: no vide track → None
-    assert parse_video_meta(_mp4(0, 0, 99, 1000, 5000, handler=b"soun")) is None
-    # zero movie duration: fps pins to 0.0 instead of dividing by zero
-    assert parse_video_meta(_mp4(320, 240, 10, 1000, 0))[3] == 0.0
-    # truncated mid-moov: short bodies, no exception
-    whole = _mp4(1280, 720, 300, 1000, 12_000)
-    for cut in (10, 40, len(whole) // 2, len(whole) - 3):
-        got = parse_video_meta(whole[:cut])
-        assert got is None or got[0] >= 0
-    # truncated v1 mvhd (body 20-31 bytes): must be skipped, not read
-    # with v0 offsets — v0 offsets would land on mid-ctime bytes and
-    # report garbage duration.  Build a moov whose mvhd box is a v1
-    # header clipped to 24 body bytes around an otherwise-valid trak.
-    ok = _mp4(1280, 720, 300, 1000, 12_000, v1=True)
-    clipped_mvhd = _box(b"mvhd", (b"\x01\x00\x00\x00" + b"\x00" * 20))
-    trak_start = ok.index(b"trak") - 4
-    moov_end = ok.index(b"moov") + 4 + (
-        int.from_bytes(ok[ok.index(b"moov") - 4 : ok.index(b"moov")], "big") - 8
-    )
-    trak = ok[trak_start:moov_end]
-    bad = _box(b"ftyp", b"mp42\x00\x00\x00\x00mp42isom") + _box(
-        b"moov", clipped_mvhd + trak
-    )
-    assert parse_video_meta(bad) is None
-    # adversarial size fields: size<8 (loop guard) and size=0 (to-EOF)
-    junk = _box(b"ftyp", b"mp42") + struct.pack(">I", 3) + b"moov"
-    assert parse_video_meta(junk) is None
-    eof_box = _box(b"ftyp", b"mp42") + struct.pack(">I", 0) + b"free"
-    assert parse_video_meta(eof_box) is None
-
-
-def test_parse_video_meta_deeply_nested_lists_no_recursion():
-    """Adversarial payload: thousands of nested LIST chunks inside a
-    valid RIFF AVI header — the iterative walk returns None (or a
-    found header) instead of RecursionError killing a Spark task."""
-    import struct
-
-    inner = b""
-    for _ in range(5000):
-        body = b"xxxx" + inner  # 4-byte list type + previous level
-        inner = b"LIST" + struct.pack("<I", len(body)) + body
-    bomb = b"RIFF" + struct.pack("<I", len(inner) + 4) + b"AVI " + inner
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        parse_video_meta,
-    )
-
-    assert parse_video_meta(bomb) is None
-    # the same nesting with an avih at the bottom still parses
-    avih_payload = _avi(320, 240, 10, 100_000)
-    hdr = avih_payload[12:]  # hdrl LIST + movi LIST
-    nested = hdr
-    for _ in range(2000):
-        body = b"xxxx" + nested
-        nested = b"LIST" + struct.pack("<I", len(body)) + body
-    deep = b"RIFF" + struct.pack("<I", len(nested) + 4) + b"AVI " + nested
-    assert parse_video_meta(deep) == (320, 240, 10, 10.0, 1.0)
-
-
-def test_parse_image_dims_edge_variants():
-    """Round-4 review regressions: JPEG fill bytes before markers, OS/2
-    core-header BMPs, and compressed-WAV duration via the byte-rate
-    field."""
-    import struct
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        parse_audio_meta,
-        parse_image_dims,
-    )
-
-    # JPEG with 0xFF fill bytes before the SOF marker (B.1.1.2)
-    sof0 = b"\xff\xc0" + struct.pack(">H", 17) + b"\x08" + struct.pack(">HH", 9, 5)
-    filled = b"\xff\xd8" + b"\xff\xff\xff" + sof0 + b"\x00" * 12
-    assert parse_image_dims(filled) == (5, 9, "JPEG")
-
-    # OS/2 BITMAPCOREHEADER: dib size 12, uint16 dims at 18/20
-    core = (
-        b"BM" + b"\x00" * 12 + struct.pack("<I", 12)
-        + struct.pack("<HHHH", 100, 100, 1, 24)
-    )
-    assert parse_image_dims(core) == (100, 100, "BMP")
-
-    # ADPCM-style WAV: bits=4, real byte_rate in the header — duration
-    # must come from byte_rate, not n_ch*rate*bits/8
-    byte_rate = 4550
-    fmt = struct.pack("<HHIIHH", 0x11, 1, 8000, byte_rate, 256, 4)
-    data = b"\x00" * (byte_rate * 2)  # 2 s of compressed audio
-    wav = (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-    assert parse_audio_meta(wav) == (1, 8000, 4, 2.0, False)
-
-
 def test_embed_documents_null_for_token_free_text(spark):
     from ida_ice_energy_simulation_etl_pipeline_spark.operators.inference import (
         embed_documents,
@@ -1895,419 +1508,6 @@ def test_weighted_sample_partitioning_invariant_and_weighted(
     assert sampled_avg > corpus_avg
 
 
-# --------------------------------------------------------------------------
-# Pure-stdlib GIF pixel codec (operators/multimodal.py) — the test-side
-# LZW ENCODER here is an independent implementation, so encoder and
-# decoder can't share a bug.
-def _gif_lzw_encode(indices: bytes, min_code: int) -> bytes:
-    clear, eoi = 1 << min_code, (1 << min_code) + 1
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    width = min_code + 1
-    out = bytearray()
-    acc = nbits = 0
-
-    def emit(code):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    emit(clear)
-    seq = b""
-    for b in indices:
-        nxt = seq + bytes([b])
-        if nxt in table:
-            seq = nxt
-            continue
-        emit(table[seq])
-        table[nxt] = next_code
-        next_code += 1
-        if next_code - 1 == (1 << width) and width < 12:
-            # decoder widens when ITS next slot reaches 2^width; the
-            # encoder mirrors that one step later (its table is one
-            # entry ahead at emit time)
-            width += 1
-        seq = bytes([b])
-    emit(table[seq])
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _gif_file(
-    indices, palette, w: int, h: int, *, interlace: bool = False,
-    min_code: int = 2,
-) -> bytes:
-    import struct
-
-    gct_bits = 1
-    while (1 << (gct_bits + 1)) < len(palette):
-        gct_bits += 1
-    n = 1 << (gct_bits + 1)
-    pal = bytes(
-        palette[i][c] if i < len(palette) else 0
-        for i in range(n)
-        for c in range(3)
-    )
-    lzw = _gif_lzw_encode(bytes(indices), min_code)
-    blocks = b""
-    for i in range(0, len(lzw), 255):
-        part = lzw[i : i + 255]
-        blocks += bytes([len(part)]) + part
-    return (
-        b"GIF89a"
-        + struct.pack("<HHBBB", w, h, 0x80 | gct_bits, 0, 0)
-        + pal
-        + b"\x21\xf9\x04\x00\x00\x00\x00\x00"  # GCE extension (skipped)
-        + b"\x2c"
-        + struct.pack("<HHHHB", 0, 0, w, h, 0x40 if interlace else 0)
-        + bytes([min_code])
-        + blocks
-        + b"\x00\x3b"
-    )
-
-
-def test_gif_decoder_matches_independent_encoder():
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_gif_pixels,
-        decode_image_pixels,
-    )
-
-    palette = [(255, 0, 0), (0, 255, 0), (0, 0, 255), (9, 9, 9)]
-    rng = np.random.default_rng(11)
-    idx = rng.integers(0, 4, size=(6, 5), dtype=np.uint8)
-    blob = _gif_file(idx.ravel().tolist(), palette, 5, 6)
-    got = decode_gif_pixels(blob)
-    assert got is not None and got.shape == (6, 5, 3)
-    expect = np.array(palette, dtype=np.uint8)[idx]
-    assert (got == expect).all()
-    # the dispatcher routes GIF too, and junk stays None
-    assert (decode_image_pixels(blob) == expect).all()
-    assert decode_gif_pixels(b"GIF89a\x00") is None
-    assert decode_gif_pixels(blob[:20]) is None
-
-
-def test_gif_decoder_interlaced_and_long_streams():
-    """Interlaced row reordering, and an indices stream long enough to
-    force LZW code-width growth past the initial width."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_gif_pixels,
-    )
-
-    palette = [(i, i, i) for i in range(8)]
-    rng = np.random.default_rng(13)
-    idx = rng.integers(0, 8, size=(16, 13), dtype=np.uint8)
-    expect = np.array(palette, dtype=np.uint8)[idx]
-    h = 16
-    pass_order = (
-        list(range(0, h, 8)) + list(range(4, h, 8))
-        + list(range(2, h, 4)) + list(range(1, h, 2))
-    )
-    for interlace in (False, True):
-        rows = idx[pass_order] if interlace else idx  # stream row order
-        blob = _gif_file(
-            rows.ravel().tolist(), palette, 13, 16,
-            interlace=interlace, min_code=3,
-        )
-        got = decode_gif_pixels(blob)
-        assert got is not None and (got == expect).all(), interlace
-
-
-# Pure-stdlib PNG pixel codec (operators/multimodal.py)
-def test_png_codec_round_trip_all_channel_counts():
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_png_pixels,
-        encode_png,
-        parse_image_dims,
-    )
-
-    rng = np.random.default_rng(7)
-    for ch in (1, 2, 3, 4):
-        px = rng.integers(0, 256, size=(5, 7, ch), dtype=np.uint8)
-        blob = encode_png(px)
-        assert parse_image_dims(blob) == (7, 5, "PNG")  # header agrees
-        back = decode_png_pixels(blob)
-        assert back is not None and back.shape == (5, 7, ch)
-        assert (back == px).all()
-
-
-def test_png_decoder_unfilters_sub_up_average_paeth():
-    """Hand-build IDAT scanlines using every PNG filter type and check
-    the unfiltering against a known 3x3 grayscale image."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        _PNG_MAGIC,
-        decode_png_pixels,
-    )
-
-    target = np.array(
-        [[10, 20, 30], [15, 25, 35], [100, 90, 80]], dtype=np.uint8
-    )
-    # row 0: Sub (delta vs left), row 1: Up (delta vs above), row 2: Paeth
-    r0 = bytes([1, 10, 10, 10])
-    r1 = bytes([2, 5, 5, 5])
-
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        return a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-
-    row2, prev = [4], [15, 25, 35]
-    cur = []
-    for x, v in enumerate([100, 90, 80]):
-        a = cur[x - 1] if x >= 1 else 0
-        b = prev[x]
-        c = prev[x - 1] if x >= 1 else 0
-        row2.append((v - paeth(a, b, c)) & 0xFF)
-        cur.append(v)
-    raw = r0 + r1 + bytes(row2)
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    blob = (
-        _PNG_MAGIC
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 3, 8, 0, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    got = decode_png_pixels(blob)
-    assert got is not None and (got.reshape(3, 3) == target).all()
-
-
-def test_png_decoder_rejects_unsupported_profiles():
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_png_pixels,
-        encode_png,
-    )
-
-    assert decode_png_pixels(b"") is None
-    assert decode_png_pixels(b"\xff\xd8not a png") is None
-    blob = bytearray(encode_png(np.zeros((2, 2), dtype=np.uint8)))
-    blob[24] = 3  # bit depth 3 is illegal for every color type
-    assert decode_png_pixels(bytes(blob)) is None
-    # depth 16 is a SUPPORTED profile since r9, but this payload's IDAT
-    # is 8-bit-sized — the stream-length check must reject it, not crash
-    blob[24] = 16
-    assert decode_png_pixels(bytes(blob)) is None
-    assert decode_png_pixels(bytes(encode_png(np.zeros((2, 2), np.uint8)))[:30]) is None
-
-
-def test_jpeg_huffman_and_dct_match_spec_vectors():
-    """The canonical-code constructor and the DCT basis are the two
-    pieces the encoder and decoder SHARE, so a mistake there would
-    round-trip cleanly and only fail on external files — pin them to
-    independently-known spec facts instead."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        _JPEG_DC_LUM,
-        _JPEG_ZIGZAG,
-        _huff_decode_table,
-        _huff_encode_table,
-        _jpeg_dct_basis,
-    )
-
-    # Annex-K DC-luminance canonical codes (JPEG spec, Table K.3):
-    # category 0 → '00', 1..5 → 3-bit '010'..'110', 6 → '1110',
-    # 7 → '11110', ..., 11 → '111111110'
-    enc = _huff_encode_table(*_JPEG_DC_LUM)
-    assert enc[0] == (0b00, 2)
-    assert enc[1] == (0b010, 3) and enc[5] == (0b110, 3)
-    assert enc[6] == (0b1110, 4)
-    assert enc[11] == (0b111111110, 9)
-    dec = _huff_decode_table(_JPEG_DC_LUM[0], bytes(_JPEG_DC_LUM[1]))
-    assert all(dec[(n, c)] == s for s, (c, n) in enc.items())
-    # zigzag: spec-defined walk starts 0,1,8,16,9,2 and ends ...,55,62,63
-    assert _JPEG_ZIGZAG[:6] == [0, 1, 8, 16, 9, 2]
-    assert _JPEG_ZIGZAG[-3:] == [55, 62, 63]
-    assert sorted(_JPEG_ZIGZAG) == list(range(64))
-    # DCT basis: orthonormal, and a flat block has ONLY a DC coefficient
-    a = _jpeg_dct_basis()
-    assert np.allclose(a @ a.T, np.eye(8), atol=1e-12)
-    coef = a @ np.full((8, 8), 1.0) @ a.T
-    assert np.isclose(coef[0, 0], 8.0) and np.allclose(coef.reshape(-1)[1:], 0.0)
-
-
-def test_jpeg_roundtrip_gray_and_rgb():
-    """encode_jpeg → decode_jpeg_pixels across quality, subsampling and
-    restart-interval variants: dimensions exact, pixel error bounded by
-    the quantization (flat images reconstruct exactly)."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-        encode_jpeg,
-    )
-
-    flat = np.full((16, 24), 130, dtype=np.uint8)
-    got = decode_jpeg_pixels(encode_jpeg(flat, quality=90))
-    assert got.shape == (16, 24, 1)
-    assert int(np.abs(got[:, :, 0].astype(int) - 130).max()) == 0
-
-    h, w = 24, 33  # non-multiple-of-8/16 edges exercise the padding
-    y, x = np.mgrid[0:h, 0:w]
-    rgb = np.stack(
-        [(x * 7) % 256, (y * 11) % 256, ((x + y) * 5) % 256], axis=2
-    ).astype(np.uint8)
-    for q, sub, ri, tol in [
-        (95, False, 0, 1.5),
-        (75, True, 0, 6.0),
-        (90, False, 2, 2.0),
-        (85, True, 3, 6.0),
-    ]:
-        dec = decode_jpeg_pixels(
-            encode_jpeg(rgb, quality=q, subsample=sub, restart_interval=ri)
-        )
-        assert dec is not None and dec.shape == (h, w, 3)
-        assert float(np.abs(dec.astype(int) - rgb.astype(int)).mean()) < tol
-
-
-def test_jpeg_decoder_gates_and_truncation():
-    """Non-baseline profiles return None instead of garbage; every
-    truncation point degrades to None, never an exception."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-        encode_jpeg,
-    )
-
-    px = np.arange(64, dtype=np.uint8).reshape(8, 8)
-    blob = encode_jpeg(px, quality=90)
-    assert decode_jpeg_pixels(blob) is not None
-    # progressive gate: flip SOF0 (FFC0) to SOF2 (FFC2)
-    prog = blob.replace(b"\xff\xc0", b"\xff\xc2")
-    assert decode_jpeg_pixels(prog) is None
-    # arithmetic gate (SOF9)
-    assert decode_jpeg_pixels(blob.replace(b"\xff\xc0", b"\xff\xc9")) is None
-    # 12-bit precision gate: SOF precision byte is right after the length
-    i = blob.index(b"\xff\xc0")
-    twelve = blob[: i + 4] + bytes([12]) + blob[i + 5 :]
-    assert decode_jpeg_pixels(twelve) is None
-    # junk and truncation sweep
-    assert decode_jpeg_pixels(b"") is None
-    assert decode_jpeg_pixels(b"\xff\xd8") is None
-    assert decode_jpeg_pixels(b"GIF89a_not_jpeg") is None
-    for cut in range(2, len(blob), 7):
-        got = decode_jpeg_pixels(blob[:cut])
-        assert got is None or got.shape == (8, 8, 1)
-
-
-def _pcm16_wav(n_ch, rate, frames):
-    """WAV with REAL 16-bit PCM sample content: frames is a list of
-    per-frame tuples of floats in [-1, 1]."""
-    import struct
-
-    data = b"".join(
-        struct.pack("<h", max(-32768, min(32767, int(round(v * 32767)))))
-        for fr in frames
-        for v in fr
-    )
-    byte_rate = rate * n_ch * 2
-    fmt = struct.pack("<HHIIHH", 1, n_ch, rate, byte_rate, n_ch * 2, 16)
-    return (
-        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-
-
-def test_decode_wav_samples_real_pcm_content():
-    """The pure-stdlib PCM decoder recovers the actual sample values
-    (16-bit signed round-trip to ~1/32767), keeps channel structure,
-    handles 8-bit unsigned offset binary and IEEE float32, and returns
-    None for compressed formats instead of fabricating samples."""
-    import struct
-
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_wav_samples,
-    )
-
-    frames = [(0.5, -0.5), (0.0, 1.0), (-1.0, 0.25)]
-    arr = decode_wav_samples(_pcm16_wav(2, 8000, frames))
-    assert arr.shape == (3, 2)
-    assert np.allclose(arr, np.array(frames), atol=1.5 / 32767)
-
-    # 8-bit unsigned: 128 is zero, 255 ~ +1, 0 = -1
-    data8 = bytes([128, 255, 0])
-    fmt8 = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-    wav8 = (
-        b"RIFF" + struct.pack("<I", 36 + len(data8)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt8)) + fmt8
-        + b"data" + struct.pack("<I", len(data8)) + data8
-    )
-    arr8 = decode_wav_samples(wav8)
-    assert arr8.shape == (3, 1)
-    assert abs(arr8[0, 0]) < 1e-9 and arr8[2, 0] == -1.0
-
-    # IEEE float32 (format code 3) decodes bit-exactly
-    f32 = struct.pack("<3f", 0.25, -0.75, 1.0)
-    fmtf = struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)
-    wavf = (
-        b"RIFF" + struct.pack("<I", 36 + len(f32)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmtf)) + fmtf
-        + b"data" + struct.pack("<I", len(f32)) + f32
-    )
-    assert np.allclose(
-        decode_wav_samples(wavf).ravel(), [0.25, -0.75, 1.0]
-    )
-
-    # ADPCM (format code 0x11) is NOT decodable without a codec
-    fmt_adpcm = struct.pack("<HHIIHH", 0x11, 1, 8000, 4550, 256, 4)
-    wav_adpcm = (
-        b"RIFF" + struct.pack("<I", 36 + 4) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt_adpcm)) + fmt_adpcm
-        + b"data" + struct.pack("<I", 4) + b"\x00\x01\x02\x03"
-    )
-    assert decode_wav_samples(wav_adpcm) is None
-    assert decode_wav_samples(b"not audio") is None
-
-
-def test_decode_wav_samples_truncated_data_chunk_drops_partial_sample():
-    """A truncated payload whose data chunk is not a multiple of the
-    sample width decodes the whole samples and drops the partial tail —
-    it must not raise (a single malformed row would otherwise fail the
-    whole Spark stage instead of degrading as documented)."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_wav_samples,
-    )
-
-    frames = [(0.5,), (-0.5,), (0.25,)]
-    wav = _pcm16_wav(1, 8000, frames)
-    # Chop one byte off the 16-bit data chunk: 5 whole samples' worth of
-    # bytes becomes 2 whole + 1 partial.  (Header size field now
-    # overstates the chunk, as a genuinely truncated file's would.)
-    truncated = wav[:-1]
-    arr = decode_wav_samples(truncated)
-    assert arr.shape == (2, 1)
-    assert np.allclose(arr.ravel(), [0.5, -0.5], atol=1.5 / 32767)
-
-
 def test_table_profile_approx_within_hll_tolerance(spark):
     """The sketch-ndv profile variant agrees with the exact profile on
     every exact column and lands approx_ndv within the HLL rsd bound
@@ -2572,609 +1772,10 @@ def test_seq_packing_frame_budgets_on_token_id_column(spark):
     assert set(proxy.values()) == {0}
 
 
-def _build_png(w, h, depth, color, raw_rows, plte=None, trns=None, interlace=0):
-    """Independent TEST-SIDE PNG builder (struct+zlib only — shares no
-    code with the production decoder): raw_rows is the pre-filtered
-    scanline byte stream (each row prefixed with its filter byte)."""
-    import struct
-    import zlib
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    out = b"\x89PNG\r\n\x1a\n" + chunk(
-        b"IHDR", struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, interlace)
-    )
-    if plte is not None:
-        out += chunk(b"PLTE", bytes(plte))
-    if trns is not None:
-        out += chunk(b"tRNS", bytes(trns))
-    return out + chunk(b"IDAT", zlib.compress(raw_rows)) + chunk(b"IEND", b"")
-
-
-def test_png_decoder_palette_with_trns_alpha():
-    """1/2/4/8-bit palette PNGs expand through PLTE; tRNS palette alpha
-    promotes the output to RGBA with 255 default beyond the table."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_png_pixels,
-    )
-
-    plte = [255, 0, 0, 0, 255, 0, 0, 0, 255]  # red, green, blue
-    # 8-bit palette, 3x2: indices [[0,1,2],[2,1,0]]
-    raw = b"\x00" + bytes([0, 1, 2]) + b"\x00" + bytes([2, 1, 0])
-    px = decode_png_pixels(_build_png(3, 2, 8, 3, raw, plte=plte))
-    assert px.shape == (2, 3, 3)
-    assert px[0, 0].tolist() == [255, 0, 0] and px[1, 0].tolist() == [0, 0, 255]
-    # same image at 2-bit depth: indices packed MSB-first, row = one byte
-    # [0,1,2] -> 00 01 10 xx -> 0b00011000
-    raw2 = b"\x00" + bytes([0b00011000]) + b"\x00" + bytes([0b10010000])
-    px2 = decode_png_pixels(_build_png(3, 2, 2, 3, raw2, plte=plte))
-    assert (px2 == px).all()
-    # tRNS: index 0 transparent, index 1 half, index 2 defaults to 255
-    pxa = decode_png_pixels(
-        _build_png(3, 2, 8, 3, raw, plte=plte, trns=[0, 128])
-    )
-    assert pxa.shape == (2, 3, 4)
-    assert pxa[0, :, 3].tolist() == [0, 128, 255]
-    # out-of-range palette index is malformed, not a crash
-    bad = b"\x00" + bytes([7, 0, 0]) + b"\x00" + bytes([0, 0, 0])
-    assert decode_png_pixels(_build_png(3, 2, 8, 3, bad, plte=plte)) is None
-
-
-def test_png_decoder_16bit_and_subbyte_gray():
-    """16-bit samples downscale to their high byte; 1/2/4-bit grayscale
-    scales to the full 0..255 range (PNG's sample-depth scaling)."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_png_pixels,
-    )
-
-    # 16-bit gray 2x1: samples 0x1234, 0xFF00 -> high bytes 0x12, 0xFF
-    raw = b"\x00" + bytes([0x12, 0x34, 0xFF, 0x00])
-    px = decode_png_pixels(_build_png(2, 1, 16, 0, raw))
-    assert px.shape == (1, 2, 1) and px.ravel().tolist() == [0x12, 0xFF]
-    # 16-bit RGB 1x1: (0x0102, 0xFFFE, 0x8000) -> (1, 255, 128)
-    raw = b"\x00" + bytes([1, 2, 0xFF, 0xFE, 0x80, 0x00])
-    px = decode_png_pixels(_build_png(1, 1, 16, 2, raw))
-    assert px.ravel().tolist() == [1, 255, 128]
-    # 1-bit gray 8x1: 0b10110001 -> 255/0 pattern
-    raw = b"\x00" + bytes([0b10110001])
-    px = decode_png_pixels(_build_png(8, 1, 1, 0, raw))
-    assert px.ravel().tolist() == [255, 0, 255, 255, 0, 0, 0, 255]
-    # 4-bit gray: 0xA5 -> 10, 5 -> scaled by 17 -> 170, 85
-    raw = b"\x00" + bytes([0xA5])
-    px = decode_png_pixels(_build_png(2, 1, 4, 0, raw))
-    assert px.ravel().tolist() == [170, 85]
-
-
-def test_png_decoder_adam7_interlace_matches_sequential():
-    """An Adam7-interlaced image decodes to the same pixels as its
-    sequential twin — passes built independently test-side, with a
-    filtered (Sub) row inside one pass to prove per-pass unfiltering."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_png_pixels,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(7)
-    ref = rng.integers(0, 256, (9, 10, 3), dtype=np.uint8)  # odd dims
-    # sequential twin via the production encoder (already round-trips)
-    seq = decode_png_pixels(encode_png(ref))
-    # build the interlaced stream: Adam7 pass order, filter 0 rows
-    passes = [
-        (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-    ]
-    raw = bytearray()
-    for x0, y0, dx, dy in passes:
-        sub = ref[y0::dy, x0::dx]
-        if sub.size == 0:
-            continue
-        for y in range(sub.shape[0]):
-            raw += b"\x00" + sub[y].tobytes()
-    px = decode_png_pixels(_build_png(10, 9, 8, 2, bytes(raw), interlace=1))
-    assert px is not None and (px == ref).all() and (px == seq).all()
-    # filtered row inside a pass: re-emit pass 7 rows with Sub filter
-    raw2 = bytearray()
-    for x0, y0, dx, dy in passes:
-        sub = ref[y0::dy, x0::dx].astype(np.int32)
-        if sub.size == 0:
-            continue
-        for y in range(sub.shape[0]):
-            if (x0, y0) == (0, 1):  # last pass: Sub-filter the bytes
-                flat = sub[y].reshape(-1)
-                delta = flat.copy()
-                delta[3:] = (flat[3:] - flat[:-3]) % 256
-                raw2 += b"\x01" + delta.astype(np.uint8).tobytes()
-            else:
-                raw2 += b"\x00" + sub[y].astype(np.uint8).tobytes()
-    px2 = decode_png_pixels(_build_png(10, 9, 8, 2, bytes(raw2), interlace=1))
-    assert px2 is not None and (px2 == ref).all()
-
-
-def test_jpeg_progressive_round_trips_equal_baseline():
-    """A progressive stream transmits the SAME quantized coefficients as
-    the baseline encoding, just reordered — so progressive decode must
-    EQUAL baseline decode pixel-for-pixel, across grayscale, RGB, 4:2:0
-    subsampling, odd (padding-exercising) dimensions and a noise image
-    (dense EOB-run churn)."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    x = np.linspace(0, 4 * np.pi, 40)
-    smooth = ((np.sin(x)[None, :] * np.cos(x)[:, None] * 0.5 + 0.5) * 255).astype(
-        np.uint8
-    )
-    rgb = np.stack([smooth, smooth.T, 255 - smooth], axis=2)
-    rng = np.random.default_rng(11)
-    noise = rng.integers(0, 256, (21, 19, 3), dtype=np.uint8)  # odd dims
-    cases = [
-        (smooth, 85, {}),
-        (rgb, 85, {}),
-        (rgb, 85, {"subsample": True}),  # chroma grid ≠ luma grid
-        (rgb[:37, :29], 60, {"subsample": True}),  # odd dims + padding MCUs
-        (noise, 90, {}),
-        (noise[:, :, 0], 35, {}),  # low quality: long zero runs, EOBn
-    ]
-    for px, q, kw in cases:
-        base = decode_jpeg_pixels(encode_jpeg(px, q, **kw))
-        blob = encode_jpeg_progressive(px, q, **kw)
-        prog = decode_jpeg_pixels(blob)
-        assert prog is not None and base is not None
-        assert prog.shape == base.shape
-        assert (prog == base).all(), (px.shape, q, kw)
-
-
-def test_jpeg_progressive_refinement_corner_paths():
-    """Drive _jpeg_progressive_scan with HANDCRAFTED bitstreams (bits
-    derived from the spec's G.2 flowcharts by hand, independent of the
-    encoder) pinning the successive-approximation corners: ZRL inside
-    an AC refinement scan, a history coefficient's correction bit
-    buffered across the run, a negative newly-nonzero insert, an EOBn
-    (n>0) run spanning blocks, and a DC refinement bit ORed into a
-    negative DC."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        _huff_decode_table,
-        _jpeg_progressive_scan,
-    )
-
-    # --- AC refinement: pre-state k3=4 (history), target k23=-1 -------
-    # table: symbols [0x00, 0x51, 0xF0] at 2 bits -> codes 00, 01, 10
-    huff = {(1, 0): _huff_decode_table([0, 3] + [0] * 14, bytes([0x00, 0x51, 0xF0]))}
-    frame = (8, 8, [(1, 1, 1, 0)])
-    coef = [np.zeros((1, 1, 64), dtype=np.int32)]
-    coef[0][0, 0, 3] = 4
-    # bits: ZRL(10) corr(0) 0x51(01) sign(0=neg) EOB0(00) -> 0x88
-    ok = _jpeg_progressive_scan(
-        frame, coef, [(0, 0, 0)], 1, 63, 1, 0, [bytes([0x88])], huff, 0
-    )
-    assert ok
-    expect = np.zeros(64, dtype=np.int32)
-    expect[3], expect[23] = 4, -1
-    assert (coef[0][0, 0] == expect).all()
-
-    # --- AC first with an EOBn (n=1) run spanning two blocks ----------
-    # table: symbols [0x03, 0x10] at 2 bits -> codes 00, 01
-    huff = {(1, 0): _huff_decode_table([0, 2] + [0] * 14, bytes([0x03, 0x10]))}
-    frame = (8, 16, [(1, 1, 1, 0)])
-    coef = [np.zeros((1, 2, 64), dtype=np.int32)]
-    # bits: 0x03(00) value 5(101) 0x10(01) appended-bit(0) -> 0x2A
-    ok = _jpeg_progressive_scan(
-        frame, coef, [(0, 0, 0)], 1, 63, 0, 0, [bytes([0x2A])], huff, 0
-    )
-    assert ok
-    assert coef[0][0, 0, 1] == 5 and not coef[0][0, 0, 2:].any()
-    assert not coef[0][0, 1].any()  # second block consumed by the EOB run
-
-    # --- DC refinement ORs the Al bit into a NEGATIVE DC --------------
-    frame = (8, 8, [(1, 1, 1, 0)])
-    coef = [np.zeros((1, 1, 64), dtype=np.int32)]
-    coef[0][0, 0, 0] = -6  # first DC scan stored (-5 >> 1) << 1
-    ok = _jpeg_progressive_scan(
-        frame, coef, [(0, 0, 0)], 0, 0, 1, 0, [bytes([0x80])], huff, 0
-    )
-    assert ok
-    assert coef[0][0, 0, 0] == -5  # -6 | 1 in two's complement
-
-
-def test_jpeg_progressive_truncation_never_crashes():
-    """Every prefix of a progressive stream decodes to None or an image,
-    never an exception — the malformed-payload contract all the stdlib
-    codecs follow."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_jpeg_pixels,
-        encode_jpeg_progressive,
-    )
-
-    rng = np.random.default_rng(5)
-    px = rng.integers(0, 256, (17, 13, 3), dtype=np.uint8)
-    blob = encode_jpeg_progressive(px, 75)
-    for cut in list(range(0, len(blob), 7)) + [len(blob) - 1]:
-        decode_jpeg_pixels(blob[:cut])  # must not raise
-    # corrupting a scan's marker byte must also fail closed
-    mut = bytearray(blob)
-    mut[len(mut) // 2] = 0xFF
-    decode_jpeg_pixels(bytes(mut))
-
-
-def _wav_blob(fmt_code, n_ch, rate, bits, block_align, data, fact_frames=None):
-    import struct
-
-    byte_rate = rate * n_ch * max(bits, 1) // 8
-    fmt = struct.pack("<HHIIHH", fmt_code, n_ch, rate, byte_rate, block_align, bits)
-    fact = (
-        b"fact" + struct.pack("<II", 4, fact_frames)
-        if fact_frames is not None
-        else b""
-    )
-    return (
-        b"RIFF" + struct.pack("<I", 36 + len(fact) + len(data)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + fact
-        + b"data" + struct.pack("<I", len(data)) + data
-    )
-
-
-def test_wav_g711_ulaw_alaw_decode():
-    """G.711 companded WAVs decode through the ITU expansion tables —
-    spot-checked against hand-computed table entries, then round-tripped
-    through independent TEST-SIDE compressors within G.711's quantization
-    error envelope."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_wav_samples,
-    )
-
-    # hand-computed ITU values: µ-law 0x00 → −32124, 0x80 → +32124,
-    # 0xFF → 0;  A-law 0x2A → −32256, 0xAA → +32256, 0x55 → −8
-    out = decode_wav_samples(
-        _wav_blob(7, 1, 8000, 8, 1, bytes([0x00, 0x80, 0xFF]))
-    )
-    assert np.allclose(out.ravel() * 32768.0, [-32124, 32124, 0])
-    out = decode_wav_samples(
-        _wav_blob(6, 1, 8000, 8, 1, bytes([0x2A, 0xAA, 0x55]))
-    )
-    assert np.allclose(out.ravel() * 32768.0, [-32256, 32256, -8])
-
-    # independent test-side µ-law compressor (ITU search over the table)
-    def ulaw_compress(x16):
-        bias, out = 0x84, []
-        for v in x16:
-            sign = 0x80 if v < 0 else 0
-            v = min(abs(int(v)), 32635) + bias
-            exp = v.bit_length() - 8  # segment: top set bit above bit 7
-            mant = (v >> (exp + 3)) & 0x0F
-            out.append(~(sign | (exp << 4) | mant) & 0xFF)
-        return bytes(out)
-
-    t = np.arange(800)
-    wave = (np.sin(2 * np.pi * t / 80) * 20000).astype(np.int64)
-    dec = decode_wav_samples(
-        _wav_blob(7, 1, 8000, 8, 1, ulaw_compress(wave))
-    )
-    err = np.abs(dec.ravel() * 32768.0 - wave)
-    # µ-law quantization error grows with segment: the truncating
-    # test-side compressor errs by at most one segment-7 step (1024)
-    assert err.max() <= 1024
-    # and small-amplitude samples must be near-exact (segment-0 steps)
-    small = np.abs(wave) < 100
-    assert err[small].max() <= 8
-    # stereo shaping
-    st = decode_wav_samples(_wav_blob(7, 2, 8000, 8, 2, bytes(range(64))))
-    assert st.shape == (32, 2)
-
-
-def test_wav_ima_adpcm_decode():
-    """IMA ADPCM blocks decode via the reference step/index tables —
-    round-tripped through an independent TEST-SIDE IMA compressor; the
-    decoded waveform must track the original within ADPCM's adaptive
-    step error, and the block header predictor must be emitted as the
-    first sample."""
-    import struct
-
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        _IMA_INDEX_TABLE,
-        _IMA_STEP_TABLE,
-        decode_wav_samples,
-    )
-
-    def ima_compress(x16, n_ch, block_align):
-        # standard IMA encoder: quantize diff against the adaptive step
-        per_ch = [x16[:, c].tolist() for c in range(n_ch)]
-        n = len(per_ch[0])
-        samples_per_block = (block_align - 4 * n_ch) * 2 // n_ch + 1
-        out = bytearray()
-        pos = 0
-        pred = [0] * n_ch
-        idx = [0] * n_ch
-        while pos < n:
-            for c in range(n_ch):
-                pred[c] = per_ch[c][pos]
-                out += struct.pack("<hBB", pred[c], idx[c], 0)
-            nibs = [[] for _ in range(n_ch)]
-            for i in range(1, samples_per_block):
-                for c in range(n_ch):
-                    v = per_ch[c][pos + i] if pos + i < n else pred[c]
-                    step = _IMA_STEP_TABLE[idx[c]]
-                    delta = v - pred[c]
-                    nib = 8 if delta < 0 else 0
-                    delta = abs(delta)
-                    if delta >= step:
-                        nib |= 4
-                        delta -= step
-                    if delta >= step >> 1:
-                        nib |= 2
-                        delta -= step >> 1
-                    if delta >= step >> 2:
-                        nib |= 1
-                    # reconstruct exactly like the decoder
-                    diff = step >> 3
-                    if nib & 1:
-                        diff += step >> 2
-                    if nib & 2:
-                        diff += step >> 1
-                    if nib & 4:
-                        diff += step
-                    p = pred[c] - diff if nib & 8 else pred[c] + diff
-                    pred[c] = max(-32768, min(32767, p))
-                    idx[c] = max(0, min(88, idx[c] + _IMA_INDEX_TABLE[nib & 7]))
-                    nibs[c].append(nib)
-            # pack per channel in 8-nibble groups, channel-interleaved
-            for g in range(len(nibs[0]) // 8):
-                for c in range(n_ch):
-                    grp = nibs[c][g * 8 : g * 8 + 8]
-                    for j in range(0, 8, 2):
-                        out.append(grp[j] | (grp[j + 1] << 4))
-            pos += samples_per_block
-        return bytes(out)
-
-    t = np.arange(1024)
-    mono = (np.sin(2 * np.pi * t / 64) * 12000).astype(np.int64)[:, None]
-    blob = _wav_blob(0x11, 1, 8000, 4, 256, ima_compress(mono, 1, 256))
-    dec = decode_wav_samples(blob)
-    n = min(len(dec), len(mono))
-    err = np.abs(dec[:n, 0] * 32768.0 - mono[:n, 0])
-    assert err.mean() < 600  # adaptive-step tracking error, not garbage
-    assert abs(dec[0, 0] * 32768.0 - mono[0, 0]) < 1  # header predictor
-    # stereo: L = wave, R = inverted wave; channels must not swap
-    stereo = np.concatenate([mono, -mono], axis=1)
-    blob = _wav_blob(0x11, 2, 8000, 4, 512, ima_compress(stereo, 2, 512))
-    dec = decode_wav_samples(blob)
-    n = min(len(dec), len(stereo))
-    assert np.abs(dec[:n, 0] * 32768.0 - stereo[:n, 0]).mean() < 600
-    assert np.abs(dec[:n, 1] * 32768.0 - stereo[:n, 1]).mean() < 600
-    # malformed: step index out of range fails closed
-    bad = _wav_blob(0x11, 1, 8000, 4, 8, struct.pack("<hBB", 0, 99, 0) + b"\x00" * 4)
-    assert decode_wav_samples(bad) is None
-
-
-def test_wav_adpcm_fact_chunk_bounds_phantom_padding_samples():
-    """A stream whose length is not a whole number of ADPCM blocks pads
-    the final block's nibble area; the fact chunk's declared frame count
-    must bound the decode — without it the padding decodes as phantom
-    trailing samples and skews rms/zero-crossing stats."""
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        _IMA_INDEX_TABLE,
-        _IMA_STEP_TABLE,
-        decode_wav_samples,
-    )
-
-    # independent test-side compressor (same as the round-trip test, but
-    # fed FEWER samples than one block holds so the encoder pads)
-    import struct as _struct
-
-    def ima_compress(x16, n_ch, block_align):
-        per_ch = [x16[:, c].tolist() for c in range(n_ch)]
-        n = len(per_ch[0])
-        samples_per_block = (block_align - 4 * n_ch) * 2 // n_ch + 1
-        out = bytearray()
-        pos = 0
-        pred = [0] * n_ch
-        idx = [0] * n_ch
-        while pos < n:
-            for c in range(n_ch):
-                pred[c] = per_ch[c][pos]
-                out += _struct.pack("<hBB", pred[c], idx[c], 0)
-            nibs = [[] for _ in range(n_ch)]
-            for i in range(1, samples_per_block):
-                for c in range(n_ch):
-                    v = per_ch[c][pos + i] if pos + i < n else pred[c]
-                    step = _IMA_STEP_TABLE[idx[c]]
-                    delta = v - pred[c]
-                    nib = 8 if delta < 0 else 0
-                    delta = abs(delta)
-                    if delta >= step:
-                        nib |= 4
-                        delta -= step
-                    if delta >= step >> 1:
-                        nib |= 2
-                        delta -= step >> 1
-                    if delta >= step >> 2:
-                        nib |= 1
-                    diff = step >> 3
-                    if nib & 1:
-                        diff += step >> 2
-                    if nib & 2:
-                        diff += step >> 1
-                    if nib & 4:
-                        diff += step
-                    p = pred[c] - diff if nib & 8 else pred[c] + diff
-                    pred[c] = max(-32768, min(32767, p))
-                    idx[c] = max(0, min(88, idx[c] + _IMA_INDEX_TABLE[nib & 7]))
-                    nibs[c].append(nib)
-            for g in range(len(nibs[0]) // 8):
-                for c in range(n_ch):
-                    grp = nibs[c][g * 8 : g * 8 + 8]
-                    for j in range(0, 8, 2):
-                        out.append(grp[j] | (grp[j + 1] << 4))
-            pos += samples_per_block
-        return bytes(out)
-
-    t = np.arange(300)  # one 256-byte mono block holds 505 samples
-    mono = (np.sin(2 * np.pi * t / 64) * 12000).astype(np.int64)[:, None]
-    data = ima_compress(mono, 1, 256)
-    # without fact: the padded nibbles decode as phantom trailing samples
-    dec_nofact = decode_wav_samples(_wav_blob(0x11, 1, 8000, 4, 256, data))
-    assert len(dec_nofact) == 505
-    # with fact: decode is bounded to the declared 300 frames
-    dec = decode_wav_samples(
-        _wav_blob(0x11, 1, 8000, 4, 256, data, fact_frames=300)
-    )
-    assert len(dec) == 300
-    assert np.abs(dec[:, 0] * 32768.0 - mono[:, 0]).mean() < 600
-    # the G.711 path honors a declared shorter count too
-    dec_g711 = decode_wav_samples(
-        _wav_blob(7, 1, 8000, 8, 1, bytes([0xFF] * 10), fact_frames=7)
-    )
-    assert len(dec_g711) == 7
-
-
-def test_decode_video_mjpeg_avi_frames():
-    """An MJPEG AVI decodes frame-by-frame through the stdlib JPEG
-    codec: a handcrafted RIFF 'AVI ' with hdrl + movi carrying three
-    JPEG frames (one of them PROGRESSIVE) yields three pixel arrays in
-    stream order; an AVI whose video chunks are not JPEG yields None."""
-    import struct
-
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_mjpeg_frames,
-        encode_jpeg,
-        encode_jpeg_progressive,
-    )
-
-    def chunk(cid, body):
-        pad = b"\x00" if len(body) % 2 else b""
-        return cid + struct.pack("<I", len(body)) + body + pad
-
-    frames_px = [
-        np.full((16, 16, 3), 40, dtype=np.uint8),
-        np.full((16, 16, 3), 120, dtype=np.uint8),
-        np.full((16, 16, 3), 200, dtype=np.uint8),
-    ]
-    payloads = [
-        encode_jpeg(frames_px[0], 95),
-        encode_jpeg_progressive(frames_px[1], 95),
-        encode_jpeg(frames_px[2], 95),
-    ]
-    movi_body = b"movi" + b"".join(chunk(b"00dc", p) for p in payloads)
-    avih_body = struct.pack("<14I", 40_000, 0, 0, 0x10, 3, 0, 1, 0, 16, 16,
-                            0, 0, 0, 0)
-    hdrl = chunk(b"LIST", b"hdrl" + chunk(b"avih", avih_body))
-    movi = chunk(b"LIST", movi_body)
-    riff_body = b"AVI " + hdrl + movi
-    avi = b"RIFF" + struct.pack("<I", len(riff_body)) + riff_body
-
-    frames = decode_mjpeg_frames(avi)
-    assert len(frames) == 3
-    for got, want in zip(frames, frames_px):
-        assert got.shape == (16, 16, 3)
-        # flat-color frames survive JPEG within quantization tolerance
-        assert abs(got.astype(int).mean() - want.astype(int).mean()) < 3
-    # non-JPEG video chunks: recognized as AVI but stay gated
-    movi2 = chunk(b"LIST", b"movi" + chunk(b"00dc", b"\x00\x01\x02\x03"))
-    riff2 = b"AVI " + hdrl + movi2
-    bad = b"RIFF" + struct.pack("<I", len(riff2)) + riff2
-    assert decode_mjpeg_frames(bad) is None
-    assert decode_mjpeg_frames(b"RIFF\x00\x00\x00\x00WAVE") is None
-
-
-def test_bmp_pixel_decode_profiles():
-    """Handcrafted BMPs: 24-bit bottom-up BGR, 32-bit top-down BGRX,
-    8-bit palette, 4-bit palette packing, and BI_RLE8 runs/absolute/EOL
-    — all decode to exact pixels; unsupported profiles return None."""
-    import struct
-
-    import numpy as np
-
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        decode_bmp_pixels,
-    )
-
-    def bmp(w, h, bpp, compression, pal, pixel_bytes):
-        dib = struct.pack(
-            "<IiiHHIIiiII", 40, w, h, 1, bpp, compression,
-            len(pixel_bytes), 2835, 2835, len(pal), 0,
-        )
-        pal_bytes = b"".join(bytes([b, g, r, 0]) for r, g, b in pal)
-        off = 14 + len(dib) + len(pal_bytes)
-        hdr = b"BM" + struct.pack("<IHHI", off + len(pixel_bytes), 0, 0, off)
-        return hdr + dib + pal_bytes + pixel_bytes
-
-    # 24-bit 2x2 bottom-up: rows padded to 4 bytes (2*3=6 -> 8)
-    # file row 0 (image BOTTOM row): red, green; row 1 (top): blue, white
-    rows = (
-        bytes([0, 0, 255, 0, 255, 0]) + b"\x00\x00"
-        + bytes([255, 0, 0, 255, 255, 255]) + b"\x00\x00"
-    )
-    px = decode_bmp_pixels(bmp(2, 2, 24, 0, [], rows))
-    assert px.shape == (2, 2, 3)
-    assert px[0].tolist() == [[0, 0, 255], [255, 255, 255]]  # top row
-    assert px[1].tolist() == [[255, 0, 0], [0, 255, 0]]  # bottom row
-
-    # 32-bit TOP-DOWN (negative height): BGRX, no padding needed
-    rows32 = bytes([10, 20, 30, 0, 40, 50, 60, 0])
-    px = decode_bmp_pixels(bmp(2, -1, 32, 0, [], rows32))
-    assert px.shape == (1, 2, 3)
-    assert px[0].tolist() == [[30, 20, 10], [60, 50, 40]]
-
-    # 8-bit palette 3x1: indices 2,0,1 -> padded to 4
-    pal = [(255, 0, 0), (0, 255, 0), (0, 0, 255)]
-    px = decode_bmp_pixels(bmp(3, -1, 8, 0, pal, bytes([2, 0, 1, 0])))
-    assert px[0].tolist() == [[0, 0, 255], [255, 0, 0], [0, 255, 0]]
-
-    # 4-bit palette 3x1: nibbles 2,0 | 1,pad -> 0x20 0x10 + 2 pad bytes
-    px = decode_bmp_pixels(bmp(3, -1, 4, 0, pal, bytes([0x20, 0x10, 0, 0])))
-    assert px[0].tolist() == [[0, 0, 255], [255, 0, 0], [0, 255, 0]]
-
-    # BI_RLE8 4x2 top... (RLE is bottom-up): run 3x idx1, literal? use
-    # encoded runs: row0: (3,1)(1,0) EOL; row1: absolute 4 bytes EOL EOB
-    rle = bytes(
-        [3, 1, 1, 0, 0, 0]  # 3x pal1, 1x pal0, end-of-line
-        + [0, 4, 2, 2, 0, 0, 0, 0]  # absolute: 4 literals 2,2,0,0
-        + [0, 1]  # end of bitmap
-    )
-    px = decode_bmp_pixels(bmp(4, 2, 8, 1, pal, rle))
-    assert px.shape == (2, 4, 3)
-    # bottom-up: file row 0 is the image BOTTOM
-    assert px[1].tolist() == [[0, 255, 0]] * 3 + [[255, 0, 0]]
-    assert px[0].tolist() == [[0, 0, 255]] * 2 + [[255, 0, 0]] * 2
-
-    # unsupported: BITFIELDS compression, out-of-range palette index
-    assert decode_bmp_pixels(bmp(2, 2, 32, 3, [], rows32 * 2)) is None
-    assert decode_bmp_pixels(bmp(3, -1, 8, 0, pal, bytes([7, 0, 1, 0]))) is None
-    assert decode_bmp_pixels(b"BMshort") is None
-
-
 def test_tiff_pixel_decode_profiles():
     """Handcrafted TIFFs: little/big endian, RGB strips, white-is-zero
-    grayscale inversion, PackBits compression, 16-bit colormap palette —
-    exact pixels; LZW and non-8-bit profiles return None."""
+    grayscale inversion, 16-bit colormap palette — exact pixels;
+    PackBits, malformed LZW and planar RGB return None."""
     import struct
 
     import numpy as np
@@ -3229,7 +1830,8 @@ def test_tiff_pixel_decode_profiles():
     px = decode_tiff_pixels(bytes(tiff(">", entries, [], base)) + strip)
     assert px[:, :, 0].ravel().tolist() == [255, 191, 127, 0]
 
-    # PackBits grayscale 8x1: run of 5x7 + literal 3 bytes
+    # PackBits (compression 32773) fails closed, like JPEG-in-TIFF: a
+    # well-formed grayscale 8x1 strip (run of 5x7 + literal 3 bytes)
     pb = bytes([256 - 4, 7, 2, 1, 2, 3])  # repeat 7 x5, literal [1,2,3]
     base = 8 + 2 + 7 * 12 + 4
     entries = [
@@ -3237,8 +1839,7 @@ def test_tiff_pixel_decode_profiles():
         (259, 3, [32773]), (262, 3, [1]), (273, 4, [base]),
         (279, 4, [len(pb)]),
     ]
-    px = decode_tiff_pixels(bytes(tiff("<", entries, [], base)) + pb)
-    assert px[:, :, 0].ravel().tolist() == [7, 7, 7, 7, 7, 1, 2, 3]
+    assert decode_tiff_pixels(bytes(tiff("<", entries, [], base)) + pb) is None
 
     # palette 2x1: colormap planes R,G,B of 256 uint16 (value*257)
     cmap_vals = [0] * 768
@@ -3289,21 +1890,6 @@ def test_tiff_pixel_decode_profiles():
     ]
     px = decode_tiff_pixels(bytes(tiff("<", entries, [], base)) + strip)
     assert px[:, :, 0].ravel().tolist() == [0, 64, 128, 255]
-
-
-def test_parse_image_dims_tiff():
-    from ida_ice_energy_simulation_etl_pipeline_spark.operators.multimodal import (
-        parse_image_dims,
-    )
-    import struct
-
-    ifd = struct.pack("<H", 2)
-    ifd += struct.pack("<HHI", 256, 3, 1) + struct.pack("<H", 640) + b"\x00\x00"
-    ifd += struct.pack("<HHI", 257, 4, 1) + struct.pack("<I", 480)
-    ifd += struct.pack("<I", 0)
-    blob = b"II*\x00" + struct.pack("<I", 8) + ifd
-    assert parse_image_dims(blob) == (640, 480, "TIFF")
-    assert parse_image_dims(b"II*\x00\x08\x00\x00\x00") is None
 
 
 def test_bpe_train_recounts_after_each_merge(spark):
